@@ -12,13 +12,15 @@ mutated), so
 - ``read_version(path, n)`` = read exactly version n's file list
   (time travel is just resolving an older commit entry);
 - ``latest_version(path)`` = max committed entry (readers never see a
-  half-written commit: the JSON is written to a temp name and renamed,
-  and the data files are fully written before the commit lands);
+  half-written commit: the JSON is written to a temp name and
+  hard-linked into place — an exclusive create, so of two writers of
+  one version exactly one wins — and the data files are fully written
+  before the commit lands);
 - ``write_version`` / ``merge_upsert`` append a new commit (upsert =
   read-latest ⟕ updates, keyed; the merge itself is ONE join, the same
   shape as operators/etl.py's SCD1/SCD2 family).
 
-On a real object store the rename-as-commit needs the store's
+On a real object store the link-as-commit needs the store's
 conditional-put (as Delta/Iceberg use); the layout and read path are
 identical. Scale: the log is O(versions) tiny JSON; data files are
 normal parquet, and a snapshot read costs exactly its own files.
@@ -32,6 +34,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources import lakecore
 
 
 def _log_dir(path: str) -> str:
@@ -50,19 +54,14 @@ def latest_version(path: str) -> int:
 
 
 def _commit(path: str, version: int, files: list[str], op: str) -> None:
-    d = _log_dir(path)
-    os.makedirs(d, exist_ok=True)
     entry = {"version": version, "op": op, "files": files}
-    tmp = os.path.join(d, f"_tmp_{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-    final = os.path.join(d, f"{version:012d}.json")
-    if os.path.exists(final):
-        os.remove(tmp)
-        raise RuntimeError(
+    lakecore.publish_exclusive(
+        os.path.join(_log_dir(path), f"{version:012d}.json"),
+        lambda fh: json.dump(entry, fh),
+        RuntimeError(
             f"concurrent commit: version {version} already exists at {path}"
-        )
-    os.rename(tmp, final)
+        ),
+    )
 
 
 def _files_of(path: str, version: int) -> list[str]:

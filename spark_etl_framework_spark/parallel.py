@@ -27,7 +27,14 @@ def run_concurrently(*thunks, cleanup=None):
     cleanup is invoked with its result before the error propagates, so
     a failed DML leaves no orphaned files behind (round-16 ADVICE).
     Cleanup errors are swallowed: the original failure is the story.
+    A ``cleanup`` list of the wrong length raises ``ValueError`` before
+    any thunk runs.
     """
+    if cleanup is not None and len(cleanup) != len(thunks):
+        raise ValueError(
+            f"run_concurrently: {len(cleanup)} cleanup callables for "
+            f"{len(thunks)} thunks"
+        )
     if len(thunks) == 1:
         return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:

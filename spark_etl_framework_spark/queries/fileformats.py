@@ -3534,6 +3534,7 @@ def delta_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources import deltalog as _dl
+    from ..sources import lakecore as _lc
 
     tbl = tempfile.mkdtemp(prefix="delta_liquid_") + "/nation"
     na = load_table(spark, sf_dir, "nation").select(
@@ -3565,7 +3566,7 @@ def delta_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert _json.loads(
         snap.domain_metadata["delta.clustering"]["configuration"]
     )["clusteringColumns"] == [["n_nationkey"]], "clustering domain wrong"
-    conj = _dl._parse_skippable("n_nationkey >= 5 AND n_nationkey <= 9")
+    conj = _lc.parse_skippable("n_nationkey >= 5 AND n_nationkey <= 9")
     surviving = [
         f for f in snap.files if _dl._file_survives(f.stats, conj)
     ]

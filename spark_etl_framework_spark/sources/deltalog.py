@@ -44,10 +44,9 @@ import datetime as _dt
 import json
 import os
 import re
-import shutil
-import tempfile
 import time
 import uuid
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 from urllib.parse import quote, unquote
 
@@ -57,10 +56,10 @@ from pyspark.sql import types as T
 
 from ..localrel import local_relation
 from ..parallel import run_concurrently
+from . import lakecore
 
 _LOG = "_delta_log"
 CHECKPOINT_INTERVAL = 10
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 #: RFC-3986 pchar set — matches how delta-spark URI-encodes add paths:
 #: ``=`` in hive dirs stays literal, spaces/non-ASCII get %-escaped
@@ -829,7 +828,7 @@ def _version_at_timestamp(path: str, ts_ms: int) -> int:
 
 def _cast_partition_literal(value: str | None, dtype: T.DataType):
     """Partition values travel as strings in the log (spec); cast back."""
-    if value is None or value == _HIVE_NULL:
+    if value is None or value == lakecore.HIVE_NULL:
         return None
     if isinstance(dtype, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
         return int(value)
@@ -844,42 +843,6 @@ def _cast_partition_literal(value: str | None, dtype: T.DataType):
 
         return decimal.Decimal(value)
     return value
-
-
-_SKIP_RE = None
-
-
-def _parse_skippable(predicate: str):
-    """Parse a predicate into [(col, op, literal)] conjuncts usable for
-    file skipping, or None when any part is not a simple
-    ``col <op> literal`` AND-chain (OR / NOT / parens / functions make
-    skipping unsafe — the caller keeps every file, which is always
-    correct, and row-level filtering still applies)."""
-    import re
-
-    global _SKIP_RE
-    if _SKIP_RE is None:
-        _SKIP_RE = re.compile(
-            r"^\s*`?(\w+)`?\s*(<=|>=|==|=|<|>)\s*"
-            r"('(?:[^']|'')*'|-?\d+(?:\.\d+)?)\s*$"
-        )
-    low = predicate.lower()
-    if "(" in predicate or " or " in f" {low} " or low.startswith("not ")             or " not " in f" {low} ":
-        return None
-    out = []
-    for part in re.split(r"(?i)\s+and\s+", predicate):
-        m = _SKIP_RE.match(part)
-        if not m:
-            return None
-        col, op, lit = m.group(1), m.group(2), m.group(3)
-        if lit.startswith("'"):
-            val: object = lit[1:-1].replace("''", "'")
-        elif "." in lit:
-            val = float(lit)
-        else:
-            val = int(lit)
-        out.append((col, "=" if op == "==" else op, val))
-    return out
 
 
 def _file_survives(stats_json: str | None, conjuncts) -> bool:
@@ -1101,7 +1064,7 @@ def read_delta(
     phys_of = snap.physical_of
     mapped = snap.column_mapping_mode != "none"
     if where:
-        conjuncts = _parse_skippable(where)
+        conjuncts = lakecore.parse_skippable(where)
         if conjuncts:
             # stats (and partitionValues) of a column-mapped table are
             # keyed by PHYSICAL names — translate the conjuncts' logical
@@ -1332,26 +1295,25 @@ def _maybe_stamp_ict(path: str, version: int, actions: list[dict]) -> list[dict]
     return [{"commitInfo": info}] + rest
 
 
-def _publish_commit(path: str, version: int, actions: list[dict]) -> None:
+def _publish_commit(
+    path: str, version: int, actions: list[dict], staged=()
+) -> None:
     """Atomic exclusive create of the commit file via hard link —
     optimistic concurrency exactly as the spec requires of a filesystem
-    LogStore: two writers racing version N -> exactly one wins."""
+    LogStore: two writers racing version N -> exactly one wins. The
+    ``staged`` files of a commit that does not land are unlinked."""
     actions = _maybe_stamp_ict(path, version, actions)
-    d = _log_dir(path)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".{uuid.uuid4().hex}.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        for act in actions:
-            fh.write(json.dumps(act, separators=(",", ":")) + "\n")
-    final = _commit_path(path, version)
-    try:
-        os.link(tmp, final)
-    except FileExistsError as e:
-        raise DeltaConcurrentModification(
+    lakecore.publish_exclusive(
+        _commit_path(path, version),
+        lambda fh: fh.writelines(
+            json.dumps(act, separators=(",", ":")) + "\n" for act in actions
+        ),
+        DeltaConcurrentModification(
             f"version {version} of {path} was committed concurrently"
-        ) from e
-    finally:
-        os.unlink(tmp)
+        ),
+        staged,
+    )
+    d = _log_dir(path)
     if os.path.exists(os.path.join(d, _UNIFORM_MARKER)):
         # UniForm: the delta commit is durable — mirror it as iceberg
         # metadata over the same files. A sync failure must name the
@@ -1366,73 +1328,34 @@ def _publish_commit(path: str, version: int, actions: list[dict]) -> None:
             ) from e
 
 
-def _parse_hive_dirs(relpath: str) -> dict:
-    vals = {}
-    for seg in relpath.split(os.sep)[:-1]:
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            vals[k] = None if v == _HIVE_NULL else unquote(v)
-    return vals
-
-
-def _file_stats(src: str) -> dict | None:
-    """Delta's per-file stats JSON from the parquet footer: numRecords +
+def _file_stats(md) -> dict | None:
+    """Delta's per-file stats JSON from a parquet footer: numRecords +
     minValues/maxValues/nullCount per column (the data-skipping input).
     Values serialize as JSON-natural types; dates/timestamps as ISO
     strings (they compare lexically, which is all skipping needs).
     Columns without footer min/max (e.g. binary) are simply absent —
-    absent stats can never prune a file. Returns None when the local
-    pyarrow cannot even parse the footer (e.g. the VARIANT logical type
-    predates this pyarrow's thrift definitions) — the add action then
+    absent stats can never prune a file. None when the footer was
+    unreadable (:func:`lakecore.read_footer`) — the add action then
     carries no stats, which loses skipping, never correctness."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(src).metadata
-    except OSError:
+    if md is None:
         return None
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
+    import datetime as _d
+    import decimal as _dec
 
     def _j(v):
-        import datetime as _d
-        import decimal as _dec
-
-        if isinstance(v, (_d.datetime, _d.date)):
-            return v.isoformat(sep=" ") if isinstance(v, _d.datetime) else v.isoformat()
+        if isinstance(v, _d.datetime):
+            return v.isoformat(sep=" ")
+        if isinstance(v, _d.date):
+            return v.isoformat()
         if isinstance(v, _dec.Decimal):
             return str(v)
         if isinstance(v, bytes):
             return None
         return v
 
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested leaves: skip (top-level skipping only)
-                continue
-            st = col.statistics
-            if st is None:
-                continue
-            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-            if not st.has_min_max:
-                continue
-            try:
-                lo, hi = _j(st.min), _j(st.max)
-            except NotImplementedError:
-                # pyarrow can't decode min/max for some physical types
-                # (e.g. fixed-len-byte-array decimals): the file simply
-                # contributes no skipping bounds for that column — reads
-                # stay correct, skipping degrades gracefully
-                continue
-            if lo is None or hi is None:
-                continue
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
+    lows, highs, nulls = lakecore.footer_ranges(md)
+    mins = {c: j for c, v in lows.items() if (j := _j(v)) is not None}
+    maxs = {c: j for c, v in highs.items() if (j := _j(v)) is not None}
     return {
         "numRecords": md.num_rows,
         "minValues": mins,
@@ -1636,71 +1559,38 @@ def _stage_adds(
             *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
         )
         partition_by = [mapping.get(c, c) for c in partition_by]
-    staging = tempfile.mkdtemp(prefix="deltastage_")
     try:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        try:
-            w.parquet(staging)
-        except Exception as e:  # noqa: BLE001
-            s = str(e)
-            if "CHECK constraint" in s:
-                line = next(
-                    (ln for ln in s.split("\n") if "CHECK constraint" in ln),
-                    s[:500],
-                )
-                raise CheckConstraintViolation(line.strip()[:500]) from e
-            raise
-
-        adds = []
-        now_ms = int(time.time() * 1000)
-        for root, _dirs, names in os.walk(staging):
-            for name in names:
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                rel_dir = os.path.relpath(root, staging)
-                rel_dir = "" if rel_dir == "." else rel_dir
-                new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-                rel = os.path.join(rel_dir, new_name) if rel_dir else new_name
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                stats = _file_stats(src)
-                if stats is None:
-                    # footer unreadable locally (VARIANT logical type):
-                    # one tiny Spark count drops genuinely empty parts;
-                    # the add carries no stats (skipping lost, reads
-                    # stay correct)
-                    n = df.sparkSession.read.parquet(src).count()
-                    if n == 0:
-                        os.unlink(src)
-                        continue
-                elif stats["numRecords"] == 0:
-                    os.unlink(src)
-                    continue
-                shutil.move(src, dst)
-                pvals = _parse_hive_dirs(rel) if partition_by else {}
-                adds.append(
-                    {
-                        "add": {
-                            "path": _quote_path(rel),
-                            "partitionValues": {
-                                c: pvals.get(c) for c in partition_by
-                            },
-                            "size": os.path.getsize(dst),
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            **(
-                                {"stats": json.dumps(stats)}
-                                if stats is not None
-                                else {}
-                            ),
-                        }
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        staged = lakecore.stage_parquet(
+            df, path, "", lambda: f"part-{uuid.uuid4().hex}.snappy.parquet",
+            partition_by,
+        )
+    except Exception as e:  # noqa: BLE001
+        s = str(e)
+        if "CHECK constraint" in s:
+            line = next(
+                (ln for ln in s.split("\n") if "CHECK constraint" in ln),
+                s[:500],
+            )
+            raise CheckConstraintViolation(line.strip()[:500]) from e
+        raise
+    now_ms = int(time.time() * 1000)
+    adds = []
+    for f in staged:
+        stats = _file_stats(f.footer)
+        adds.append(
+            {
+                "add": {
+                    "path": _quote_path(f.rel),
+                    "partitionValues": {
+                        c: f.partition_values.get(c) for c in partition_by
+                    },
+                    "size": os.path.getsize(f.dst),
+                    "modificationTime": now_ms,
+                    "dataChange": True,
+                    **({"stats": json.dumps(stats)} if stats is not None else {}),
+                }
+            }
+        )
     return adds
 
 
@@ -2197,7 +2087,7 @@ def write_delta(
             for f in snap.files
         )
     actions.extend(adds)
-    _publish_commit(path, version, actions)
+    _commit_version(path, version, actions, configuration)
     # VersionChecksum sidecar (<v>.crc — what delta-spark writes per
     # commit): post-state aggregates computed INCREMENTALLY from the
     # prev snapshot + this commit's adds, never a fresh log replay
@@ -2212,14 +2102,22 @@ def write_delta(
         num_files=len(crc_files),
         table_size_bytes=sum(int(f.get("size", 0)) for f in crc_files),
     )
+    return version
 
+
+def _commit_version(
+    path: str, version: int, actions: list[dict], conf: dict
+) -> None:
+    """Publish a data commit, then its tails: a checkpoint every
+    ``CHECKPOINT_INTERVAL`` versions and the opt-in log compaction. The
+    files the commit staged are unlinked if the publish does not land."""
+    _publish_commit(path, version, actions, _staged_paths(path, actions))
     if version > 0 and version % CHECKPOINT_INTERVAL == 0:
         try:
             _write_checkpoint(path, version)
         except DeltaConcurrentModification:  # pragma: no cover - benign race
             pass
-    _maybe_log_compaction(path, version, configuration)
-    return version
+    _maybe_log_compaction(path, version, conf)
 
 
 def _dv_commit_actions(
@@ -2380,26 +2278,29 @@ def _subtract_dvs(spark, df, table_path: str, dv_files) -> DataFrame:
     )
 
 
+def _staged_paths(path: str, actions: list[dict]) -> list[str]:
+    """Files a data commit's actions reference that the commit itself
+    wrote: change files, newly staged data files, and the deletion
+    vector of a DV re-add — never the live data file a re-add restates."""
+    out = []
+    for a in actions:
+        if "cdc" in a:
+            out.append(os.path.join(path, unquote(a["cdc"]["path"])))
+        elif "add" in a:
+            dv = a["add"].get("deletionVector")
+            if dv is None:
+                out.append(os.path.join(path, unquote(a["add"]["path"])))
+            elif dv.get("storageType") == "p":
+                out.append(dv["pathOrInlineDv"])
+    return out
+
+
 def _unlink_staged(path: str):
-    """Cleanup callable for run_concurrently: unlink the NEWLY-STAGED
-    files referenced by a thunk's cdc/add actions when a sibling thunk
-    failed — an uncommitted staged file is unreferenced garbage (round-16
-    ADVICE: the unlink previously ran only on the empty-delete early
-    return, so every failed DML orphaned its successful sibling's
-    files). Only for thunks whose add/cdc actions reference files THEY
-    created; never for DV re-adds, which restate live data files."""
-
-    def _clean(actions):
-        for a in actions:
-            body = a.get("cdc") or a.get("add")
-            if not body:
-                continue
-            try:
-                os.unlink(os.path.join(path, unquote(body["path"])))
-            except OSError:
-                pass
-
-    return _clean
+    """Cleanup callable for run_concurrently: when a sibling thunk
+    failed, unlink the files this thunk's actions staged
+    (:func:`_staged_paths`) — an uncommitted staged file is
+    unreferenced garbage."""
+    return lambda actions: lakecore.unlink_quietly(_staged_paths(path, actions))
 
 
 def _stage_cdc(
@@ -2419,45 +2320,21 @@ def _stage_cdc(
                 for c in df_changes.columns
             ]
         )
-    staging = tempfile.mkdtemp(prefix="deltacdc_")
-    actions: list[dict] = []
-    try:
-        df_changes.write.mode("overwrite").parquet(staging)
-        import pyarrow.parquet as pq
-
-        for root, _dirs, names in os.walk(staging):
-            for name in names:
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                try:
-                    n_rows = pq.ParquetFile(src).metadata.num_rows
-                except OSError:
-                    # VARIANT footer unreadable by the local pyarrow —
-                    # one tiny Spark count decides empty-vs-keep
-                    n_rows = df_changes.sparkSession.read.parquet(src).count()
-                if n_rows == 0:
-                    os.unlink(src)
-                    continue
-                rel = os.path.join(
-                    "_change_data", f"cdc-{uuid.uuid4().hex}.snappy.parquet"
-                )
-                dst = os.path.join(path, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(src, dst)
-                actions.append(
-                    {
-                        "cdc": {
-                            "path": _quote_path(rel),
-                            "partitionValues": {},
-                            "size": os.path.getsize(dst),
-                            "dataChange": False,
-                        }
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return actions
+    staged = lakecore.stage_parquet(
+        df_changes, path, "_change_data",
+        lambda: f"cdc-{uuid.uuid4().hex}.snappy.parquet",
+    )
+    return [
+        {
+            "cdc": {
+                "path": _quote_path(f.rel),
+                "partitionValues": {},
+                "size": os.path.getsize(f.dst),
+                "dataChange": False,
+            }
+        }
+        for f in staged
+    ]
 
 
 def table_changes(
@@ -2736,8 +2613,9 @@ def _delete_where_inner(
         cdc_actions, dv_actions = run_concurrently(
             lambda: _stage_cdc(cdc_df, path, mapping=mapping),
             lambda: _dv_commit_actions(spark, path, matched, by_name, ts),
-            # DV re-adds restate LIVE data files — never unlink those
-            cleanup=[_unlink_staged(path), None],
+            # a DV re-add restates a LIVE data file: only its new
+            # deletion vector file is unlinked (_staged_paths)
+            cleanup=[_unlink_staged(path), _unlink_staged(path)],
         )
         actions.extend(cdc_actions)
         actions.insert(0, {"protocol": proto})
@@ -2776,13 +2654,7 @@ def _delete_where_inner(
         if rt_domain is not None:
             actions.append(rt_domain)
     version = prev + 1
-    _publish_commit(path, version, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        try:
-            _write_checkpoint(path, version)
-        except DeltaConcurrentModification:  # pragma: no cover - benign race
-            pass
-    _maybe_log_compaction(path, version, snap.configuration)
+    _commit_version(path, version, actions, snap.configuration)
     return version
 
 
@@ -2978,13 +2850,7 @@ def _update_where_inner(
     if rt_domain is not None:
         actions.append(rt_domain)
     version = prev + 1
-    _publish_commit(path, version, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        try:
-            _write_checkpoint(path, version)
-        except DeltaConcurrentModification:  # pragma: no cover - benign race
-            pass
-    _maybe_log_compaction(path, version, snap.configuration)
+    _commit_version(path, version, actions, snap.configuration)
     return version
 
 
@@ -3149,14 +3015,18 @@ def _merge_upsert_inner(
     # neither recomputes the scan) — overlap them per guide §2.6; adds
     # order (survivors, then source) and commit action order stay
     # deterministic, assembled after both return
-    src_adds, cdc_actions = run_concurrently(
-        lambda: _stage_adds(
-            src_staged, path, snap.partition_columns, mapping=mapping,
-            constraints=src_cons or None,
-        ),
-        lambda: _stage_cdc(changes, path, mapping=mapping),
-        cleanup=[_unlink_staged(path), _unlink_staged(path)],
-    )
+    try:
+        src_adds, cdc_actions = run_concurrently(
+            lambda: _stage_adds(
+                src_staged, path, snap.partition_columns, mapping=mapping,
+                constraints=src_cons or None,
+            ),
+            lambda: _stage_cdc(changes, path, mapping=mapping),
+            cleanup=[_unlink_staged(path), _unlink_staged(path)],
+        )
+    except BaseException:
+        _unlink_staged(path)(adds)  # the survivors staged above
+        raise
     adds.extend(src_adds)
 
     ts = int(time.time() * 1000)
@@ -3192,13 +3062,7 @@ def _merge_upsert_inner(
     if rt_domain is not None:
         actions.append(rt_domain)
     version = prev + 1
-    _publish_commit(path, version, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        try:
-            _write_checkpoint(path, version)
-        except DeltaConcurrentModification:  # pragma: no cover - benign race
-            pass
-    _maybe_log_compaction(path, version, snap.configuration)
+    _commit_version(path, version, actions, snap.configuration)
     return version
 
 
@@ -4122,32 +3986,6 @@ def drop_check_constraint(path: str, name: str) -> int:
     )
 
 
-def _assert_uniform_footers(files: list[str]) -> None:
-    """CONVERT safety: every parquet footer must agree on name → arrow
-    type. Conversion infers the table schema from ONE footer, so a
-    directory with heterogeneous footers (columns added over time) would
-    silently lose the extra columns behind the forced read schema
-    (round-10 advisor finding) — fail loudly instead. Footer-only reads
-    (``pq.read_schema``), O(files) metadata at any data size."""
-    import pyarrow.parquet as pq
-
-    ref_file = files[0]
-    ref = {f.name: f.type for f in pq.read_schema(ref_file)}
-    for p in files[1:]:
-        got = {f.name: f.type for f in pq.read_schema(p)}
-        if got != ref:
-            extra = sorted(set(got) - set(ref))
-            missing = sorted(set(ref) - set(got))
-            changed = sorted(n for n in set(ref) & set(got) if ref[n] != got[n])
-            raise ValueError(
-                f"convert: heterogeneous parquet footers — {p} vs {ref_file}: "
-                + (f"extra columns {extra} " if extra else "")
-                + (f"missing columns {missing} " if missing else "")
-                + (f"type-changed columns {changed} " if changed else "")
-                + "— unify the files (or convert a uniform subset) first"
-            )
-
-
 def convert_to_delta(
     spark: SparkSession,
     path: str,
@@ -4168,55 +4006,12 @@ def convert_to_delta(
     if latest_version(path) >= 0:
         raise ValueError(f"already a delta table: {path}")
     partition_by = list(partition_by or [])
-    ptypes: dict[str, T.DataType] = {}
-    if partition_by:
-        if not partition_schema:
-            raise ValueError(
-                "convert_to_delta: partitioned conversion needs "
-                "partition_schema DDL (hive dir values are untyped)"
-            )
-        pstruct = T.StructType.fromDDL(partition_schema)
-        ptypes = {f.name: f.dataType for f in pstruct.fields}
-        missing = [c for c in partition_by if c not in ptypes]
-        if missing:
-            raise ValueError(
-                f"partition_schema lacks columns {missing}"
-            )
-    data_files: list[str] = []
-    for root, _dirs, names in os.walk(path):
-        if _LOG in root:
-            continue
-        for name in names:
-            if name.endswith(".parquet") and not name.startswith("."):
-                data_files.append(os.path.join(root, name))
-    if not data_files:
-        raise ValueError(f"no parquet files under {path}")
-    # Spark's partitionBy reuses basenames ACROSS partition dirs
-    # (grp=0/part-00000-x, grp=1/part-00000-x) while this engine
-    # identifies files by unique basename everywhere (the broadcast
-    # file-map pattern). Conversion is a TAKEOVER: colliding files get a
-    # unique suffix via os.rename — an O(files) filesystem metadata op,
-    # still zero bytes of data moved or rewritten (delta owns the layout
-    # from here on, exactly like the jar's CONVERT owns the directory).
-    seen: set[str] = set()
-    renamed: list[str] = []
-    for src in sorted(data_files):
-        base = os.path.basename(src)
-        if base in seen:
-            stem, ext = os.path.splitext(base)
-            dst = os.path.join(
-                os.path.dirname(src), f"{stem}-{uuid.uuid4().hex[:8]}{ext}"
-            )
-            os.rename(src, dst)
-            renamed.append(dst)
-            seen.add(os.path.basename(dst))
-        else:
-            seen.add(base)
-            renamed.append(src)
-    data_files = renamed
-    _assert_uniform_footers(data_files)
+    ptypes = lakecore.partition_types(
+        "convert_to_delta", partition_by, partition_schema
+    )
+    data_files = lakecore.takeover_files(path, _LOG)
     # table schema: data columns from one footer + typed partition cols
-    # (safe: the footer-uniformity assert above just proved they agree)
+    # (safe: takeover_files just proved every footer agrees)
     sample = spark.read.parquet(data_files[0])
     schema = T.StructType(
         list(sample.schema.fields)
@@ -4249,7 +4044,7 @@ def convert_to_delta(
     ]
     for src in sorted(data_files):
         rel = os.path.relpath(src, path)
-        pvals = _parse_hive_dirs(rel) if partition_by else {}
+        pvals = lakecore.parse_hive_dirs(rel) if partition_by else {}
         unknown = set(pvals) - set(partition_by)
         if partition_by and (unknown or set(partition_by) - set(pvals)):
             raise ValueError(
@@ -4264,7 +4059,9 @@ def convert_to_delta(
                     "size": os.path.getsize(src),
                     "modificationTime": int(os.path.getmtime(src) * 1000),
                     "dataChange": True,
-                    "stats": json.dumps(_file_stats(src)),
+                    "stats": json.dumps(
+                        _file_stats(lakecore.read_footer(src))
+                    ),
                 }
             }
         )
@@ -4432,63 +4229,6 @@ def purge_deletion_vectors(spark: SparkSession, path: str) -> int | None:
     return version
 
 
-def _zorder_key(df: DataFrame, cols: list[str], bits: int = 4):
-    """Multi-column Morton/z-order key as a pure Column expression.
-
-    Each column is quantized to ``2^bits`` QUANTILE buckets (driver-side
-    ``approxQuantile`` boundaries — one bounded extra pass; equal-depth,
-    so skew cannot collapse the key space the way equal-width would),
-    then the bucket bits are interleaved round-robin across columns.
-    Sorting by the key makes consecutive rows cover small axis-aligned
-    hyper-rectangles in the column space, so every written file's
-    min/max footer spans ~2^-bits of EVERY dimension — multi-dimensional
-    data skipping, the thing a lexicographic sort gives only the leading
-    column. Bucketization is a driver-constant when-chain over ≤ 2^bits
-    boundaries and the interleave is shift/mask arithmetic — all inside
-    whole-stage codegen, no UDF, no extra shuffle."""
-    ncols = len(cols)
-    types = {f.name: f.dataType for f in df.schema.fields}
-    nums = []
-    for c in cols:
-        dt = types[c]
-        if isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
-            nums.append(F.col(c).cast("timestamp").cast("double"))
-        elif isinstance(dt, T.NumericType):
-            nums.append(F.col(c).cast("double"))
-        else:
-            raise ValueError(
-                f"zorder_by column {c!r} has type {dt.simpleString()} — "
-                "only numeric / date / timestamp columns are supported "
-                "(quantile quantization needs an orderable numeric axis)"
-            )
-    n_b = (1 << bits) - 1
-    # ONE quantile job computes every column's boundaries (the sketch is
-    # built per column either way, so the boundaries are identical to
-    # k separate calls) — k-1 fewer full passes over the table
-    qdf = df.select(
-        *[num.alias(f"__zq_{c}") for c, num in zip(cols, nums)]
-    )
-    all_bounds = qdf.approxQuantile(
-        [f"__zq_{c}" for c in cols],
-        [i / (n_b + 1) for i in range(1, n_b + 1)],
-        0.01,
-    )
-    buckets = []
-    for num, bounds in zip(nums, all_bounds):
-        # count of boundaries <= value == equal-depth bucket id in
-        # [0, 2^bits); NULLs sort first (bucket 0)
-        b = F.lit(0)
-        for t in bounds:
-            b = b + F.when(num >= F.lit(t), 1).otherwise(0)
-        buckets.append(b)
-    z = F.lit(0)
-    for bit in range(bits):
-        for i, b in enumerate(buckets):
-            pos = bit * ncols + i
-            z = z + F.shiftright(b, bit).bitwiseAND(F.lit(1)) * F.lit(1 << pos)
-    return z
-
-
 def optimize_compact(
     spark: SparkSession,
     path: str,
@@ -4509,7 +4249,7 @@ def optimize_compact(
       appends reads 10k footers per query until compacted.
     - **Z-ORDER** (``zorder_by=[cols]``): ALL live files rewrite,
       range-partitioned + sorted by the interleaved quantile-bucket key
-      (:func:`_zorder_key`), so post-optimize file stats prune scans on
+      (:func:`lakecore.zorder_key`), so post-optimize file stats prune scans on
       EVERY zorder dimension. On a liquid-clustered table (the
       ``delta.clustering`` domain) ``zorder_by`` must be omitted — the
       table's own clustering columns drive a range-cluster rewrite
@@ -4593,47 +4333,19 @@ def optimize_compact(
     )
     total = sum(f.size for f in rewrite)
     n_out = max(1, -(-total // max(1, target_file_size)))
-    persisted = None
     if layout_cols:
-        # A layout rewrite consumes its scan THREE times: the quantile
-        # boundary job (zorder only), repartitionByRange's range-bounds
-        # SAMPLING pass, and the staging write. Persist the working set
-        # — by definition exactly the bytes OPTIMIZE selected to rewrite
-        # — so the selected files are read once and the two extra passes
-        # hit memory/disk blocks instead of re-scanning (guide §5:
-        # reuse-justified persist; local try/finally lifecycle because
-        # OPTIMIZE also runs outside registered queries).
-        persisted = df.persist()
-        df = persisted
-    try:
-        if layout_cols:
-            zkey = (
-                _zorder_key(df, layout_cols)
-                if zorder_by
-                else None  # clustered: plain range on the clustering columns
-            )
-            if zkey is not None:
-                df = (
-                    df.withColumn("__z", zkey)
-                    .repartitionByRange(n_out, *(part_cols + ["__z"]))
-                    .sortWithinPartitions(*(part_cols + ["__z"]))
-                    .drop("__z")
-                )
-            else:
-                df = df.repartitionByRange(n_out, *layout_cols).sortWithinPartitions(
-                    *layout_cols
-                )
-        elif part_cols:
-            # one spark partition per hash-of-partition-tuple: the staged
-            # partitionBy split then yields ONE file per tuple per partition
-            df = df.repartition(n_out, *part_cols)
-        else:
-            df = df.repartition(n_out)
-
-        adds = _stage_adds(df, path, part_cols, mapping=mapping)
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
+        # zorder prefixes the partition columns (a clustered table has none)
+        layout = lakecore.layout_rewrite(
+            df, layout_cols, bool(zorder_by), part_cols, n_out
+        )
+    elif part_cols:
+        # one spark partition per hash-of-partition-tuple: the staged
+        # partitionBy split then yields ONE file per tuple per partition
+        layout = nullcontext(df.repartition(n_out, *part_cols))
+    else:
+        layout = nullcontext(df.repartition(n_out))
+    with layout as laid:
+        adds = _stage_adds(laid, path, part_cols, mapping=mapping)
     rt_domain = _fresh_row_id_actions(spark, path, snap, adds)
     for a in adds:
         a["add"]["dataChange"] = False

@@ -42,10 +42,9 @@ import datetime as _dt
 import json
 import os
 import re
-import shutil
-import tempfile
 import time
 import uuid
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +53,7 @@ from pyspark.sql import types as T
 from ..functions.avro_ocf import read_ocf, write_ocf
 from ..localrel import local_relation
 from ..parallel import run_concurrently
+from . import lakecore
 
 
 class IcebergConcurrentModification(RuntimeError):
@@ -551,7 +551,7 @@ def load_metadata(loc: str, version: int | None = None) -> dict:
     return meta
 
 
-def _publish_metadata(loc: str, version: int, meta: dict) -> None:
+def _publish_metadata(loc: str, version: int, meta: dict, staged=()) -> None:
     # spec (Table Metadata → refs): the ``main`` branch tracks
     # current-snapshot-id. Sync it HERE so no commit path (write, DML,
     # rollback, expire) can leave a physical main ref stale; tags and
@@ -573,7 +573,6 @@ def _publish_metadata(loc: str, version: int, meta: dict) -> None:
         refs["main"] = dict(refs["main"], **{"snapshot-id": cur})
         meta = dict(meta, refs=refs)
     d = _meta_dir(loc)
-    os.makedirs(d, exist_ok=True)
     # spec (Table Metadata → metadata-log): every commit appends the
     # PREVIOUS metadata file so clients can walk metadata history
     # (catalog rollback, debugging); bounded by the table property
@@ -595,18 +594,15 @@ def _publish_metadata(loc: str, version: int, meta: dict) -> None:
         )
         meta = dict(meta)
         meta["metadata-log"] = log[-max(keep, 1):]
-    tmp = os.path.join(d, f".{uuid.uuid4().hex}.json.tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    final = os.path.join(d, f"v{version}.metadata.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError as e:
-        raise IcebergConcurrentModification(
+    # exclusive create; a lost race unlinks the commit's ``staged`` files
+    lakecore.publish_exclusive(
+        os.path.join(d, f"v{version}.metadata.json"),
+        lambda fh: json.dump(meta, fh),
+        IcebergConcurrentModification(
             f"metadata v{version} of {loc} was committed concurrently"
-        ) from e
-    finally:
-        os.unlink(tmp)
+        ),
+        staged,
+    )
     hint_tmp = os.path.join(d, f".hint.{uuid.uuid4().hex}")
     with open(hint_tmp, "w", encoding="utf-8") as fh:
         fh.write(str(version))
@@ -954,19 +950,6 @@ def _delete_manifest_entry_schema(v3: bool = False) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _parse_hive_dirs(relpath: str) -> dict:
-    from urllib.parse import unquote
-
-    vals = {}
-    for seg in relpath.split(os.sep)[:-1]:
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            vals[k] = (
-                None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            )
-    return vals
-
-
 def _partition_to_avro(value: str | None, dt: T.DataType):
     if value is None:
         return None
@@ -1030,43 +1013,25 @@ def _decode_bound(raw: bytes, ice_type: str):
     return None
 
 
-def _footer_bounds(src: str, field_ids: dict, ice_types: dict):
-    """(lower_bounds, upper_bounds) as the spec's key/value record lists,
-    harvested from the parquet footer statistics."""
-    import datetime as _d
+def _footer_bounds(md, field_ids: dict, ice_types: dict):
+    """(lower_bounds, upper_bounds) as the spec's key/value record lists
+    of Appendix-D bound bytes, from a parquet footer's statistics;
+    (None, None) for an unreadable footer (:func:`lakecore.read_footer`)."""
+    if md is None:
+        return None, None
+    lows, highs, _nulls = lakecore.footer_ranges(md, field_ids)
 
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(src).metadata
-    mins: dict = {}
-    maxs: dict = {}
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name or name not in field_ids:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, _d.datetime):
+    def _records(vals: dict):
+        out = []
+        for name, v in vals.items():
+            if isinstance(v, _dt.datetime):
                 continue  # timestamptz bounds: skip (tz pitfalls > value)
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
-    lower = []
-    upper = []
-    for name, lo in mins.items():
-        b = _encode_bound(lo, ice_types[name])
-        if b is not None:
-            lower.append({"key": field_ids[name], "value": b})
-    for name, hi in maxs.items():
-        b = _encode_bound(hi, ice_types[name])
-        if b is not None:
-            upper.append({"key": field_ids[name], "value": b})
-    return (lower or None), (upper or None)
+            b = _encode_bound(v, ice_types[name])
+            if b is not None:
+                out.append({"key": field_ids[name], "value": b})
+        return out or None
+
+    return _records(lows), _records(highs)
 
 
 def _stage_data_entries(
@@ -1093,8 +1058,6 @@ def _stage_data_entries(
     never reference them directly."""
     from .icetransforms import transform_column
 
-    staging = tempfile.mkdtemp(prefix="icestage_")
-    entries: list[dict] = []
     identity_cols = _identity_names(spec)
     transformed = [e for e in spec if e["transform"] != "identity"]
     stage_by = identity_cols + [e["name"] for e in transformed]
@@ -1135,71 +1098,34 @@ def _stage_data_entries(
     for c, fid in field_ids.items():
         if c in df.columns:
             df = df.withMetadata(c, {"parquet.field.id": int(fid)})
-    try:
-        w = df.write.mode("overwrite")
-        if stage_by:
-            w = w.partitionBy(*stage_by)
-        w.parquet(staging)
-        import pyarrow.parquet as pq
-
-        for root, _dirs, fnames in os.walk(staging):
-            for name in fnames:
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                rel_dir = os.path.relpath(root, staging)
-                rel_dir = "" if rel_dir == "." else rel_dir
-                try:
-                    n_rows = pq.ParquetFile(src).metadata.num_rows
-                except OSError:
-                    # footer unreadable locally (the VARIANT parquet
-                    # logical type postdates this pyarrow): one tiny
-                    # Spark count stands in — skipping bounds lost,
-                    # correctness untouched (the delta _stage_adds rule)
-                    n_rows = df.sparkSession.read.parquet(src).count()
-                if n_rows == 0:
-                    os.unlink(src)
-                    continue
-                new_name = f"{uuid.uuid4().hex}.parquet"
-                rel = (
-                    os.path.join("data", rel_dir, new_name)
-                    if rel_dir
-                    else os.path.join("data", new_name)
-                )
-                dst = os.path.join(loc, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(src, dst)
-                pvals = _parse_hive_dirs(
-                    os.path.relpath(dst, os.path.join(loc, "data"))
-                )
-                try:
-                    lower, upper = _footer_bounds(dst, field_ids, ice_types)
-                except OSError:
-                    lower, upper = None, None  # VARIANT footer, as above
-                entries.append(
-                    {
-                        "status": 1,  # ADDED
-                        "snapshot_id": snapshot_id,
-                        "data_file": {
-                            "file_path": dst,
-                            "file_format": "PARQUET",
-                            "partition": {
-                                e["name"]: _partition_to_avro(
-                                    pvals.get(e["name"]),
-                                    result_dts[e["name"]],
-                                )
-                                for e in spec
-                            },
-                            "record_count": n_rows,
-                            "file_size_in_bytes": os.path.getsize(dst),
-                            "block_size_in_bytes": 64 * 1024 * 1024,
-                            "lower_bounds": lower,
-                            "upper_bounds": upper,
-                        },
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    entries: list[dict] = []
+    staged = lakecore.stage_parquet(
+        df, loc, "data", lambda: f"{uuid.uuid4().hex}.parquet", stage_by
+    )
+    for f in staged:
+        lower, upper = _footer_bounds(f.footer, field_ids, ice_types)
+        entries.append(
+            {
+                "status": 1,  # ADDED
+                "snapshot_id": snapshot_id,
+                "data_file": {
+                    "file_path": f.dst,
+                    "file_format": "PARQUET",
+                    "partition": {
+                        e["name"]: _partition_to_avro(
+                            f.partition_values.get(e["name"]),
+                            result_dts[e["name"]],
+                        )
+                        for e in spec
+                    },
+                    "record_count": f.row_count,
+                    "file_size_in_bytes": os.path.getsize(f.dst),
+                    "block_size_in_bytes": 64 * 1024 * 1024,
+                    "lower_bounds": lower,
+                    "upper_bounds": upper,
+                },
+            }
+        )
     return entries
 
 
@@ -1903,84 +1829,54 @@ def _stage_position_deletes(
     be truncated by the writer, but a truncated min is a prefix (still a
     valid lower bound) and parquet increments a truncated max — range
     checks stay conservative either way."""
-    import pyarrow.parquet as pq
+    staged = lakecore.stage_parquet(
+        matched, loc, "data", lambda: f"{uuid.uuid4().hex}-deletes.parquet"
+    )
 
-    staging = tempfile.mkdtemp(prefix="icedel_")
+    # pyarrow surfaces BYTE_ARRAY statistics as str when the column
+    # carries a UTF8 annotation and as bytes when not; str(bytes) would
+    # bake the "b'...'" repr into the bound and silently shift the
+    # range. Encode strs, pass bytes through, and skip the bounds
+    # (falling back to the collect-based victim discovery) on any other
+    # type.
+    def _bound_bytes(v):
+        if isinstance(v, bytes):
+            return v
+        if isinstance(v, str):
+            return v.encode("utf-8")
+        return None
+
     delete_entries: list[dict] = []
-    total = 0
-    try:
-        matched.write.mode("overwrite").parquet(staging)
-        for root, _dirs, fnames in os.walk(staging):
-            for name in fnames:
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(root, name)
-                md = pq.ParquetFile(src).metadata
-                n_rows = md.num_rows
-                if n_rows == 0:
-                    continue
-                total += n_rows
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    for ci in range(md.num_columns):
-                        col = md.row_group(rg).column(ci)
-                        if col.path_in_schema != "file_path":
-                            continue
-                        st = col.statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        if lo is None or st.min < lo:
-                            lo = st.min
-                        if hi is None or st.max > hi:
-                            hi = st.max
-                bounds = {}
-                # pyarrow surfaces BYTE_ARRAY statistics as str when the
-                # column carries a UTF8 annotation and as bytes when not;
-                # str(bytes) would bake the "b'...'" repr into the bound
-                # and silently shift the range. Encode strs, pass bytes
-                # through, and skip the bounds (falling back to the
-                # collect-based victim discovery) on any other type.
-                def _bound_bytes(v):
-                    if isinstance(v, bytes):
-                        return v
-                    if isinstance(v, str):
-                        return v.encode("utf-8")
-                    return None
-
-                blo = _bound_bytes(lo) if lo is not None else None
-                bhi = _bound_bytes(hi) if hi is not None else None
-                if blo is not None and bhi is not None:
-                    key = _POS_DELETE_PATH_FID
-                    bounds = {
-                        "lower_bounds": [{"key": key, "value": blo}],
-                        "upper_bounds": [{"key": key, "value": bhi}],
-                    }
-                dst = os.path.join(
-                    loc, "data", f"{uuid.uuid4().hex}-deletes.parquet"
-                )
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(src, dst)
-                delete_entries.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "sequence_number": None,  # inherit from the list
-                        "file_sequence_number": None,
-                        "data_file": {
-                            "content": 1,  # position deletes
-                            "file_path": dst,
-                            "file_format": "PARQUET",
-                            "partition": {},
-                            "record_count": n_rows,
-                            "file_size_in_bytes": os.path.getsize(dst),
-                            "equality_ids": None,
-                            **bounds,
-                        },
-                    }
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    return delete_entries, total
+    for f in staged:
+        lows, highs, _nulls = lakecore.footer_ranges(f.footer, ["file_path"])
+        blo = _bound_bytes(lows.get("file_path"))
+        bhi = _bound_bytes(highs.get("file_path"))
+        bounds = {}
+        if blo is not None and bhi is not None:
+            key = _POS_DELETE_PATH_FID
+            bounds = {
+                "lower_bounds": [{"key": key, "value": blo}],
+                "upper_bounds": [{"key": key, "value": bhi}],
+            }
+        delete_entries.append(
+            {
+                "status": 1,
+                "snapshot_id": snapshot_id,
+                "sequence_number": None,  # inherit from the list
+                "file_sequence_number": None,
+                "data_file": {
+                    "content": 1,  # position deletes
+                    "file_path": f.dst,
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": f.row_count,
+                    "file_size_in_bytes": os.path.getsize(f.dst),
+                    "equality_ids": None,
+                    **bounds,
+                },
+            }
+        )
+    return delete_entries, sum(f.row_count for f in staged)
 
 
 def _mor_scan(spark: SparkSession, loc: str, meta: dict, snap: dict):
@@ -2599,7 +2495,13 @@ def _commit_row_delta(
     meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
     ]
-    _publish_metadata(loc, current_version(loc) + 1, meta)
+    # everything this commit wrote: its data and delete files, its new
+    # manifests and the manifest list — unlinked if the publish loses
+    staged = {e["data_file"]["file_path"] for e in delete_entries + data_entries}
+    staged |= {m["manifest_path"] for m in manifests}
+    staged -= {mf["manifest_path"] for mf in prev}
+    staged.add(list_path)
+    _publish_metadata(loc, current_version(loc) + 1, meta, staged)
     return snapshot_id
 
 
@@ -2787,11 +2689,7 @@ def _update_where_inner(
         cleanup=[_unlink_staged_entries, _unlink_staged_entries],
     )
     if not delete_entries:
-        for e in data_entries:  # paranoia: never orphan a staged file
-            try:
-                os.unlink(e["data_file"]["file_path"])
-            except OSError:
-                pass
+        _unlink_staged_entries(data_entries)  # never orphan a staged file
         return None
     return _commit_row_delta(
         loc, meta, snap, snapshot_id, now_ms,
@@ -2808,11 +2706,7 @@ def _unlink_staged_entries(res):
     entry list or the (entries, total) pair the delete-staging thunks
     return."""
     entries = res[0] if isinstance(res, tuple) else res
-    for e in entries or []:
-        try:
-            os.unlink(e["data_file"]["file_path"])
-        except (OSError, KeyError, TypeError):
-            pass
+    lakecore.unlink_quietly(e["data_file"]["file_path"] for e in entries)
 
 
 def merge_upsert(
@@ -2866,47 +2760,29 @@ def merge_upsert(
     for k in keys:
         eq = eq.withMetadata(k, {"parquet.field.id": field_ids[k]})
     def _stage_eq() -> tuple[list[dict], int]:
-        staging = tempfile.mkdtemp(prefix="iceeq_")
-        delete_entries: list[dict] = []
-        total = 0
-        try:
-            eq.coalesce(1).write.mode("overwrite").parquet(staging)
-            import pyarrow.parquet as pq
-
-            for root, _dirs, fnames in os.walk(staging):
-                for name in fnames:
-                    if not name.endswith(".parquet"):
-                        continue
-                    src_f = os.path.join(root, name)
-                    n_rows = pq.ParquetFile(src_f).metadata.num_rows
-                    if n_rows == 0:
-                        continue
-                    total += n_rows
-                    dst = os.path.join(
-                        loc, "data", f"{uuid.uuid4().hex}-eq-deletes.parquet"
-                    )
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    shutil.move(src_f, dst)
-                    delete_entries.append(
-                        {
-                            "status": 1,
-                            "snapshot_id": snapshot_id,
-                            "sequence_number": None,
-                            "file_sequence_number": None,
-                            "data_file": {
-                                "content": 2,  # equality deletes
-                                "file_path": dst,
-                                "file_format": "PARQUET",
-                                "partition": {},
-                                "record_count": n_rows,
-                                "file_size_in_bytes": os.path.getsize(dst),
-                                "equality_ids": [field_ids[k] for k in keys],
-                            },
-                        }
-                    )
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return delete_entries, total
+        staged = lakecore.stage_parquet(
+            eq.coalesce(1), loc, "data",
+            lambda: f"{uuid.uuid4().hex}-eq-deletes.parquet",
+        )
+        delete_entries = [
+            {
+                "status": 1,
+                "snapshot_id": snapshot_id,
+                "sequence_number": None,
+                "file_sequence_number": None,
+                "data_file": {
+                    "content": 2,  # equality deletes
+                    "file_path": f.dst,
+                    "file_format": "PARQUET",
+                    "partition": {},
+                    "record_count": f.row_count,
+                    "file_size_in_bytes": os.path.getsize(f.dst),
+                    "equality_ids": [field_ids[k] for k in keys],
+                },
+            }
+            for f in staged
+        ]
+        return delete_entries, sum(f.row_count for f in staged)
 
     # the equality-delete staging (O(source keys)) and the data staging
     # (O(source)) are INDEPENDENT jobs — overlap them (guide §2.6); the
@@ -2922,11 +2798,7 @@ def merge_upsert(
         cleanup=[_unlink_staged_entries, _unlink_staged_entries],
     )
     if not delete_entries:
-        for e in data_entries:
-            try:
-                os.unlink(e["data_file"]["file_path"])
-            except OSError:
-                pass
+        _unlink_staged_entries(data_entries)
         return None
     return _commit_row_delta(
         loc, meta, snap, snapshot_id, now_ms,
@@ -2956,9 +2828,9 @@ def rewrite_data_files(
       so every file covers a narrow key range and its footer bounds
       become the skipping index (:func:`_prune_files_by_bounds`).
     - ``zorder`` (``zorder_by=[cols]``): restage along the multi-column
-      Morton key (equal-depth quantile buckets, bit-interleaved — the
-      same driver-constant codegen-friendly expression delta's OPTIMIZE
-      uses), giving file-level skipping on EVERY listed dimension.
+      Morton key (equal-depth quantile buckets, bit-interleaved —
+      :func:`lakecore.zorder_key`), giving file-level skipping on EVERY
+      listed dimension.
 
     All strategies fold deletes as a side effect (the restage reads
     live rows). Scale shape: one distributed job over live bytes;
@@ -3023,45 +2895,24 @@ def rewrite_data_files(
                 f"rewrite_data_files: {sorted(bad)} are identity partition "
                 "columns — constant per file, sorting them is a no-op"
             )
-    persisted = None
+    total = sum(int(f["file_size_in_bytes"]) for f in _data)
+    n_out = max(1, -(-total // max(1, target_file_size)))
     if strategy in ("sort", "zorder"):
-        # A layout rewrite consumes its MoR scan more than once: the
-        # zorder quantile job, repartitionByRange's range-bounds
-        # SAMPLING pass, and the staging write. Persist the working set
-        # — exactly the bytes the rewrite selected — so the files are
-        # read once and the extra passes hit cached blocks (guide §5;
-        # local try/finally lifecycle, mirrors delta optimize_compact).
-        persisted = live.persist()
-        live = persisted
-    try:
-        if strategy != "fold":
-            total = sum(int(f["file_size_in_bytes"]) for f in _data)
-            n_out = max(1, -(-total // max(1, target_file_size)))
-            if strategy == "binpack":
-                live = live.repartition(n_out)
-            elif strategy == "sort":
-                live = live.repartitionByRange(
-                    n_out, *layout_cols
-                ).sortWithinPartitions(*layout_cols)
-            else:  # zorder — share delta's quantile-bucket Morton key
-                from .deltalog import _zorder_key
-
-                live = (
-                    live.withColumn("__z", _zorder_key(live, layout_cols))
-                    .repartitionByRange(n_out, "__z")
-                    .sortWithinPartitions("__z")
-                    .drop("__z")
-                )
-        now_ms = int(time.time() * 1000)
-        snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-        spec = _spec_entries(meta)
+        layout = lakecore.layout_rewrite(
+            live, layout_cols, strategy == "zorder", [], n_out
+        )
+    elif strategy == "binpack":
+        layout = nullcontext(live.repartition(n_out))
+    else:
+        layout = nullcontext(live)
+    now_ms = int(time.time() * 1000)
+    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
+    spec = _spec_entries(meta)
+    with layout as laid:
         data_entries = _stage_data_entries(
-            live, loc, stage_schema, spec, snapshot_id,
+            laid, loc, stage_schema, spec, snapshot_id,
             ice_fields=meta["schema"]["fields"],
         )
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
     if meta.get("format-version", 1) < 2:
         meta = _upgrade_meta_v2(meta)
     if fmt3:
@@ -3124,7 +2975,10 @@ def rewrite_data_files(
     meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
     ]
-    _publish_metadata(loc, current_version(loc) + 1, meta)
+    staged = [e["data_file"]["file_path"] for e in data_entries]
+    _publish_metadata(
+        loc, current_version(loc) + 1, meta, [*staged, manifest_path, list_path]
+    )
     return snapshot_id
 
 
@@ -3541,8 +3395,7 @@ def _prune_files_by_bounds(
     """FILE skipping against manifest column bounds (spec fields
     125/128) and partition values: simple ``col op literal`` AND-chains
     drop files whose bounds PROVE no row matches; anything unparseable
-    keeps every file (always correct). Mirrors the delta data-skipping
-    path (deltalog.py).
+    keeps every file (always correct).
 
     HIDDEN-PARTITIONING pruning (round 9): a predicate on the SOURCE
     column of a transformed partition field maps through the transform —
@@ -3554,10 +3407,9 @@ def _prune_files_by_bounds(
     order-preserving, so only equality prunes (file bucket != bucket(X)
     ⟹ no row equals X). This is the spec's scan-planning rule and the
     reason iceberg queries never need to mention partition columns."""
-    from .deltalog import _parse_skippable
     from .icetransforms import is_order_preserving, transform_literal
 
-    conjuncts = _parse_skippable(where)
+    conjuncts = lakecore.parse_skippable(where)
     if not conjuncts:
         return files
     ids_to_type = {f["id"]: f["type"] for f in meta["schema"]["fields"]}
@@ -4579,52 +4431,16 @@ def convert_to_iceberg(
     footer column bounds land in the manifest (spec fields 125/128) so
     file pruning works from snapshot one. Conversion is a TAKEOVER:
     basename collisions (Spark's partitionBy reuses part-00000-... per
-    dir) resolve by filesystem rename, matching
-    deltalog.convert_to_delta. Returns the snapshot id."""
+    dir) resolve by filesystem rename (:func:`lakecore.takeover_files`).
+    Returns the snapshot id."""
     if current_version(loc) > 0:
         raise ValueError(f"already an iceberg table: {loc}")
     partition_by = list(partition_by or [])
-    ptypes: dict[str, T.DataType] = {}
-    if partition_by:
-        if not partition_schema:
-            raise ValueError(
-                "convert_to_iceberg: partitioned conversion needs "
-                "partition_schema DDL (hive dir values are untyped)"
-            )
-        pstruct = T.StructType.fromDDL(partition_schema)
-        ptypes = {f.name: f.dataType for f in pstruct.fields}
-        missing = [c for c in partition_by if c not in ptypes]
-        if missing:
-            raise ValueError(f"partition_schema lacks columns {missing}")
-    data_files: list[str] = []
-    for root, _dirs, names in os.walk(loc):
-        if "metadata" in os.path.relpath(root, loc).split(os.sep):
-            continue
-        for name in names:
-            if name.endswith(".parquet") and not name.startswith("."):
-                data_files.append(os.path.join(root, name))
-    if not data_files:
-        raise ValueError(f"no parquet files under {loc}")
-    seen: set[str] = set()
-    renamed: list[str] = []
-    for src in sorted(data_files):
-        base = os.path.basename(src)
-        if base in seen:
-            stem, ext = os.path.splitext(base)
-            dst = os.path.join(
-                os.path.dirname(src), f"{stem}-{uuid.uuid4().hex[:8]}{ext}"
-            )
-            os.rename(src, dst)
-            renamed.append(dst)
-            seen.add(os.path.basename(dst))
-        else:
-            seen.add(base)
-            renamed.append(src)
-    data_files = renamed
-    from .deltalog import _assert_uniform_footers
-
-    _assert_uniform_footers(data_files)
-    # safe: the footer-uniformity assert above just proved they agree
+    ptypes = lakecore.partition_types(
+        "convert_to_iceberg", partition_by, partition_schema
+    )
+    data_files = lakecore.takeover_files(loc, "metadata")
+    # safe: takeover_files just proved every footer agrees
     sample = spark.read.parquet(data_files[0])
     schema = T.StructType(
         list(sample.schema.fields)
@@ -4639,13 +4455,18 @@ def convert_to_iceberg(
 
     entries = []
     for src in sorted(data_files):
-        pvals = _parse_hive_dirs(os.path.relpath(src, loc)) if partition_by else {}
+        pvals = (
+            lakecore.parse_hive_dirs(os.path.relpath(src, loc))
+            if partition_by
+            else {}
+        )
         if partition_by and set(partition_by) - set(pvals):
             raise ValueError(
                 f"file {os.path.relpath(src, loc)} lacks partition dirs "
                 f"{sorted(set(partition_by) - set(pvals))}"
             )
-        lower, upper = _footer_bounds(src, field_ids, ice_types)
+        md = pq.ParquetFile(src).metadata
+        lower, upper = _footer_bounds(md, field_ids, ice_types)
         entries.append(
             {
                 "status": 1,
@@ -4657,7 +4478,7 @@ def convert_to_iceberg(
                         c: _partition_to_avro(pvals.get(c), ptypes[c])
                         for c in partition_by
                     },
-                    "record_count": pq.ParquetFile(src).metadata.num_rows,
+                    "record_count": md.num_rows,
                     "file_size_in_bytes": os.path.getsize(src),
                     "block_size_in_bytes": 64 * 1024 * 1024,
                     "lower_bounds": lower,

@@ -1,0 +1,399 @@
+"""Format-neutral lakehouse machinery shared by the Delta
+(:mod:`.deltalog`) and Iceberg (:mod:`.iceberg`) table formats.
+
+Both formats are jar-free and both need the same storage-layer moves:
+an exclusive create for the commit file (optimistic concurrency on a
+filesystem), a distributed parquet staging write whose files land under
+the table root with fresh names, footer min/max/null harvesting for
+data skipping, and the persisted range/Z-order layout rewrite behind
+OPTIMIZE / ``rewrite_data_files``. Everything here takes plain
+arguments and returns plain records; each format keeps only its own
+encoding (Delta ``add``/``cdc`` actions and stats JSON, Iceberg
+manifest entries and Appendix-D bound bytes).
+"""
+
+from __future__ import annotations
+
+import os
+import re
+import shutil
+import tempfile
+import uuid
+from contextlib import contextmanager
+from typing import Callable, NamedTuple
+from urllib.parse import unquote
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def unlink_quietly(paths) -> None:
+    """Best-effort unlink: a file already gone is not an error."""
+    for p in paths:
+        try:
+            os.unlink(p)
+        except OSError:
+            pass
+
+
+def publish_exclusive(
+    final_path: str,
+    write_fn: Callable,
+    conflict_exc: Exception,
+    staged=(),
+) -> None:
+    """Create ``final_path`` exclusively: ``write_fn(fh)`` fills a tmp
+    file beside it, ``os.link`` publishes it (the link fails if the name
+    exists, so of two writers racing one name exactly one wins), and the
+    tmp file is always unlinked. A lost race raises ``conflict_exc``.
+
+    ``staged``: files written for this commit only. When the publish
+    does not land, for any reason, they are unreferenced garbage — they
+    are unlinked and the original exception re-raised."""
+    d = os.path.dirname(final_path)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{uuid.uuid4().hex}.json.tmp")
+    try:
+        try:
+            with open(tmp, "w", encoding="utf-8") as fh:
+                write_fn(fh)
+            os.link(tmp, final_path)
+        except FileExistsError as e:
+            raise conflict_exc from e
+        finally:
+            unlink_quietly([tmp])
+    except BaseException:
+        unlink_quietly(staged)
+        raise
+
+
+class StagedFile(NamedTuple):
+    dst: str  # absolute path under the table root
+    rel: str  # ``dst`` relative to the table root
+    partition_values: dict  # hive dir values (None for the null dir)
+    row_count: int
+    footer: object  # pyarrow FileMetaData, None when unreadable locally
+
+
+def read_footer(path: str):
+    """The parquet footer, or None when the local pyarrow cannot parse
+    it (the VARIANT logical type postdates its thrift definitions)."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.ParquetFile(path).metadata
+    except OSError:
+        return None
+
+
+def parse_hive_dirs(relpath: str) -> dict:
+    """``col=value`` directory segments of ``relpath`` (file name
+    excluded), URL-unquoted; the hive null directory parses to None."""
+    vals = {}
+    for seg in relpath.split(os.sep)[:-1]:
+        if "=" in seg:
+            k, _, v = seg.partition("=")
+            vals[k] = None if v == HIVE_NULL else unquote(v)
+    return vals
+
+
+def stage_parquet(
+    df: DataFrame,
+    root: str,
+    subdir: str,
+    name_fn: Callable[[], str],
+    partition_by: list[str] | None = None,
+) -> list[StagedFile]:
+    """ONE distributed parquet write of ``df`` to a temp directory, then
+    move every non-empty part under ``root/subdir`` (keeping the hive
+    partition dirs) with the name ``name_fn()``. Each footer is read
+    once. A footer the local pyarrow cannot parse (VARIANT) costs one
+    tiny Spark count to tell empty from non-empty; its record carries
+    ``footer=None`` (skipping bounds lost, reads stay correct). If the
+    walk fails, the files it already moved are unlinked."""
+    staging = tempfile.mkdtemp(prefix="lakestage_")
+    out: list[StagedFile] = []
+    try:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(staging)
+        for here, _dirs, names in os.walk(staging):
+            rel_dir = os.path.relpath(here, staging)
+            rel_dir = "" if rel_dir == "." else rel_dir
+            for name in names:
+                if not name.endswith(".parquet"):
+                    continue
+                src = os.path.join(here, name)
+                md = read_footer(src)
+                n = (
+                    md.num_rows
+                    if md is not None
+                    else df.sparkSession.read.parquet(src).count()
+                )
+                if n == 0:
+                    continue
+                part_rel = os.path.join(rel_dir, name_fn())
+                rel = os.path.join(subdir, part_rel)
+                dst = os.path.join(root, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                shutil.move(src, dst)
+                out.append(
+                    StagedFile(dst, rel, parse_hive_dirs(part_rel), n, md)
+                )
+    except BaseException:
+        unlink_quietly(s.dst for s in out)
+        raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return out
+
+
+def footer_ranges(md, cols=None) -> tuple[dict, dict, dict]:
+    """Fold a parquet footer's row-group statistics into per-column
+    ``(mins, maxs, null_counts)`` of raw pyarrow values. Top-level
+    columns only (nested leaves are skipped), restricted to ``cols``
+    when given. A column whose min/max pyarrow cannot decode (e.g.
+    fixed-len-byte-array decimals) or reports as None contributes no
+    range — absent ranges never prune, so skipping degrades, reads
+    stay correct."""
+    mins: dict = {}
+    maxs: dict = {}
+    nulls: dict = {}
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        for ci in range(md.num_columns):
+            col = group.column(ci)
+            name = col.path_in_schema
+            if "." in name or (cols is not None and name not in cols):
+                continue
+            st = col.statistics
+            if st is None:
+                continue
+            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
+            if not st.has_min_max:
+                continue
+            try:
+                lo, hi = st.min, st.max
+            except NotImplementedError:
+                continue
+            if lo is None or hi is None:
+                continue
+            if name not in mins or lo < mins[name]:
+                mins[name] = lo
+            if name not in maxs or hi > maxs[name]:
+                maxs[name] = hi
+    return mins, maxs, nulls
+
+
+_SKIP_RE = re.compile(
+    r"^\s*`?(\w+)`?\s*(<=|>=|==|=|<|>)\s*"
+    r"('(?:[^']|'')*'|-?\d+(?:\.\d+)?)\s*$"
+)
+
+
+def parse_skippable(predicate: str):
+    """Parse a predicate into [(col, op, literal)] conjuncts usable for
+    file skipping, or None when any part is not a simple
+    ``col <op> literal`` AND-chain (OR / NOT / parens / functions make
+    skipping unsafe — the caller keeps every file, which is always
+    correct, and row-level filtering still applies)."""
+    low = predicate.lower()
+    if (
+        "(" in predicate
+        or " or " in f" {low} "
+        or low.startswith("not ")
+        or " not " in f" {low} "
+    ):
+        return None
+    out = []
+    for part in re.split(r"(?i)\s+and\s+", predicate):
+        m = _SKIP_RE.match(part)
+        if not m:
+            return None
+        col, op, lit = m.group(1), m.group(2), m.group(3)
+        if lit.startswith("'"):
+            val: object = lit[1:-1].replace("''", "'")
+        elif "." in lit:
+            val = float(lit)
+        else:
+            val = int(lit)
+        out.append((col, "=" if op == "==" else op, val))
+    return out
+
+
+def partition_types(
+    who: str, partition_by: list[str], partition_schema: str | None
+) -> dict:
+    """Types of the hive partition columns of an in-place conversion.
+    Hive dir values are untyped strings, so a partitioned conversion
+    needs ``partition_schema`` DDL naming every ``partition_by`` column
+    (``who`` names the caller in the error)."""
+    if not partition_by:
+        return {}
+    if not partition_schema:
+        raise ValueError(
+            f"{who}: partitioned conversion needs "
+            "partition_schema DDL (hive dir values are untyped)"
+        )
+    pstruct = T.StructType.fromDDL(partition_schema)
+    ptypes = {f.name: f.dataType for f in pstruct.fields}
+    missing = [c for c in partition_by if c not in ptypes]
+    if missing:
+        raise ValueError(f"partition_schema lacks columns {missing}")
+    return ptypes
+
+
+def takeover_files(root: str, skip_dir: str) -> list[str]:
+    """The parquet files under ``root`` (outside any ``skip_dir``
+    directory, hidden files excluded) for an in-place conversion, in
+    sorted order with unique basenames and uniform footers.
+
+    Spark's partitionBy reuses basenames ACROSS partition dirs
+    (grp=0/part-00000-x, grp=1/part-00000-x) while both table formats
+    identify files by unique basename (the broadcast file-map pattern).
+    Conversion is a TAKEOVER: colliding files get a unique suffix via
+    os.rename — an O(files) filesystem metadata op, still zero bytes of
+    data moved or rewritten (the table owns the layout from here on,
+    exactly like the jars' CONVERT / migrate own the directory)."""
+    files = []
+    for here, _dirs, names in os.walk(root):
+        if skip_dir in os.path.relpath(here, root).split(os.sep):
+            continue
+        files += [
+            os.path.join(here, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith(".")
+        ]
+    if not files:
+        raise ValueError(f"no parquet files under {root}")
+    seen: set[str] = set()
+    out: list[str] = []
+    for src in sorted(files):
+        base = os.path.basename(src)
+        if base in seen:
+            stem, ext = os.path.splitext(base)
+            dst = os.path.join(
+                os.path.dirname(src), f"{stem}-{uuid.uuid4().hex[:8]}{ext}"
+            )
+            os.rename(src, dst)
+            src, base = dst, os.path.basename(dst)
+        seen.add(base)
+        out.append(src)
+    assert_uniform_footers(out)
+    return out
+
+
+def assert_uniform_footers(files: list[str]) -> None:
+    """CONVERT safety: every parquet footer must agree on name → arrow
+    type. Conversion infers the table schema from ONE footer, so a
+    directory with heterogeneous footers (columns added over time) would
+    silently lose the extra columns behind the forced read schema — fail
+    loudly instead. Footer-only reads (``pq.read_schema``), O(files)
+    metadata at any data size."""
+    import pyarrow.parquet as pq
+
+    ref_file = files[0]
+    ref = {f.name: f.type for f in pq.read_schema(ref_file)}
+    for p in files[1:]:
+        got = {f.name: f.type for f in pq.read_schema(p)}
+        if got != ref:
+            extra = sorted(set(got) - set(ref))
+            missing = sorted(set(ref) - set(got))
+            changed = sorted(n for n in set(ref) & set(got) if ref[n] != got[n])
+            raise ValueError(
+                f"convert: heterogeneous parquet footers — {p} vs {ref_file}: "
+                + (f"extra columns {extra} " if extra else "")
+                + (f"missing columns {missing} " if missing else "")
+                + (f"type-changed columns {changed} " if changed else "")
+                + "— unify the files (or convert a uniform subset) first"
+            )
+
+
+def zorder_key(df: DataFrame, cols: list[str], bits: int = 4):
+    """Multi-column Morton/z-order key as a pure Column expression.
+
+    Each column is quantized to ``2^bits`` QUANTILE buckets (driver-side
+    ``approxQuantile`` boundaries — one bounded extra pass; equal-depth,
+    so skew cannot collapse the key space the way equal-width would),
+    then the bucket bits are interleaved round-robin across columns.
+    Sorting by the key makes consecutive rows cover small axis-aligned
+    hyper-rectangles in the column space, so every written file's
+    min/max footer spans ~2^-bits of EVERY dimension — multi-dimensional
+    data skipping, the thing a lexicographic sort gives only the leading
+    column. Bucketization is a driver-constant when-chain over ≤ 2^bits
+    boundaries and the interleave is shift/mask arithmetic — all inside
+    whole-stage codegen, no UDF, no extra shuffle."""
+    ncols = len(cols)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    nums = []
+    for c in cols:
+        dt = types[c]
+        if isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+            nums.append(F.col(c).cast("timestamp").cast("double"))
+        elif isinstance(dt, T.NumericType):
+            nums.append(F.col(c).cast("double"))
+        else:
+            raise ValueError(
+                f"zorder_by column {c!r} has type {dt.simpleString()} — "
+                "only numeric / date / timestamp columns are supported "
+                "(quantile quantization needs an orderable numeric axis)"
+            )
+    n_b = (1 << bits) - 1
+    # ONE quantile job computes every column's boundaries (the sketch is
+    # built per column either way, so the boundaries are identical to
+    # k separate calls) — k-1 fewer full passes over the table
+    qdf = df.select(
+        *[num.alias(f"__zq_{c}") for c, num in zip(cols, nums)]
+    )
+    all_bounds = qdf.approxQuantile(
+        [f"__zq_{c}" for c in cols],
+        [i / (n_b + 1) for i in range(1, n_b + 1)],
+        0.01,
+    )
+    buckets = []
+    for num, bounds in zip(nums, all_bounds):
+        # count of boundaries <= value == equal-depth bucket id in
+        # [0, 2^bits); NULLs sort first (bucket 0)
+        b = F.lit(0)
+        for t in bounds:
+            b = b + F.when(num >= F.lit(t), 1).otherwise(0)
+        buckets.append(b)
+    z = F.lit(0)
+    for bit in range(bits):
+        for i, b in enumerate(buckets):
+            pos = bit * ncols + i
+            z = z + F.shiftright(b, bit).bitwiseAND(F.lit(1)) * F.lit(1 << pos)
+    return z
+
+
+@contextmanager
+def layout_rewrite(
+    df: DataFrame,
+    cols: list[str],
+    zorder: bool,
+    prefix_cols: list[str],
+    n_out: int,
+):
+    """Yield ``df`` laid out in ``n_out`` range partitions, each sorted
+    by ``prefix_cols`` then by the Z-order key of ``cols`` (``zorder``)
+    or by ``cols`` themselves. A layout rewrite consumes its input THREE
+    times — the quantile boundary job (zorder only), the range-bounds
+    SAMPLING pass of ``repartitionByRange``, and the caller's staging
+    write — so the working set is persisted for the duration of the
+    ``with`` block: the selected files are read once and the extra
+    passes hit cached blocks. Unpersisted on exit."""
+    persisted = df.persist()
+    try:
+        laid = persisted
+        key = [*prefix_cols, *cols]
+        if zorder:
+            laid = laid.withColumn("__z", zorder_key(persisted, cols))
+            key = [*prefix_cols, "__z"]
+        laid = laid.repartitionByRange(n_out, *key).sortWithinPartitions(*key)
+        yield laid.drop("__z") if zorder else laid
+    finally:
+        persisted.unpersist()

@@ -188,6 +188,28 @@ def test_optimize_selects_candidates_from_metadata(spark, loc):
     assert dl.latest_version(loc) == v0  # metadata-only decision, no commit
 
 
+#: warm job counts of the two Z-order rewrites, each counted inside its
+#: own job group on local[4]; the pins allow +2 slack
+DELTA_ZORDER_JOBS = 19
+ICEBERG_ZORDER_JOBS = 7
+
+
+def _group_job_count(spark, fn) -> int:
+    """Jobs ``fn`` launches, counted inside a job group of its own so
+    unrelated activity in the shared session cannot change the count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
 def test_optimize_zorder_job_count_pinned(spark, sf_dir):
     """Round-16 pin (the r15 verdict's order item 5): the flat
     delta_optimize_zorder bench number has a mechanical explanation —
@@ -198,18 +220,59 @@ def test_optimize_zorder_job_count_pinned(spark, sf_dir):
     Pin the warm job count: a regression back to per-column quantile
     jobs (+k-1) or per-consumer working-set scans pushes the count past
     the bound and fails here instead of reading as bench drift.
-    Measured stable at 20 jobs on local[32] and local[4]."""
+    Measured at DELTA_ZORDER_JOBS inside the call's own job group (20
+    when the count also took the session's ungrouped jobs)."""
     from spark_etl_framework_spark.queries import QUERIES
 
     fn = QUERIES["delta_optimize_zorder"]
     fn(spark, sf_dir).count()  # warm (codegen + FS metadata)
-    tracker = spark.sparkContext.statusTracker()
-    before = max([*(tracker.getJobIdsForGroup(None) or []), -1])
-    fn(spark, sf_dir).count()
-    after = [j for j in (tracker.getJobIdsForGroup(None) or []) if j > before]
-    assert len(after) <= 22, (
-        f"delta_optimize_zorder launched {len(after)} jobs (pinned <= 22: "
-        "20 measured + 2 slack); a jump means the fused quantile job or "
+    n = _group_job_count(spark, lambda: fn(spark, sf_dir).count())
+    print(f"\ndelta_optimize_zorder: {n} jobs")
+    assert n <= DELTA_ZORDER_JOBS + 2, (
+        f"delta_optimize_zorder launched {n} jobs (pinned <= "
+        f"{DELTA_ZORDER_JOBS + 2}); a jump means the fused quantile job or "
         "the persisted rewrite working set regressed to per-column/"
         "per-consumer passes"
     )
+
+
+def test_iceberg_zorder_rewrite_job_count_pinned(spark, sf_dir, tmp_path):
+    """The Iceberg twin of the pin above: ``rewrite_data_files`` with
+    ``strategy="zorder"`` over four full-range appends of orders pays
+    one fused quantile job, the range-bounds sample and the staging
+    write over a persisted working set."""
+    from pyspark.sql import functions as F
+
+    from spark_etl_framework_spark.catalog import load_table
+
+    od = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").cast("long").alias("okey"),
+        F.col("o_custkey").cast("long").alias("custkey"),
+        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+
+    def fresh(name):
+        loc = str(tmp_path / name)
+        for m in range(4):  # four full-range slices -> four unskippable files
+            ice.write_iceberg(
+                od.filter(F.col("okey") % 4 == m).coalesce(1), loc,
+                mode="append",
+            )
+        return loc
+
+    def rewrite(loc):
+        return ice.rewrite_data_files(
+            spark, loc, strategy="zorder", zorder_by=["custkey", "cents"],
+            target_file_size=16 * 1024,
+        )
+
+    rewrite(fresh("warm"))  # warm (codegen + FS metadata)
+    loc = fresh("pinned")
+    n = _group_job_count(spark, lambda: rewrite(loc))
+    print(f"\niceberg zorder rewrite: {n} jobs")
+    assert n <= ICEBERG_ZORDER_JOBS + 2, (
+        f"iceberg rewrite_data_files(zorder) launched {n} jobs (pinned <= "
+        f"{ICEBERG_ZORDER_JOBS + 2}); a jump means the fused quantile job "
+        "or the persisted working set regressed"
+    )
+

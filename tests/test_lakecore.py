@@ -1,0 +1,312 @@
+"""The format-neutral lakehouse core (sources/lakecore.py) and the
+failure paths that route through it: staging, footer folds, exclusive
+publish, and the no-orphan guarantees of DML commits that lose a race
+or whose sibling staging thunk fails."""
+
+from __future__ import annotations
+
+import datetime as dt
+import decimal
+import json
+import os
+import pathlib
+
+import pytest
+
+from spark_etl_framework_spark.sources import deltalog as dl
+from spark_etl_framework_spark.sources import iceberg as ice
+from spark_etl_framework_spark.sources import lakecore
+
+SOURCES = pathlib.Path(lakecore.__file__).parent
+
+
+def _tree(root) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, n), root)
+        for d, _dirs, names in os.walk(root)
+        for n in names
+    }
+
+
+# ---------------------------------------------------------------------------
+# staging
+# ---------------------------------------------------------------------------
+
+
+def test_stage_parquet_drops_empty_parts(spark, tmp_path):
+    """An empty input still makes Spark write one schema-only part: it
+    must not land under the root. Non-empty parts land with the
+    caller's names, hive dirs kept, the null dir parsed to None."""
+    root = str(tmp_path / "t")
+    empty = spark.range(0).selectExpr("id", "cast(id % 2 as string) as g")
+    assert lakecore.stage_parquet(empty, root, "data", lambda: "x.parquet") == []
+    assert not os.path.exists(root) or not _tree(root)
+
+    df = spark.createDataFrame(
+        [(1, "a"), (2, "a"), (3, None)], "id long, g string"
+    ).repartition(8)
+    names = iter(f"f{i}.parquet" for i in range(100))
+    staged = lakecore.stage_parquet(df, root, "data", lambda: next(names), ["g"])
+    assert sum(f.row_count for f in staged) == 3
+    assert all(f.row_count > 0 for f in staged)
+    assert {f.partition_values["g"] for f in staged} == {"a", None}
+    for f in staged:
+        assert f.dst == os.path.join(root, f.rel)
+        assert f.rel.startswith("data" + os.sep)
+        assert os.path.basename(f.rel).startswith("f")
+        assert f.footer.num_rows == f.row_count
+    assert _tree(root) == {f.rel for f in staged}
+
+
+def test_hive_default_partition_parses_to_none():
+    rel = os.path.join("a=__HIVE_DEFAULT_PARTITION__", "b=x%20y", "p.parquet")
+    assert lakecore.parse_hive_dirs(rel) == {"a": None, "b": "x y"}
+    assert lakecore.parse_hive_dirs("p.parquet") == {}
+
+
+# ---------------------------------------------------------------------------
+# footer fold
+# ---------------------------------------------------------------------------
+
+
+def _old_delta_fold(md):
+    """The row-group fold deltalog carried before the core existed
+    (values converted before they are compared)."""
+    mins, maxs, nulls = {}, {}, {}
+
+    def _j(v):
+        if isinstance(v, (dt.datetime, dt.date)):
+            return v.isoformat(sep=" ") if isinstance(v, dt.datetime) else v.isoformat()
+        if isinstance(v, decimal.Decimal):
+            return str(v)
+        if isinstance(v, bytes):
+            return None
+        return v
+
+    for rg in range(md.num_row_groups):
+        for ci in range(md.num_columns):
+            col = md.row_group(rg).column(ci)
+            name = col.path_in_schema
+            if "." in name:
+                continue
+            st = col.statistics
+            if st is None:
+                continue
+            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
+            if not st.has_min_max:
+                continue
+            try:
+                lo, hi = _j(st.min), _j(st.max)
+            except NotImplementedError:
+                continue
+            if lo is None or hi is None:
+                continue
+            if name not in mins or lo < mins[name]:
+                mins[name] = lo
+            if name not in maxs or hi > maxs[name]:
+                maxs[name] = hi
+    return {"numRecords": md.num_rows, "minValues": mins,
+            "maxValues": maxs, "nullCount": nulls}
+
+
+def _old_iceberg_fold(md, field_ids, ice_types):
+    """The row-group fold iceberg carried before the core existed."""
+    mins, maxs = {}, {}
+    for rg in range(md.num_row_groups):
+        for ci in range(md.num_columns):
+            col = md.row_group(rg).column(ci)
+            name = col.path_in_schema
+            if "." in name or name not in field_ids:
+                continue
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                continue
+            lo, hi = st.min, st.max
+            if isinstance(lo, dt.datetime):
+                continue
+            if name not in mins or lo < mins[name]:
+                mins[name] = lo
+            if name not in maxs or hi > maxs[name]:
+                maxs[name] = hi
+    lower = [{"key": field_ids[n], "value": b} for n, v in mins.items()
+             if (b := ice._encode_bound(v, ice_types[n])) is not None]
+    upper = [{"key": field_ids[n], "value": b} for n, v in maxs.items()
+             if (b := ice._encode_bound(v, ice_types[n])) is not None]
+    return (lower or None), (upper or None)
+
+
+def test_footer_ranges_match_the_old_folds(tmp_path):
+    """A typed file with four row groups and nulls: the Delta stats and
+    the Iceberg bounds built on footer_ranges equal what the two old
+    per-format folds produced. Decimals are checked apart: the old Delta
+    fold compared their STRINGS across row groups ("10.25" < "9.50"),
+    the shared fold compares the numbers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 40
+    tbl = pa.table({
+        "i": pa.array([None if k % 7 == 0 else k * 3 - 50 for k in range(n)], pa.int32()),
+        "l": pa.array([k * 10_000_000_000 for k in range(n)], pa.int64()),
+        "d": pa.array([None if k % 5 == 0 else k / 3 for k in range(n)], pa.float64()),
+        "s": pa.array([f"s{(k * 37) % 23:02d}" for k in range(n)], pa.string()),
+        "day": pa.array([dt.date(2020, 1, 1) + dt.timedelta(days=(k * 11) % 31)
+                         for k in range(n)], pa.date32()),
+        "ts": pa.array([dt.datetime(2021, 5, 1, k % 24, k) if k % 9 else None
+                        for k in range(n)], pa.timestamp("us", tz="UTC")),
+        "b": pa.array([bytes([k % 256]) for k in range(n)], pa.binary()),
+        "flag": pa.array([k % 3 == 0 for k in range(n)], pa.bool_()),
+        "nest": pa.array([{"x": k} for k in range(n)]),
+    })
+    p = str(tmp_path / "typed.parquet")
+    pq.write_table(tbl, p, row_group_size=10)
+    md = lakecore.read_footer(p)
+    assert md.num_row_groups == 4
+
+    assert dl._file_stats(md) == _old_delta_fold(md)
+
+    ice_types = {"i": "int", "l": "long", "d": "double", "s": "string",
+                 "day": "date", "ts": "timestamptz", "b": "binary",
+                 "flag": "boolean"}
+    field_ids = {c: k + 1 for k, c in enumerate(ice_types)}
+    assert ice._footer_bounds(md, field_ids, ice_types) == _old_iceberg_fold(
+        md, field_ids, ice_types
+    )
+    lows, highs, nulls = lakecore.footer_ranges(md, ["i", "d"])
+    assert set(lows) == {"i", "d"} and nulls == {"i": 6, "d": 8}
+    assert (lows["i"], highs["i"]) == (-47, 67)
+
+    dec = pa.table({"m": pa.array(
+        [decimal.Decimal("10.25"), decimal.Decimal("9.50")], pa.decimal128(9, 2)
+    )})
+    pdec = str(tmp_path / "dec.parquet")
+    pq.write_table(dec, pdec, row_group_size=1)
+    lows, highs, _ = lakecore.footer_ranges(lakecore.read_footer(pdec))
+    assert (lows["m"], highs["m"]) == (
+        decimal.Decimal("9.50"), decimal.Decimal("10.25")
+    )
+
+
+# ---------------------------------------------------------------------------
+# structure
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("module", ["deltalog.py", "iceberg.py"])
+def test_formats_carry_no_private_copy_of_the_core(module):
+    src = (SOURCES / module).read_text(encoding="utf-8")
+    for needle in ("os.link(", "tempfile.mkdtemp(", "from .deltalog import _"):
+        assert needle not in src, f"{module} has its own {needle!r}"
+
+
+# ---------------------------------------------------------------------------
+# failure paths
+# ---------------------------------------------------------------------------
+
+
+def test_tablelog_commit_race_keeps_first_commit(tmp_path, monkeypatch):
+    """Two writers that both pass an existence check must not replace
+    each other's commit: the exclusive create refuses the second."""
+    from spark_etl_framework_spark.operators import tablelog as TL
+
+    path = str(tmp_path / "t")
+    TL._commit(path, 0, ["a.parquet"], "write")
+    first = os.path.join(path, "_log", f"{0:012d}.json")
+    with open(first, "rb") as fh:
+        before = fh.read()
+    monkeypatch.setattr(TL.os.path, "exists", lambda p: False)
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        TL._commit(path, 0, ["b.parquet"], "write")
+    monkeypatch.undo()
+    with open(first, "rb") as fh:
+        assert fh.read() == before
+    assert os.listdir(os.path.join(path, "_log")) == [f"{0:012d}.json"]
+
+
+def _dv_bins(root) -> set[str]:
+    return {
+        p for p in _tree(root)
+        if os.path.basename(p).startswith("deletion_vector_")
+    }
+
+
+def test_dv_delete_sibling_failure_unlinks_only_new_dvs(spark, tmp_path, monkeypatch):
+    """A useDVs DELETE whose CDC staging fails: the DV thunk's new
+    deletion-vector files are unlinked, the data files its re-adds
+    restate are untouched, and the table reads as before."""
+    loc = str(tmp_path / "t")
+    df = spark.range(40).selectExpr("id", "id % 4 as g")
+    dl.write_delta(df.coalesce(2), loc)
+    dl.delete_where(spark, loc, "id < 3", use_dvs=True)  # a prior DV
+    prior_bins = _dv_bins(loc)
+    assert prior_bins
+    v = dl.latest_version(loc)
+    tree = _tree(loc)
+    rows = sorted(dl.read_delta(spark, loc).collect())
+
+    def boom(*_a, **_k):
+        raise RuntimeError("cdc staging failed")
+
+    monkeypatch.setattr(dl, "_stage_cdc", boom)
+    with pytest.raises(RuntimeError, match="cdc staging failed"):
+        dl.delete_where(spark, loc, "id % 2 = 0", use_dvs=True)
+    monkeypatch.undo()
+    assert _dv_bins(loc) == prior_bins, "a new deletion vector was orphaned"
+    assert _tree(loc) == tree
+    assert dl.latest_version(loc) == v
+    assert sorted(dl.read_delta(spark, loc, version_as_of=v).collect()) == rows
+
+
+def test_delta_merge_lost_race_leaves_no_orphans(spark, tmp_path, monkeypatch):
+    loc = str(tmp_path / "t")
+    dl.write_delta(
+        spark.range(20).selectExpr("id", "id * 10 as v").coalesce(2), loc
+    )
+    src = spark.range(15, 25).selectExpr("id", "id * 100 as v")
+    tree = _tree(loc)
+    rival = dl._commit_path(loc, dl.latest_version(loc) + 1)
+    real = dl._publish_commit
+
+    def racing(path, version, actions, staged=()):
+        # another writer lands this version between staging and publish
+        with open(dl._commit_path(path, version), "w") as fh:
+            fh.write(json.dumps({"commitInfo": {"timestamp": 1}}) + "\n")
+        return real(path, version, actions, staged)
+
+    monkeypatch.setattr(dl, "_publish_commit", racing)
+    with pytest.raises(dl.DeltaConcurrentModification):
+        dl.merge_upsert(spark, loc, src, ["id"])
+    assert _tree(loc) - {os.path.relpath(rival, loc)} == tree
+
+
+def test_iceberg_merge_lost_race_leaves_no_orphans(spark, tmp_path):
+    import shutil
+
+    loc = str(tmp_path / "t")
+    ice.write_iceberg(
+        spark.range(20).selectExpr("id", "id * 10 as v").coalesce(2), loc
+    )
+    meta_dir = os.path.join(loc, "metadata")
+    cur = ice.current_version(loc)
+    # another writer already published the next metadata version
+    shutil.copy(
+        os.path.join(meta_dir, f"v{cur}.metadata.json"),
+        os.path.join(meta_dir, f"v{cur + 1}.metadata.json"),
+    )
+    tree = _tree(loc)
+    src = spark.range(15, 25).selectExpr("id", "id * 100 as v")
+    with pytest.raises(ice.IcebergConcurrentModification):
+        ice.merge_upsert(spark, loc, src, ["id"])
+    assert _tree(loc) == tree
+
+
+def test_iceberg_write_with_undecodable_decimal_stats(spark, tmp_path):
+    """pyarrow cannot decode the footer statistics of Spark's INT64
+    decimals; the shared fold leaves that column without bounds instead
+    of failing the write (the old per-format iceberg fold raised)."""
+    loc = str(tmp_path / "t")
+    df = spark.range(5).selectExpr("id", "cast(id * 1.25 as decimal(12,2)) as m")
+    ice.write_iceberg(df, loc)
+    assert sorted(r.m for r in ice.read_iceberg(spark, loc).collect()) == sorted(
+        r.m for r in df.collect()
+    )

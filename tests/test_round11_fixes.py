@@ -37,6 +37,7 @@ import pytest
 
 from spark_etl_framework_spark.sources import deltalog as dl
 from spark_etl_framework_spark.sources import iceberg as ice
+from spark_etl_framework_spark.sources import lakecore
 
 
 @pytest.fixture()
@@ -473,7 +474,7 @@ def _cluster_body(spark, loc):
     for (lo1, hi1), (lo2, hi2) in zip(new_ranges, new_ranges[1:]):
         assert hi1 <= lo2
     # data skipping actually prunes on the clustering column
-    conj = dl._parse_skippable("id >= 10 AND id <= 12")
+    conj = lakecore.parse_skippable("id >= 10 AND id <= 12")
     surviving = [f for f in snap2.files if dl._file_survives(f.stats, conj)]
     assert 0 < len(surviving) < len(snap2.files)
     # and the domain survives checkpoint + log cleanup

@@ -114,3 +114,10 @@ def test_run_concurrently_cleanup_on_sibling_failure(tmp_path):
     out = run_concurrently(ok, lambda: "fine", cleanup=[clean, None])
     assert out == [[str(staged)], "fine"]
     assert staged.exists()
+
+    # a cleanup list shorter than the thunks is refused before any thunk
+    # runs — not an IndexError during cleanup that hides the real failure
+    staged.unlink()
+    with pytest.raises(ValueError, match="cleanup"):
+        run_concurrently(ok, boom, cleanup=[clean])
+    assert not staged.exists(), "no thunk may run on a length mismatch"
