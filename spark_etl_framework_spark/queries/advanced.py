@@ -673,18 +673,24 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding boundary could in principle flip between engines — accepted
     residual risk, same class as vector_norm_stats.
 
-    The edge relation here is JOIN-DERIVED (lineitem x orders + two
-    distincts — corpus-scale work), so per operators/graph.py's own
-    guidance it is MATERIALIZED once before the iteration:
-    ``repartition(__src).localCheckpoint(eager)`` truncates the lineage
-    exactly as connected_components does (operators/dedup.py), so the
-    fact join and distincts execute once instead of once per power
-    iteration, and the checkpointed partitioning IS the join key
-    (LogicalRDD preserves it), so each round's edge-side exchange
-    disappears too. Same-session A/B at sf0.1, both orders to control
-    for warmup: un-materialized 12.7 / 6.0 s vs materialized 5.5 /
+    The edge relation here is JOIN-DERIVED (lineitem x orders + the
+    symmetrizing distinct — corpus-scale work), so per
+    operators/graph.py's own guidance it is MATERIALIZED once before the
+    iteration: ``localCheckpoint(eager)`` straight off symmetrize's
+    distinct truncates the lineage exactly as connected_components does
+    (operators/dedup.py), so the fact join and distinct execute once
+    instead of once per power iteration. No distinct on the directed
+    pairs (symmetrize's own distinct subsumes it) and no repartition
+    before the checkpoint: with or without ``repartition("__src")`` the
+    checkpointed scan's ``outputPartitioning`` is
+    ``UnknownPartitioning(0)`` and the 3-round plan (AQE and
+    auto-broadcast off) holds the same 10 ``hashpartitioning(__src)``
+    exchanges, so the repartition was one extra shuffle for nothing.
+    Same-session A/B at sf0.1, both orders to control for warmup,
+    measured on the earlier shape (directed-pair distinct +
+    repartition): un-materialized 12.7 / 6.0 s vs materialized 5.5 /
     4.1 s — >=1.5x locally, and the gap grows with SF because the part
-    removed (fact join + two corpus-scale distincts, re-run per round)
+    removed (fact join + corpus-scale distincts, re-run per round)
     scales with data while the part kept (|V|-row rank moves) does not.
     On a cluster with unreliable executors, swap for a reliable
     checkpoint dir or a parquet tmp — local checkpoint blocks die with
@@ -693,17 +699,11 @@ def graph_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    raw = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
-        )
-        .distinct()
+    raw = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("a"),
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("b"),
     )
-    edges = scoped_localcheckpoint(
-        symmetrize(raw, "a", "b").repartition("__src")
-    )
+    edges = scoped_localcheckpoint(symmetrize(raw, "a", "b"))
     ranks = pagerank(edges, iters=3, damping=0.85)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 

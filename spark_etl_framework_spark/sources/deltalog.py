@@ -41,6 +41,7 @@ checkpoint), not O(history).
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import re
@@ -57,6 +58,7 @@ from pyspark.sql import types as T
 from ..localrel import local_relation
 from ..parallel import run_concurrently
 from . import lakecore
+from .roaring import dv_positions
 
 _LOG = "_delta_log"
 CHECKPOINT_INTERVAL = 10
@@ -874,11 +876,55 @@ def _file_survives(stats_json: str | None, conjuncts) -> bool:
     return True
 
 
+def _file_map_columns(
+    path: str, snap: Snapshot, files: list, names: list[str], what: str
+) -> tuple[list, dict, dict]:
+    """The per-file map columns a scan of ``files`` (basenames
+    ``names``) needs: typed partition literals, and — when the schema
+    carries EXISTS_DEFAULTs (PROTOCOL.md §Column Default Values) — the
+    list of defaulted columns each file physically lacks, decided
+    driver-side by :func:`_absent_default_files`. Returns ``(columns,
+    defaults, absent)`` for :func:`lakecore.join_file_map` and
+    :func:`lakecore.fill_absent_defaults`; ``what`` names the refused
+    operation when the defaults feature is missing."""
+    ptypes = {f.name: f.dataType for f in snap.schema.fields}
+    columns = [
+        (
+            T.StructField(c, ptypes[c], True),
+            [
+                _cast_partition_literal(
+                    snap.pv_get(f.partition_values, c), ptypes[c]
+                )
+                for f in files
+            ],
+        )
+        for c in snap.partition_columns
+    ]
+    exists_defaults = _exists_defaults(snap.schema)
+    absent: dict[str, list[str]] = {}
+    if exists_defaults:
+        _require_defaults_feature(snap, path, what)
+        absent = _absent_default_files(
+            path, files,
+            {n: snap.physical_of.get(n, n) for n in exists_defaults},
+            snap=snap,
+        )
+    if absent:
+        columns.append(lakecore.absent_column(names, absent))
+    defaults = {
+        n: F.expr(lit).cast(snap.schema[n].dataType)
+        for n, lit in exists_defaults.items()
+    }
+    return columns, defaults, absent
+
+
 def _lineage_scan(spark, path: str, snap: Snapshot, files=None) -> DataFrame:
     """Scan the given add-files (default: all live files) with row
     lineage attached: LOGICAL column names, ``__file_name`` + ``__pos``
-    from the parquet metadata columns, and partition columns re-attached
-    by broadcast-joining the driver-small file→partitionValues map.
+    from the parquet metadata columns, and ONE broadcast file map
+    carrying the partition columns, the absent-default lists (row-level
+    predicates must see EXISTS_DEFAULT exactly like the batch read) and
+    the row-tracking bases.
 
     Column mapping: the parquet scan always uses the PHYSICAL schema and
     renames to logical immediately after the metadata columns are bound —
@@ -904,110 +950,39 @@ def _lineage_scan(spark, path: str, snap: Snapshot, files=None) -> DataFrame:
     rt = snap.row_tracking_enabled
     mat_id = snap.materialized_row_id_col if rt else None
     mat_rcv = snap.materialized_rcv_col if rt else None
-    scan_schema = snap.physical_data_schema
-    if rt:
-        scan_schema = T.StructType(
-            list(scan_schema.fields)
-            + [
-                T.StructField(c, T.LongType(), True)
-                for c in (mat_id, mat_rcv)
-                if c
-            ]
-        )
-    df = (
-        spark.read.schema(scan_schema)
-        .parquet(*abs_paths)
-        .withColumn(
-            "__file_name",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        )
-        .withColumn("__pos", F.col("_metadata.row_index"))
+    mat_cols = [c for c in (mat_id, mat_rcv) if c]
+    scan_schema = T.StructType(
+        list(snap.physical_data_schema.fields)
+        + [T.StructField(c, T.LongType(), True) for c in mat_cols]
+    )
+    df = lakecore.with_lineage(
+        spark.read.schema(scan_schema).parquet(*abs_paths), pos=True
     )
     data_fields = [
         f for f in snap.schema.fields if f.name not in snap.partition_columns
     ]
     df = df.select(
         *[F.col(phys_of[f.name]).alias(f.name) for f in data_fields],
-        *([F.col(c) for c in (mat_id, mat_rcv) if c] if rt else []),
+        *mat_cols,
         "__file_name",
         "__pos",
     )
-    # column defaults: row-level ops (DELETE/UPDATE/MERGE predicates)
-    # must see EXISTS_DEFAULT for files that predate the column, exactly
-    # like the batch read — one more broadcast on the same key (round 14)
-    exists_defaults = _exists_defaults(snap.schema)
-    if exists_defaults:
-        _require_defaults_feature(snap, path, "modify")
-        absent_map = _absent_default_files(
-            path, files,
-            {n: phys_of.get(n, n) for n in exists_defaults},
-            snap=snap,
-        )
-        if absent_map:
-            amap = local_relation(spark, 
-                list(absent_map.items()),
-                T.StructType([
-                    T.StructField("__file_name", T.StringType(), False),
-                    T.StructField(
-                        "__absent_cols", T.ArrayType(T.StringType()), True
-                    ),
-                ]),
-            )
-            df = df.join(F.broadcast(amap), "__file_name", "left")
-            for n, lit in exists_defaults.items():
-                df = df.withColumn(
-                    n,
-                    F.when(
-                        F.array_contains(F.col("__absent_cols"), n),
-                        F.expr(lit).cast(snap.schema[n].dataType),
-                    ).otherwise(F.col(n)),
-                )
-            df = df.drop("__absent_cols")
-    if snap.partition_columns:
-        ptypes = {f.name: f.dataType for f in snap.schema.fields}
-        map_schema = T.StructType(
-            [T.StructField("__file_name", T.StringType(), False)]
-            + [T.StructField(c, ptypes[c], True) for c in snap.partition_columns]
-        )
-        fmap = local_relation(spark, 
-            [
-                (
-                    os.path.basename(f.path),
-                    *[
-                        _cast_partition_literal(
-                            snap.pv_get(f.partition_values, c), ptypes[c]
-                        )
-                        for c in snap.partition_columns
-                    ],
-                )
-                for f in files
-            ],
-            map_schema,
-        )
-        df = df.join(F.broadcast(fmap), "__file_name", "left")
+    columns, defaults, absent = _file_map_columns(
+        path, snap, files, basenames, "modify"
+    )
     if rt:
         # fresh ids: baseRowId + position, overridden by a materialized
         # value when a rewrite carried the row's id forward (the spec's
-        # precedence). One more driver-small broadcast onto the same
-        # __file_name key — the fact scan stays exchange-free.
-        rmap = local_relation(spark, 
-            [
-                (
-                    os.path.basename(f.path),
-                    f.base_row_id,
-                    f.default_row_commit_version,
-                )
-                for f in files
-            ],
-            T.StructType(
-                [
-                    T.StructField("__file_name", T.StringType(), False),
-                    T.StructField("__base_row_id", T.LongType(), True),
-                    T.StructField("__default_rcv", T.LongType(), True),
-                ]
-            ),
-        )
-        df = df.join(F.broadcast(rmap), "__file_name", "left")
+        # precedence)
+        columns += [
+            (T.StructField("__base_row_id", T.LongType(), True),
+             [f.base_row_id for f in files]),
+            (T.StructField("__default_rcv", T.LongType(), True),
+             [f.default_row_commit_version for f in files]),
+        ]
+    df = lakecore.join_file_map(df, basenames, columns)
+    df = lakecore.fill_absent_defaults(df, defaults, absent)
+    if rt:
         fresh_id = F.col("__base_row_id") + F.col("__pos")
         fresh_rcv = F.col("__default_rcv")
         df = (
@@ -1021,8 +996,7 @@ def _lineage_scan(spark, path: str, snap: Snapshot, files=None) -> DataFrame:
                 if mat_rcv
                 else fresh_rcv,
             )
-            .drop("__base_row_id", "__default_rcv",
-                  *[c for c in (mat_id, mat_rcv) if c])
+            .drop("__base_row_id", "__default_rcv", *mat_cols)
         )
     return df
 
@@ -1038,9 +1012,13 @@ def read_delta(
 
     Partition columns are re-attached by broadcast-joining the
     file→partitionValues map (driver-small, one row per live file) onto
-    ``input_file_name()`` — works for ANY data layout because the log,
-    not the directory structure, is the source of truth. The fact scan
-    stays exchange-free: the join broadcasts the file map.
+    the scanned file's basename — works for ANY data layout because the
+    log, not the directory structure, is the source of truth. The same
+    map carries the absent-default lists (PROTOCOL.md §Column Default
+    Values: files written before an ADD COLUMN ... DEFAULT read
+    EXISTS_DEFAULT instead of null). The fact scan stays exchange-free;
+    a table with no partitions, deletion vectors or defaults reads as a
+    bare parquet scan.
 
     ``where`` enables DATA SKIPPING — delta's core scan optimization:
     simple ``col <op> literal`` AND-chains prune the FILE LIST against
@@ -1062,7 +1040,6 @@ def read_delta(
     snap = snapshot(path, version_as_of)
     files = snap.files
     phys_of = snap.physical_of
-    mapped = snap.column_mapping_mode != "none"
     if where:
         conjuncts = lakecore.parse_skippable(where)
         if conjuncts:
@@ -1104,128 +1081,68 @@ def read_delta(
     if not files:
         return spark.createDataFrame([], snap.schema)
 
-    # column defaults (PROTOCOL.md §Column Default Values, round 14):
-    # files written before an ADD COLUMN ... DEFAULT read EXISTS_DEFAULT
-    # instead of null — per-file physical absence decided driver-side
-    # (stats as positive evidence, footer fallback), substituted as one
-    # column expression keyed on the broadcast absence map. Zero cost
-    # for tables without defaults.
-    exists_defaults = _exists_defaults(snap.schema)
-    absent_map: dict[str, list[str]] = {}
-    if exists_defaults:
-        _require_defaults_feature(snap, path, "read")
-        absent_map = _absent_default_files(
-            path, files,
-            {n: phys_of.get(n, n) for n in exists_defaults},
-            snap=snap,
-        )
-
-    def _sel_field(f: T.StructField):
-        base = (
-            F.col(f.name)
-            if f.name in snap.partition_columns
-            else F.col(phys_of[f.name])
-        )
-        if absent_map and f.name in exists_defaults:
-            base = F.when(
-                F.array_contains(F.col("__absent_cols"), f.name),
-                F.expr(exists_defaults[f.name]).cast(f.dataType),
-            ).otherwise(base)
-        return base.alias(f.name)
-
-    def _join_absent(df: DataFrame) -> DataFrame:
-        amap = local_relation(spark, 
-            list(absent_map.items()),
-            T.StructType([
-                T.StructField("__file_name", T.StringType(), False),
-                T.StructField(
-                    "__absent_cols", T.ArrayType(T.StringType()), True
-                ),
-            ]),
-        )
-        return df.join(F.broadcast(amap), "__file_name", "left")
-
+    basenames = [os.path.basename(f.path) for f in files]
     abs_paths = [os.path.join(path, f.path) for f in files]
     dv_files = [f for f in files if f.deletion_vector]
-    if not snap.partition_columns:
-        df = spark.read.schema(snap.physical_data_schema).parquet(*abs_paths)
-        if dv_files or absent_map:
-            df = df.withColumn(
-                "__file_name",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+    columns, defaults, absent = _file_map_columns(
+        path, snap, files, basenames, "read"
+    )
+    if len(set(basenames)) != len(basenames) and (columns or dv_files):
+        # pragma: no cover - foreign tables with colliding basenames: a
+        # basename-keyed file map would multiply rows
+        if dv_files or absent:
+            raise NotImplementedError(
+                "deletion vectors or column defaults on a foreign table "
+                "with colliding file basenames are not supported jar-free"
             )
+        df = _grouped_scan(spark, snap, files, abs_paths)
+    else:
+        df = spark.read.schema(snap.physical_data_schema).parquet(*abs_paths)
+        if columns or dv_files:
+            df = lakecore.with_lineage(df, pos=bool(dv_files))
+        df = lakecore.join_file_map(df, basenames, columns)
         if dv_files:
-            df = df.withColumn("__pos", F.col("_metadata.row_index"))
             df = _subtract_dvs(spark, df, path, dv_files)
-        if absent_map:
-            df = _join_absent(df)
-        df = df.select(*[_sel_field(f) for f in snap.schema.fields])
-        return df.filter(where) if where else df
+    # data columns rename physical -> logical in ONE projection (a
+    # renamed column's old name may be another column's physical name);
+    # partition columns joined in under their logical names already
+    logical_of = {
+        phys_of[f.name]: f.name
+        for f in snap.schema.fields
+        if f.name not in snap.partition_columns
+    }
+    df = df.select(*[F.col(c).alias(logical_of.get(c, c)) for c in df.columns])
+    df = lakecore.fill_absent_defaults(df, defaults, absent)
+    df = df.select(*[f.name for f in snap.schema.fields])
+    return df.filter(where) if where else df
 
+
+def _grouped_scan(
+    spark, snap: Snapshot, files: list, abs_paths: list[str]
+) -> DataFrame:  # pragma: no cover - foreign tables with colliding basenames
+    """One scan per distinct partition tuple with literal partition
+    columns — layout-independent and always correct, for tables whose
+    file basenames collide."""
     ptypes = {f.name: f.dataType for f in snap.schema.fields}
-
-    def _literals(f: AddFile) -> list:
-        return [
-            _cast_partition_literal(snap.pv_get(f.partition_values, c), ptypes[c])
+    groups: dict[tuple, list[str]] = {}
+    for f, ap in zip(files, abs_paths):
+        lits = tuple(
+            _cast_partition_literal(
+                snap.pv_get(f.partition_values, c), ptypes[c]
+            )
             for c in snap.partition_columns
-        ]
-
-    basenames = [os.path.basename(f.path) for f in files]
-    if len(set(basenames)) == len(basenames):
-        # The common case (every delta writer names files with a uuid):
-        # broadcast the basename -> typed-partition-literal map onto
-        # input_file_name(), keeping the fact scan exchange-free.
-        map_schema = T.StructType(
-            [T.StructField("__file_name", T.StringType(), False)]
-            + [T.StructField(c, ptypes[c], True) for c in snap.partition_columns]
         )
-        fmap = local_relation(spark, 
-            [(b, *_literals(f)) for b, f in zip(basenames, files)],
-            map_schema,
-        )
-        df = spark.read.schema(snap.physical_data_schema).parquet(*abs_paths)
-        out = df.withColumn(
-            "__file_name",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        )
-        if dv_files:
-            out = out.withColumn("__pos", F.col("_metadata.row_index"))
-        out = out.join(F.broadcast(fmap), "__file_name", "left")
-        if dv_files:
-            out = _subtract_dvs(spark, out, path, dv_files)
-        if absent_map:
-            out = _join_absent(out)
-        out = out.drop("__file_name")
-    else:  # pragma: no cover - foreign tables with colliding basenames
-        # Fall back to one scan per distinct partition tuple with literal
-        # columns — layout-independent and always correct.
-        if dv_files:
-            raise NotImplementedError(
-                "deletion vectors on a foreign table with colliding file "
-                "basenames are not supported jar-free"
-            )
-        if absent_map:
-            raise NotImplementedError(
-                "column defaults on a foreign table with colliding file "
-                "basenames are not supported jar-free"
-            )
-        groups: dict[tuple, list[str]] = {}
-        for f, ap in zip(files, abs_paths):
-            groups.setdefault(tuple(_literals(f)), []).append(ap)
-        parts = []
-        for lits, paths in groups.items():
-            g = spark.read.schema(snap.physical_data_schema).parquet(*paths)
-            for c, v in zip(snap.partition_columns, lits):
-                g = g.withColumn(c, F.lit(v).cast(ptypes[c]))
-            parts.append(g)
-        out = parts[0]
-        for g in parts[1:]:
-            out = out.unionByName(g)
-    # data columns rename physical -> logical (defaults substituted where
-    # the absence map names the file); partition columns joined in under
-    # their logical names already
-    out = out.select(*[_sel_field(f) for f in snap.schema.fields])
-    return out.filter(where) if where else out
+        groups.setdefault(lits, []).append(ap)
+    parts = []
+    for lits, paths in groups.items():
+        g = spark.read.schema(snap.physical_data_schema).parquet(*paths)
+        for c, v in zip(snap.partition_columns, lits):
+            g = g.withColumn(c, F.lit(v).cast(ptypes[c]))
+        parts.append(g)
+    out = parts[0]
+    for g in parts[1:]:
+        out = out.unionByName(g)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2208,74 +2125,19 @@ def _dv_commit_actions(
     return acts
 
 
-#: positions above which the decoded DV relation stops being broadcast —
-#: ~64 bytes/row estimated (file-name string + long + hash overhead)
-#: puts 1M positions around 64 MB, the edge of sane broadcast territory
-DV_BROADCAST_MAX_POSITIONS = 1_000_000
-
-
 def _subtract_dvs(spark, df, table_path: str, dv_files) -> DataFrame:
     """Subtract deletion-vector positions from a scan carrying
-    ``__file_name`` + ``__pos``. The descriptor set is driver-small (one
-    per file); position decoding runs EXECUTOR-side in an Arrow batch
-    (a DV can carry millions of positions — they never materialize on
-    the driver) and joins back as an anti-join.
-
-    Join strategy is SIZE-GUARDED on the descriptors' summed
-    ``cardinality`` (driver-side metadata, no decode needed): under
-    ``DV_BROADCAST_MAX_POSITIONS`` the decoded relation broadcasts, so
-    the fact scan stays exchange-free; above it an explicit broadcast
-    hint would bypass AQE's size check and ship a multi-GB position
-    relation to every executor of a heavily-deleted 100 TB table — so
-    the big case falls back to a shuffle hash-join on
-    ``(__file_name, __pos)`` instead (the round-8 judge's order item 3)."""
-    import json as _json
-
-    rows = [
-        (os.path.basename(f.path), _json.dumps(f.deletion_vector))
-        for f in dv_files
-    ]
-    total_card = sum(
-        int((f.deletion_vector or {}).get("cardinality", 0)) for f in dv_files
+    ``__file_name`` + ``__pos``: the add actions' DV descriptors decode
+    on the executors and anti-join out, broadcast only while their
+    summed ``cardinality`` stays under the core's bound
+    (:func:`lakecore.subtract_positions`)."""
+    dead = lakecore.dead_positions(
+        spark,
+        [(os.path.basename(f.path), f.deletion_vector, 0) for f in dv_files],
+        functools.partial(dv_positions, table_path=table_path),
     )
-    spec = local_relation(spark, rows, "`__file_name` string, `__dv` string")
-
-    def gen(batches):
-        import pandas as pd
-
-        from .roaring import dv_positions
-
-        for pdf in batches:
-            names: list[str] = []
-            poss: list[int] = []
-            for name, dvj in zip(pdf["__file_name"], pdf["__dv"]):
-                for pos in sorted(dv_positions(_json.loads(dvj), table_path)):
-                    names.append(name)
-                    poss.append(pos)
-            yield pd.DataFrame({"__file_name": names, "__pos": poss})
-
-    dead = spec.mapInPandas(gen, "`__file_name` string, `__pos` long")
-    if total_card <= DV_BROADCAST_MAX_POSITIONS:
-        dead = F.broadcast(dead)
-    else:
-        # spread the decode across the cluster before the shuffle join:
-        # one descriptor row explodes into `cardinality` position rows,
-        # so repartition the POSITIONS, not the descriptors. The join
-        # strategy must be pinned too: the Arrow LocalRelation under the
-        # MapInPandas carries tiny KNOWN stats (bytes of descriptor
-        # JSON), so the planner would auto-broadcast the decoded
-        # relation — the same multi-GB shipment the cardinality guard
-        # exists to prevent, just size-MISestimated instead of
-        # hint-forced. A shuffle hash join on (__file_name, __pos)
-        # builds per-partition maps from the already-partitioned
-        # positions instead.
-        dead = dead.repartition("__file_name", "__pos").hint("shuffle_hash")
-    return df.join(
-        dead,
-        on=[df["__file_name"] == dead["__file_name"],
-            df["__pos"] == dead["__pos"]],
-        how="left_anti",
-    )
+    card = sum(int(f.deletion_vector.get("cardinality", 0)) for f in dv_files)
+    return lakecore.subtract_positions(df, dead, card)
 
 
 def _staged_paths(path: str, actions: list[dict]) -> list[str]:
@@ -3592,36 +3454,14 @@ def _absent_default_files(
             residual.append((f, absent, undated))
         elif absent:
             out[os.path.basename(f.path)] = absent
-    if residual:
-        import concurrent.futures as _cf
-
-        import pyarrow.parquet as pq
-
-        def _footer_absent(item):
-            f, absent, undated = item
-            try:
-                cols = set(
-                    pq.ParquetFile(
-                        os.path.join(path, f.path)
-                    ).schema_arrow.names
-                )
-            except OSError:
-                # VARIANT footers are unreadable to this pyarrow — the
-                # JVM footer reader answers the same question
-                from pyspark.sql import SparkSession
-
-                cols = set(
-                    SparkSession.getActiveSession()
-                    .read.parquet(os.path.join(path, f.path)).schema.names
-                )
-            return f, absent + [n for n, p in undated if p not in cols]
-
-        with _cf.ThreadPoolExecutor(
-            max_workers=min(16, len(residual))
-        ) as pool:
-            for f, absent in pool.map(_footer_absent, residual):
-                if absent:
-                    out[os.path.basename(f.path)] = absent
+    cols = lakecore.footer_columns(
+        [os.path.join(path, f.path) for f, _absent, _undated in residual]
+    )
+    for f, absent, undated in residual:
+        have = cols[os.path.join(path, f.path)]
+        absent = absent + [n for n, p in undated if p not in have]
+        if absent:
+            out[os.path.basename(f.path)] = absent
     return out
 
 

@@ -39,6 +39,7 @@ reader replays — while data I/O stays distributed.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import re
@@ -239,7 +240,8 @@ def _absent_default_cols(
     schema edits would forge "present" — so presence stays
     stats-positive-or-footer.
 
-    The residual footer path is O((post-field ∪ undatable) ∩
+    The residual footer path (one read per file, through the core's
+    bounded pool) is O((post-field ∪ undatable) ∩
     metrics-suppressed files) — at 100 TB the first post-DDL read of a
     metrics-capped million-file table costs zero footer fetches for
     the entire pre-evolution set, the part that scales with the
@@ -262,6 +264,7 @@ def _absent_default_cols(
             if sch.get("schema-id") is not None
         }
     out: dict[str, list[str]] = {}
+    residual: list[tuple] = []  # (file path, decided absent, unknown)
     for f in files:
         present_ids: set[int] = set()
         for key in ("value_counts", "null_value_counts", "column_sizes"):
@@ -282,29 +285,15 @@ def _absent_default_cols(
                 decided_absent.append(n)
                 continue
             unknown.append(n)
-        if decided_absent and not unknown:
-            out[os.path.basename(f["file_path"])] = decided_absent
-            continue
-        absent: list[str] = []
         if unknown:
-            import pyarrow.parquet as pq
-
-            try:
-                cols = set(
-                    pq.ParquetFile(f["file_path"]).schema_arrow.names
-                )
-            except OSError:
-                # VARIANT footers are unreadable to this pyarrow — the
-                # JVM footer reader answers the same question
-                from pyspark.sql import SparkSession
-
-                cols = set(
-                    SparkSession.getActiveSession()
-                    .read.parquet(f["file_path"]).schema.names
-                )
-            absent = [n for n in unknown if n not in cols]
-        if absent or decided_absent:
-            out[os.path.basename(f["file_path"])] = decided_absent + absent
+            residual.append((f["file_path"], decided_absent, unknown))
+        elif decided_absent:
+            out[os.path.basename(f["file_path"])] = decided_absent
+    cols = lakecore.footer_columns([p for p, _absent, _unknown in residual])
+    for p, decided_absent, unknown in residual:
+        absent = decided_absent + [n for n in unknown if n not in cols[p]]
+        if absent:
+            out[os.path.basename(p)] = absent
     return out
 
 
@@ -424,12 +413,7 @@ def _scan_data_files(
 
     def _with_meta(df: DataFrame) -> DataFrame:
         if need_file_name:
-            df = df.withColumn(
-                "__file_name",
-                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-            )
-        if need_pos:
-            df = df.withColumn("__pos", F.col("_metadata.row_index"))
+            return lakecore.with_lineage(df, pos=need_pos)
         return df
 
     if not renames:
@@ -467,23 +451,63 @@ def _scan_data_files(
     return out
 
 
-def _apply_initial_defaults(
-    df: DataFrame,
-    defaults: list[tuple[str, object]],
+def _scan_table_files(
+    spark: SparkSession,
+    meta: dict,
+    files: list[dict],
     schema: T.StructType,
+    data_schema: T.StructType,
+    partition_cols: list[str],
+    lineage: bool = False,
+    path: bool = False,
+    first_row_id: bool = False,
 ) -> DataFrame:
-    """Substitute initial-defaults where ``__absent_cols`` (the broadcast
-    file map's per-file absence list) names the column — a pure column
-    expression on the already-joined scan, no extra pass or exchange."""
-    for name, val in defaults:
-        df = df.withColumn(
-            name,
-            F.when(
-                F.array_contains(F.col("__absent_cols"), name),
-                F.lit(val).cast(schema[name].dataType),
-            ).otherwise(F.col(name)),
+    """Scan data files (:func:`_scan_data_files`) and join ONE broadcast
+    file map onto their ``__file_name``: the typed identity partition
+    values, on request (``lineage``) each row's ``__pos`` and its file's
+    data sequence number ``__seq`` — the coordinates deletes key on —,
+    the full path (``__path``) and v3 ``__first_row_id``, and the v3
+    initial-default absence lists — rows of files written BEFORE a
+    defaulted column existed read the declared default, not null. A
+    scan that needs none of them is a bare scan."""
+    names = [os.path.basename(f["file_path"]) for f in files]
+    ptypes = {f.name: f.dataType for f in schema.fields}
+    columns = [
+        (
+            T.StructField(c, ptypes[c], True),
+            [_avro_to_partition(f["partition"].get(c), ptypes[c])
+             for f in files],
         )
-    return df
+        for c in partition_cols
+    ]
+    if lineage:
+        columns.append((T.StructField("__seq", T.LongType(), False),
+                        [int(f.get("__seq", 0)) for f in files]))
+    if path:
+        columns.append((T.StructField("__path", T.StringType(), False),
+                        [f["file_path"] for f in files]))
+    if first_row_id:
+        columns.append((T.StructField("__first_row_id", T.LongType(), True),
+                        [f.get("first_row_id") for f in files]))
+    ice_schema = _current_ice_schema(meta)
+    defaults = _initial_defaults(ice_schema)
+    absent: dict[str, list[str]] = {}
+    if defaults:
+        absent = _absent_default_cols(
+            files, ice_schema, [n for n, _ in defaults], meta=meta
+        )
+    if absent:
+        columns.append(lakecore.absent_column(names, absent))
+    df = _scan_data_files(
+        spark, files, data_schema, meta,
+        need_file_name=bool(columns), need_pos=lineage,
+    )
+    df = lakecore.join_file_map(df, names, columns)
+    return lakecore.fill_absent_defaults(
+        df,
+        {n: F.lit(v).cast(schema[n].dataType) for n, v in defaults},
+        absent,
+    )
 
 
 def _check_v3_scope(meta: dict, loc: str) -> None:
@@ -1425,6 +1449,7 @@ def write_iceberg(
             s for s in meta["snapshots"] if s["snapshot-id"] == base_id
         )
         _schema2, _m2, prev = read_ocf(cur["manifest-list"])
+    carried = {mf["manifest_path"] for mf in prev}
     if mode == "overwrite_partitions" and prev:
         replaced = {
             tuple(sorted(e["data_file"]["partition"].items()))
@@ -1562,7 +1587,12 @@ def write_iceberg(
         meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
             {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
         ]
-    _publish_metadata(loc, v + 1, meta)
+    # everything this commit wrote: its data files, its new and rewritten
+    # manifests and the manifest list — unlinked if the publish loses
+    staged = {e["data_file"]["file_path"] for e in entries}
+    staged |= {m["manifest_path"] for m in manifests} - carried
+    staged.add(list_path)
+    _publish_metadata(loc, v + 1, meta, staged)
     return snapshot_id
 
 
@@ -1689,21 +1719,36 @@ def upgrade_format_version(loc: str, to_version: int = 3) -> int:
 _DELETION_VECTOR_BLOB_TYPE = "deletion-vector-v1"
 
 
+def _dv_ref(d: dict) -> tuple[str, int, int]:
+    """``(puffin path, blob offset, blob length)`` of a DV delete entry."""
+    return (
+        d["file_path"],
+        int(d.get("content_offset") or 0),
+        int(d.get("content_size_in_bytes") or 0),
+    )
+
+
+def _dv_positions(refs) -> set[int]:
+    """Positions of the DV blob ``refs[0]``, minus those of its
+    predecessor ``refs[1]`` when one is given (v3 replacement rule: a
+    new DV is a superset of the one it replaces). Runs executor-side."""
+    from .roaring import read_blob
+
+    cur, prior = refs
+    positions = read_blob(*cur)
+    return positions - read_blob(*prior) if prior else positions
+
+
 def _prior_dv_map(meta: dict, snap: dict) -> dict[str, tuple[str, int, int]]:
     """Current deletion vectors by referenced data file path:
     ``{data file → (puffin path, blob offset, blob length)}`` — driver
     metadata, one entry per DV'd file."""
     _data, dels = _scan_snapshot(meta, snap)
-    out: dict[str, tuple[str, int, int]] = {}
-    for d in dels:
-        ref = d.get("referenced_data_file")
-        if int(d.get("content", 0)) == 1 and ref:
-            out[ref] = (
-                d["file_path"],
-                int(d.get("content_offset") or 0),
-                int(d.get("content_size_in_bytes") or 0),
-            )
-    return out
+    return {
+        d["referenced_data_file"]: _dv_ref(d)
+        for d in dels
+        if int(d.get("content", 0)) == 1 and d.get("referenced_data_file")
+    }
 
 
 def _stage_deletion_vectors(
@@ -1731,18 +1776,14 @@ def _stage_deletion_vectors(
     prior = dict(prior_dvs)
 
     def fold(key, pdf):
-        from .roaring import decode_dv_blob, encode_dv_blob
+        from .roaring import encode_dv_blob, read_blob
 
         fp = key[0]
         positions = {int(p) for p in pdf["pos"]}
         n_new = len(positions)
         pr = prior.get(fp)
         if pr is not None:
-            path, off, ln = pr
-            with open(path, "rb") as fh:
-                fh.seek(off)
-                buf = fh.read(ln)
-            positions |= decode_dv_blob(buf, 0)
+            positions |= read_blob(*pr)
         return pd.DataFrame(
             {
                 "file_path": [fp],
@@ -1903,54 +1944,10 @@ def _mor_scan(spark: SparkSession, loc: str, meta: dict, snap: dict):
             T.StructField("_last_updated_sequence_number",
                           T.LongType(), True),
         ]
-    data_schema = T.StructType(data_fields)
-    df = _scan_data_files(
-        spark, files, data_schema, meta,
-        need_file_name=True, need_pos=True,
+    df = _scan_table_files(
+        spark, meta, files, schema, T.StructType(data_fields),
+        partition_cols, lineage=True, path=True, first_row_id=fmt3,
     )
-    defaults = _initial_defaults(_current_ice_schema(meta))
-    absent_map: dict[str, list[str]] = {}
-    if defaults:
-        absent_map = _absent_default_cols(
-            files, _current_ice_schema(meta), [n for n, _ in defaults],
-            meta=meta,
-        )
-        defaults = [
-            (n, v) for n, v in defaults
-            if any(n in a for a in absent_map.values())
-        ]
-    ptypes = {f.name: f.dataType for f in schema.fields}
-    map_schema = T.StructType(
-        [T.StructField("__file_name", T.StringType(), False)]
-        + [T.StructField(c, ptypes[c], True) for c in partition_cols]
-        + [T.StructField("__seq", T.LongType(), False),
-           T.StructField("__path", T.StringType(), False)]
-        + ([T.StructField("__first_row_id", T.LongType(), True)]
-           if fmt3 else [])
-        + ([T.StructField(
-                "__absent_cols", T.ArrayType(T.StringType()), False)]
-           if defaults else [])
-    )
-    fmap = local_relation(spark, 
-        [
-            (
-                os.path.basename(f["file_path"]),
-                *[_avro_to_partition(f["partition"].get(c), ptypes[c])
-                  for c in partition_cols],
-                int(f.get("__seq", 0)),
-                f["file_path"],
-                *([f.get("first_row_id")] if fmt3 else []),
-                *([absent_map.get(os.path.basename(f["file_path"]), [])]
-                  if defaults else []),
-            )
-            for f in files
-        ],
-        map_schema,
-    )
-    df = df.join(F.broadcast(fmap), "__file_name", "left")
-    if defaults:
-        # DML predicates and rewrites must see the defaulted values
-        df = _apply_initial_defaults(df, defaults, schema)
     if cur_deletes:
         # rows already dead must neither re-match nor resurrect
         df = _apply_deletes(spark, df, cur_deletes)
@@ -3545,66 +3542,15 @@ def read_iceberg(
             T.StructField("_last_updated_sequence_number",
                           T.LongType(), True),
         ]
-    data_schema = T.StructType(data_fields)
-    # v3 initial-defaults: rows in files written BEFORE a defaulted
-    # column existed read the declared default, not null — the per-file
-    # absence list rides the same broadcast map as everything else
-    defaults = _initial_defaults(_current_ice_schema(meta))
-    absent_map: dict[str, list[str]] = {}
-    if defaults:
-        absent_map = _absent_default_cols(
-            files, _current_ice_schema(meta), [n for n, _ in defaults],
-            meta=meta,
-        )
-        defaults = [
-            (n, v) for n, v in defaults
-            if any(n in a for a in absent_map.values())
-        ]
-    needs_meta = (
-        bool(partition_cols) or bool(delete_files) or with_row_lineage
-        or bool(defaults)
+    # the scan resolves renamed/re-added column vintages per file; one
+    # broadcast map carries partition values, data sequence numbers,
+    # first row ids and initial-default absence
+    df = _scan_table_files(
+        spark, meta, files, schema, T.StructType(data_fields),
+        partition_cols,
+        lineage=bool(delete_files) or with_row_lineage,
+        first_row_id=with_row_lineage,
     )
-    # the scan resolves renamed/re-added column vintages per file and
-    # attaches the _metadata-derived columns group-side (round 14)
-    df = _scan_data_files(
-        spark, files, data_schema, meta,
-        need_file_name=needs_meta,
-        need_pos=bool(delete_files) or with_row_lineage,
-    )
-    if needs_meta:
-        # one broadcast map: basename → typed partition values + data seq
-        ptypes = {f.name: f.dataType for f in schema.fields}
-        map_schema = T.StructType(
-            [T.StructField("__file_name", T.StringType(), False)]
-            + [T.StructField(c, ptypes[c], True) for c in partition_cols]
-            + [T.StructField("__seq", T.LongType(), False)]
-            + ([T.StructField("__first_row_id", T.LongType(), True)]
-               if with_row_lineage else [])
-            + ([T.StructField(
-                    "__absent_cols", T.ArrayType(T.StringType()), False)]
-               if defaults else [])
-        )
-        fmap = local_relation(spark, 
-            [
-                (
-                    os.path.basename(f["file_path"]),
-                    *[
-                        _avro_to_partition(f["partition"].get(c), ptypes[c])
-                        for c in partition_cols
-                    ],
-                    int(f.get("__seq", 0)),
-                    *([f.get("first_row_id")] if with_row_lineage else []),
-                    *([absent_map.get(
-                        os.path.basename(f["file_path"]), [])]
-                      if defaults else []),
-                )
-                for f in files
-            ],
-            map_schema,
-        )
-        df = df.join(F.broadcast(fmap), "__file_name", "left")
-    if defaults:
-        df = _apply_initial_defaults(df, defaults, schema)
     if delete_files:
         df = _apply_deletes(spark, df, delete_files)
     out_cols = [F.col(f.name) for f in schema.fields]
@@ -3701,30 +3647,9 @@ def read_iceberg_incremental(
     data_schema = T.StructType(
         [f for f in schema.fields if f.name not in partition_cols]
     )
-    df = _scan_data_files(
-        spark, files, data_schema, meta,
-        need_file_name=bool(partition_cols),
+    df = _scan_table_files(
+        spark, meta, files, schema, data_schema, partition_cols
     )
-    if partition_cols:
-        ptypes = {f.name: f.dataType for f in schema.fields}
-        map_schema = T.StructType(
-            [T.StructField("__file_name", T.StringType(), False)]
-            + [T.StructField(c, ptypes[c], True) for c in partition_cols]
-        )
-        fmap = local_relation(spark, 
-            [
-                (
-                    os.path.basename(f["file_path"]),
-                    *[
-                        _avro_to_partition(f["partition"].get(c), ptypes[c])
-                        for c in partition_cols
-                    ],
-                )
-                for f in files
-            ],
-            map_schema,
-        )
-        df = df.join(F.broadcast(fmap), "__file_name", "left")
     return df.select(*[F.col(f.name) for f in schema.fields])
 
 
@@ -3828,61 +3753,14 @@ def read_iceberg_changelog(
     data_schema = T.StructType(
         [f for f in schema.fields if f.name not in partition_cols]
     )
-    ptypes = {f.name: f.dataType for f in schema.fields}
-
-    all_defaults = _initial_defaults(_current_ice_schema(meta))
 
     def _scan_files(files: list[dict], lineage: bool) -> DataFrame:
-        df = _scan_data_files(
-            spark, files, data_schema, meta,
-            need_file_name=True, need_pos=lineage,
+        # lineage: the (file, pos) coordinates and data sequence number
+        # the delete joins and _apply_deletes key on
+        return _scan_table_files(
+            spark, meta, files, schema, data_schema, partition_cols,
+            lineage=lineage,
         )
-        # v3 initial-defaults: pre-addition files read the declared value
-        defaults = list(all_defaults)
-        absent_map: dict[str, list[str]] = {}
-        if defaults:
-            absent_map = _absent_default_cols(
-                files, _current_ice_schema(meta), [n for n, _ in defaults],
-                meta=meta,
-            )
-            defaults = [
-                (n, v) for n, v in defaults
-                if any(n in a for a in absent_map.values())
-            ]
-        if partition_cols or lineage or defaults:
-            # one driver-small broadcast carries the partition literals
-            # AND the file's data sequence number (_apply_deletes keys
-            # its older-than rules on __seq)
-            map_schema = T.StructType(
-                [T.StructField("__file_name", T.StringType(), False)]
-                + [T.StructField(c, ptypes[c], True) for c in partition_cols]
-                + ([T.StructField("__seq", T.LongType(), False)]
-                   if lineage else [])
-                + ([T.StructField(
-                        "__absent_cols", T.ArrayType(T.StringType()), False)]
-                   if defaults else [])
-            )
-            fmap = local_relation(spark, 
-                [
-                    (
-                        os.path.basename(f["file_path"]),
-                        *[
-                            _avro_to_partition(f["partition"].get(c), ptypes[c])
-                            for c in partition_cols
-                        ],
-                        *([int(f.get("__seq", 0))] if lineage else []),
-                        *([absent_map.get(
-                            os.path.basename(f["file_path"]), [])]
-                          if defaults else []),
-                    )
-                    for f in files
-                ],
-                map_schema,
-            )
-            df = df.join(F.broadcast(fmap), "__file_name", "left")
-        if defaults:
-            df = _apply_initial_defaults(df, defaults, schema)
-        return df
 
     def _emit(df: DataFrame, change: str, ordinal: int, sid: int) -> DataFrame:
         return df.select(
@@ -3945,17 +3823,21 @@ def read_iceberg_changelog(
             # v3 deletion vectors REPLACE the parent's DV for the same
             # data file with a superset — the logical delta of this
             # commit is (new DV) MINUS (parent DV), decoded executor-side
-            prior_map = {
-                d["referenced_data_file"]: (
-                    d["file_path"],
-                    int(d.get("content_offset") or 0),
-                    int(d.get("content_size_in_bytes") or 0),
-                )
+            prior = {
+                d["referenced_data_file"]: _dv_ref(d)
                 for d in par_dels
                 if int(d.get("content", 0)) == 1
                 and d.get("referenced_data_file")
             }
-            coords = _dv_delta_coords(spark, dv_new, prior_map)
+            coords = lakecore.dead_positions(
+                spark,
+                [
+                    (os.path.basename(d["referenced_data_file"]),
+                     [_dv_ref(d), prior.get(d["referenced_data_file"])], 0)
+                    for d in dv_new
+                ],
+                _dv_positions,
+            )
             named = {
                 os.path.basename(d["referenced_data_file"]) for d in dv_new
             }
@@ -4225,195 +4107,70 @@ def _changelog_net_changes(
     )
 
 
-def _dv_dead_positions(
-    spark: SparkSession, dv_files: list[dict]
-) -> DataFrame:
-    """Decode v3 deletion-vector blobs into a broadcastable
-    ``(__file_name, __pos, __del_seq)`` relation. Descriptors are
-    driver-small (one row per DV'd file); the bitmap decode runs
-    EXECUTOR-side in an Arrow batch — a DV can carry millions of
-    positions, they never materialize on the driver (the same shape as
-    deltalog's _subtract_dvs)."""
-    spec = local_relation(spark, 
-        [
-            (
-                os.path.basename(d["referenced_data_file"]),
-                d["file_path"],
-                int(d.get("content_offset") or 0),
-                int(d.get("content_size_in_bytes") or 0),
-                int(d.get("__seq", 0)),
-            )
-            for d in dv_files
-        ],
-        "`__file_name` string, `__puffin` string, `__off` long, "
-        "`__len` long, `__del_seq` long",
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        from .roaring import decode_dv_blob
-
-        for pdf in batches:
-            names: list[str] = []
-            poss: list[int] = []
-            seqs: list[int] = []
-            for name, path, off, _ln, seq in zip(
-                pdf["__file_name"], pdf["__puffin"], pdf["__off"],
-                pdf["__len"], pdf["__del_seq"],
-            ):
-                with open(path, "rb") as fh:
-                    fh.seek(int(off))
-                    # decode_dv_blob reads its own BE length prefix and
-                    # verifies magic + CRC — _ln is the manifest's claim
-                    buf = fh.read(int(_ln)) if int(_ln) > 0 else fh.read()
-                for p in sorted(decode_dv_blob(buf, 0)):
-                    names.append(name)
-                    poss.append(p)
-                    seqs.append(int(seq))
-            yield pd.DataFrame(
-                {"__file_name": names, "__pos": poss, "__del_seq": seqs}
-            )
-
-    return F.broadcast(
-        spec.mapInPandas(
-            gen, "`__file_name` string, `__pos` long, `__del_seq` long"
-        )
-    )
-
-
-def _dv_delta_coords(
-    spark: SparkSession,
-    dv_entries: list[dict],
-    prior_map: dict[str, tuple[str, int, int]],
-) -> DataFrame:
-    """``(__file_name, __pos)`` rows NEWLY deleted by these deletion
-    vectors: each new DV's positions minus its predecessor's for the
-    same data file (v3 replacement rule — the new DV is a superset).
-    Descriptors are driver-small; bitmap decode + subtraction run
-    executor-side in Arrow batches."""
-    spec = local_relation(spark, 
-        [
-            (
-                os.path.basename(d["referenced_data_file"]),
-                d["file_path"],
-                int(d.get("content_offset") or 0),
-                int(d.get("content_size_in_bytes") or 0),
-                *(prior_map.get(d["referenced_data_file"])
-                  or (None, None, None)),
-            )
-            for d in dv_entries
-        ],
-        "`__file_name` string, `__puffin` string, `__off` long, "
-        "`__len` long, `__p_puffin` string, `__p_off` long, `__p_len` long",
-    )
-
-    def gen(batches):
-        import pandas as pd
-
-        from .roaring import decode_dv_blob
-
-        def _read(path, off, ln):
-            with open(path, "rb") as fh:
-                fh.seek(int(off))
-                buf = fh.read(int(ln)) if ln and int(ln) > 0 else fh.read()
-            return decode_dv_blob(buf, 0)
-
-        for pdf in batches:
-            names: list[str] = []
-            poss: list[int] = []
-            for i in range(len(pdf)):
-                r = pdf.iloc[i]
-                positions = _read(r["__puffin"], r["__off"], r["__len"])
-                if r["__p_puffin"] is not None and not pd.isna(
-                    r["__p_puffin"]
-                ):
-                    positions -= _read(
-                        r["__p_puffin"], r["__p_off"], r["__p_len"]
-                    )
-                for p in sorted(positions):
-                    names.append(r["__file_name"])
-                    poss.append(p)
-            yield pd.DataFrame({"__file_name": names, "__pos": poss})
-
-    return spec.mapInPandas(gen, "`__file_name` string, `__pos` long")
-
-
 def _apply_deletes(spark: SparkSession, df: DataFrame, delete_files: list[dict]):
-    """Merge-on-read: subtract v2 delete files from the scan.
+    """Merge-on-read: subtract v2 delete files and v3 deletion vectors
+    from the scan.
 
-    - position deletes (content=1): anti-join on (file basename, pos)
-      where the delete's sequence number >= the data file's — a delete
-      names exact row coordinates, so the join key is tiny and exact.
+    - position deletes (content=1, parquet files or Puffin DV blobs):
+      anti-join on (file basename, pos) where the delete's sequence
+      number >= the data file's — a delete names exact row
+      coordinates, so the join key is tiny and exact. DV blobs decode
+      executor-side; the position relation broadcasts only while the
+      delete entries' summed ``record_count`` stays under the core's
+      bound (:func:`lakecore.subtract_positions`).
     - equality deletes (content=2): per equality_ids group, anti-join on
       those columns where the delete's sequence number is STRICTLY
       greater (spec: equality deletes apply to rows of OLDER data files
       only, so a row re-inserted in the same-or-later commit survives).
-
-    Scale: delete sets are dwarfed by data in any healthy table; both
-    joins broadcast the delete side. A pathological delete set falls
-    back to a shuffled anti-join via AQE — still no row of TEXT moves
-    twice, only join keys."""
-    dv_files = [
-        f for f in delete_files
-        if f.get("content", 0) == 1 and f.get("referenced_data_file")
-    ]
+      The equality key set broadcasts (delete sets are dwarfed by data
+      in any healthy table)."""
+    pos_files = [f for f in delete_files if f.get("content", 0) == 1]
+    dv_files = [f for f in pos_files if f.get("referenced_data_file")]
+    parquet_files = [f for f in pos_files if not f.get("referenced_data_file")]
+    dead: list[DataFrame] = []
     if dv_files:
-        dead = _dv_dead_positions(spark, dv_files)
-        df = df.join(
-            dead,
-            on=[
-                df["__file_name"] == dead["__file_name"],
-                df["__pos"] == dead["__pos"],
-                dead["__del_seq"] >= df["__seq"],
+        dead.append(lakecore.dead_positions(
+            spark,
+            [
+                (os.path.basename(d["referenced_data_file"]),
+                 [_dv_ref(d), None], int(d.get("__seq", 0)))
+                for d in dv_files
             ],
-            how="left_anti",
+            _dv_positions,
+        ))
+    if parquet_files:
+        # each delete FILE carries one sequence number — attach via map
+        seq_map = local_relation(
+            spark,
+            [(os.path.basename(f["file_path"]), int(f.get("__seq", 0)))
+             for f in parquet_files],
+            "`__del_name` string, `__del_seq` long",
         )
-    pos_paths = [f["file_path"] for f in delete_files
-                 if f.get("content", 0) == 1
-                 and not f.get("referenced_data_file")]
-    if pos_paths:
-        dels = (
-            spark.read.parquet(*pos_paths)
+        dead.append(
+            spark.read.parquet(*[f["file_path"] for f in parquet_files])
             .select(
                 F.element_at(F.split(F.col("file_path"), "/"), -1)
                 .alias("__file_name"),
                 F.col("pos").alias("__pos"),
-                F.col("_metadata.file_path").alias("__del_file"),
-            )
-        )
-        # each delete FILE carries one sequence number — attach via map
-        seq_rows = [
-            (os.path.basename(f["file_path"]), int(f.get("__seq", 0)))
-            for f in delete_files
-            if f.get("content", 0) == 1
-        ]
-        seq_map = local_relation(spark, 
-            seq_rows, "`__del_name` string, `__del_seq` long"
-        )
-        dels = (
-            dels.withColumn(
-                "__del_name",
-                F.element_at(F.split(F.col("__del_file"), "/"), -1),
+                F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+                .alias("__del_name"),
             )
             .join(F.broadcast(seq_map), "__del_name")
             .select("__file_name", "__pos", "__del_seq")
         )
-        df = df.join(
-            F.broadcast(dels),
-            on=[
-                df["__file_name"] == dels["__file_name"],
-                df["__pos"] == dels["__pos"],
-                dels["__del_seq"] >= df["__seq"],
-            ],
-            how="left_anti",
+    if dead:
+        df = lakecore.subtract_positions(
+            df,
+            functools.reduce(DataFrame.unionByName, dead),
+            sum(int(f.get("record_count") or 0) for f in pos_files),
+            by_seq=True,
         )
-    eq_files = [f for f in delete_files if f.get("content", 0) == 2]
-    for f in eq_files:
-        eq = spark.read.parquet(f["file_path"])
-        cond = [df[c].eqNullSafe(eq[c]) for c in eq.columns]
-        cond.append(F.lit(int(f.get("__seq", 0))) > df["__seq"])
-        df = df.join(F.broadcast(eq), on=cond, how="left_anti")
+    for f in delete_files:
+        if f.get("content", 0) == 2:
+            eq = spark.read.parquet(f["file_path"])
+            cond = [df[c].eqNullSafe(eq[c]) for c in eq.columns]
+            cond.append(F.lit(int(f.get("__seq", 0))) > df["__seq"])
+            df = df.join(F.broadcast(eq), on=cond, how="left_anti")
     return df
 
 
@@ -5953,16 +5710,12 @@ class IcebergLogStreamReader(DataSourceStreamReader):
         construction)."""
         import pyarrow.parquet as pq
 
-        from .roaring import decode_dv_blob
+        from .roaring import read_blob
 
         dead: set[int] = set()
         for puffin, off, ln, b in dv_coords or []:
-            if b != basename:
-                continue
-            with open(puffin, "rb") as fh:
-                fh.seek(int(off))
-                buf = fh.read(int(ln)) if int(ln) > 0 else fh.read()
-            dead |= decode_dv_blob(buf, 0)
+            if b == basename:
+                dead |= read_blob(puffin, off, ln)
         for p in coord_paths:
             t = pq.read_table(p)
             for fp, pos in zip(
@@ -6026,21 +5779,9 @@ class IcebergLogStreamReader(DataSourceStreamReader):
                 )
                 return
             if partition.kind == "dv-delete":
-                from .roaring import decode_dv_blob
-
-                def _blob(path, off, ln):
-                    with open(path, "rb") as fh:
-                        fh.seek(int(off))
-                        buf = (
-                            fh.read(int(ln)) if ln and int(ln) > 0
-                            else fh.read()
-                        )
-                    return decode_dv_blob(buf, 0)
-
-                off, ln = partition.dv_blob
-                positions = _blob(partition.path, off, ln)
-                if partition.dv_prior is not None:
-                    positions -= _blob(*partition.dv_prior)
+                positions = _dv_positions(
+                    [(partition.path, *partition.dv_blob), partition.dv_prior]
+                )
                 base = partition.dv_ref
                 if base in partition.file_map:
                     path, pvals = partition.file_map[base]

@@ -6,10 +6,14 @@ an exclusive create for the commit file (optimistic concurrency on a
 filesystem), a distributed parquet staging write whose files land under
 the table root with fresh names, footer min/max/null harvesting for
 data skipping, and the persisted range/Z-order layout rewrite behind
-OPTIMIZE / ``rewrite_data_files``. Everything here takes plain
+OPTIMIZE / ``rewrite_data_files``. The read half is shared too: one
+broadcast per-file map joined on the scan's ``__file_name``, the
+column-default substitution it carries, pooled footer probes, and the
+subtraction of deleted row positions. Everything here takes plain
 arguments and returns plain records; each format keeps only its own
-encoding (Delta ``add``/``cdc`` actions and stats JSON, Iceberg
-manifest entries and Appendix-D bound bytes).
+encoding (Delta ``add``/``cdc`` actions, stats JSON and deletion-vector
+descriptors; Iceberg manifest entries, Appendix-D bound bytes, Puffin
+blobs and sequence numbers).
 """
 
 from __future__ import annotations
@@ -26,6 +30,8 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..localrel import local_relation
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -397,3 +403,176 @@ def layout_rewrite(
         yield laid.drop("__z") if zorder else laid
     finally:
         persisted.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# read half
+# ---------------------------------------------------------------------------
+
+#: positions above which a dead-position relation stops being broadcast —
+#: ~64 bytes/row estimated (file-name string + long + hash overhead)
+#: puts 1M positions around 64 MB, the edge of sane broadcast territory
+DV_BROADCAST_MAX_POSITIONS = 1_000_000
+
+#: the per-file map column listing which defaulted columns a file lacks
+_ABSENT_COLS = "__absent_cols"
+
+
+def with_lineage(df: DataFrame, pos: bool = False) -> DataFrame:
+    """Attach ``__file_name`` (the basename of ``_metadata.file_path``,
+    the key every per-file relation joins on) and, with ``pos``, the
+    row's position in its file as ``__pos``."""
+    df = df.withColumn(
+        "__file_name",
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+    )
+    return df.withColumn("__pos", F.col("_metadata.row_index")) if pos else df
+
+
+def join_file_map(
+    df: DataFrame,
+    names: list[str],
+    columns: list[tuple[T.StructField, list]],
+) -> DataFrame:
+    """Left-join ONE driver-small per-file relation onto ``df``'s
+    ``__file_name``: row ``i`` is ``names[i]`` plus the ``i``-th value of
+    every ``(field, values)`` column (partition literals, sequence
+    numbers, row-id bases, absence lists). The map is broadcast, so the
+    fact scan stays exchange-free. No columns: ``df`` unchanged, no
+    join planned."""
+    if not columns:
+        return df
+    fields = [f for f, _ in columns]
+    fmap = local_relation(
+        df.sparkSession,
+        list(zip(names, *[vals for _, vals in columns])),
+        T.StructType(
+            [T.StructField("__file_name", T.StringType(), False), *fields]
+        ),
+    )
+    return df.join(F.broadcast(fmap), "__file_name", "left")
+
+
+def absent_column(
+    names: list[str], absent: dict[str, list[str]]
+) -> tuple[T.StructField, list]:
+    """The ``__absent_cols`` file-map column: per file basename, the
+    defaulted columns the file physically lacks (null when none)."""
+    return (
+        T.StructField(_ABSENT_COLS, T.ArrayType(T.StringType()), True),
+        [absent.get(n) for n in names],
+    )
+
+
+def fill_absent_defaults(
+    df: DataFrame, defaults: dict, absent: dict[str, list[str]]
+) -> DataFrame:
+    """Substitute ``defaults[name]`` (a Column) wherever the joined
+    ``__absent_cols`` names the column — a pure column expression on
+    the scan, no extra pass or exchange — for every column some file
+    lacks, then drop ``__absent_cols``."""
+    lacking = {n for cols in absent.values() for n in cols}
+    for name, value in defaults.items():
+        if name in lacking:
+            df = df.withColumn(
+                name,
+                F.when(
+                    F.array_contains(F.col(_ABSENT_COLS), name), value
+                ).otherwise(F.col(name)),
+            )
+    return df.drop(_ABSENT_COLS)
+
+
+def footer_columns(paths: list[str]) -> dict[str, set[str]]:
+    """Top-level column names of each parquet file, one footer read per
+    path, through a bounded thread pool. A footer the local pyarrow
+    cannot parse (VARIANT) is answered by the JVM footer reader."""
+    import concurrent.futures as cf
+
+    from pyspark.sql import SparkSession
+
+    if not paths:
+        return {}
+    # resolved HERE: the active session is thread-local, a fresh pool
+    # thread may not see it
+    spark = SparkSession.getActiveSession()
+
+    def probe(path):
+        md = read_footer(path)
+        if md is not None:
+            return set(md.schema.to_arrow_schema().names)
+        return set(spark.read.parquet(path).schema.names)
+
+    with cf.ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
+        return dict(zip(paths, pool.map(probe, paths)))
+
+
+def dead_positions(
+    spark, descriptors: list[tuple], decode: Callable
+) -> DataFrame:
+    """``(__file_name, __pos, __del_seq)`` rows for deleted positions.
+    ``descriptors`` are driver-small ``(file basename, payload,
+    del_seq)`` tuples, one per deletion vector, with a JSON-encodable
+    payload; ``decode(payload)`` returns the positions and runs on the
+    EXECUTORS in Arrow batches — a vector can carry millions of
+    positions, they never materialize on the driver."""
+    import json
+
+    spec = local_relation(
+        spark,
+        [(n, json.dumps(p), s) for n, p, s in descriptors],
+        "`__file_name` string, `__dv` string, `__del_seq` long",
+    )
+
+    def gen(batches):
+        import json as _json
+
+        import pandas as pd
+
+        for pdf in batches:
+            names: list[str] = []
+            poss: list[int] = []
+            seqs: list[int] = []
+            for name, dv, seq in zip(
+                pdf["__file_name"], pdf["__dv"], pdf["__del_seq"]
+            ):
+                ps = sorted(decode(_json.loads(dv)))
+                names += [name] * len(ps)
+                poss += ps
+                seqs += [seq] * len(ps)
+            yield pd.DataFrame(
+                {"__file_name": names, "__pos": poss, "__del_seq": seqs}
+            )
+
+    return spec.mapInPandas(
+        gen, "`__file_name` string, `__pos` long, `__del_seq` long"
+    )
+
+
+def subtract_positions(
+    df: DataFrame, dead: DataFrame, cardinality: int, by_seq: bool = False
+) -> DataFrame:
+    """Anti-join ``dead`` (``__file_name``, ``__pos``[, ``__del_seq``])
+    out of a scan carrying ``__file_name`` + ``__pos`` (+ ``__seq``):
+    with ``by_seq`` a position dies only where ``__del_seq >= __seq``.
+
+    Join strategy is SIZE-GUARDED on ``cardinality``, the positions the
+    descriptors claim (driver-side metadata, no decode needed): up to
+    ``DV_BROADCAST_MAX_POSITIONS`` the relation broadcasts and the fact
+    scan stays exchange-free. Above it an explicit broadcast would
+    bypass AQE's size check and ship a multi-GB position relation to
+    every executor, so the positions are spread across the cluster
+    instead and the join is pinned to a shuffle hash join — left alone,
+    the planner would auto-broadcast a decoded relation whose
+    descriptor-sized stats underestimate it."""
+    if cardinality <= DV_BROADCAST_MAX_POSITIONS:
+        dead = F.broadcast(dead)
+    else:
+        dead = dead.repartition("__file_name", "__pos").hint("shuffle_hash")
+    on = [
+        df["__file_name"] == dead["__file_name"],
+        df["__pos"] == dead["__pos"],
+    ]
+    if by_seq:
+        on.append(dead["__del_seq"] >= df["__seq"])
+    return df.join(dead, on=on, how="left_anti")

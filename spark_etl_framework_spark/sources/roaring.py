@@ -231,6 +231,17 @@ def decode_dv_blob(buf: bytes, offset: int = 0) -> set[int]:
     return deserialize_rbm_array(body[4:])
 
 
+def read_blob(path: str, offset: int, length: int | None) -> set[int]:
+    """Decode the framed vector at ``offset`` of ``path`` (an Iceberg
+    Puffin ``deletion-vector-v1`` blob): ``length`` bytes, or the rest of
+    the file when the length is unknown. The frame carries its own size,
+    magic and CRC, so ``length`` only bounds the read."""
+    with open(path, "rb") as fh:
+        fh.seek(int(offset))
+        buf = fh.read(int(length)) if length and int(length) > 0 else fh.read()
+    return decode_dv_blob(buf, 0)
+
+
 def write_dv_file(path: str, positions) -> tuple[int, int]:
     """Write a single-vector DV file (format version 1); returns
     (offset, sizeInBytes) for the add action's descriptor — size is the

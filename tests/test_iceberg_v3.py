@@ -964,6 +964,53 @@ def test_schema_vintage_decides_absence_without_footer_reads(
     assert calls["n"] == 1
 
 
+def test_all_undatable_files_read_each_footer_once_pooled(
+    spark, loc, monkeypatch
+):
+    """Iceberg twin of the delta pooled-footer pin: when the writing
+    schema cannot date any file (snapshots without a schema-id, the
+    shape of foreign metadata) and no metrics prove presence, each data
+    file's footer is read EXACTLY once, through the bounded thread pool
+    (min(16, |undatable files|) workers)."""
+    import concurrent.futures as cf
+
+    import pyarrow.parquet as pq
+
+    for i in range(3):
+        _write(spark, loc, [(i, f"s{i}")], mode="append" if i else "overwrite")
+    ice.upgrade_format_version(loc, 3)
+    ice.add_column(loc, "flag", "int", default=7)
+
+    def _undate(meta):
+        for snap in meta["snapshots"]:
+            snap.pop("schema-id", None)
+
+    _edit_meta(loc, _undate)
+
+    pools: list[int | None] = []
+    real_pool = cf.ThreadPoolExecutor
+
+    class CapturingPool(real_pool):
+        def __init__(self, max_workers=None, **kw):
+            pools.append(max_workers)
+            super().__init__(max_workers=max_workers, **kw)
+
+    calls = {"n": 0}
+    real = pq.ParquetFile
+
+    def counting(*a, **kw):
+        if a and isinstance(a[0], str) and a[0].startswith(loc):
+            calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", CapturingPool)
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    got = {r.id: r.flag for r in ice.read_iceberg(spark, loc).collect()}
+    assert got == {0: 7, 1: 7, 2: 7}
+    assert calls["n"] == 3
+    assert 3 in pools
+
+
 def test_defaults_vintage_random_lifecycle(spark, tmp_path):
     """Iceberg twin of the delta randomized lifecycle: fixed-seed
     interleavings of append / ADD COLUMN DEFAULT / MoR DELETE /

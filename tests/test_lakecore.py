@@ -187,6 +187,29 @@ def test_footer_ranges_match_the_old_folds(tmp_path):
     )
 
 
+def test_footer_columns_answers_variant_footers_from_the_pool(spark, tmp_path):
+    """A VARIANT footer the local pyarrow cannot parse falls back to the
+    JVM reader inside the probe pool's worker threads, beside a plain
+    footer pyarrow answers itself."""
+    var = str(tmp_path / "var")
+    spark.sql("select 1 as id, parse_json('{\"a\": 1}') as v").coalesce(
+        1
+    ).write.parquet(var)
+    plain = str(tmp_path / "plain.parquet")
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"id": [1], "s": ["x"]}), plain)
+    [vpath] = [
+        os.path.join(var, n) for n in os.listdir(var) if n.endswith(".parquet")
+    ]
+    assert lakecore.read_footer(vpath) is None
+    assert lakecore.footer_columns([vpath, plain]) == {
+        vpath: {"id", "v"},
+        plain: {"id", "s"},
+    }
+
+
 # ---------------------------------------------------------------------------
 # structure
 # ---------------------------------------------------------------------------
@@ -195,7 +218,14 @@ def test_footer_ranges_match_the_old_folds(tmp_path):
 @pytest.mark.parametrize("module", ["deltalog.py", "iceberg.py"])
 def test_formats_carry_no_private_copy_of_the_core(module):
     src = (SOURCES / module).read_text(encoding="utf-8")
-    for needle in ("os.link(", "tempfile.mkdtemp(", "from .deltalog import _"):
+    for needle in (
+        "os.link(",
+        "tempfile.mkdtemp(",
+        "from .deltalog import _",
+        "decode_dv_blob(",
+        "ThreadPoolExecutor(",
+        "DV_BROADCAST_MAX_POSITIONS =",
+    ):
         assert needle not in src, f"{module} has its own {needle!r}"
 
 
@@ -297,6 +327,28 @@ def test_iceberg_merge_lost_race_leaves_no_orphans(spark, tmp_path):
     src = spark.range(15, 25).selectExpr("id", "id * 100 as v")
     with pytest.raises(ice.IcebergConcurrentModification):
         ice.merge_upsert(spark, loc, src, ["id"])
+    assert _tree(loc) == tree
+
+
+def test_iceberg_write_lost_race_leaves_no_orphans(spark, tmp_path):
+    """An append that loses the metadata publish unlinks its data files,
+    manifest and manifest list; the table keeps its prior tree."""
+    import shutil
+
+    loc = str(tmp_path / "t")
+    ice.write_iceberg(spark.range(5).selectExpr("id", "id * 10 as v"), loc)
+    meta_dir = os.path.join(loc, "metadata")
+    cur = ice.current_version(loc)
+    shutil.copy(
+        os.path.join(meta_dir, f"v{cur}.metadata.json"),
+        os.path.join(meta_dir, f"v{cur + 1}.metadata.json"),
+    )
+    tree = _tree(loc)
+    with pytest.raises(ice.IcebergConcurrentModification):
+        ice.write_iceberg(
+            spark.range(5, 9).selectExpr("id", "id * 10 as v").coalesce(2),
+            loc,
+        )
     assert _tree(loc) == tree
 
 

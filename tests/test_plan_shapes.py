@@ -958,3 +958,38 @@ def test_delta_dv_read_no_fact_shuffle(spark, tmp_path):
     assert "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert out.count() == 50
+
+
+def test_delta_plain_read_is_a_bare_scan(spark, tmp_path):
+    """An unpartitioned Delta table without deletion vectors or column
+    defaults reads as a bare parquet scan: no file map, no join."""
+    from spark_etl_framework_spark.sources import deltalog as dl
+
+    tbl = str(tmp_path / "t")
+    dl.write_delta(spark.range(20).selectExpr("id", "id * 2 as v"), tbl)
+    plan = _initial_plan(dl.read_delta(spark, tbl))
+    assert "Join" not in plan and "Exchange" not in plan, plan
+
+
+def test_delta_file_map_is_one_broadcast(spark, tmp_path):
+    """Partition literals, absent-default lists and row-tracking bases
+    ride ONE broadcast file map: a partitioned Delta scan with a column
+    default (and, on the row-level path, row tracking) plans a single
+    BroadcastExchange, not one per per-file field."""
+    from spark_etl_framework_spark.sources import deltalog as dl
+
+    tbl = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, f"n{i}", i % 3) for i in range(30)], "id int, name string, grp int"
+    )
+    dl.write_delta(df.coalesce(2), tbl, mode="overwrite", partition_by=["grp"])
+    dl.enable_row_tracking(spark, tbl)
+    dl.add_column(tbl, "flag", "int", default=7)
+    out = dl.read_delta(spark, tbl)
+    assert _initial_plan(out).count("BroadcastExchange") == 1
+    assert {r.flag for r in out.collect()} == {7}
+    out = dl.read_delta_with_row_ids(spark, tbl)
+    assert _initial_plan(out).count("BroadcastExchange") == 1
+    rows = out.collect()
+    assert {r.flag for r in rows} == {7}
+    assert sorted(r["_row_id"] for r in rows) == list(range(30))

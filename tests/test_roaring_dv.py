@@ -12,6 +12,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from spark_etl_framework_spark.sources import deltalog as dl
+from spark_etl_framework_spark.sources import iceberg as ice
+from spark_etl_framework_spark.sources import lakecore
 from spark_etl_framework_spark.sources import roaring as rb
 
 
@@ -273,6 +275,17 @@ def test_dv_antijoin_small_cardinality_broadcasts(spark, tmp_path):
     assert sorted(r.id for r in out.collect()) == list(range(7, 30))
 
 
+def _iceberg_dv_table(spark, tmp_path):
+    loc = str(tmp_path / "ice")
+    df = spark.createDataFrame(
+        [(i, f"n{i}") for i in range(30)], "id int, name string"
+    )
+    ice.write_iceberg(df.coalesce(2), loc, mode="overwrite")
+    ice.upgrade_format_version(loc, 3)
+    ice.delete_where(spark, loc, "id < 7")
+    return loc
+
+
 def test_dv_antijoin_large_cardinality_never_broadcasts(spark, tmp_path, monkeypatch):
     """ABOVE the threshold the explicit broadcast hint must disappear: an
     explicit F.broadcast bypasses AQE's size check, and a heavily-deleted
@@ -281,20 +294,33 @@ def test_dv_antijoin_large_cardinality_never_broadcasts(spark, tmp_path, monkeyp
     metadata — no decode happens to make the decision), so the big case
     plans a shuffle anti-join on (__file_name, __pos). Threshold is
     monkeypatched to 0 — the branch is what's under test, the real
-    constant (1M positions ≈ 64 MB) is asserted separately."""
-    monkeypatch.setattr(dl, "DV_BROADCAST_MAX_POSITIONS", 0)
-    tbl = _dv_table(spark, tmp_path)
-    out = dl.read_delta(spark, tbl)
-    # initial (pre-AQE) physical plan: no explicit broadcast anywhere.
-    # AQE may still CHOOSE broadcast at runtime from the real size — that
-    # is exactly the wanted behavior (size-checked, not hint-forced).
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan
-    assert "LeftAnti" in plan
-    # semantics identical on both branches
-    assert sorted(r.id for r in out.collect()) == list(range(7, 30))
+    constant (1M positions ≈ 64 MB) is asserted separately. Both formats
+    subtract through the same core: a Delta DV table and a v3 Iceberg
+    table whose DELETE wrote Puffin deletion vectors."""
+    monkeypatch.setattr(lakecore, "DV_BROADCAST_MAX_POSITIONS", 0)
+    ice_loc = _iceberg_dv_table(spark, tmp_path)
+    meta = ice.load_metadata(ice_loc)
+    _, dels = ice._scan_snapshot(meta, ice._pick_snapshot(meta))
+    assert dels and all(d.get("referenced_data_file") for d in dels)
+    delta = dl.read_delta(spark, _dv_table(spark, tmp_path))
+    # initial (pre-AQE) physical plan: no explicit broadcast anywhere in
+    # the unpartitioned Delta read (it has no file map). AQE may still
+    # CHOOSE broadcast at runtime from the real size — that is exactly
+    # the wanted behavior (size-checked, not hint-forced).
+    assert "BroadcastExchange" not in (
+        delta._jdf.queryExecution().executedPlan().toString()
+    )
+    for out in (delta, ice.read_iceberg(spark, ice_loc)):
+        # The anti-join is a shuffle hash join in both formats. The
+        # Iceberg plan still broadcasts its file map (the __seq the
+        # anti-join condition reads); the position side must not be.
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        anti = [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+        assert anti and all("ShuffledHashJoin" in ln for ln in anti), plan
+        # semantics identical on both branches
+        assert sorted(r.id for r in out.collect()) == list(range(7, 30))
 
 
 def test_dv_broadcast_threshold_is_sane():
     # ~64 bytes/position estimate → 1M positions ≈ 64 MB broadcast
-    assert 100_000 <= dl.DV_BROADCAST_MAX_POSITIONS <= 10_000_000
+    assert 100_000 <= lakecore.DV_BROADCAST_MAX_POSITIONS <= 10_000_000

@@ -12,6 +12,7 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -32,18 +33,23 @@ def main() -> None:
     for name in TABLES:
         load_table(spark, args.sf, name).count()
 
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     for q in args.queries:
         fn = QUERIES[q]
         fn(spark, args.sf).count()  # warm run
-        before = set(tracker.getJobIdsForGroup(None) or [])
-        # a fresh group id would be cleaner but statusTracker keeps all ids
-        n_before = max([*before, -1])
-        t0 = time.time()
-        fn(spark, args.sf).count()
-        wall = time.time() - t0
-        after = [j for j in (tracker.getJobIdsForGroup(None) or []) if j > n_before]
-        print(f"{q}: {len(after)} jobs, {wall:.3f}s warm")
+        # the timed run gets its own job group, so jobs from anything
+        # else in the session cannot change the count
+        group = f"job_count-{q}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, f"job_count {q}")
+        try:
+            t0 = time.time()
+            fn(spark, args.sf).count()
+            wall = time.time() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        print(f"{q}: {len(jobs)} jobs, {wall:.3f}s warm")
 
 
 if __name__ == "__main__":

@@ -10,6 +10,7 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -32,13 +33,19 @@ def main() -> None:
 
     fn = QUERIES[args.query]
     fn(spark, args.sf).count()  # warm
-    jsc = spark.sparkContext._jsc.sc()
-    tracker = jsc.statusTracker()
-    before = max([*(tracker.getJobIdsForGroup(None) or []), -1])
-    t0 = time.time()
-    fn(spark, args.sf).count()
-    wall = time.time() - t0
-    ids = sorted(j for j in tracker.getJobIdsForGroup(None) if j > before)
+    sc = spark.sparkContext
+    tracker = sc._jsc.sc().statusTracker()
+    # the timed run gets its own job group, so jobs from anything else in
+    # the session cannot enter the trace
+    group = f"job_trace-{args.query}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"job_trace {args.query}")
+    try:
+        t0 = time.time()
+        fn(spark, args.sf).count()
+        wall = time.time() - t0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    ids = sorted(tracker.getJobIdsForGroup(group))
     print(f"# {args.query}: {len(ids)} jobs, {wall:.3f}s warm")
     for j in ids:
         info = tracker.getJobInfo(j)
