@@ -55,6 +55,22 @@ def scoped_persist(df: DataFrame, storage_level=None) -> DataFrame:
     return df
 
 
+@contextmanager
+def persisted(df: DataFrame, storage_level=None):
+    """Persist ``df`` for the ``with`` block and unpersist it on exit,
+    error or not. The LOCAL lifecycle, for relations whose every
+    consumer materializes inside the block (DML staging, an emptiness
+    check before a write, an iterative loop): nothing waits for a query
+    boundary, so it is also right outside registered queries (pipeline
+    actors, tests), where a :func:`scoped_persist` would hold its blocks
+    until the next registered query starts."""
+    df = df.persist(storage_level) if storage_level is not None else df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
 def scoped_localcheckpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``localCheckpoint`` with the same scoped lifecycle as
     :func:`scoped_persist`: the checkpoint's cached RDD (which otherwise

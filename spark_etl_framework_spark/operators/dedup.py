@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import scoped_localcheckpoint, scoped_persist
+from ..caching import persisted, scoped_localcheckpoint, scoped_persist
 
 # --------------------------------------------------------------------------
 # Exact dedup
@@ -436,46 +436,46 @@ def connected_components(
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be 'raise' or 'warn': {on_nonconverged!r}")
     edges = pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    edges = (
-        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    labels = scoped_localcheckpoint(
-        edges.select(F.col("a").alias("node")).distinct().withColumn("lbl", F.col("node")),
-        eager=True,
-    )
-    converged = False
-    # max_iter + 1 rounds: convergence is only OBSERVABLE as a round with
-    # zero changes, so a graph whose diameter is exactly max_iter needs one
-    # extra (no-op) round to prove it converged rather than raise falsely
-    for _ in range(max_iter + 1):
-        nbr_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("lbl").alias("nbr_lbl"))
+    edges = edges.union(
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).distinct()
+    with persisted(edges) as edges:
+        labels = scoped_localcheckpoint(
+            edges.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("lbl", F.col("node")),
+            eager=True,
         )
-        # eager localCheckpoint: materializes AND truncates lineage, so the
-        # per-round plan stays O(1) instead of doubling every round
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.a, "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
+        converged = False
+        # max_iter + 1 rounds: convergence is only OBSERVABLE as a round with
+        # zero changes, so a graph whose diameter is exactly max_iter needs one
+        # extra (no-op) round to prove it converged rather than raise falsely
+        for _ in range(max_iter + 1):
+            nbr_min = (
+                edges.join(labels, edges.b == labels.node)
+                .groupBy("a")
+                .agg(F.min("lbl").alias("nbr_lbl"))
             )
-        )
-        new_labels = scoped_localcheckpoint(new_labels, eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
+            # eager localCheckpoint: materializes AND truncates lineage, so the
+            # per-round plan stays O(1) instead of doubling every round
+            new_labels = (
+                labels.join(nbr_min, labels.node == nbr_min.a, "left")
+                .select(
+                    "node",
+                    F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
+                )
+            )
+            new_labels = scoped_localcheckpoint(new_labels, eager=True)
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.lbl") != F.col("o.lbl"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
     if not converged:
         msg = (
             f"connected_components did not converge within max_iter={max_iter} "

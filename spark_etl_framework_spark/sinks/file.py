@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from ..caching import persisted
 from ..operators.base import Actor
 from ..plans.context import JobContext
 
@@ -36,13 +37,9 @@ class FileWriter(Actor):
         df = spark.table(self.view)
         ctx.reference(self.view)
         if self.emptyWrite in ("no", "disabled"):
-            df.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                if df.isEmpty():
-                    return None
-                self._write(df)
-            finally:
-                df.unpersist()
+            with persisted(df, StorageLevel.MEMORY_AND_DISK):
+                if not df.isEmpty():
+                    self._write(df)
             return None
         self._write(df)
         return None

@@ -55,8 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import persisted
 from ..localrel import local_relation
-from ..parallel import run_concurrently
 from . import lakecore
 from .roaring import dv_positions
 
@@ -133,6 +133,15 @@ class AddFile:
     #: None unless drcv carries it). Lets column-default reads decide
     #: physical presence from the log instead of a parquet footer.
     data_vintage: int | None = None
+    #: the add action's ``tags`` map (PROTOCOL.md §Add File): carries
+    #: :data:`_VINTAGE_TAG` on files a row-tracking backfill restated
+    tags: dict | None = None
+
+
+#: add tag holding the vintage of a file's bytes (``""`` when the log
+#: could not date them) where ``defaultRowCommitVersion`` does not: the
+#: row-tracking backfill stamps live files with ITS OWN version
+_VINTAGE_TAG = "spark_etl.dataVintage"
 
 
 @dataclass
@@ -428,6 +437,9 @@ def _apply_action(
         pv = a.get("partitionValues") or {}
         if not isinstance(pv, dict):  # checkpoint map columns -> kv tuples
             pv = dict(pv)
+        tags = a.get("tags")
+        if tags is not None and not isinstance(tags, dict):
+            tags = dict(tags)  # checkpoint map column -> kv tuples
         dv = a.get("deletionVector")
         if dv is not None and not isinstance(dv, dict):
             dv = dict(dv)  # checkpoint struct column -> mapping
@@ -449,9 +461,18 @@ def _apply_action(
                 if a.get("defaultRowCommitVersion") is not None
                 else None
             ),
+            tags=tags or None,
         )
         af = adds[unquote(a["path"])]
-        if af.default_row_commit_version is not None:
+        vintage = (tags or {}).get(_VINTAGE_TAG)
+        if vintage is not None:
+            # a row-tracking backfill restated these bytes: the tag, not
+            # its drcv, dates them ("" = undated; the path memory below
+            # may still know)
+            af.data_vintage = (
+                int(vintage) if vintage else snap.path_vintages.get(af.path)
+            )
+        elif af.default_row_commit_version is not None:
             af.data_vintage = af.default_row_commit_version
         elif (
             exact
@@ -918,13 +939,14 @@ def _file_map_columns(
     return columns, defaults, absent
 
 
-def _lineage_scan(spark, path: str, snap: Snapshot, files=None) -> DataFrame:
-    """Scan the given add-files (default: all live files) with row
-    lineage attached: LOGICAL column names, ``__file_name`` + ``__pos``
-    from the parquet metadata columns, and ONE broadcast file map
-    carrying the partition columns, the absent-default lists (row-level
-    predicates must see EXISTS_DEFAULT exactly like the batch read) and
-    the row-tracking bases.
+def _live_rows(spark, path: str, snap: Snapshot, files=None) -> DataFrame:
+    """The live rows of the given add-files (default: all live files),
+    which a DML matches and a rewrite restages: LOGICAL column names,
+    ``__file_name`` + ``__pos`` from the parquet metadata columns, ONE
+    broadcast file map carrying the partition columns, the absent-default
+    lists (row-level predicates must see EXISTS_DEFAULT exactly like the
+    batch read) and the row-tracking bases, and the files' deletion
+    vectors subtracted (a DV-dead row can neither match nor resurrect).
 
     Column mapping: the parquet scan always uses the PHYSICAL schema and
     renames to logical immediately after the metadata columns are bound —
@@ -998,7 +1020,8 @@ def _lineage_scan(spark, path: str, snap: Snapshot, files=None) -> DataFrame:
             )
             .drop("__base_row_id", "__default_rcv", *mat_cols)
         )
-    return df
+    dv_files = [f for f in files if f.deletion_vector]
+    return _subtract_dvs(spark, df, path, dv_files) if dv_files else df
 
 
 def read_delta(
@@ -1467,7 +1490,7 @@ def _stage_adds(
     parquet stores PHYSICAL column names and the add actions key
     partitionValues/stats physically, per PROTOCOL.md §Column Mapping —
     callers keep working in logical names; this is the write half of the
-    physical/logical boundary (:func:`_lineage_scan` is the read half)."""
+    physical/logical boundary (:func:`_live_rows` is the read half)."""
     if constraints:
         # guards apply in LOGICAL names, before any physical renaming
         df = _with_constraint_guards(df, constraints)
@@ -2037,14 +2060,69 @@ def _commit_version(
     _maybe_log_compaction(path, version, conf)
 
 
+def _commit_rewrite(
+    spark: SparkSession,
+    path: str,
+    snap: Snapshot,
+    operation: str,
+    params: dict,
+    rewritten: set[str],
+    adds: list[dict],
+    extra: tuple | list = (),
+    data_change: bool = True,
+) -> int:
+    """Commit a row-level rewrite of ``snap`` as the next version:
+    commitInfo, the ``extra`` actions (protocol upgrade, change files),
+    a remove for every live file whose basename is in ``rewritten``,
+    fresh row ids for the adds that carry none, then the adds — removes
+    and adds flagged ``data_change`` (False for the logically unchanged
+    rewrites of OPTIMIZE and DV purge). Published through
+    :func:`_commit_version`: a lost race unlinks the files the commit
+    staged, and the checkpoint and compaction tails run."""
+    ts = int(time.time() * 1000)
+    actions: list[dict] = [
+        {
+            "commitInfo": {
+                "timestamp": ts,
+                "operation": operation,
+                "operationParameters": params,
+                "engineInfo": "spark-etl-framework-spark/pure-python-deltalog",
+            }
+        },
+        *extra,
+    ]
+    actions.extend(
+        {
+            "remove": {
+                "path": _quote_path(f.path),
+                "deletionTimestamp": ts,
+                "dataChange": data_change,
+                "partitionValues": dict(f.partition_values),
+            }
+        }
+        for f in snap.files
+        if os.path.basename(f.path) in rewritten
+    )
+    rt_domain = _fresh_row_id_actions(spark, path, snap, adds)
+    for a in adds:
+        a["add"]["dataChange"] = data_change
+    actions.extend(adds)
+    if rt_domain is not None:
+        actions.append(rt_domain)
+    version = snap.version + 1
+    _commit_version(path, version, actions, snap.configuration)
+    return version
+
+
 def _dv_commit_actions(
-    spark, path: str, matched, by_name: dict, ts: int
+    spark, path: str, matched, by_name: dict
 ) -> list[dict]:
     """Write one deletion-vector file per affected data file — EXECUTOR
     side, one ``applyInPandas`` group per file (the driver sees only the
-    |affected|-row descriptor list) — and return the remove + re-add
-    actions. Prior DV positions union in (a descriptor replaces, never
-    merges, so the new bitmap must carry the old dead rows too).
+    |affected|-row descriptor list) — and return the re-add actions
+    (the affected file, unchanged, with its new descriptor). Prior DV
+    positions union in (a descriptor replaces, never merges, so the new
+    bitmap must carry the old dead rows too).
     ``matched`` is the caller's already-persisted matched-row relation
     (every matched row's file is in the affected set by construction,
     so no re-filter is needed — one scan serves the whole DELETE)."""
@@ -2088,41 +2166,23 @@ def _dv_commit_actions(
         "file_name string, dv_path string, offset int, size int, card long",
     ).collect()
 
-    acts: list[dict] = []
-    for r in descriptors:
-        f = by_name[r["file_name"]]
-        acts.append(
-            {
-                "remove": {
-                    "path": _quote_path(f.path),
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
+    # row tracking: a re-added file is the SAME file — its baseRowId
+    # carries verbatim (surviving rows keep their ids)
+    return [
+        {
+            "add": {
+                **_add_action_of(by_name[r["file_name"]], data_change=True),
+                "deletionVector": {
+                    "storageType": "p",
+                    "pathOrInlineDv": r["dv_path"],
+                    "offset": r["offset"],
+                    "sizeInBytes": r["size"],
+                    "cardinality": r["card"],
+                },
             }
-        )
-        add = {
-            "path": _quote_path(f.path),
-            "partitionValues": dict(f.partition_values),
-            "size": f.size,
-            "modificationTime": f.modification_time,
-            "dataChange": True,
-            "stats": f.stats,
-            "deletionVector": {
-                "storageType": "p",
-                "pathOrInlineDv": r["dv_path"],
-                "offset": r["offset"],
-                "sizeInBytes": r["size"],
-                "cardinality": r["card"],
-            },
         }
-        # row tracking: the re-added file is the SAME file — its
-        # baseRowId carries verbatim (surviving rows keep their ids)
-        if f.base_row_id is not None:
-            add["baseRowId"] = f.base_row_id
-        if f.default_row_commit_version is not None:
-            add["defaultRowCommitVersion"] = f.default_row_commit_version
-        acts.append({"add": add})
-    return acts
+        for r in descriptors
+    ]
 
 
 def _subtract_dvs(spark, df, table_path: str, dv_files) -> DataFrame:
@@ -2158,8 +2218,8 @@ def _staged_paths(path: str, actions: list[dict]) -> list[str]:
 
 
 def _unlink_staged(path: str):
-    """Cleanup callable for run_concurrently: when a sibling thunk
-    failed, unlink the files this thunk's actions staged
+    """Cleanup for :func:`lakecore.run_concurrently`: when a sibling
+    thunk failed, unlink the files this thunk's actions staged
     (:func:`_staged_paths`) — an uncommitted staged file is
     unreferenced garbage."""
     return lambda actions: lakecore.unlink_quietly(_staged_paths(path, actions))
@@ -2391,8 +2451,7 @@ def delete_where(
     matched (no empty commit). Scale: the affected-file list and DV
     descriptors are driver-side metadata (exactly the jar's DELETE
     planner state); positions are decoded/encoded executor-side."""
-    prev = latest_version(path)
-    if prev < 0:
+    if latest_version(path) < 0:
         raise FileNotFoundError(f"not a delta table: {path}")
     if use_dvs and _uniform_enabled(path):
         # guard BEFORE any commit: a DV result could not be mirrored to
@@ -2406,132 +2465,76 @@ def delete_where(
     if not snap.files:
         return None
     mapping = snap.physical_of if snap.column_mapping_mode != "none" else None
-    df = _lineage_scan(spark, path, snap)
-
-    dv_files = [f for f in snap.files if f.deletion_vector]
-    if dv_files:
-        df = _subtract_dvs(spark, df, path, dv_files)
-
+    df = _live_rows(spark, path, snap)
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    # the matched subset feeds THREE consumers (affected-file collect,
-    # CDC staging, and the DV descriptors); persist it so the lineage
-    # scan runs once — at scale `matched` is the small side (rows being
-    # deleted), far cheaper than three full scans. Lifecycle is LOCAL
-    # (try/finally below), not the query-boundary scoped registry:
-    # every consumer materializes before this function returns, and DML
-    # runs outside registered queries too (pipeline actors, tests),
-    # where a scoped persist would leak until the next registry query.
-    matched = df.filter(pred).persist()
-    try:
-        return _delete_where_inner(
-            spark, path, predicate, use_dvs, prev, snap, mapping, df,
-            pred, matched,
-        )
-    finally:
-        matched.unpersist()
-
-
-def _delete_where_inner(
-    spark, path, predicate, use_dvs, prev, snap, mapping, df, pred, matched
-) -> int | None:
-    affected = {
-        r["__file_name"]
-        for r in matched.select("__file_name").distinct().collect()
-    }
-    if not affected:
-        return None
-
     names = [f.name for f in snap.schema.fields]
-    cdc_df = matched.select(*names).withColumn(
-        "_change_type", F.lit("delete")
-    )
-
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "spark-etl-framework-spark/pure-python-deltalog",
-            }
-        }
-    ]
-    by_name = {os.path.basename(f.path): f for f in snap.files}
-    # the CDC staging and the delete's own staging (DV encode | survivor
-    # rewrite) are INDEPENDENT jobs over the persisted matched subset —
-    # overlap them (guide §2.6); commit action order stays deterministic
-    # (assembled after both return)
+    extra: list[dict] = []
     if use_dvs:
         # table-features protocol (3/7) must list EVERY active feature —
         # the shared upgrade shape restates the legacy-implied ones too
         # (a 2/5 mapped table implies columnMapping/invariants/...; the
         # old hand-built lists dropped them — round-14 fix)
-        upgrade = _protocol_upgrade_actions(snap, "deletionVectors")
-        proto = upgrade[1]["protocol"]
+        proto = _protocol_upgrade_actions(snap, "deletionVectors")[1]["protocol"]
         if snap.column_mapping_mode != "none":
             for key in ("readerFeatures", "writerFeatures"):
                 proto[key] = sorted(set(proto[key]) | {"columnMapping"})
-        cdc_actions, dv_actions = run_concurrently(
-            lambda: _stage_cdc(cdc_df, path, mapping=mapping),
-            lambda: _dv_commit_actions(spark, path, matched, by_name, ts),
+        extra.append({"protocol": proto})
+    # the matched subset feeds THREE consumers (affected-file collect,
+    # CDC staging, and the DV descriptors or the survivors' file list):
+    # persisted, the scan runs once — at scale `matched` is the small
+    # side (rows being deleted), far cheaper than three full scans
+    with persisted(df.filter(pred)) as matched:
+        affected = {
+            r["__file_name"]
+            for r in matched.select("__file_name").distinct().collect()
+        }
+        if not affected:
+            return None
+        cdc_df = matched.select(*names).withColumn(
+            "_change_type", F.lit("delete")
+        )
+        if use_dvs:
             # a DV re-add restates a LIVE data file: only its new
-            # deletion vector file is unlinked (_staged_paths)
-            cleanup=[_unlink_staged(path), _unlink_staged(path)],
-        )
-        actions.extend(cdc_actions)
-        actions.insert(0, {"protocol": proto})
-        actions.extend(dv_actions)
-    else:
-        survivors = (
-            df.filter(F.col("__file_name").isin(list(affected)))
-            .filter(~pred)
-            .select(
-                *[F.col(f.name) for f in snap.schema.fields],
-                *_materialize_row_ids(snap),
+            # deletion vector file is staged (_staged_paths)
+            stage = functools.partial(
+                _dv_commit_actions, spark, path, matched,
+                {os.path.basename(f.path): f for f in snap.files},
             )
-        )
-        cdc_actions, new_adds = run_concurrently(
+        else:
+            survivors = (
+                df.filter(F.col("__file_name").isin(list(affected)))
+                .filter(~pred)
+                .select(*names, *_materialize_row_ids(snap))
+            )
+            stage = functools.partial(
+                _stage_adds, survivors, path, snap.partition_columns,
+                mapping=mapping, constraints=snap.check_constraints,
+            )
+        # the CDC staging and the delete's own staging (DV encode |
+        # survivor rewrite) are INDEPENDENT jobs over the persisted
+        # matched subset — overlap them (guide §2.6)
+        cdc_actions, adds = lakecore.run_concurrently(
             lambda: _stage_cdc(cdc_df, path, mapping=mapping),
-            lambda: _stage_adds(
-                survivors, path, snap.partition_columns, mapping=mapping,
-                constraints=snap.check_constraints,
-            ),
-            cleanup=[_unlink_staged(path), _unlink_staged(path)],
+            stage,
+            cleanup=_unlink_staged(path),
         )
-        actions.extend(cdc_actions)
-        actions.extend(
-            {
-                "remove": {
-                    "path": _quote_path(f.path),
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
-            }
-            for f in snap.files
-            if os.path.basename(f.path) in affected
-        )
-        rt_domain = _fresh_row_id_actions(spark, path, snap, new_adds)
-        actions.extend(new_adds)
-        if rt_domain is not None:
-            actions.append(rt_domain)
-    version = prev + 1
-    _commit_version(path, version, actions, snap.configuration)
-    return version
+    return _commit_rewrite(
+        spark, path, snap, "DELETE", {"predicate": predicate}, affected,
+        adds, extra + cdc_actions,
+    )
 
 
-def _materialize_row_ids(snap: Snapshot, new_rcv: int | None = None):
+def _materialize_row_ids(snap: Snapshot, rcv=None):
     """Select-list columns carrying ``__row_id``/``__rcv`` forward as
     the table's MATERIALIZED row-tracking columns in a DML rewrite —
-    the spec's id-preservation mechanism. ``new_rcv`` stamps rewritten
-    (updated) rows with the committing version instead of the carried
-    one. Empty when row tracking is off."""
+    the spec's id-preservation mechanism. ``rcv`` (a Column) replaces
+    the carried commit version, for rows a rewrite changes. Empty when
+    row tracking is off."""
     if not snap.row_tracking_enabled:
         return []
-    rcv = F.lit(new_rcv).cast("long") if new_rcv is not None else F.col("__rcv")
     return [
         F.col("__row_id").alias(snap.materialized_row_id_col),
-        rcv.alias(snap.materialized_rcv_col),
+        (F.col("__rcv") if rcv is None else rcv).alias(snap.materialized_rcv_col),
     ]
 
 
@@ -2553,7 +2556,6 @@ def update_where(
     rewrite (dead rows stay dead and leave the new files entirely).
 
     Returns the committed version, or None when nothing matched."""
-    prev = latest_version(path)
     snap = snapshot(path)
     unknown = set(assignments) - {f.name for f in snap.schema.fields}
     if unknown:
@@ -2570,150 +2572,76 @@ def update_where(
     if not snap.files:
         return None
     mapping = snap.physical_of if snap.column_mapping_mode != "none" else None
-    df = _lineage_scan(spark, path, snap)
-    dv_files = [f for f in snap.files if f.deletion_vector]
-    if dv_files:
-        df = _subtract_dvs(spark, df, path, dv_files)
-
+    df = _live_rows(spark, path, snap)
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    # matched feeds the affected-file collect and both CDC images;
-    # persist the (small) matched subset so the scan runs once. Local
-    # lifecycle (try/finally): everything materializes before return,
-    # and DML also runs outside registered queries, where the
-    # query-boundary scoped registry would leak the blocks.
-    matched = df.filter(pred).persist()
-    try:
-        return _update_where_inner(
-            spark, path, predicate, assignments, prev, snap, mapping,
-            df, pred, matched,
-        )
-    finally:
-        matched.unpersist()
-
-
-def _update_where_inner(
-    spark, path, predicate, assignments, prev, snap, mapping, df, pred,
-    matched,
-) -> int | None:
-    gen = snap.generated_expressions
-    affected = {
-        r["__file_name"]
-        for r in matched.select("__file_name").distinct().collect()
-    }
-    if not affected:
-        return None
     names = [f.name for f in snap.schema.fields]
-    post = matched.select(
-        *[
-            (
-                F.when(pred, F.expr(assignments[f.name]).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
+    assigned = [
+        F.when(pred, F.expr(assignments[f.name]).cast(f.dataType))
+        .otherwise(F.col(f.name))
+        .alias(f.name)
+        if f.name in assignments
+        else F.col(f.name)
+        for f in snap.schema.fields
+    ]
+    generated = [
+        F.expr(gen[f.name]).cast(f.dataType).alias(f.name)
+        if f.name in gen
+        else F.col(f.name)
+        for f in snap.schema.fields
+    ]
+
+    def updated(rows: DataFrame, *carry) -> DataFrame:
+        out = rows.select(*assigned, *carry)
+        if not gen:
+            return out
+        # generated columns recompute over the POST-assignment row (the
+        # writer obligation: their value must equal the expression)
+        return out.select(*generated, *out.columns[len(names):])
+
+    # matched feeds the affected-file collect and both CDC images;
+    # persisted, the scan runs once
+    with persisted(df.filter(pred)) as matched:
+        affected = {
+            r["__file_name"]
+            for r in matched.select("__file_name").distinct().collect()
+        }
+        if not affected:
+            return None
+        cdc_df = (
+            matched.select(*names)
+            .withColumn("_change_type", F.lit("update_preimage"))
+            .unionByName(
+                updated(matched).withColumn(
+                    "_change_type", F.lit("update_postimage")
+                )
             )
-            for f in snap.schema.fields
-        ]
-    )
-    if gen:  # postimages carry the RECOMPUTED generated values
-        post = post.select(
-            *[
-                F.expr(gen[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in gen
-                else F.col(f.name)
-                for f in snap.schema.fields
-            ]
         )
-    post = post.withColumn("_change_type", F.lit("update_postimage"))
-    cdc_df = (
-        matched.select(*names)
-        .withColumn("_change_type", F.lit("update_preimage"))
-        .unionByName(post)
-    )
-    rt_carry = []
-    if snap.row_tracking_enabled:
         # ids carry verbatim; the commit version bumps ONLY on rows the
         # predicate actually updates (spec: unchanged rows in a
         # rewritten file keep their version)
-        rt_carry = [
-            F.col("__row_id").alias(snap.materialized_row_id_col),
-            F.when(pred, F.lit(prev + 1).cast("long"))
-            .otherwise(F.col("__rcv"))
-            .alias(snap.materialized_rcv_col),
-        ]
-    rewritten = df.filter(F.col("__file_name").isin(list(affected))).select(
-        *[
-            (
-                F.when(pred, F.expr(assignments[f.name]).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-            )
-            for f in snap.schema.fields
-        ],
-        *rt_carry,
-    )
-    if gen:
-        # generated columns recompute over the POST-assignment row (the
-        # writer obligation: their value must equal the expression)
-        rewritten = rewritten.select(
-            *[
-                F.expr(gen[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in gen
-                else F.col(f.name)
-                for f in snap.schema.fields
-            ],
-            *(
-                [F.col(snap.materialized_row_id_col),
-                 F.col(snap.materialized_rcv_col)]
-                if rt_carry
-                else []
+        rewritten = updated(
+            df.filter(F.col("__file_name").isin(list(affected))),
+            *_materialize_row_ids(
+                snap,
+                F.when(pred, F.lit(snap.version + 1).cast("long"))
+                .otherwise(F.col("__rcv")),
             ),
         )
-    # the CDC staging and the rewritten-file staging are INDEPENDENT
-    # write jobs over already-persisted/pruned inputs — overlap them so
-    # the second back-fills the first's task tail (guide §2.6); action
-    # order in the commit stays deterministic (assembled after both)
-    cdc_actions, adds = run_concurrently(
-        lambda: _stage_cdc(cdc_df, path, mapping=mapping),
-        lambda: _stage_adds(
-            rewritten, path, snap.partition_columns, mapping=mapping,
-            constraints=snap.check_constraints,
-        ),
-        cleanup=[_unlink_staged(path), _unlink_staged(path)],
+        # the CDC staging and the rewritten-file staging are INDEPENDENT
+        # write jobs — overlap them so the second back-fills the first's
+        # task tail (guide §2.6)
+        cdc_actions, adds = lakecore.run_concurrently(
+            lambda: _stage_cdc(cdc_df, path, mapping=mapping),
+            lambda: _stage_adds(
+                rewritten, path, snap.partition_columns, mapping=mapping,
+                constraints=snap.check_constraints,
+            ),
+            cleanup=_unlink_staged(path),
+        )
+    return _commit_rewrite(
+        spark, path, snap, "UPDATE", {"predicate": predicate}, affected,
+        adds, cdc_actions,
     )
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "spark-etl-framework-spark/pure-python-deltalog",
-            }
-        }
-    ]
-    actions.extend(cdc_actions)
-    actions.extend(
-        {
-            "remove": {
-                "path": _quote_path(f.path),
-                "deletionTimestamp": ts,
-                "dataChange": True,
-                "partitionValues": dict(f.partition_values),
-            }
-        }
-        for f in snap.files
-        if os.path.basename(f.path) in affected
-    )
-    rt_domain = _fresh_row_id_actions(spark, path, snap, adds)
-    actions.extend(adds)
-    if rt_domain is not None:
-        actions.append(rt_domain)
-    version = prev + 1
-    _commit_version(path, version, actions, snap.configuration)
-    return version
 
 
 def merge_upsert(
@@ -2736,11 +2664,11 @@ def merge_upsert(
     Scale: the affected-file list is driver metadata; the join keys
     shuffle, target text moves only for rewritten files — the same
     pruning the jar's MERGE planner does."""
-    prev = latest_version(path)
-    if prev < 0:
+    if latest_version(path) < 0:
         raise FileNotFoundError(f"not a delta table: {path}")
     snap = snapshot(path)
-    missing = [k for k in keys if k not in [f.name for f in snap.schema.fields]]
+    names = [f.name for f in snap.schema.fields]
+    missing = [k for k in keys if k not in names]
     if missing:
         raise ValueError(f"MERGE keys not in table schema: {missing}")
     gen = snap.generated_expressions
@@ -2764,13 +2692,14 @@ def merge_upsert(
     )
     mapping = snap.physical_of if snap.column_mapping_mode != "none" else None
     src_keys = src.select(*keys).distinct()
+    src_cons = dict(snap.check_constraints)
+    src_cons.update(
+        {f"generated:{n}": f"{n} <=> ({e})" for n, e in gen.items()}
+    )
     df_aff = None
     affected: set[str] = set()
     if snap.files:
-        df = _lineage_scan(spark, path, snap)
-        dv_files = [f for f in snap.files if f.deletion_vector]
-        if dv_files:
-            df = _subtract_dvs(spark, df, path, dv_files)
+        df = _live_rows(spark, path, snap)
         affected = {
             r["__file_name"]
             for r in df.join(src_keys, keys, "left_semi")
@@ -2783,149 +2712,92 @@ def merge_upsert(
         # affected by definition, so the CDC preimages, the row-id
         # inheritance keys and the survivor rewrite all live there, and
         # target keys outside the source never change a left/semi/anti
-        # join against the source. Persist that pruned subset once
-        # (local try/finally lifecycle — all consumers materialize
-        # before return) instead of re-running the full table scan for
-        # each of the five consumers; at scale the affected subset is
-        # the collision working set, not the table (guide §2.4/§5).
+        # join against the source. That pruned subset is persisted once
+        # instead of re-running the full table scan for each of the
+        # five consumers; at scale it is the collision working set, not
+        # the table (guide §2.4/§5).
         df_aff = (
             df.filter(F.col("__file_name").isin(list(affected)))
             if affected
             else df.limit(0)
-        ).persist()
-    try:
-        return _merge_upsert_inner(
-            spark, path, src, keys, prev, snap, mapping, gen, src_keys,
-            affected, df_aff,
         )
-    finally:
-        if df_aff is not None:
-            df_aff.unpersist()
-
-
-def _merge_upsert_inner(
-    spark, path, src, keys, prev, snap, mapping, gen, src_keys, affected,
-    df_aff,
-) -> int:
-    adds: list[dict] = []
-    if affected:
-        survivors = (
-            df_aff.join(src_keys, keys, "left_anti")
-            .select(
-                *[F.col(f.name) for f in snap.schema.fields],
-                *_materialize_row_ids(snap),
+    with persisted(df_aff) if df_aff is not None else nullcontext() as df_aff:
+        adds: list[dict] = []
+        if affected:
+            survivors = df_aff.join(src_keys, keys, "left_anti").select(
+                *names, *_materialize_row_ids(snap)
             )
-        )
-        adds.extend(
-            _stage_adds(
+            adds = _stage_adds(
                 survivors, path, snap.partition_columns, mapping=mapping,
                 constraints=snap.check_constraints,
             )
-        )
-    src_cons = dict(snap.check_constraints)
-    src_cons.update(
-        {f"generated:{n}": f"{n} <=> ({e})" for n, e in gen.items()}
-    )
-    src_staged = src
-    if snap.row_tracking_enabled and snap.files:
-        # matched source rows INHERIT the target row's id (rcv bumps to
-        # this commit); unmatched rows stay unmaterialized and pick up
-        # fresh baseRowId+pos ids — the spec's MERGE identity contract.
-        # Keys with a target match live in affected files only, so the
-        # pruned persisted subset serves the inheritance join too.
-        tgt_ids = df_aff.groupBy(*keys).agg(
-            F.min("__row_id").alias("__tgt_row_id")
-        )
-        src_staged = src.join(tgt_ids, keys, "left").select(
-            *[F.col(f.name) for f in snap.schema.fields],
-            F.col("__tgt_row_id").alias(snap.materialized_row_id_col),
-            F.when(
-                F.col("__tgt_row_id").isNotNull(),
-                F.lit(prev + 1).cast("long"),
-            ).alias(snap.materialized_rcv_col),
-        )
-
-    # change data feed: matched target rows are preimages, their source
-    # versions postimages, collision-free source rows inserts. Matched
-    # target rows and every target key colliding with the source live
-    # in affected files, so the pruned subset is CDC-complete.
-    names = [f.name for f in snap.schema.fields]
-    if df_aff is not None:
-        pre = (
-            df_aff.join(src_keys, keys, "left_semi")
-            .select(*names)
-            .withColumn("_change_type", F.lit("update_preimage"))
-        )
-        tgt_keys = df_aff.select(*keys).distinct()
-        post = (
-            src.join(tgt_keys, keys, "left_semi")
-            .select(*names)
-            .withColumn("_change_type", F.lit("update_postimage"))
-        )
-        ins = (
-            src.join(tgt_keys, keys, "left_anti")
-            .select(*names)
-            .withColumn("_change_type", F.lit("insert"))
-        )
-        changes = pre.unionByName(post).unionByName(ins)
-    else:
-        changes = src.select(*names).withColumn(
-            "_change_type", F.lit("insert")
-        )
-    # the source staging and the CDC staging are INDEPENDENT write jobs
-    # (df_aff is already cached by the survivor staging above, so
-    # neither recomputes the scan) — overlap them per guide §2.6; adds
-    # order (survivors, then source) and commit action order stay
-    # deterministic, assembled after both return
-    try:
-        src_adds, cdc_actions = run_concurrently(
-            lambda: _stage_adds(
-                src_staged, path, snap.partition_columns, mapping=mapping,
-                constraints=src_cons or None,
-            ),
-            lambda: _stage_cdc(changes, path, mapping=mapping),
-            cleanup=[_unlink_staged(path), _unlink_staged(path)],
-        )
-    except BaseException:
-        _unlink_staged(path)(adds)  # the survivors staged above
-        raise
-    adds.extend(src_adds)
-
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
+        src_staged = src
+        if snap.row_tracking_enabled and snap.files:
+            # matched source rows INHERIT the target row's id (rcv bumps
+            # to this commit); unmatched rows stay unmaterialized and
+            # pick up fresh baseRowId+pos ids — the spec's MERGE identity
+            # contract. Keys with a target match live in affected files
+            # only, so the pruned subset serves the inheritance join too.
+            tgt_ids = df_aff.groupBy(*keys).agg(
+                F.min("__row_id").alias("__tgt_row_id")
+            )
+            src_staged = src.join(tgt_ids, keys, "left").select(
+                *names,
+                F.col("__tgt_row_id").alias(snap.materialized_row_id_col),
+                F.when(
+                    F.col("__tgt_row_id").isNotNull(),
+                    F.lit(snap.version + 1).cast("long"),
+                ).alias(snap.materialized_rcv_col),
+            )
+        # change data feed: matched target rows are preimages, their
+        # source versions postimages, collision-free source rows
+        # inserts. Matched target rows and every target key colliding
+        # with the source live in affected files, so the pruned subset
+        # is CDC-complete.
+        if df_aff is not None:
+            tgt_keys = df_aff.select(*keys).distinct()
+            changes = (
+                df_aff.join(src_keys, keys, "left_semi")
+                .select(*names)
+                .withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(
+                    src.join(tgt_keys, keys, "left_semi")
+                    .select(*names)
+                    .withColumn("_change_type", F.lit("update_postimage"))
+                )
+                .unionByName(
+                    src.join(tgt_keys, keys, "left_anti")
+                    .select(*names)
+                    .withColumn("_change_type", F.lit("insert"))
+                )
+            )
+        else:
+            changes = src.select(*names).withColumn(
+                "_change_type", F.lit("insert")
+            )
+        # the source staging and the CDC staging are INDEPENDENT write
+        # jobs (df_aff is already cached by the survivor staging above,
+        # so neither recomputes the scan) — overlap them per guide §2.6
+        try:
+            src_adds, cdc_actions = lakecore.run_concurrently(
+                lambda: _stage_adds(
+                    src_staged, path, snap.partition_columns,
+                    mapping=mapping, constraints=src_cons or None,
+                ),
+                lambda: _stage_cdc(changes, path, mapping=mapping),
+                cleanup=_unlink_staged(path),
+            )
+        except BaseException:
+            _unlink_staged(path)(adds)  # the survivors staged above
+            raise
+    return _commit_rewrite(
+        spark, path, snap, "MERGE",
         {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {"matchedPredicates": json.dumps(
-                    [{"actionType": "update"}]
-                ), "notMatchedPredicates": json.dumps(
-                    [{"actionType": "insert"}]
-                )},
-                "engineInfo": "spark-etl-framework-spark/pure-python-deltalog",
-            }
-        }
-    ]
-    actions.extend(cdc_actions)
-    actions.extend(
-        {
-            "remove": {
-                "path": _quote_path(f.path),
-                "deletionTimestamp": ts,
-                "dataChange": True,
-                "partitionValues": dict(f.partition_values),
-            }
-        }
-        for f in snap.files
-        if os.path.basename(f.path) in affected
+            "matchedPredicates": json.dumps([{"actionType": "update"}]),
+            "notMatchedPredicates": json.dumps([{"actionType": "insert"}]),
+        },
+        affected, adds + src_adds, cdc_actions,
     )
-    rt_domain = _fresh_row_id_actions(spark, path, snap, adds)
-    actions.extend(adds)
-    if rt_domain is not None:
-        actions.append(rt_domain)
-    version = prev + 1
-    _commit_version(path, version, actions, snap.configuration)
-    return version
 
 
 def _commit_metadata_change(
@@ -3483,6 +3355,8 @@ def _add_action_of(f: AddFile, data_change: bool = False) -> dict:
         a["baseRowId"] = f.base_row_id
     if f.default_row_commit_version is not None:
         a["defaultRowCommitVersion"] = f.default_row_commit_version
+    if f.tags:
+        a["tags"] = dict(f.tags)
     return a
 
 
@@ -3512,13 +3386,16 @@ def _fresh_row_id_actions(
 ) -> dict | None:
     """Assign fresh ``baseRowId`` blocks to a commit's add actions and
     return the ``delta.rowTracking`` domain action advancing the high
-    water mark (None when row tracking is off). Counts come from the
-    adds' own stats — no extra scan; the rare stats-less add (variant
-    footer fallback) pays one count."""
+    water mark (None when row tracking is off). An add that already
+    carries a ``baseRowId`` restates a live file (a DV re-add) and keeps
+    its ids. Counts come from the adds' own stats — no extra scan; the
+    rare stats-less add (variant footer fallback) pays one count."""
     if not snap.row_tracking_enabled:
         return None
     hwm = _row_id_hwm(snap)
     for a in adds:
+        if a["add"].get("baseRowId") is not None:
+            continue
         st = a["add"].get("stats")
         try:
             n = json.loads(st).get("numRecords") if st else None
@@ -3568,11 +3445,7 @@ def read_delta_with_row_ids(
                 ]
             ),
         )
-    df = _lineage_scan(spark, path, snap)
-    dv_files = [f for f in snap.files if f.deletion_vector]
-    if dv_files:
-        df = _subtract_dvs(spark, df, path, dv_files)
-    return df.select(
+    return _live_rows(spark, path, snap).select(
         *[F.col(f.name) for f in snap.schema.fields],
         F.col("__row_id").alias("_row_id"),
         F.col("__rcv").alias("_row_commit_version"),
@@ -3606,6 +3479,10 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
             n = _num_records_of(spark, path, f)
             f.base_row_id = hwm + 1
             f.default_row_commit_version = version
+            # the restated bytes keep their own vintage: column-default
+            # absence is decided by when they were written, not stamped
+            vintage = "" if f.data_vintage is None else str(f.data_vintage)
+            f.tags = {**(f.tags or {}), _VINTAGE_TAG: vintage}
             hwm += n
         restated.append({"add": _add_action_of(f)})
     upgrade = _protocol_upgrade_actions(
@@ -3963,6 +3840,9 @@ def restore_table(
         }
         for p in sorted(cur_by_path.keys() - old_by_path.keys())
     )
+    # re-adds carry the original stats, DV descriptor, row ids and the
+    # byte vintage (defaultRowCommitVersion or its tag) — what keeps
+    # column-default absence decidable from the log after a RESTORE
     for p in sorted(old_by_path.keys() - cur_by_path.keys()):
         f = old_by_path[p]
         if not os.path.exists(os.path.join(path, f.path)):
@@ -3971,43 +3851,13 @@ def restore_table(
                 "VACUUM already deleted — restore inside the retention "
                 "window"
             )
-        add = {
-            "path": _quote_path(f.path),
-            "partitionValues": dict(f.partition_values),
-            "size": f.size,
-            "modificationTime": f.modification_time,
-            "dataChange": True,
-            "stats": f.stats,
-        }
-        if f.deletion_vector:
-            add["deletionVector"] = dict(f.deletion_vector)
-        if f.base_row_id is not None:
-            add["baseRowId"] = f.base_row_id
-        if f.default_row_commit_version is not None:
-            # the original byte vintage — spec-preserved across re-adds,
-            # and what keeps column-default absence decidable from the
-            # log after a RESTORE
-            add["defaultRowCommitVersion"] = f.default_row_commit_version
-        actions.append({"add": add})
+        actions.append({"add": _add_action_of(f, data_change=True)})
     # files live in BOTH versions but with different DV state must
     # re-add with the OLD descriptor (a later DV delete rolls back too)
     for p in sorted(cur_by_path.keys() & old_by_path.keys()):
         fo, fc = old_by_path[p], cur_by_path[p]
         if fo.deletion_vector != fc.deletion_vector:
-            add = {
-                "path": _quote_path(fo.path),
-                "partitionValues": dict(fo.partition_values),
-                "size": fo.size,
-                "modificationTime": fo.modification_time,
-                "dataChange": True,
-                "stats": fo.stats,
-            }
-            if fo.deletion_vector:
-                add["deletionVector"] = dict(fo.deletion_vector)
-            if fo.base_row_id is not None:
-                add["baseRowId"] = fo.base_row_id
-                add["defaultRowCommitVersion"] = fo.default_row_commit_version
-            actions.append({"add": add})
+            actions.append({"add": _add_action_of(fo, data_change=True)})
     new_version = latest_version(path) + 1
     _publish_commit(path, new_version, actions)
     return new_version
@@ -4020,15 +3870,12 @@ def purge_deletion_vectors(spark: SparkSession, path: str) -> int | None:
     OPTIMIZE convention for logically-unchanged rewrites); files without
     a DV are untouched. Readers drop the per-scan anti-join afterwards.
     Returns the committed version, or None when no file carries a DV."""
-    prev = latest_version(path)
     snap = snapshot(path)
     dv_files = [f for f in snap.files if f.deletion_vector]
     if not dv_files:
         return None
-    names = [os.path.basename(f.path) for f in dv_files]
     mapping = snap.physical_of if snap.column_mapping_mode != "none" else None
-    df = _lineage_scan(spark, path, snap, files=dv_files)
-    survivors = _subtract_dvs(spark, df, path, dv_files).select(
+    survivors = _live_rows(spark, path, snap, dv_files).select(
         *[F.col(f.name) for f in snap.schema.fields],
         *_materialize_row_ids(snap),
     )
@@ -4036,37 +3883,11 @@ def purge_deletion_vectors(spark: SparkSession, path: str) -> int | None:
         survivors, path, snap.partition_columns, mapping=mapping,
         constraints=snap.check_constraints,
     )
-    rt_domain = _fresh_row_id_actions(spark, path, snap, adds)
-    for a in adds:
-        a["add"]["dataChange"] = False  # logically unchanged rewrite
-    ts = int(time.time() * 1000)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": {"purgeDeletionVectors": "true"},
-                "engineInfo": "spark-etl-framework-spark/pure-python-deltalog",
-            }
-        }
-    ]
-    actions.extend(
-        {
-            "remove": {
-                "path": _quote_path(f.path),
-                "deletionTimestamp": ts,
-                "dataChange": False,
-            }
-        }
-        for f in snap.files
-        if os.path.basename(f.path) in set(names)
+    return _commit_rewrite(
+        spark, path, snap, "OPTIMIZE", {"purgeDeletionVectors": "true"},
+        {os.path.basename(f.path) for f in dv_files}, adds,
+        data_change=False,
     )
-    actions.extend(adds)
-    if rt_domain is not None:
-        actions.append(rt_domain)
-    version = prev + 1
-    _publish_commit(path, version, actions)
-    return version
 
 
 def optimize_compact(
@@ -4106,7 +3927,6 @@ def optimize_compact(
     over only the selected bytes; output file count =
     ceil(rewritten_bytes / target) — O(data rewritten), never O(table).
     """
-    prev = latest_version(path)
     snap = snapshot(path)
     part_cols = snap.partition_columns
 
@@ -4163,11 +3983,7 @@ def optimize_compact(
         return None
 
     mapping = snap.physical_of if snap.column_mapping_mode != "none" else None
-    df = _lineage_scan(spark, path, snap, files=rewrite)
-    dv_files = [f for f in rewrite if f.deletion_vector]
-    if dv_files:
-        df = _subtract_dvs(spark, df, path, dv_files)
-    df = df.select(
+    df = _live_rows(spark, path, snap, rewrite).select(
         *[F.col(f.name) for f in snap.schema.fields],
         *_materialize_row_ids(snap),
     )
@@ -4186,42 +4002,15 @@ def optimize_compact(
         layout = nullcontext(df.repartition(n_out))
     with layout as laid:
         adds = _stage_adds(laid, path, part_cols, mapping=mapping)
-    rt_domain = _fresh_row_id_actions(spark, path, snap, adds)
-    for a in adds:
-        a["add"]["dataChange"] = False
-    ts = int(time.time() * 1000)
     params: dict = {"targetSize": str(target_file_size)}
     if zorder_by:
         params["zOrderBy"] = json.dumps(list(zorder_by))
     if mode == "cluster":
         params["clusterBy"] = json.dumps(cluster_cols)
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": params,
-                "engineInfo": "spark-etl-framework-spark/pure-python-deltalog",
-            }
-        }
-    ]
-    rewritten = {os.path.basename(f.path) for f in rewrite}
-    actions.extend(
-        {
-            "remove": {
-                "path": _quote_path(f.path),
-                "deletionTimestamp": ts,
-                "dataChange": False,
-            }
-        }
-        for f in snap.files
-        if os.path.basename(f.path) in rewritten
+    version = _commit_rewrite(
+        spark, path, snap, "OPTIMIZE", params,
+        {os.path.basename(f.path) for f in rewrite}, adds, data_change=False,
     )
-    actions.extend(adds)
-    if rt_domain is not None:
-        actions.append(rt_domain)
-    version = prev + 1
-    _publish_commit(path, version, actions)
     return {
         "version": version,
         "filesRemoved": len(rewrite),
@@ -5168,6 +4957,7 @@ def _checkpoint_pa_fields() -> dict:
                         pa.field("stats", pa.string()),
                         pa.field("baseRowId", pa.int64()),
                         pa.field("defaultRowCommitVersion", pa.int64()),
+                        pa.field("tags", pa.map_(pa.string(), pa.string())),
                         pa.field(
                             "deletionVector",
                             pa.struct(
@@ -5282,6 +5072,7 @@ def _checkpoint_rows(snap: Snapshot) -> tuple[list[dict], list[dict]]:
                 "stats": f.stats,
                 "baseRowId": f.base_row_id,
                 "defaultRowCommitVersion": f.default_row_commit_version,
+                "tags": list(f.tags.items()) if f.tags else None,
                 "deletionVector": f.deletion_vector,
             }
         }

@@ -51,9 +51,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import persisted
 from ..functions.avro_ocf import read_ocf, write_ocf
 from ..localrel import local_relation
-from ..parallel import run_concurrently
 from . import lakecore
 
 
@@ -1752,7 +1752,6 @@ def _prior_dv_map(meta: dict, snap: dict) -> dict[str, tuple[str, int, int]]:
 
 
 def _stage_deletion_vectors(
-    spark: SparkSession,
     matched: DataFrame,
     loc: str,
     snapshot_id: int,
@@ -1918,6 +1917,29 @@ def _stage_position_deletes(
             }
         )
     return delete_entries, sum(f.row_count for f in staged)
+
+
+def _stage_row_deletes(
+    coords: DataFrame, loc: str, meta: dict, snap: dict, snapshot_id: int
+) -> tuple[list[dict], int]:
+    """Stage the ``(file_path, pos)`` coordinates of deleted rows in the
+    table's delete form: v3 deletion vectors (Puffin blobs that union the
+    file's prior vector), or v2 position-delete parquet files,
+    range-partitioned so each file is sorted by (file_path, pos) and
+    stamped with the reserved field ids, as the spec requires (AQE
+    coalesces the tiny ones). Returns (delete manifest entries, rows
+    deleted)."""
+    if int(meta.get("format-version", 1)) >= 3:
+        return _stage_deletion_vectors(
+            coords, loc, snapshot_id, _prior_dv_map(meta, snap)
+        )
+    ordered = (
+        coords.repartitionByRange("file_path", "pos")
+        .sortWithinPartitions("file_path", "pos")
+        .withMetadata("file_path", {"parquet.field.id": _POS_DELETE_PATH_FID})
+        .withMetadata("pos", {"parquet.field.id": _POS_DELETE_POS_FID})
+    )
+    return _stage_position_deletes(ordered, loc, snapshot_id)
 
 
 def _mor_scan(spark: SparkSession, loc: str, meta: dict, snap: dict):
@@ -2517,55 +2539,27 @@ def delete_where(spark: SparkSession, loc: str, predicate: str) -> int | None:
 
     Returns the new snapshot id, or None when nothing matched (no empty
     commit)."""
-    import pyarrow.parquet as pq
-
     meta = load_metadata(loc)
     snap = _pick_snapshot(meta)
-    df, schema = _mor_scan(spark, loc, meta, snap)
+    df, _schema = _mor_scan(spark, loc, meta, snap)
     if df is None:
         return None
     now_ms = int(time.time() * 1000)
     snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    if int(meta.get("format-version", 1)) >= 3:
-        # v3: position deletes MUST be deletion vectors (puffin blobs).
-        # Single consumer, single pass — no persist needed.
-        matched = df.filter(predicate).select(
-            F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
+    coords = df.filter(predicate).select(
+        F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
+    )
+    # v2: repartitionByRange SAMPLES its input before shuffling, so
+    # unpersisted coordinates would run the MoR scan twice (range bounds,
+    # then the staging write) — persist the DELETE working set, tiny next
+    # to the table (guide §5). v3 deletion vectors read it once.
+    fmt3 = int(meta.get("format-version", 1)) >= 3
+    with nullcontext(coords) if fmt3 else persisted(coords) as coords:
+        delete_entries, total = _stage_row_deletes(
+            coords, loc, meta, snap, snapshot_id
         )
-        delete_entries, total = _stage_deletion_vectors(
-            spark, matched, loc, snapshot_id, _prior_dv_map(meta, snap)
-        )
-    else:
-        # repartitionByRange SAMPLES its input before shuffling, so an
-        # unpersisted coordinate relation would run the MoR scan twice
-        # (once for range bounds, once for the staging write). Persist
-        # the matched coordinates — the DELETE working set, tiny next
-        # to the table — for the two passes (guide §5; local lifecycle,
-        # both materialize before return).
-        coords = df.filter(predicate).select(
-            F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
-        ).persist()
-        try:
-            matched = (
-                coords
-                # range-partition so each delete FILE is sorted by
-                # (file_path, pos) as the spec requires; AQE coalesces
-                # the tiny ones
-                .repartitionByRange("file_path", "pos")
-                .sortWithinPartitions("file_path", "pos")
-                .withMetadata("file_path",
-                              {"parquet.field.id": _POS_DELETE_PATH_FID})
-                .withMetadata("pos",
-                              {"parquet.field.id": _POS_DELETE_POS_FID})
-            )
-            delete_entries, total = _stage_position_deletes(
-                matched, loc, snapshot_id
-            )
-        finally:
-            coords.unpersist()
     if not delete_entries:
         return None
-
     return _commit_row_delta(
         loc, meta, snap, snapshot_id, now_ms,
         delete_entries, total, [], "delete",
@@ -2596,53 +2590,8 @@ def update_where(
     if df is None:
         return None
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    # matched feeds TWO actions (the DV/position-delete staging and the
-    # rewritten-copy staging); persisting the matched subset runs the
-    # MoR scan once instead of twice — and at scale it is the SMALL
-    # side (only rows being rewritten), far cheaper to hold than two
-    # full scans of every live file (guide §5: reuse-justified persist).
-    # Local lifecycle (try/finally): both consumers materialize before
-    # return, and DML runs outside registered queries too, where the
-    # query-boundary scoped registry would leak the blocks.
-    matched = df.filter(pred).persist()
-    try:
-        return _update_where_inner(
-            spark, loc, assignments, meta, snap, schema, matched
-        )
-    finally:
-        matched.unpersist()
-
-
-def _update_where_inner(
-    spark, loc, assignments, meta, snap, schema, matched
-) -> int | None:
     now_ms = int(time.time() * 1000)
     snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    fmt3 = int(meta.get("format-version", 1)) >= 3
-
-    if fmt3:
-        coords = matched.select(
-            F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
-        )
-        stage_deletes = lambda: _stage_deletion_vectors(  # noqa: E731
-            spark, coords, loc, snapshot_id, _prior_dv_map(meta, snap)
-        )
-    else:
-        coords = (
-            matched.select(
-                F.col("__path").alias("file_path"),
-                F.col("__pos").alias("pos"),
-            )
-            .repartitionByRange("file_path", "pos")
-            .sortWithinPartitions("file_path", "pos")
-            .withMetadata("file_path",
-                          {"parquet.field.id": _POS_DELETE_PATH_FID})
-            .withMetadata("pos", {"parquet.field.id": _POS_DELETE_POS_FID})
-        )
-        stage_deletes = lambda: _stage_position_deletes(  # noqa: E731
-            coords, loc, snapshot_id
-        )
-
     out_cols = [
         (
             F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
@@ -2652,7 +2601,7 @@ def _update_where_inner(
         for f in schema.fields
     ]
     stage_schema = schema
-    if fmt3:
+    if int(meta.get("format-version", 1)) >= 3:
         # v3 row lineage preservation (spec §Row Lineage): the rewritten
         # copies MATERIALIZE their original _row_id (inherited or already
         # materialized) and this commit's sequence number — computed from
@@ -2671,20 +2620,27 @@ def _update_where_inner(
                T.StructField("_last_updated_sequence_number",
                              T.LongType(), True)]
         )
-    updated = matched.select(*out_cols)
-    # the delete-coordinate staging and the rewritten-copy staging are
-    # INDEPENDENT jobs over the persisted matched subset — overlap them
-    # (guide §2.6). When nothing matched, BOTH stage zero rows (empty
-    # parts are unlinked, nothing reaches data/), so the no-commit exit
-    # below leaves no orphans.
-    (delete_entries, total), data_entries = run_concurrently(
-        stage_deletes,
-        lambda: _stage_data_entries(
-            updated, loc, stage_schema, _spec_entries(meta), snapshot_id,
-            ice_fields=meta["schema"]["fields"],
-        ),
-        cleanup=[_unlink_staged_entries, _unlink_staged_entries],
-    )
+    # matched feeds TWO actions (the delete staging and the rewritten-copy
+    # staging); persisted, the MoR scan runs once instead of twice — and
+    # at scale it is the SMALL side (only rows being rewritten), far
+    # cheaper to hold than two full scans (guide §5)
+    with persisted(df.filter(pred)) as matched:
+        coords = matched.select(
+            F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
+        )
+        updated = matched.select(*out_cols)
+        # the two stagings are INDEPENDENT jobs — overlap them (guide
+        # §2.6). When nothing matched, BOTH stage zero rows (empty parts
+        # are unlinked, nothing reaches data/), so the no-commit exit
+        # below leaves no orphans.
+        (delete_entries, total), data_entries = lakecore.run_concurrently(
+            lambda: _stage_row_deletes(coords, loc, meta, snap, snapshot_id),
+            lambda: _stage_data_entries(
+                updated, loc, stage_schema, _spec_entries(meta), snapshot_id,
+                ice_fields=meta["schema"]["fields"],
+            ),
+            cleanup=_unlink_staged_entries,
+        )
     if not delete_entries:
         _unlink_staged_entries(data_entries)  # never orphan a staged file
         return None
@@ -2695,13 +2651,11 @@ def _update_where_inner(
 
 
 def _unlink_staged_entries(res):
-    """Cleanup callable for run_concurrently: unlink the staged files a
-    SUCCESSFUL thunk moved under the table's data/ when its sibling
-    failed — uncommitted staged files are unreferenced garbage (round-16
-    ADVICE: previously only the empty-delete early return unlinked, so
-    every failed DML orphaned its sibling's files). Accepts either an
-    entry list or the (entries, total) pair the delete-staging thunks
-    return."""
+    """Cleanup for :func:`lakecore.run_concurrently`: unlink the files
+    a SUCCESSFUL staging thunk moved under the table's data/ when its
+    sibling failed — uncommitted staged files are unreferenced garbage.
+    Accepts either an entry list or the (entries, total) pair the
+    delete-staging thunks return."""
     entries = res[0] if isinstance(res, tuple) else res
     lakecore.unlink_quietly(e["data_file"]["file_path"] for e in entries)
 
@@ -2786,13 +2740,13 @@ def merge_upsert(
     # sequential shape already scanned the source twice, so the overlap
     # changes wall time, not work. An empty source stages zero rows on
     # both sides; the no-commit exit cleans any staged stragglers.
-    (delete_entries, total), data_entries = run_concurrently(
+    (delete_entries, total), data_entries = lakecore.run_concurrently(
         _stage_eq,
         lambda: _stage_data_entries(
             src, loc, schema, _spec_entries(meta), snapshot_id,
             ice_fields=meta["schema"]["fields"],
         ),
-        cleanup=[_unlink_staged_entries, _unlink_staged_entries],
+        cleanup=_unlink_staged_entries,
     )
     if not delete_entries:
         _unlink_staged_entries(data_entries)

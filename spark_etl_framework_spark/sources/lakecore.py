@@ -4,16 +4,17 @@
 Both formats are jar-free and both need the same storage-layer moves:
 an exclusive create for the commit file (optimistic concurrency on a
 filesystem), a distributed parquet staging write whose files land under
-the table root with fresh names, footer min/max/null harvesting for
-data skipping, and the persisted range/Z-order layout rewrite behind
-OPTIMIZE / ``rewrite_data_files``. The read half is shared too: one
-broadcast per-file map joined on the scan's ``__file_name``, the
-column-default substitution it carries, pooled footer probes, and the
-subtraction of deleted row positions. Everything here takes plain
-arguments and returns plain records; each format keeps only its own
-encoding (Delta ``add``/``cdc`` actions, stats JSON and deletion-vector
-descriptors; Iceberg manifest entries, Appendix-D bound bytes, Puffin
-blobs and sequence numbers).
+the table root with fresh names, the concurrent DML staging that
+unlinks a successful thunk's files when its sibling fails, footer
+min/max/null harvesting for data skipping, and the persisted
+range/Z-order layout rewrite behind OPTIMIZE / ``rewrite_data_files``.
+The read half is shared too: one broadcast per-file map joined on the
+scan's ``__file_name``, the column-default substitution it carries,
+pooled footer probes, and the subtraction of deleted row positions.
+Everything here takes plain arguments and returns plain records; each
+format keeps only its own encoding (Delta ``add``/``cdc`` actions, stats
+JSON and deletion-vector descriptors; Iceberg manifest entries,
+Appendix-D bound bytes, Puffin blobs and sequence numbers).
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import re
 import shutil
 import tempfile
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, NamedTuple
 from urllib.parse import unquote
@@ -31,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..caching import persisted
 from ..localrel import local_relation
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -43,6 +46,38 @@ def unlink_quietly(paths) -> None:
             os.unlink(p)
         except OSError:
             pass
+
+
+def run_concurrently(*thunks, cleanup: Callable | None = None) -> list:
+    """Run independent zero-arg Spark actions from driver threads and
+    return their results in thunk order; one thunk runs inline.
+
+    A DML commit stages several independent relations (change-data
+    files, rewritten data files, delete coordinates). Submitted from
+    several threads, FIFO scheduling lets the second job's tasks
+    back-fill executors freed by the first job's stragglers.
+
+    Every thunk finishes before anything is raised, so no job outlives
+    the caller's persist lifecycle. If any thunk raised, ``cleanup`` is
+    called with the result of each thunk that SUCCEEDED — its staged
+    files will never be committed — and then the first error is
+    re-raised. Cleanup errors are swallowed: the original failure is the
+    story."""
+    if len(thunks) == 1:
+        return [thunks[0]()]
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if not errors:
+        return [f.result() for f in futures]
+    if cleanup is not None:
+        for f in futures:
+            if f.exception() is None:
+                try:
+                    cleanup(f.result())
+                except Exception:  # noqa: BLE001 - best-effort
+                    pass
+    raise errors[0]
 
 
 def publish_exclusive(
@@ -392,17 +427,14 @@ def layout_rewrite(
     write — so the working set is persisted for the duration of the
     ``with`` block: the selected files are read once and the extra
     passes hit cached blocks. Unpersisted on exit."""
-    persisted = df.persist()
-    try:
-        laid = persisted
+    with persisted(df) as held:
+        laid = held
         key = [*prefix_cols, *cols]
         if zorder:
-            laid = laid.withColumn("__z", zorder_key(persisted, cols))
+            laid = laid.withColumn("__z", zorder_key(held, cols))
             key = [*prefix_cols, "__z"]
         laid = laid.repartitionByRange(n_out, *key).sortWithinPartitions(*key)
         yield laid.drop("__z") if zorder else laid
-    finally:
-        persisted.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -344,6 +344,36 @@ def test_undatable_files_still_footer_checked(spark, loc, monkeypatch):
     assert calls["n"] >= 1  # the pre-DDL file had to be footer-verified
 
 
+@pytest.mark.parametrize("checkpoint", ["none", "before", "after"])
+def test_row_tracking_backfill_keeps_default_vintage(spark, loc, checkpoint):
+    """enable_row_tracking restates every live file with the enabling
+    version as its defaultRowCommitVersion; the bytes keep their own
+    vintage, so rows written before an ADD COLUMN DEFAULT still read
+    EXISTS_DEFAULT and later rows keep their stored values, genuine
+    nulls included — with no checkpoint, or one (plus log cleanup)
+    before or after the enablement."""
+    _write(spark, loc, [(0, "a")], mode="overwrite")            # v0
+    dl.add_column(loc, "grade", "int", default=5)               # v1
+    dl.write_delta(
+        spark.createDataFrame(
+            [(1, "b", None), (2, "c", 7)], "id int, s string, grade int"
+        ).coalesce(1), loc,
+    )                                                           # v2
+    if checkpoint == "before":
+        dl.write_checkpoint_v2(loc)
+        dl.clean_log(loc, expire_checkpoints=True)
+    v_en = dl.enable_row_tracking(spark, loc)                   # v3
+    if checkpoint == "after":
+        dl.write_checkpoint_v2(loc)
+        dl.clean_log(loc, expire_checkpoints=True)
+    want = {0: 5, 1: None, 2: 7}
+    got = {r.id: r.grade for r in dl.read_delta(spark, loc).collect()}
+    assert got == want
+    rows = dl.read_delta_with_row_ids(spark, loc).collect()
+    assert {r.id: r.grade for r in rows} == want
+    assert {r._row_commit_version for r in rows} == {v_en}
+
+
 def test_dv_restatement_carries_vintage(spark, loc, monkeypatch):
     """A DV delete re-adds the SAME path (same bytes) — the file's data
     vintage carries through the restatement, so a stats-suppressed

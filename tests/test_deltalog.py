@@ -104,10 +104,20 @@ def test_concurrent_commit_loses_cleanly(spark, tbl):
         dl._publish_commit(tbl, 1, [{"commitInfo": {"timestamp": 1}}])
 
 
-def test_checkpoint_written_consumed_and_bounds_replay(spark, tbl):
+@pytest.mark.parametrize("tenth", ["append", "optimize"])
+def test_checkpoint_written_consumed_and_bounds_replay(spark, tbl, tenth):
+    """Whichever commit lands version CHECKPOINT_INTERVAL — an append
+    or an OPTIMIZE — writes the checkpoint."""
     df = _mk(spark, [(1, "a", 0)]).coalesce(1)
-    for i in range(dl.CHECKPOINT_INTERVAL + 2):
+    for i in range(dl.CHECKPOINT_INTERVAL):
         dl.write_delta(df, tbl, mode="append", partition_by=["grp"])
+    if tenth == "optimize":
+        done = dl.optimize_compact(spark, tbl)
+        assert done["version"] == dl.CHECKPOINT_INTERVAL
+    else:
+        dl.write_delta(df, tbl, mode="append", partition_by=["grp"])
+    dl.write_delta(df, tbl, mode="append", partition_by=["grp"])
+    rows = dl.CHECKPOINT_INTERVAL + (2 if tenth == "append" else 1)
     cp = os.path.join(
         tbl, "_delta_log", f"{dl.CHECKPOINT_INTERVAL:020d}.checkpoint.parquet"
     )
@@ -118,7 +128,7 @@ def test_checkpoint_written_consumed_and_bounds_replay(spark, tbl):
     # proving the snapshot really comes from the checkpoint parquet
     assert dl.clean_log(tbl) == dl.CHECKPOINT_INTERVAL
     out = dl.read_delta(spark, tbl)
-    assert out.count() == dl.CHECKPOINT_INTERVAL + 2
+    assert out.count() == rows
     assert dict(out.dtypes)["grp"] == "int"  # metaData survives via checkpoint
     snap = dl.snapshot(tbl)
     assert snap.partition_columns == ["grp"]

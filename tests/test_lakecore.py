@@ -225,6 +225,8 @@ def test_formats_carry_no_private_copy_of_the_core(module):
         "decode_dv_blob(",
         "ThreadPoolExecutor(",
         "DV_BROADCAST_MAX_POSITIONS =",
+        ".persist(",
+        "from ..parallel",
     ):
         assert needle not in src, f"{module} has its own {needle!r}"
 
@@ -287,47 +289,130 @@ def test_dv_delete_sibling_failure_unlinks_only_new_dvs(spark, tmp_path, monkeyp
     assert sorted(dl.read_delta(spark, loc, version_as_of=v).collect()) == rows
 
 
-def test_delta_merge_lost_race_leaves_no_orphans(spark, tmp_path, monkeypatch):
-    loc = str(tmp_path / "t")
+def _delta_table(spark, loc):
+    """Two small files, one with a deletion vector: every Delta DML,
+    OPTIMIZE and the DV purge has work to do."""
     dl.write_delta(
         spark.range(20).selectExpr("id", "id * 10 as v").coalesce(2), loc
     )
-    src = spark.range(15, 25).selectExpr("id", "id * 100 as v")
+    dl.delete_where(spark, loc, "id < 3", use_dvs=True)
+
+
+def _source(spark):
+    return spark.range(15, 25).selectExpr("id", "id * 100 as v")
+
+
+DELTA_DML = {
+    "delete_cow": lambda spark, loc: dl.delete_where(spark, loc, "id % 3 = 0"),
+    "delete_dv": lambda spark, loc: dl.delete_where(
+        spark, loc, "id % 3 = 0", use_dvs=True
+    ),
+    "update": lambda spark, loc: dl.update_where(
+        spark, loc, "id % 3 = 0", {"v": "v + 1"}
+    ),
+    "merge": lambda spark, loc: dl.merge_upsert(spark, loc, _source(spark), ["id"]),
+    "optimize": lambda spark, loc: dl.optimize_compact(spark, loc),
+    "purge": lambda spark, loc: dl.purge_deletion_vectors(spark, loc),
+}
+
+ICEBERG_DML = {
+    "delete": lambda spark, loc: ice.delete_where(spark, loc, "id % 3 = 0"),
+    "update": lambda spark, loc: ice.update_where(
+        spark, loc, "id % 3 = 0", {"v": "v + 1"}
+    ),
+    "merge": lambda spark, loc: ice.merge_upsert(spark, loc, _source(spark), ["id"]),
+}
+
+INJECTED = RuntimeError("injected staging failure")
+
+
+def _fail_staging(*_a, **_k):
+    raise INJECTED
+
+
+# lost_race: another writer lands the next version between staging and
+# publish. sibling: one of two concurrent staging thunks fails after the
+# other staged its files (the DV DELETE's sibling case is
+# test_dv_delete_sibling_failure_unlinks_only_new_dvs).
+@pytest.mark.parametrize(
+    "failure,op",
+    [("lost_race", op) for op in DELTA_DML]
+    + [("sibling", op) for op in ("delete_cow", "update", "merge")],
+)
+def test_delta_dml_failure_leaves_no_orphans(
+    spark, tmp_path, monkeypatch, failure, op
+):
+    """A failed DML, OPTIMIZE or DV purge leaves no staged file behind,
+    the table reads as before at its prior version, and the caller sees
+    the failure itself, not a cleanup error."""
+    loc = str(tmp_path / "t")
+    _delta_table(spark, loc)
+    v = dl.latest_version(loc)
+    rows = sorted(dl.read_delta(spark, loc).collect())
     tree = _tree(loc)
-    rival = dl._commit_path(loc, dl.latest_version(loc) + 1)
-    real = dl._publish_commit
+    rival = set()
+    if failure == "lost_race":
+        rival = {os.path.relpath(dl._commit_path(loc, v + 1), loc)}
+        real = dl._publish_commit
 
-    def racing(path, version, actions, staged=()):
-        # another writer lands this version between staging and publish
-        with open(dl._commit_path(path, version), "w") as fh:
-            fh.write(json.dumps({"commitInfo": {"timestamp": 1}}) + "\n")
-        return real(path, version, actions, staged)
+        def racing(path, version, actions, staged=()):
+            with open(dl._commit_path(path, version), "w") as fh:
+                fh.write(json.dumps({"commitInfo": {"timestamp": 1}}) + "\n")
+            return real(path, version, actions, staged)
 
-    monkeypatch.setattr(dl, "_publish_commit", racing)
-    with pytest.raises(dl.DeltaConcurrentModification):
-        dl.merge_upsert(spark, loc, src, ["id"])
-    assert _tree(loc) - {os.path.relpath(rival, loc)} == tree
+        monkeypatch.setattr(dl, "_publish_commit", racing)
+    else:
+        monkeypatch.setattr(dl, "_stage_cdc", _fail_staging)
+    with pytest.raises(Exception) as err:
+        DELTA_DML[op](spark, loc)
+    monkeypatch.undo()
+    if failure == "lost_race":
+        assert isinstance(err.value, dl.DeltaConcurrentModification)
+        assert f"version {v + 1} of" in str(err.value)
+    else:
+        assert err.value is INJECTED
+    assert _tree(loc) - rival == tree
+    assert sorted(dl.read_delta(spark, loc, version_as_of=v).collect()) == rows
 
 
-def test_iceberg_merge_lost_race_leaves_no_orphans(spark, tmp_path):
+@pytest.mark.parametrize(
+    "failure,op",
+    [("lost_race", op) for op in ICEBERG_DML]
+    + [("sibling", op) for op in ("update", "merge")],
+)
+def test_iceberg_dml_failure_leaves_no_orphans(
+    spark, tmp_path, monkeypatch, failure, op
+):
+    """The Iceberg twin: a failed row delta leaves no data, delete,
+    manifest or manifest-list file behind and the table reads as
+    before."""
     import shutil
 
     loc = str(tmp_path / "t")
     ice.write_iceberg(
         spark.range(20).selectExpr("id", "id * 10 as v").coalesce(2), loc
     )
-    meta_dir = os.path.join(loc, "metadata")
-    cur = ice.current_version(loc)
-    # another writer already published the next metadata version
-    shutil.copy(
-        os.path.join(meta_dir, f"v{cur}.metadata.json"),
-        os.path.join(meta_dir, f"v{cur + 1}.metadata.json"),
-    )
+    rows = sorted(ice.read_iceberg(spark, loc).collect())
+    if failure == "lost_race":
+        # another writer already published the next metadata version
+        meta_dir = os.path.join(loc, "metadata")
+        cur = ice.current_version(loc)
+        shutil.copy(
+            os.path.join(meta_dir, f"v{cur}.metadata.json"),
+            os.path.join(meta_dir, f"v{cur + 1}.metadata.json"),
+        )
+    else:
+        monkeypatch.setattr(ice, "_stage_data_entries", _fail_staging)
     tree = _tree(loc)
-    src = spark.range(15, 25).selectExpr("id", "id * 100 as v")
-    with pytest.raises(ice.IcebergConcurrentModification):
-        ice.merge_upsert(spark, loc, src, ["id"])
+    with pytest.raises(Exception) as err:
+        ICEBERG_DML[op](spark, loc)
+    monkeypatch.undo()
+    if failure == "lost_race":
+        assert isinstance(err.value, ice.IcebergConcurrentModification)
+    else:
+        assert err.value is INJECTED
     assert _tree(loc) == tree
+    assert sorted(ice.read_iceberg(spark, loc).collect()) == rows
 
 
 def test_iceberg_write_lost_race_leaves_no_orphans(spark, tmp_path):

@@ -83,13 +83,12 @@ def test_zip_with_index_global_and_grouped(spark, sf_dir):
 
 
 def test_run_concurrently_cleanup_on_sibling_failure(tmp_path):
-    """Round-16 ADVICE pin: when one thunk raises, siblings that
-    succeeded have their cleanup invoked with their result (staged files
-    unlinked), the original error propagates, and cleanup never runs on
-    the success path."""
+    """When one thunk raises, the cleanup runs on the result of every
+    thunk that succeeded (its staged files unlinked), the original error
+    propagates, and cleanup never runs on the success path."""
     import pytest
 
-    from spark_etl_framework_spark.parallel import run_concurrently
+    from spark_etl_framework_spark.sources.lakecore import run_concurrently
 
     staged = tmp_path / "staged.parquet"
 
@@ -107,17 +106,10 @@ def test_run_concurrently_cleanup_on_sibling_failure(tmp_path):
             os.unlink(p)
 
     with pytest.raises(RuntimeError, match="sibling failed"):
-        run_concurrently(ok, boom, cleanup=[clean, None])
+        run_concurrently(ok, boom, cleanup=clean)
     assert not staged.exists(), "failed DML must not orphan staged files"
 
     # success path: cleanup untouched
-    out = run_concurrently(ok, lambda: "fine", cleanup=[clean, None])
-    assert out == [[str(staged)], "fine"]
+    out = run_concurrently(ok, lambda: [], cleanup=clean)
+    assert out == [[str(staged)], []]
     assert staged.exists()
-
-    # a cleanup list shorter than the thunks is refused before any thunk
-    # runs — not an IndexError during cleanup that hides the real failure
-    staged.unlink()
-    with pytest.raises(ValueError, match="cleanup"):
-        run_concurrently(ok, boom, cleanup=[clean])
-    assert not staged.exists(), "no thunk may run on a length mismatch"

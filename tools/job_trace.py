@@ -1,8 +1,12 @@
 #!/usr/bin/env python
-"""Trace every Spark job one registered query launches: job id, wall
-time, and the call site that triggered it (from the Java status API).
+"""Count and trace the Spark jobs of registered queries: each query runs
+twice (warm), and the second run reports its job count and wall time,
+then every job it launched with its stage count and the call site that
+triggered it (from the Java status API). Job count is the deterministic
+proxy for the per-action latency floor (guide §1.2: remove
+actions/passes before tuning them).
 
-Usage: python tools/job_trace.py <query> [--sf DIR]
+Usage: python tools/job_trace.py <query> [<query> ...] [--sf DIR]
 """
 
 from __future__ import annotations
@@ -21,7 +25,7 @@ from spark_etl_framework_spark.session import get_session  # noqa: E402
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("query")
+    ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
@@ -31,39 +35,37 @@ def main() -> None:
     for name in TABLES:
         load_table(spark, args.sf, name).count()
 
-    fn = QUERIES[args.query]
-    fn(spark, args.sf).count()  # warm
     sc = spark.sparkContext
     tracker = sc._jsc.sc().statusTracker()
-    # the timed run gets its own job group, so jobs from anything else in
-    # the session cannot enter the trace
-    group = f"job_trace-{args.query}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, f"job_trace {args.query}")
-    try:
-        t0 = time.time()
-        fn(spark, args.sf).count()
-        wall = time.time() - t0
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    ids = sorted(tracker.getJobIdsForGroup(group))
-    print(f"# {args.query}: {len(ids)} jobs, {wall:.3f}s warm")
-    for j in ids:
-        info = tracker.getJobInfo(j)
-        if info is None or not info.isDefined():
-            print(f"job {j}: <gone>")
-            continue
-        ji = info.get()
-        sids = list(ji.stageIds())
-        # duration + name from the first stage
-        desc = ""
-        secs = 0.0
-        for sid in sids:
-            si = tracker.getStageInfo(sid)
-            if si is not None and si.isDefined():
-                s = si.get()
-                if not desc:
-                    desc = s.name()
-        print(f"job {j}: stages={len(sids)} {desc}")
+    for q in args.queries:
+        fn = QUERIES[q]
+        fn(spark, args.sf).count()  # warm
+        # the timed run gets its own job group, so jobs from anything
+        # else in the session cannot enter the trace
+        group = f"job_trace-{q}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, f"job_trace {q}")
+        try:
+            t0 = time.time()
+            fn(spark, args.sf).count()
+            wall = time.time() - t0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        ids = sorted(tracker.getJobIdsForGroup(group))
+        print(f"{q}: {len(ids)} jobs, {wall:.3f}s warm")
+        for j in ids:
+            info = tracker.getJobInfo(j)
+            if info is None or not info.isDefined():
+                print(f"  job {j}: <gone>")
+                continue
+            sids = list(info.get().stageIds())
+            # the job's name is its first stage's call site
+            desc = ""
+            for sid in sids:
+                si = tracker.getStageInfo(sid)
+                if si is not None and si.isDefined():
+                    desc = si.get().name()
+                    break
+            print(f"  job {j}: stages={len(sids)} {desc}")
 
 
 if __name__ == "__main__":
