@@ -4319,6 +4319,10 @@ def shallow_clone(
             a["baseRowId"] = f.base_row_id
         if f.default_row_commit_version is not None:
             a["defaultRowCommitVersion"] = f.default_row_commit_version
+            # the drcv counts SOURCE versions, which would date these
+            # bytes against the clone's defaults arrival at its own
+            # version 0: mark them undated, so defaults footer-verify
+            a["tags"] = {_VINTAGE_TAG: ""}
         dv = f.deletion_vector
         if dv:
             st = dv.get("storageType")
@@ -4545,8 +4549,10 @@ def sync_uniform_iceberg(path: str, version: int | None = None) -> int:
     before round 12/13, a million-file table paid a full O(live)
     mirror on every small append or delete. A schema/partition change
     (metaData action) or a cleaned log falls back to the
-    always-correct full-state mirror. Returns the iceberg snapshot
-    id."""
+    always-correct full-state mirror. This function holds the Delta
+    side (the change range, the add stats as min/max values);
+    :func:`iceberg.register_files` writes the manifests and publishes.
+    Returns the iceberg snapshot id."""
     from . import iceberg as ice
 
     snap = snapshot(path, version)
@@ -4555,294 +4561,70 @@ def sync_uniform_iceberg(path: str, version: int | None = None) -> int:
             "uniform sync: live deletion vectors are not expressible in "
             "iceberg metadata — purge_deletion_vectors first"
         )
-    schema = snap.schema
-    types_of = {f.name: f.dataType for f in schema.fields}
-    ice_schema = ice.spark_to_iceberg_schema(schema)
-    field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
-    ice_types = {f["name"]: f["type"] for f in ice_schema["fields"]}
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-
-    def _bounds(stats_json):
-        if not stats_json:
-            return None, None
-        try:
-            d = json.loads(stats_json)
-        except ValueError:
-            return None, None
-        lower, upper = [], []
-        for side, out in ((d.get("minValues") or {}, lower),
-                          (d.get("maxValues") or {}, upper)):
-            for name, v in side.items():
-                ty = ice_types.get(name)
-                # only exactly-encodable NUMERIC types ride over: delta
-                # string max-stats may be writer-truncated, which would
-                # UNDER-bound an iceberg upper bound and prune wrongly;
-                # skipping a bound is an optimization lost, never a
-                # correctness loss
-                if v is None or ty not in ("int", "long", "float", "double"):
-                    continue
-                raw = ice._encode_bound(v, ty)
-                if raw is not None:
-                    out.append({"key": field_ids[name], "value": raw})
-        return (lower or None), (upper or None)
-
-    # ---- incremental eligibility: an existing mirror whose last synced
+    # incremental eligibility: an existing mirror whose last synced
     # delta version is behind us by a range of pure add/remove commits
     # (schema/partition changes and cleaned logs fall back to the
     # always-correct full-state mirror)
-    v = ice.current_version(path)
-    prev_meta = prev_ice_snap = None
-    files_to_mirror = snap.files
-    incremental = False
-    removed_paths: set = set()
-    if v > 0:
-        prev_meta = ice.load_metadata(path)
-        cur_id = prev_meta.get("current-snapshot-id")
-        prev_ice_snap = next(
-            (s for s in prev_meta.get("snapshots", [])
-             if s["snapshot-id"] == cur_id),
+    files_to_mirror, removed = snap.files, None
+    if ice.current_version(path) > 0:
+        meta = ice.load_metadata(path)
+        cur = next(
+            (s for s in meta.get("snapshots", [])
+             if s["snapshot-id"] == meta.get("current-snapshot-id")),
             None,
         )
-        prev_dv = (
-            int((prev_ice_snap.get("summary") or {}).get("delta-version", -1))
-            if prev_ice_snap
-            else -1
-        )
-        if prev_ice_snap is not None and 0 <= prev_dv < snap.version:
+        prev_dv = int(((cur or {}).get("summary") or {}).get("delta-version", -1))
+        if cur is not None and 0 <= prev_dv < snap.version:
             changes = _delta_change_range(path, prev_dv, snap.version)
             if changes is not None:
-                added, removed_paths = changes
-                files_to_mirror = [
-                    f for f in snap.files if f.path in added
-                ]
-                incremental = True
+                added, gone = changes
+                files_to_mirror = [f for f in snap.files if f.path in added]
+                removed = {os.path.join(path, p) for p in gone}
 
     import pyarrow.parquet as pq
 
-    entries = []
+    # only exactly-encodable NUMERIC bounds ride over: delta string
+    # max-stats may be writer-truncated, which would UNDER-bound an
+    # iceberg upper bound and prune wrongly; skipping a bound is an
+    # optimization lost, never a correctness loss
+    numeric = {
+        f.name for f in snap.schema.fields
+        if isinstance(
+            f.dataType, (T.IntegerType, T.LongType, T.FloatType, T.DoubleType)
+        )
+    }
+    files = []
     for f in files_to_mirror:
+        try:
+            stats = json.loads(f.stats) if f.stats else {}
+        except ValueError:
+            stats = {}
         abs_path = os.path.join(path, f.path)
-        n_rows = None
-        if f.stats:
-            try:
-                n_rows = json.loads(f.stats).get("numRecords")
-            except ValueError:
-                n_rows = None
+        n_rows = stats.get("numRecords")
         if n_rows is None:
             n_rows = pq.ParquetFile(abs_path).metadata.num_rows
-        lower, upper = _bounds(f.stats)
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "file_path": abs_path,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        c: ice._partition_to_avro(
-                            snap.pv_get(f.partition_values, c), types_of[c]
-                        )
-                        for c in snap.partition_columns
-                    },
-                    "record_count": int(n_rows),
-                    "file_size_in_bytes": f.size,
-                    "block_size_in_bytes": 64 * 1024 * 1024,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                },
-            }
-        )
-
-    spec_entries = [
-        {"source": c, "transform": "identity", "name": c, "param": None,
-         "result_dt": types_of[c]}
-        for c in snap.partition_columns
-    ]
-    pfields = ice._partition_avro_fields(schema, spec_entries)
-    partition_spec = [
-        {"name": c, "transform": "identity", "source-id": field_ids[c],
-         "field-id": 1000 + i}
-        for i, c in enumerate(snap.partition_columns)
-    ]
-    os.makedirs(ice._meta_dir(path), exist_ok=True)
-    new_rows = sum(e["data_file"]["record_count"] for e in entries)
-    list_entries: list[dict] = []
-    removed_files = removed_rows = 0
-    if incremental:
-        # byte-reuse: the previous snapshot's manifests carry over
-        # verbatim (their avro files are never re-read or re-written);
-        # only the appended files get a new manifest. DELETE/rewrite
-        # commits (round 13): ONLY the manifests that actually name a
-        # removed file are rewritten without those entries — O(affected
-        # manifests + appended files), never an O(live) re-mirror
-        _ps, _pm, prev_list = ice.read_ocf(prev_ice_snap["manifest-list"])
-        if not removed_paths:
-            list_entries = prev_list
-        else:
-            removed_abs = {os.path.join(path, p) for p in removed_paths}
-            for mf in prev_list:
-                _es, _em, m_entries = ice.read_ocf(mf["manifest_path"])
-                live = [e for e in m_entries if e["status"] != 2]
-                kept = [
-                    e for e in live
-                    if e["data_file"]["file_path"] not in removed_abs
-                ]
-                if len(kept) == len(live):
-                    list_entries.append(mf)  # untouched: reuse verbatim
-                    continue
-                dropped = [
-                    e for e in live
-                    if e["data_file"]["file_path"] in removed_abs
-                ]
-                removed_files += len(dropped)
-                removed_rows += sum(
-                    int(e["data_file"]["record_count"]) for e in dropped
-                )
-                if not kept:
-                    continue  # fully emptied: drops from the list
-                rewritten = [dict(e, status=0) for e in kept]  # EXISTING
-                new_mpath = os.path.join(
-                    ice._meta_dir(path), f"{uuid.uuid4().hex}-m0.avro"
-                )
-                ice.write_ocf(
-                    new_mpath,
-                    ice._manifest_entry_schema(pfields),
-                    rewritten,
-                    metadata={
-                        "schema": json.dumps(ice_schema),
-                        "partition-spec": json.dumps(partition_spec),
-                        "partition-spec-id": "0",
-                        "format-version": "1",
-                        "content": "data",
-                    },
-                )
-                mf2 = dict(mf)
-                mf2["manifest_path"] = new_mpath
-                mf2["manifest_length"] = os.path.getsize(new_mpath)
-                mf2["added_data_files_count"] = 0
-                mf2["existing_data_files_count"] = len(rewritten)
-                mf2["deleted_data_files_count"] = len(dropped)
-                mf2["added_rows_count"] = 0
-                mf2["existing_rows_count"] = sum(
-                    int(e["data_file"]["record_count"]) for e in rewritten
-                )
-                mf2["deleted_rows_count"] = sum(
-                    int(e["data_file"]["record_count"]) for e in dropped
-                )
-                list_entries.append(mf2)
-    if entries or not incremental:
-        manifest_path = os.path.join(
-            ice._meta_dir(path), f"{uuid.uuid4().hex}-m0.avro"
-        )
-        ice.write_ocf(
-            manifest_path,
-            ice._manifest_entry_schema(pfields),
-            entries,
-            metadata={
-                "schema": json.dumps(ice_schema),
-                "partition-spec": json.dumps(partition_spec),
-                "partition-spec-id": "0",
-                "format-version": "1",
-                "content": "data",
+        files.append({
+            "path": abs_path,
+            "partition": {
+                c: snap.pv_get(f.partition_values, c)
+                for c in snap.partition_columns
             },
-        )
-        list_entries.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": new_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    list_path = os.path.join(
-        ice._meta_dir(path), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
+            "record_count": n_rows,
+            "size": f.size,
+            "lower": {
+                k: v for k, v in (stats.get("minValues") or {}).items()
+                if k in numeric
+            },
+            "upper": {
+                k: v for k, v in (stats.get("maxValues") or {}).items()
+                if k in numeric
+            },
+        })
+    return ice.register_files(
+        path, snap.schema, snap.partition_columns, files, removed,
+        summary={"delta-version": str(snap.version)},
+        properties={"uniform-from": "delta"},
     )
-    ice.write_ocf(list_path, ice._MANIFEST_FILE_SCHEMA, list_entries,
-                  metadata={"format-version": "1"})
-    # totals accumulate incrementally from the previous summary; the
-    # full-state path recomputes them exactly
-    if incremental:
-        prev_sum = prev_ice_snap.get("summary") or {}
-        total_files = (
-            int(prev_sum.get("total-data-files", 0))
-            + len(entries) - removed_files
-        )
-        total_rows = (
-            int(prev_sum.get("total-records", 0)) + new_rows - removed_rows
-        )
-    else:
-        total_files, total_rows = len(entries), new_rows
-    if incremental and not removed_files:
-        # pure appends ARE an iceberg append — consumable by
-        # read_iceberg_incremental like any append commit
-        op = "append"
-    elif incremental and not entries:
-        op = "delete"  # removals only
-    else:
-        op = "overwrite"
-    summary = {
-        "operation": op,
-        "delta-version": str(snap.version),
-        "added-data-files": str(len(entries)),
-        "added-records": str(new_rows),
-        "total-data-files": str(total_files),
-        "total-records": str(total_rows),
-    }
-    if removed_files:
-        summary["deleted-data-files"] = str(removed_files)
-        summary["deleted-records"] = str(removed_rows)
-    ice_snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": now_ms,
-        "summary": summary,
-        "manifest-list": list_path,
-        "schema-id": 0,
-    }
-    v = ice.current_version(path)
-    if v == 0:
-        meta = {
-            "format-version": 1,
-            "table-uuid": str(uuid.uuid4()),
-            "location": path,
-            "last-updated-ms": now_ms,
-            "last-column-id": len(schema.fields),
-            "schema": ice_schema,
-            "schemas": [ice_schema],
-            "current-schema-id": 0,
-            "partition-spec": partition_spec,
-            "default-spec-id": 0,
-            "properties": {"uniform-from": "delta"},
-            "current-snapshot-id": snapshot_id,
-            "snapshots": [ice_snapshot],
-            "snapshot-log": [
-                {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-            ],
-            "metadata-log": [],
-        }
-    else:
-        meta = dict(ice.load_metadata(path))
-        cur = meta.get("current-snapshot-id")
-        if cur is not None and cur != -1:
-            ice_snapshot["parent-snapshot-id"] = cur
-        meta["schema"] = ice_schema
-        meta["schemas"] = [ice_schema]
-        meta["last-column-id"] = len(schema.fields)
-        meta["partition-spec"] = partition_spec
-        meta["last-updated-ms"] = now_ms
-        meta["snapshots"] = list(meta.get("snapshots", [])) + [ice_snapshot]
-        meta["current-snapshot-id"] = snapshot_id
-        meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-        ]
-    ice._publish_metadata(path, v + 1, meta)
-    return snapshot_id
 
 
 def table_history(spark: SparkSession, path: str) -> DataFrame:

@@ -1037,25 +1037,50 @@ def _decode_bound(raw: bytes, ice_type: str):
     return None
 
 
+def _bound_records(vals: dict, field_ids: dict, ice_types: dict):
+    """The spec's key/value record list of Appendix-D bound bytes for a
+    ``{column: value}`` dict; None when no value encodes."""
+    out = []
+    for name, v in vals.items():
+        if v is None or isinstance(v, _dt.datetime):
+            continue  # timestamptz bounds: skip (tz pitfalls > value)
+        b = _encode_bound(v, ice_types.get(name))
+        if b is not None:
+            out.append({"key": field_ids[name], "value": b})
+    return out or None
+
+
 def _footer_bounds(md, field_ids: dict, ice_types: dict):
-    """(lower_bounds, upper_bounds) as the spec's key/value record lists
-    of Appendix-D bound bytes, from a parquet footer's statistics;
+    """(lower_bounds, upper_bounds) from a parquet footer's statistics;
     (None, None) for an unreadable footer (:func:`lakecore.read_footer`)."""
     if md is None:
         return None, None
     lows, highs, _nulls = lakecore.footer_ranges(md, field_ids)
+    return (
+        _bound_records(lows, field_ids, ice_types),
+        _bound_records(highs, field_ids, ice_types),
+    )
 
-    def _records(vals: dict):
-        out = []
-        for name, v in vals.items():
-            if isinstance(v, _dt.datetime):
-                continue  # timestamptz bounds: skip (tz pitfalls > value)
-            b = _encode_bound(v, ice_types[name])
-            if b is not None:
-                out.append({"key": field_ids[name], "value": b})
-        return out or None
 
-    return _records(lows), _records(highs)
+def _data_entry(
+    snapshot_id: int, path: str, partition: dict, record_count: int,
+    size: int, lower, upper,
+) -> dict:
+    """The ADDED manifest entry of the parquet data file at ``path``."""
+    return {
+        "status": 1,
+        "snapshot_id": snapshot_id,
+        "data_file": {
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": record_count,
+            "file_size_in_bytes": size,
+            "block_size_in_bytes": 64 * 1024 * 1024,
+            "lower_bounds": lower,
+            "upper_bounds": upper,
+        },
+    }
 
 
 def _stage_data_entries(
@@ -1122,35 +1147,25 @@ def _stage_data_entries(
     for c, fid in field_ids.items():
         if c in df.columns:
             df = df.withMetadata(c, {"parquet.field.id": int(fid)})
-    entries: list[dict] = []
     staged = lakecore.stage_parquet(
         df, loc, "data", lambda: f"{uuid.uuid4().hex}.parquet", stage_by
     )
-    for f in staged:
-        lower, upper = _footer_bounds(f.footer, field_ids, ice_types)
-        entries.append(
+    return [
+        _data_entry(
+            snapshot_id,
+            f.dst,
             {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "file_path": f.dst,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        e["name"]: _partition_to_avro(
-                            f.partition_values.get(e["name"]),
-                            result_dts[e["name"]],
-                        )
-                        for e in spec
-                    },
-                    "record_count": f.row_count,
-                    "file_size_in_bytes": os.path.getsize(f.dst),
-                    "block_size_in_bytes": 64 * 1024 * 1024,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                },
-            }
+                e["name"]: _partition_to_avro(
+                    f.partition_values.get(e["name"]), result_dts[e["name"]]
+                )
+                for e in spec
+            },
+            f.row_count,
+            os.path.getsize(f.dst),
+            *_footer_bounds(f.footer, field_ids, ice_types),
         )
-    return entries
+        for f in staged
+    ]
 
 
 def _register_sort_order(meta: dict, ice_schema: dict, cols: list[str]) -> int:
@@ -1254,11 +1269,10 @@ def write_iceberg(
                 "cherry-pick re-applies added manifests, an overwrite's "
                 "replaced set would be stale by publish time"
             )
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
+    snapshot_id = _new_snapshot_id()
 
     if v > 0:
-        meta = load_metadata(loc)
+        meta = load_metadata(loc, v)
         prev = [
             (e["name"], e["transform"]) for e in _spec_entries(meta)
         ]
@@ -1370,67 +1384,26 @@ def write_iceberg(
         ice_fields=meta["schema"]["fields"] if meta else None,
     )
 
-    fmt3 = bool(meta) and int(meta.get("format-version", 1)) >= 3
-    first_row_id = None
-    if fmt3:
+    if meta is None:
+        ice_schema = spark_to_iceberg_schema(schema)
+        field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
+        meta = _new_table_meta(loc, ice_schema, [
+            # source-id is the SOURCE COLUMN's schema field id (spec), not
+            # the position within the partition list
+            {"name": e["name"], "transform": e["transform"],
+             "source-id": field_ids[e["source"]], "field-id": 1000 + i}
+            for i, e in enumerate(spec_entries)
+        ], {})
+    else:
         meta = dict(meta)
-        first_row_id = _assign_first_row_ids(meta, entries)
+    first_row_id = _assign_first_row_ids(meta, entries)
+    if sort_by:
+        _register_sort_order(meta, meta["schema"], list(sort_by))
 
-    # ---- one manifest for this commit
-    os.makedirs(_meta_dir(loc), exist_ok=True)
-    pfields = _partition_avro_fields(schema, spec_entries)
-    manifest_path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
-    ice_schema = meta["schema"] if meta else spark_to_iceberg_schema(schema)
-    field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
-    partition_spec = [
-        # source-id is the SOURCE COLUMN's schema field id (spec), not
-        # the position within the partition list
-        {"name": e["name"], "transform": e["transform"],
-         "source-id": field_ids[e["source"]], "field-id": 1000 + i}
-        for i, e in enumerate(spec_entries)
-    ]
-    write_ocf(
-        manifest_path,
-        _manifest_entry_schema(pfields, v3=fmt3),
-        entries,
-        metadata={
-            "schema": json.dumps(ice_schema),
-            "partition-spec": json.dumps(partition_spec),
-            "partition-spec-id": "0",
-            "format-version": "1",
-            "content": "data",
-        },
-    )
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": 0,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(entries),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": sum(e["data_file"]["record_count"] for e in entries),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-
-    # ---- manifest list: previous manifests + new on append, new only on
-    # overwrite (the snapshot enumerates its complete live set). On a v2
-    # table (after a row-level delete upgraded it) the list carries
-    # content + sequence numbers; new data files get the next sequence.
-    # ``overwrite_partitions`` (dynamic partition overwrite / the jar's
-    # INSERT OVERWRITE semantics): previous manifests carry over MINUS
-    # every entry whose partition tuple is replaced by an incoming file —
-    # untouched partitions keep their original manifests byte-identical
-    # (no rewrite when nothing in a manifest is replaced), partially-hit
-    # manifests rewrite with the survivors as EXISTING entries keeping
-    # their snapshot ids, and the manifest-list entry preserves the
-    # original sequence numbers so v2 inheritance stays exact.
-    fmt = meta.get("format-version", 1) if meta else 1
-    new_seq = (meta.get("last-sequence-number", 0) + 1) if fmt >= 2 else None
-    prev: list[dict] = []
-    base_id = (meta or {}).get("current-snapshot-id", -1)
-    if branch is not None and meta:
+    # the base snapshot's manifests carry over on append and dynamic
+    # overwrite; an overwrite's snapshot enumerates only the new one
+    base_id = meta.get("current-snapshot-id", -1)
+    if branch is not None:
         r = (meta.get("refs") or {}).get(branch)
         if r is not None:
             if r.get("type") != "branch":
@@ -1440,160 +1413,32 @@ def write_iceberg(
                 )
             base_id = r["snapshot-id"]
         # a new branch forks from the current snapshot
-    if (
-        mode in ("append", "overwrite_partitions")
-        and meta
-        and base_id != -1
-    ):
-        cur = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == base_id
-        )
-        _schema2, _m2, prev = read_ocf(cur["manifest-list"])
-    carried = {mf["manifest_path"] for mf in prev}
-    if mode == "overwrite_partitions" and prev:
-        replaced = {
-            tuple(sorted(e["data_file"]["partition"].items()))
-            for e in entries
-        }
-        kept_manifests: list[dict] = []
-        for mf in prev:
-            if mf.get("content", 0) != 0:
-                kept_manifests.append(mf)  # delete manifests carry over
-                continue
-            _es, _em, m_entries = read_ocf(mf["manifest_path"])
-            live = [e for e in m_entries if e["status"] != 2]
-            kept = [
-                e for e in live
-                if tuple(sorted(e["data_file"]["partition"].items()))
-                not in replaced
-            ]
-            if len(kept) == len(live):
-                kept_manifests.append(mf)  # untouched: reuse byte-identical
-                continue
-            if not kept:
-                continue  # fully replaced: drops from the new snapshot
-            rewritten = [
-                dict(e, status=0)  # EXISTING, original snapshot_id kept
-                for e in kept
-            ]
-            new_path = os.path.join(
-                _meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro"
-            )
-            write_ocf(
-                new_path,
-                _manifest_entry_schema(pfields, v3=fmt3),
-                rewritten,
-                metadata={
-                    "schema": json.dumps(ice_schema),
-                    "partition-spec": json.dumps(partition_spec),
-                    "partition-spec-id": "0",
-                    "format-version": str(fmt),
-                    "content": "data",
-                },
-            )
-            mf2 = dict(mf)
-            mf2["manifest_path"] = new_path
-            mf2["manifest_length"] = os.path.getsize(new_path)
-            mf2["added_data_files_count"] = 0
-            mf2["existing_data_files_count"] = len(rewritten)
-            mf2["deleted_data_files_count"] = len(live) - len(kept)
-            mf2["added_rows_count"] = 0
-            mf2["existing_rows_count"] = sum(
-                e["data_file"]["record_count"] for e in rewritten
-            )
-            kept_manifests.append(mf2)
-        prev = kept_manifests
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    if fmt >= 2:
-        v2_new = _as_v2_list_entry(new_manifest)
-        v2_new["sequence_number"] = v2_new["min_sequence_number"] = new_seq
-        manifests = [_as_v2_list_entry(mf) for mf in prev] + [v2_new]
-        write_ocf(list_path, _MANIFEST_FILE_SCHEMA_V2, manifests,
-                  metadata={"format-version": "2"})
-    else:
-        manifests = prev + [new_manifest]
-        write_ocf(list_path, _MANIFEST_FILE_SCHEMA, manifests,
-                  metadata={"format-version": "1"})
+    prev = [] if mode == "overwrite" else _manifests_of(meta, base_id)
+    if mode == "overwrite_partitions":
+        # dynamic partition overwrite (the jar's INSERT OVERWRITE): each
+        # data manifest loses the entries whose partition tuple an
+        # incoming file replaces; delete manifests carry over
+        def pkey(e):
+            return tuple(sorted(e["data_file"]["partition"].items()))
 
-    # ---- new table metadata version
-    summary = {"operation": "append" if mode == "append" else "overwrite"}
-    # spec §Snapshots: summary metrics (what the jar's tbl.snapshots
-    # surface shows) — added-* from this commit's entries, total-* summed
-    # from the final manifest list's per-manifest counts (driver-side,
-    # O(manifests), no file reads)
-    summary.update(_summary_metrics(entries, manifests))
+        replaced = {pkey(e) for e in entries}
+        prev = _keep_entries(loc, meta, prev, lambda e: pkey(e) not in replaced)
+    manifests = prev + [_write_manifest(loc, meta, entries, snapshot_id)]
+    summary = {
+        "operation": "append" if mode == "append" else "overwrite",
+        # spec §Snapshots: summary metrics (what the jar's tbl.snapshots
+        # surface shows)
+        **_summary_metrics(entries, manifests),
+    }
     if wap_id is not None:
         summary["wap.id"] = str(wap_id)
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": now_ms,
-        "summary": summary,
-        "manifest-list": list_path,
-        # the spec records which schema the snapshot was written under —
-        # time-travel readers resolve columns by it (round 14: was a
-        # hardcoded 0, stale once schemas evolve with fresh ids)
-        "schema-id": (meta or {}).get("current-schema-id", 0),
-    }
-    if first_row_id is not None:
-        snapshot["first-row-id"] = first_row_id
-    if base_id != -1:
-        # spec (Snapshots): parent-snapshot-id records COMMIT lineage —
-        # what fast_forward's ancestry check and branch retention walk
-        snapshot["parent-snapshot-id"] = base_id
-    if fmt >= 2:
-        snapshot["sequence-number"] = new_seq
-    if meta is None:
-        meta = {
-            "format-version": 1,
-            "table-uuid": str(uuid.uuid4()),
-            "location": loc,
-            "last-updated-ms": now_ms,
-            "last-column-id": len(schema.fields),
-            "schema": ice_schema,
-            "schemas": [ice_schema],
-            "current-schema-id": 0,
-            "partition-spec": partition_spec,
-            "default-spec-id": 0,
-            "properties": {},
-            "snapshots": [],
-            "snapshot-log": [],
-            "metadata-log": [],
-        }
-    meta = dict(meta)
-    meta["last-updated-ms"] = now_ms
-    if sort_by:
-        _register_sort_order(meta, ice_schema, list(sort_by))
-    if fmt >= 2:
-        meta["last-sequence-number"] = new_seq
-    meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
-    if wap_id is not None:
-        # STAGED: the snapshot is in the list (reachable by id /
-        # cherry-pick) but no pointer moves — main provably untouched
-        pass
-    elif branch is not None:
-        # advance ONLY the branch ref — main (current-snapshot-id) and
-        # the snapshot-log (which tracks main per the spec) stay put;
-        # retention fields on the ref ride along unchanged
-        refs = dict(meta.get("refs") or {})
-        refs[branch] = dict(
-            refs.get(branch) or {"type": "branch"},
-            **{"snapshot-id": snapshot_id},
-        )
-        meta["refs"] = refs
-    else:
-        meta["current-snapshot-id"] = snapshot_id
-        meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-        ]
-    # everything this commit wrote: its data files, its new and rewritten
-    # manifests and the manifest list — unlinked if the publish loses
-    staged = {e["data_file"]["file_path"] for e in entries}
-    staged |= {m["manifest_path"] for m in manifests} - carried
-    staged.add(list_path)
-    _publish_metadata(loc, v + 1, meta, staged)
-    return snapshot_id
+    return _commit_snapshot(
+        loc, v + 1, meta, snapshot_id, manifests, summary, base_id,
+        # a wap.id commit is STAGED: in the snapshot list, no pointer at it
+        ref=None if wap_id is not None else branch or "main",
+        staged=[e["data_file"]["file_path"] for e in entries],
+        first_row_id=first_row_id,
+    )
 
 
 def _summary_metrics(entries: list[dict], manifests: list[dict]) -> dict:
@@ -1652,6 +1497,259 @@ def _as_v2_list_entry(mf: dict) -> dict:
         "added_rows_count": mf.get("added_rows_count") or 0,
         "existing_rows_count": mf.get("existing_rows_count") or 0,
         "deleted_rows_count": mf.get("deleted_rows_count") or 0,
+    }
+
+
+# ---------------------------------------------------------------------------
+# the snapshot commit: manifests, the manifest list, the publish
+# ---------------------------------------------------------------------------
+
+
+def _new_snapshot_id() -> int:
+    """A fresh snapshot id: epoch millis times 1000 plus a random
+    suffix, so ``id // 1000`` is the commit's timestamp. Minted before
+    staging because staged entries and deletion-vector blobs carry it."""
+    return int(time.time() * 1000) * 1000 + uuid.uuid4().int % 1000
+
+
+def _manifests_of(meta: dict, snapshot_id: int | None) -> list[dict]:
+    """The manifest-list entries of snapshot ``snapshot_id`` ([] for none)."""
+    if snapshot_id in (None, -1):
+        return []
+    snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == snapshot_id)
+    return read_ocf(snap["manifest-list"])[2]
+
+
+def _rows(entries: list[dict]) -> int:
+    return sum(int(e["data_file"]["record_count"]) for e in entries)
+
+
+def _write_manifest(
+    loc: str, meta: dict, entries: list[dict], snapshot_id: int,
+    deletes: bool = False,
+) -> dict:
+    """Write ``entries`` as one data manifest (``deletes``: one delete
+    manifest, unpartitioned spec 1) under the table's current schema,
+    default spec and format version, and return its manifest-list entry
+    as added by ``snapshot_id``. The entry's sequence number is left to
+    :func:`_commit_snapshot`; its minimum is the entries' own when every
+    entry carries one."""
+    fmt = int(meta.get("format-version", 1))
+    if deletes:
+        schema = _delete_manifest_entry_schema(v3=fmt >= 3)
+        spec_id, spec = 1, []
+    else:
+        pfields = _partition_avro_fields(
+            iceberg_to_spark_schema(meta["schema"]), _spec_entries(meta)
+        )
+        schema = _manifest_entry_schema(pfields, v3=fmt >= 3)
+        spec_id, spec = 0, _spec_fields(meta)
+    os.makedirs(_meta_dir(loc), exist_ok=True)
+    path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
+    write_ocf(
+        path,
+        schema,
+        entries,
+        metadata={
+            "schema": json.dumps(meta["schema"]),
+            "partition-spec": json.dumps(spec),
+            "partition-spec-id": str(spec_id),
+            "format-version": str(fmt),
+            "content": "deletes" if deletes else "data",
+        },
+    )
+    added = [e for e in entries if e["status"] == 1]
+    existing = [e for e in entries if e["status"] == 0]
+    seqs = [e.get("sequence_number") for e in entries]
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": spec_id,
+        "content": int(deletes),
+        "sequence_number": None,
+        "min_sequence_number": (
+            min(seqs) if seqs and None not in seqs else None
+        ),
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": len(added),
+        "existing_files_count": len(existing),
+        "deleted_files_count": 0,
+        "added_rows_count": _rows(added),
+        "existing_rows_count": _rows(existing),
+        "deleted_rows_count": 0,
+    }
+
+
+def _as_existing(e: dict, seq: int | None) -> dict:
+    """Manifest entry ``e`` restated as EXISTING, its snapshot id kept.
+    ``seq`` is the sequence number of the v2 list entry ``e`` was read
+    under (None on a v1 list): inherited data/file sequence numbers
+    become explicit (spec fields 3/4), so the restatement keeps its
+    delete semantics in whatever manifest it lands in."""
+    e = dict(e, status=0)
+    if seq is not None:
+        if e.get("sequence_number") is None:
+            e["sequence_number"] = seq
+        if e.get("file_sequence_number") is None:
+            e["file_sequence_number"] = e["sequence_number"]
+    return e
+
+
+def _keep_entries(
+    loc: str, meta: dict, manifests: list[dict], keep, content: int = 0
+) -> list[dict]:
+    """``manifests`` with each ``content`` manifest (0 data, 1 deletes)
+    restricted to the live entries ``keep`` accepts; manifests of the
+    other content pass through. A manifest that keeps every entry is
+    reused byte-identical, one that keeps none drops out, any other is
+    rewritten with its survivors EXISTING (:func:`_as_existing`), its
+    list entry keeping the original's sequence number and counting the
+    dropped entries as deleted."""
+    out = []
+    for mf in manifests:
+        if mf.get("content", 0) != content:
+            out.append(mf)
+            continue
+        live = [
+            e for e in read_ocf(mf["manifest_path"])[2] if e["status"] != 2
+        ]
+        kept = [e for e in live if keep(e)]
+        if len(kept) == len(live):
+            out.append(mf)
+        elif kept:
+            seq = mf.get("sequence_number")
+            new = _write_manifest(
+                loc, meta, [_as_existing(e, seq) for e in kept],
+                mf.get("added_snapshot_id"), deletes=content == 1,
+            )
+            out.append(dict(
+                new,
+                sequence_number=seq,
+                deleted_files_count=len(live) - len(kept),
+                deleted_rows_count=_rows(live) - _rows(kept),
+            ))
+    return out
+
+
+def _commit_snapshot(
+    loc: str,
+    version: int,
+    meta: dict,
+    snapshot_id: int,
+    manifests: list[dict],
+    summary: dict,
+    parent: int | None,
+    ref: str | None = "main",
+    staged=(),
+    first_row_id: int | None = None,
+) -> int:
+    """Publish metadata ``version``: ``meta`` plus one snapshot whose
+    manifest list is ``manifests`` (v1 or v2 list entries), child of
+    ``parent``. The one commit tail of every snapshot-producing path.
+
+    The list is written in the table's format; on v2+ the entries this
+    snapshot added without a sequence number take the commit's (new
+    data and deletes get the next sequence). On v3 the snapshot records
+    ``first_row_id``, by default the table's unadvanced next-row-id.
+    ``ref`` says what moves: ``"main"`` (current-snapshot-id and the
+    snapshot-log), another branch, or None — the snapshot is staged with
+    no pointer at it (write-audit-publish). ``staged``: the data and
+    delete files the operation wrote; with every manifest not carried
+    from ``parent`` and the list itself they are unlinked when the
+    publish loses its race. Returns the snapshot id."""
+    fmt = int(meta.get("format-version", 1))
+    now_ms = snapshot_id // 1000
+    meta = dict(meta)
+    out = [_as_v2_list_entry(mf) for mf in manifests]
+    if fmt >= 2:
+        seq = int(meta.get("last-sequence-number", 0)) + 1
+        for mf, e in zip(manifests, out):
+            if (
+                e["added_snapshot_id"] == snapshot_id
+                and mf.get("sequence_number") is None
+            ):
+                e["sequence_number"] = seq
+                if mf.get("min_sequence_number") is None:
+                    e["min_sequence_number"] = seq
+        list_schema = _MANIFEST_FILE_SCHEMA_V2
+    else:
+        out = [
+            dict(
+                e,
+                added_data_files_count=e["added_files_count"],
+                existing_data_files_count=e["existing_files_count"],
+                deleted_data_files_count=e["deleted_files_count"],
+            )
+            for e in out
+        ]
+        list_schema = _MANIFEST_FILE_SCHEMA
+    list_path = os.path.join(
+        _meta_dir(loc), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
+    )
+    write_ocf(list_path, list_schema, out,
+              metadata={"format-version": "2" if fmt >= 2 else "1"})
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        "timestamp-ms": now_ms,
+        "summary": summary,
+        "manifest-list": list_path,
+        # the schema the snapshot was written under: time-travel readers
+        # resolve columns by it
+        "schema-id": meta.get("current-schema-id", 0),
+    }
+    if fmt >= 3:
+        snapshot["first-row-id"] = (
+            int(meta.get("next-row-id", 0))
+            if first_row_id is None else first_row_id
+        )
+    if parent not in (None, -1):
+        # spec (Snapshots): parent-snapshot-id records COMMIT lineage —
+        # what fast_forward's ancestry check and branch retention walk
+        snapshot["parent-snapshot-id"] = parent
+    if fmt >= 2:
+        snapshot["sequence-number"] = seq
+        meta["last-sequence-number"] = seq
+    meta["last-updated-ms"] = now_ms
+    meta["snapshots"] = [*meta.get("snapshots", []), snapshot]
+    if ref == "main":
+        meta["current-snapshot-id"] = snapshot_id
+        meta["snapshot-log"] = [
+            *meta.get("snapshot-log", []),
+            {"timestamp-ms": now_ms, "snapshot-id": snapshot_id},
+        ]
+    elif ref is not None:
+        # only the branch ref advances; main and the snapshot-log (which
+        # tracks main per the spec) stay put, retention fields ride along
+        refs = dict(meta.get("refs") or {})
+        refs[ref] = dict(
+            refs.get(ref) or {"type": "branch"}, **{"snapshot-id": snapshot_id}
+        )
+        meta["refs"] = refs
+    carried = {mf["manifest_path"] for mf in _manifests_of(meta, parent)}
+    written = {e["manifest_path"] for e in out} - carried
+    _publish_metadata(loc, version, meta, [*staged, *written, list_path])
+    return snapshot_id
+
+
+def _new_table_meta(
+    loc: str, ice_schema: dict, partition_spec: list[dict], properties: dict
+) -> dict:
+    """Format-version 1 metadata of a table with no snapshot yet."""
+    return {
+        "format-version": 1,
+        "table-uuid": str(uuid.uuid4()),
+        "location": loc,
+        "last-updated-ms": int(time.time() * 1000),
+        "last-column-id": len(ice_schema["fields"]),
+        "schema": ice_schema,
+        "schemas": [ice_schema],
+        "current-schema-id": 0,
+        "partition-spec": partition_spec,
+        "default-spec-id": 0,
+        "properties": properties,
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
     }
 
 
@@ -1756,7 +1854,7 @@ def _stage_deletion_vectors(
     loc: str,
     snapshot_id: int,
     prior_dvs: dict[str, tuple[str, int, int]],
-) -> tuple[list[dict], int]:
+) -> list[dict]:
     """Stage a (file_path, pos) DataFrame as v3 DELETION VECTORS: one
     Puffin ``deletion-vector-v1`` blob per affected data file, all blobs
     in ONE puffin file per commit (the spec's recommended layout).
@@ -1767,9 +1865,8 @@ def _stage_deletion_vectors(
     closure) before encoding. Encoding runs EXECUTOR-side per file group
     (``applyInPandas`` — positions never materialize on the driver);
     only the finished compressed bitmaps (KBs per file) collect, and one
-    driver write assembles the puffin file. Returns (delete manifest
-    entries carrying the spec's 143-145 reference triplet, newly-deleted
-    row count)."""
+    driver write assembles the puffin file. Returns the delete manifest
+    entries, carrying the spec's 143-145 reference triplet."""
     import pandas as pd
 
     prior = dict(prior_dvs)
@@ -1779,7 +1876,6 @@ def _stage_deletion_vectors(
 
         fp = key[0]
         positions = {int(p) for p in pdf["pos"]}
-        n_new = len(positions)
         pr = prior.get(fp)
         if pr is not None:
             positions |= read_blob(*pr)
@@ -1788,19 +1884,18 @@ def _stage_deletion_vectors(
                 "file_path": [fp],
                 "blob": [encode_dv_blob(sorted(positions))],
                 "card": [len(positions)],
-                "n_new": [n_new],
             }
         )
 
     rows = (
         matched.groupBy("file_path")
         .applyInPandas(
-            fold, "file_path string, blob binary, card long, n_new long"
+            fold, "file_path string, blob binary, card long"
         )
         .collect()
     )
     if not rows:
-        return [], 0
+        return []
     rows = sorted(rows, key=lambda r: r.file_path)
     blobs = []
     offsets: list[tuple[int, int]] = []  # (offset, length) per blob
@@ -1850,14 +1945,15 @@ def _stage_deletion_vectors(
                 },
             }
         )
-    return entries, int(sum(r.n_new for r in rows))
+    return entries
 
 
 def _stage_position_deletes(
     matched: DataFrame, loc: str, snapshot_id: int
-) -> tuple[list[dict], int]:
+) -> list[dict]:
     """Stage a (file_path, pos) DataFrame as POSITION DELETE parquet files
-    under ``data/``; returns (manifest entries, total deleted rows).
+    under ``data/``, their columns stamped with the spec's reserved field
+    ids; returns their manifest entries.
 
     Each entry carries ``lower_bounds``/``upper_bounds`` for the
     reserved ``file_path`` field (2147483546), harvested from the staged
@@ -1870,7 +1966,10 @@ def _stage_position_deletes(
     valid lower bound) and parquet increments a truncated max — range
     checks stay conservative either way."""
     staged = lakecore.stage_parquet(
-        matched, loc, "data", lambda: f"{uuid.uuid4().hex}-deletes.parquet"
+        matched
+        .withMetadata("file_path", {"parquet.field.id": _POS_DELETE_PATH_FID})
+        .withMetadata("pos", {"parquet.field.id": _POS_DELETE_POS_FID}),
+        loc, "data", lambda: f"{uuid.uuid4().hex}-deletes.parquet",
     )
 
     # pyarrow surfaces BYTE_ARRAY statistics as str when the column
@@ -1916,28 +2015,24 @@ def _stage_position_deletes(
                 },
             }
         )
-    return delete_entries, sum(f.row_count for f in staged)
+    return delete_entries
 
 
 def _stage_row_deletes(
     coords: DataFrame, loc: str, meta: dict, snap: dict, snapshot_id: int
-) -> tuple[list[dict], int]:
+) -> list[dict]:
     """Stage the ``(file_path, pos)`` coordinates of deleted rows in the
     table's delete form: v3 deletion vectors (Puffin blobs that union the
     file's prior vector), or v2 position-delete parquet files,
-    range-partitioned so each file is sorted by (file_path, pos) and
-    stamped with the reserved field ids, as the spec requires (AQE
-    coalesces the tiny ones). Returns (delete manifest entries, rows
-    deleted)."""
+    range-partitioned so each file is sorted by (file_path, pos), as the
+    spec requires (AQE coalesces the tiny ones). Returns the delete
+    manifest entries."""
     if int(meta.get("format-version", 1)) >= 3:
         return _stage_deletion_vectors(
             coords, loc, snapshot_id, _prior_dv_map(meta, snap)
         )
-    ordered = (
-        coords.repartitionByRange("file_path", "pos")
-        .sortWithinPartitions("file_path", "pos")
-        .withMetadata("file_path", {"parquet.field.id": _POS_DELETE_PATH_FID})
-        .withMetadata("pos", {"parquet.field.id": _POS_DELETE_POS_FID})
+    ordered = coords.repartitionByRange("file_path", "pos").sortWithinPartitions(
+        "file_path", "pos"
     )
     return _stage_position_deletes(ordered, loc, snapshot_id)
 
@@ -2317,211 +2412,50 @@ def drop_column(loc: str, name: str) -> int:
     return version
 
 
-def _drop_replaced_dvs(
-    loc: str, manifests: list[dict], replaced: set[str]
-) -> list[dict]:
-    """Rewrite prior DELETE manifests without the deletion-vector entries
-    whose ``referenced_data_file`` is being replaced by this commit (v3:
-    one DV per data file, the new DV's positions are a superset).
-    Untouched manifests pass through byte-identical; inherited sequence
-    numbers are made explicit on the survivors so the rewrite can never
-    change their delete semantics."""
-    out: list[dict] = []
-    for mf in manifests:
-        if mf.get("content", 0) != 1:
-            out.append(mf)
-            continue
-        _es, _em, m_entries = read_ocf(mf["manifest_path"])
-        live = [e for e in m_entries if e["status"] != 2]
-        kept = [
-            e for e in live
-            if e["data_file"].get("referenced_data_file") not in replaced
-        ]
-        if len(kept) == len(live):
-            out.append(mf)
-            continue
-        if not kept:
-            continue  # every entry replaced: manifest drops from the list
-        mf_seq = mf.get("sequence_number") or 0
-        rewritten = []
-        for e in kept:
-            e2 = dict(e, status=0)  # EXISTING
-            if e2.get("sequence_number") is None:
-                e2["sequence_number"] = mf_seq
-            if e2.get("file_sequence_number") is None:
-                e2["file_sequence_number"] = mf_seq
-            rewritten.append(e2)
-        new_path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
-        write_ocf(
-            new_path,
-            _delete_manifest_entry_schema(v3=True),
-            rewritten,
-            metadata={"format-version": "3", "content": "deletes"},
-        )
-        mf2 = dict(mf)
-        mf2["manifest_path"] = new_path
-        mf2["manifest_length"] = os.path.getsize(new_path)
-        mf2["added_files_count"] = 0
-        mf2["existing_files_count"] = len(rewritten)
-        mf2["deleted_files_count"] = len(live) - len(kept)
-        mf2["added_rows_count"] = 0
-        mf2["existing_rows_count"] = sum(
-            e["data_file"]["record_count"] for e in rewritten
-        )
-        # list-level stats describe the REWRITTEN manifest, not the
-        # original: deleted counts = the replaced DV entries dropped
-        # here, min sequence number from the survivors' (now explicit)
-        # sequence numbers (round-14 ADVICE fix)
-        dropped = [
-            e for e in live
-            if e["data_file"].get("referenced_data_file") in replaced
-        ]
-        mf2["deleted_rows_count"] = sum(
-            e["data_file"]["record_count"] for e in dropped
-        )
-        mf2["min_sequence_number"] = min(
-            e["sequence_number"] for e in rewritten
-        )
-        out.append(mf2)
-    return out
-
-
 def _commit_row_delta(
     loc: str,
+    version: int,
     meta: dict,
     snap: dict,
     snapshot_id: int,
-    now_ms: int,
     delete_entries: list[dict],
-    total_deleted: int,
     data_entries: list[dict],
     operation: str,
 ) -> int:
-    """Publish one v2 snapshot carrying a position-delete manifest and
+    """Publish one v2 snapshot carrying a delete manifest and
     (optionally) a data manifest — the spec's row-delta commit shape
     (DELETE emits deletes only; UPDATE/MERGE emit both atomically)."""
     if meta.get("format-version", 1) < 2:
         meta = _upgrade_meta_v2(meta)
-    fmt3 = int(meta.get("format-version", 1)) >= 3
-    new_seq = meta.get("last-sequence-number", 0) + 1
-
-    _s, _m, prev = read_ocf(snap["manifest-list"])
-    manifests = [_as_v2_list_entry(mf) for mf in prev]
-    if fmt3:
-        # v3 invariant: at most ONE deletion vector per data file — the
-        # DV committed here REPLACES any prior DV for the same file (its
-        # positions are a superset), so prior delete manifests rewrite
-        # without the replaced entries (O(delete manifests), metadata)
-        replaced = {
-            e["data_file"].get("referenced_data_file")
-            for e in delete_entries
-            if e["data_file"].get("referenced_data_file")
-        }
-        if replaced:
-            manifests = _drop_replaced_dvs(loc, manifests, replaced)
-
-    manifest_path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
-    write_ocf(
-        manifest_path,
-        _delete_manifest_entry_schema(v3=fmt3),
-        delete_entries,
-        metadata={
-            "schema": json.dumps(meta["schema"]),
-            "partition-spec": "[]",
-            "partition-spec-id": "1",
-            "format-version": "2",
-            "content": "deletes",
-        },
-    )
+    else:
+        meta = dict(meta)
+    manifests = _manifests_of(meta, snap["snapshot-id"])
+    # v3 invariant: at most ONE deletion vector per data file — the DV
+    # committed here REPLACES any prior DV for the same file (its
+    # positions are a superset), so prior delete manifests lose the
+    # replaced entries (O(delete manifests), metadata)
+    replaced = {
+        e["data_file"].get("referenced_data_file") for e in delete_entries
+    } - {None}
+    if replaced:
+        manifests = _keep_entries(
+            loc, meta, manifests,
+            lambda e: e["data_file"].get("referenced_data_file") not in replaced,
+            content=1,
+        )
     manifests.append(
-        {
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 1,
-            "content": 1,
-            "sequence_number": new_seq,
-            "min_sequence_number": new_seq,
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(delete_entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": total_deleted,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        }
+        _write_manifest(loc, meta, delete_entries, snapshot_id, deletes=True)
     )
-    first_row_id = int(meta.get("next-row-id", 0)) if fmt3 else None
+    first_row_id = _assign_first_row_ids(meta, data_entries)
     if data_entries:
-        if fmt3:
-            _assign_first_row_ids(meta, data_entries)
-        pfields = _partition_avro_fields(
-            iceberg_to_spark_schema(meta["schema"]), _spec_entries(meta)
-        )
-        data_manifest = os.path.join(
-            _meta_dir(loc), f"{uuid.uuid4().hex}-m1.avro"
-        )
-        write_ocf(
-            data_manifest,
-            _manifest_entry_schema(pfields, v3=fmt3),
-            data_entries,
-            metadata={
-                "schema": json.dumps(meta["schema"]),
-                "partition-spec": json.dumps(meta.get("partition-spec", [])),
-                "partition-spec-id": "0",
-                "format-version": "2",
-                "content": "data",
-            },
-        )
-        manifests.append(
-            {
-                "manifest_path": data_manifest,
-                "manifest_length": os.path.getsize(data_manifest),
-                "partition_spec_id": 0,
-                "content": 0,
-                "sequence_number": new_seq,
-                "min_sequence_number": new_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(data_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in data_entries
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
+        manifests.append(_write_manifest(loc, meta, data_entries, snapshot_id))
+    return _commit_snapshot(
+        loc, version, meta, snapshot_id, manifests, {"operation": operation},
+        snap["snapshot-id"],
+        staged=[e["data_file"]["file_path"]
+                for e in delete_entries + data_entries],
+        first_row_id=first_row_id,
     )
-    write_ocf(list_path, _MANIFEST_FILE_SCHEMA_V2, manifests,
-              metadata={"format-version": "2"})
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "parent-snapshot-id": snap["snapshot-id"],
-        "sequence-number": new_seq,
-        "timestamp-ms": now_ms,
-        "summary": {"operation": operation},
-        "manifest-list": list_path,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    if first_row_id is not None:
-        snapshot["first-row-id"] = first_row_id
-    meta["last-updated-ms"] = now_ms
-    meta["last-sequence-number"] = new_seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-    ]
-    # everything this commit wrote: its data and delete files, its new
-    # manifests and the manifest list — unlinked if the publish loses
-    staged = {e["data_file"]["file_path"] for e in delete_entries + data_entries}
-    staged |= {m["manifest_path"] for m in manifests}
-    staged -= {mf["manifest_path"] for mf in prev}
-    staged.add(list_path)
-    _publish_metadata(loc, current_version(loc) + 1, meta, staged)
-    return snapshot_id
 
 
 def delete_where(spark: SparkSession, loc: str, predicate: str) -> int | None:
@@ -2539,13 +2473,13 @@ def delete_where(spark: SparkSession, loc: str, predicate: str) -> int | None:
 
     Returns the new snapshot id, or None when nothing matched (no empty
     commit)."""
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     snap = _pick_snapshot(meta)
     df, _schema = _mor_scan(spark, loc, meta, snap)
     if df is None:
         return None
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
+    snapshot_id = _new_snapshot_id()
     coords = df.filter(predicate).select(
         F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
     )
@@ -2555,14 +2489,13 @@ def delete_where(spark: SparkSession, loc: str, predicate: str) -> int | None:
     # to the table (guide §5). v3 deletion vectors read it once.
     fmt3 = int(meta.get("format-version", 1)) >= 3
     with nullcontext(coords) if fmt3 else persisted(coords) as coords:
-        delete_entries, total = _stage_row_deletes(
+        delete_entries = _stage_row_deletes(
             coords, loc, meta, snap, snapshot_id
         )
     if not delete_entries:
         return None
     return _commit_row_delta(
-        loc, meta, snap, snapshot_id, now_ms,
-        delete_entries, total, [], "delete",
+        loc, v + 1, meta, snap, snapshot_id, delete_entries, [], "delete"
     )
 
 
@@ -2580,7 +2513,8 @@ def update_where(
     data file rewrites. ``assignments`` maps column → SQL expression
     over the pre-update row. Returns the snapshot id, or None when
     nothing matched."""
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     snap = _pick_snapshot(meta)
     schema_probe = iceberg_to_spark_schema(meta["schema"])
     unknown = set(assignments) - {f.name for f in schema_probe.fields}
@@ -2590,8 +2524,7 @@ def update_where(
     if df is None:
         return None
     pred = F.coalesce(F.expr(predicate), F.lit(False))
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
+    snapshot_id = _new_snapshot_id()
     out_cols = [
         (
             F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
@@ -2633,7 +2566,7 @@ def update_where(
         # §2.6). When nothing matched, BOTH stage zero rows (empty parts
         # are unlinked, nothing reaches data/), so the no-commit exit
         # below leaves no orphans.
-        (delete_entries, total), data_entries = lakecore.run_concurrently(
+        delete_entries, data_entries = lakecore.run_concurrently(
             lambda: _stage_row_deletes(coords, loc, meta, snap, snapshot_id),
             lambda: _stage_data_entries(
                 updated, loc, stage_schema, _spec_entries(meta), snapshot_id,
@@ -2645,18 +2578,16 @@ def update_where(
         _unlink_staged_entries(data_entries)  # never orphan a staged file
         return None
     return _commit_row_delta(
-        loc, meta, snap, snapshot_id, now_ms,
-        delete_entries, total, data_entries, "overwrite",
+        loc, v + 1, meta, snap, snapshot_id,
+        delete_entries, data_entries, "overwrite",
     )
 
 
-def _unlink_staged_entries(res):
-    """Cleanup for :func:`lakecore.run_concurrently`: unlink the files
-    a SUCCESSFUL staging thunk moved under the table's data/ when its
-    sibling failed — uncommitted staged files are unreferenced garbage.
-    Accepts either an entry list or the (entries, total) pair the
-    delete-staging thunks return."""
-    entries = res[0] if isinstance(res, tuple) else res
+def _unlink_staged_entries(entries: list[dict]) -> None:
+    """Unlink the files of staged entries that will not be committed —
+    the cleanup :func:`lakecore.run_concurrently` gives a SUCCESSFUL
+    staging thunk when its sibling failed: uncommitted staged files are
+    unreferenced garbage."""
     lakecore.unlink_quietly(e["data_file"]["file_path"] for e in entries)
 
 
@@ -2678,7 +2609,8 @@ def merge_upsert(
     never read or rewritten — the entire cost is O(source) + manifest
     metadata; readers pay one broadcast anti-join per scan until
     compaction folds the deletes."""
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     snap = _pick_snapshot(meta)
     schema = iceberg_to_spark_schema(meta["schema"])
     missing = [k for k in keys if k not in [f.name for f in schema.fields]]
@@ -2701,8 +2633,7 @@ def merge_upsert(
         *[F.col(f.name).cast(f.dataType).alias(f.name)
           for f in schema.fields]
     )
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
+    snapshot_id = _new_snapshot_id()
 
     # equality delete file: just the key columns, with their schema
     # field ids written into the parquet (the spec's equality_ids link)
@@ -2710,12 +2641,12 @@ def merge_upsert(
     eq = src.select(*keys).distinct()
     for k in keys:
         eq = eq.withMetadata(k, {"parquet.field.id": field_ids[k]})
-    def _stage_eq() -> tuple[list[dict], int]:
+    def _stage_eq() -> list[dict]:
         staged = lakecore.stage_parquet(
             eq.coalesce(1), loc, "data",
             lambda: f"{uuid.uuid4().hex}-eq-deletes.parquet",
         )
-        delete_entries = [
+        return [
             {
                 "status": 1,
                 "snapshot_id": snapshot_id,
@@ -2733,14 +2664,13 @@ def merge_upsert(
             }
             for f in staged
         ]
-        return delete_entries, sum(f.row_count for f in staged)
 
     # the equality-delete staging (O(source keys)) and the data staging
     # (O(source)) are INDEPENDENT jobs — overlap them (guide §2.6); the
     # sequential shape already scanned the source twice, so the overlap
     # changes wall time, not work. An empty source stages zero rows on
     # both sides; the no-commit exit cleans any staged stragglers.
-    (delete_entries, total), data_entries = lakecore.run_concurrently(
+    delete_entries, data_entries = lakecore.run_concurrently(
         _stage_eq,
         lambda: _stage_data_entries(
             src, loc, schema, _spec_entries(meta), snapshot_id,
@@ -2752,8 +2682,8 @@ def merge_upsert(
         _unlink_staged_entries(data_entries)
         return None
     return _commit_row_delta(
-        loc, meta, snap, snapshot_id, now_ms,
-        delete_entries, total, data_entries, "overwrite",
+        loc, v + 1, meta, snap, snapshot_id,
+        delete_entries, data_entries, "overwrite",
     )
 
 
@@ -2793,7 +2723,8 @@ def rewrite_data_files(
             f"rewrite_data_files: unknown strategy {strategy!r} "
             "(fold | binpack | sort | zorder)"
         )
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     snap = _pick_snapshot(meta)
     _data, dels = _scan_snapshot(meta, snap)
     if strategy == "fold" and not dels:
@@ -2856,81 +2787,29 @@ def rewrite_data_files(
         layout = nullcontext(live.repartition(n_out))
     else:
         layout = nullcontext(live)
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    spec = _spec_entries(meta)
+    snapshot_id = _new_snapshot_id()
     with layout as laid:
         data_entries = _stage_data_entries(
-            laid, loc, stage_schema, spec, snapshot_id,
+            laid, loc, stage_schema, _spec_entries(meta), snapshot_id,
             ice_fields=meta["schema"]["fields"],
         )
     if meta.get("format-version", 1) < 2:
         meta = _upgrade_meta_v2(meta)
-    if fmt3:
+    else:
         meta = dict(meta)
-        _assign_first_row_ids(meta, data_entries)
-    new_seq = meta.get("last-sequence-number", 0) + 1
-    pfields = _partition_avro_fields(schema, spec)
-    manifest_path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
-    write_ocf(
-        manifest_path,
-        _manifest_entry_schema(pfields, v3=fmt3),
-        data_entries,
-        metadata={
-            "schema": json.dumps(meta["schema"]),
-            "partition-spec": json.dumps(meta.get("partition-spec", [])),
-            "partition-spec-id": "0",
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    manifests = [{
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": new_seq,
-        "min_sequence_number": new_seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(data_entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(
-            e["data_file"]["record_count"] for e in data_entries
-        ),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }]
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    write_ocf(list_path, _MANIFEST_FILE_SCHEMA_V2, manifests,
-              metadata={"format-version": "2"})
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "parent-snapshot-id": snap["snapshot-id"],
-        "sequence-number": new_seq,
-        "timestamp-ms": now_ms,
-        "summary": {"operation": "replace", "rewrite-strategy": strategy},
-        "manifest-list": list_path,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
+    first_row_id = _assign_first_row_ids(meta, data_entries)
     if strategy == "sort":
         # the rewrite's layout becomes the table's default sort order
         # (spec sort-orders) — planners stop re-sorting sorted data
         _register_sort_order(meta, meta["schema"], layout_cols)
-    meta["last-updated-ms"] = now_ms
-    meta["last-sequence-number"] = new_seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-    ]
-    staged = [e["data_file"]["file_path"] for e in data_entries]
-    _publish_metadata(
-        loc, current_version(loc) + 1, meta, [*staged, manifest_path, list_path]
+    return _commit_snapshot(
+        loc, v + 1, meta, snapshot_id,
+        [_write_manifest(loc, meta, data_entries, snapshot_id)],
+        {"operation": "replace", "rewrite-strategy": strategy},
+        snap["snapshot-id"],
+        staged=[e["data_file"]["file_path"] for e in data_entries],
+        first_row_id=first_row_id,
     )
-    return snapshot_id
 
 
 # ---------------------------------------------------------------------------
@@ -2958,19 +2837,19 @@ def rewrite_position_delete_files(spark: SparkSession, loc: str) -> dict | None:
     over byte-identical (zero data operations at any table size).
     Returns {"before", "after", "dangling_dropped"} file counts, or
     None when at most one clean position-delete file exists."""
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     snap = _pick_snapshot(meta)
-    _s, _m, mlist = read_ocf(snap["manifest-list"])
-    mlist = [_as_v2_list_entry(mf) for mf in mlist]
+    mlist = _manifests_of(meta, snap["snapshot-id"])
     data_mfs = [mf for mf in mlist if mf.get("content", 0) == 0]
-    del_mfs = [mf for mf in mlist if mf.get("content", 0) == 1]
-    pure_pos: list[dict] = []
     kept_mfs: list[dict] = []
-    pos_files: list[str] = []
-    n_pos_rows = 0
-    for mf in del_mfs:
-        _es, _em, entries = read_ocf(mf["manifest_path"])
-        live = [e for e in entries if e["status"] != 2]
+    pos_entries: list[dict] = []
+    for mf in mlist:
+        if mf.get("content", 0) != 1:
+            continue
+        live = [
+            e for e in read_ocf(mf["manifest_path"])[2] if e["status"] != 2
+        ]
         if live and all(
             int(e["data_file"].get("content", 0)) == 1
             # v3 deletion vectors are puffin blobs, not parquet coordinate
@@ -2978,14 +2857,12 @@ def rewrite_position_delete_files(spark: SparkSession, loc: str) -> dict | None:
             and not e["data_file"].get("referenced_data_file")
             for e in live
         ):
-            pure_pos.append(mf)
-            for e in live:
-                pos_files.append(e["data_file"]["file_path"])
-                n_pos_rows += int(e["data_file"]["record_count"])
+            pos_entries += live
         else:
             kept_mfs.append(mf)
-    if not pos_files:
+    if not pos_entries:
         return None
+    pos_files = [e["data_file"]["file_path"] for e in pos_entries]
 
     # live data paths (driver-small: one row per live file) prune
     # dangling deletes via a broadcast semi-join
@@ -2997,84 +2874,29 @@ def rewrite_position_delete_files(spark: SparkSession, loc: str) -> dict | None:
     kept_rows = dels.join(F.broadcast(live_paths), "file_path", "left_semi")
     merged = kept_rows.orderBy("file_path", "pos").coalesce(1)
 
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    delete_entries, total = _stage_position_deletes(merged, loc, snapshot_id)
-    dangling = n_pos_rows - total
+    snapshot_id = _new_snapshot_id()
+    delete_entries = _stage_position_deletes(merged, loc, snapshot_id)
+    dangling = _rows(pos_entries) - _rows(delete_entries)
     if len(pos_files) <= 1 and dangling == 0:
         # one clean file already — undo the restage, nothing to do
-        for e in delete_entries:
-            try:
-                os.remove(e["data_file"]["file_path"])
-            except OSError:
-                pass
+        _unlink_staged_entries(delete_entries)
         return None
 
-    if meta.get("format-version", 1) < 2:  # pragma: no cover - v2+ by here
-        meta = _upgrade_meta_v2(meta)
-    new_seq = meta.get("last-sequence-number", 0) + 1
-    manifests = list(data_mfs) + list(kept_mfs)
+    manifests = data_mfs + kept_mfs
     if delete_entries:
-        manifest_path = os.path.join(
-            _meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro"
-        )
-        write_ocf(
-            manifest_path,
-            _delete_manifest_entry_schema(),
-            delete_entries,
-            metadata={
-                "schema": json.dumps(meta["schema"]),
-                "partition-spec": "[]",
-                "partition-spec-id": "1",
-                "format-version": "2",
-                "content": "deletes",
-            },
-        )
         manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": 1,
-                "content": 1,
-                "sequence_number": new_seq,
-                "min_sequence_number": new_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(delete_entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": total,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
+            _write_manifest(loc, meta, delete_entries, snapshot_id, deletes=True)
         )
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    write_ocf(list_path, _MANIFEST_FILE_SCHEMA_V2, manifests,
-              metadata={"format-version": "2"})
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "parent-snapshot-id": snap["snapshot-id"],
-        "sequence-number": new_seq,
-        "timestamp-ms": now_ms,
-        "summary": {
-            "operation": "replace",
-            "rewritten-delete-files": str(len(pos_files)),
-            "added-delete-files": str(len(delete_entries)),
-            "removed-position-deletes": str(dangling),
-        },
-        "manifest-list": list_path,
-        "schema-id": meta.get("current-schema-id", 0),
+    summary = {
+        "operation": "replace",
+        "rewritten-delete-files": str(len(pos_files)),
+        "added-delete-files": str(len(delete_entries)),
+        "removed-position-deletes": str(dangling),
     }
-    meta = dict(meta)
-    meta["last-updated-ms"] = now_ms
-    meta["last-sequence-number"] = new_seq
-    meta["current-snapshot-id"] = snapshot_id
-    meta["snapshots"] = list(meta.get("snapshots", [])) + [snapshot]
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
-    ]
-    _publish_metadata(loc, current_version(loc) + 1, meta)
+    _commit_snapshot(
+        loc, v + 1, meta, snapshot_id, manifests, summary, snap["snapshot-id"],
+        staged=[e["data_file"]["file_path"] for e in delete_entries],
+    )
     return {
         "before": len(pos_files),
         "after": len(delete_entries),
@@ -3098,117 +2920,36 @@ def rewrite_manifests(loc: str) -> dict:
     carry over untouched. Publishes one ``replace`` snapshot — zero
     data-file operations at any table size. Returns manifest counts
     ``{"before": n, "after": n}``."""
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     cur_id = meta.get("current-snapshot-id")
     if cur_id in (None, -1):
         raise ValueError(f"rewrite_manifests: no current snapshot in {loc}")
-    cur = next(s for s in meta["snapshots"] if s["snapshot-id"] == cur_id)
-    _s, _m, mlist = read_ocf(cur["manifest-list"])
+    mlist = _manifests_of(meta, cur_id)
     fmt = meta.get("format-version", 1)
     data = [mf for mf in mlist if mf.get("content", 0) == 0]
     deletes = [mf for mf in mlist if mf.get("content", 0) != 0]
     if len(data) <= 1:
         return {"before": len(mlist), "after": len(mlist)}  # nothing to fold
 
-    now_ms = int(time.time() * 1000)
-    new_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-    pfields = _partition_avro_fields(
-        iceberg_to_spark_schema(meta["schema"]), _spec_entries(meta)
-    )
-    partition_spec = meta.get("partition-spec", [])
-    entries: list[dict] = []
-    for mf in data:
-        mf_seq = (mf.get("sequence_number") or 0) if fmt >= 2 else None
-        _es, _em, m_entries = read_ocf(mf["manifest_path"])
-        for e in m_entries:
-            if e["status"] == 2:
-                continue
-            e2 = dict(e, status=0)  # EXISTING, original snapshot_id kept
-            if fmt >= 2:
-                # EXPLICIT per-entry sequence (spec fields 3/4): the
-                # consolidated manifest mixes commits, so inheritance
-                # from ONE list-entry number would mis-sequence them
-                seq = (
-                    e.get("sequence_number")
-                    if e.get("sequence_number") is not None
-                    else mf_seq
-                )
-                e2["sequence_number"] = seq
-                e2["file_sequence_number"] = (
-                    e.get("file_sequence_number")
-                    if e.get("file_sequence_number") is not None
-                    else seq
-                )
-            entries.append(e2)
-    new_path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
-    write_ocf(
-        new_path,
-        _manifest_entry_schema(pfields, v3=fmt >= 3),
-        entries,
-        metadata={
-            "schema": json.dumps(meta["schema"]),
-            "partition-spec": json.dumps(partition_spec),
-            "partition-spec-id": "0",
-            "format-version": str(fmt),
-            "content": "data",
-        },
-    )
-    entry = {
-        "manifest_path": new_path,
-        "manifest_length": os.path.getsize(new_path),
-        "partition_spec_id": 0,
-        "added_snapshot_id": new_id,
-        "added_data_files_count": 0,
-        "existing_data_files_count": len(entries),
-        "deleted_data_files_count": 0,
-        "added_rows_count": 0,
-        "existing_rows_count": sum(
-            e["data_file"]["record_count"] for e in entries
-        ),
-        "deleted_rows_count": 0,
-    }
-    if fmt >= 2:
-        entry["content"] = 0
-        entry["sequence_number"] = meta.get("last-sequence-number", 0) + 1
-        entry["min_sequence_number"] = min(
-            (e["sequence_number"] for e in entries), default=0
-        )
-    new_list = [entry] + deletes
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{new_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    if fmt >= 2:
-        write_ocf(list_path, _MANIFEST_FILE_SCHEMA_V2,
-                  [_as_v2_list_entry(mf) for mf in new_list],
-                  metadata={"format-version": "2"})
-    else:
-        write_ocf(list_path, _MANIFEST_FILE_SCHEMA, new_list,
-                  metadata={"format-version": "1"})
-    snapshot = {
-        "snapshot-id": new_id,
-        "parent-snapshot-id": cur_id,
-        "timestamp-ms": now_ms,
-        "summary": {
-            "operation": "replace",
-            "manifests-replaced": str(len(mlist)),
-            "manifests-created": str(len(new_list)),
-        },
-        "manifest-list": list_path,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    meta = dict(meta)
-    if fmt >= 2:
-        new_seq = meta.get("last-sequence-number", 0) + 1
-        snapshot["sequence-number"] = new_seq
-        meta["last-sequence-number"] = new_seq
-    meta["snapshots"] = list(meta["snapshots"]) + [snapshot]
-    meta["current-snapshot-id"] = new_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": new_id}
+    new_id = _new_snapshot_id()
+    # EXPLICIT per-entry sequence (spec fields 3/4): the consolidated
+    # manifest mixes commits, so inheritance from ONE list-entry number
+    # would mis-sequence them
+    entries = [
+        _as_existing(e, (mf.get("sequence_number") or 0) if fmt >= 2 else None)
+        for mf in data
+        for e in read_ocf(mf["manifest_path"])[2]
+        if e["status"] != 2
     ]
-    meta["last-updated-ms"] = now_ms
-    _publish_metadata(loc, current_version(loc) + 1, meta)
-    return {"before": len(mlist), "after": len(new_list)}
+    manifests = [_write_manifest(loc, meta, entries, new_id)] + deletes
+    summary = {
+        "operation": "replace",
+        "manifests-replaced": str(len(mlist)),
+        "manifests-created": str(len(manifests)),
+    }
+    _commit_snapshot(loc, v + 1, meta, new_id, manifests, summary, cur_id)
+    return {"before": len(mlist), "after": len(manifests)}
 
 
 def _live_files(meta: dict, snapshot: dict) -> list[dict]:
@@ -4157,14 +3898,9 @@ def convert_to_iceberg(
         list(sample.schema.fields)
         + [T.StructField(c, ptypes[c], True) for c in partition_by]
     )
-    ice_schema = spark_to_iceberg_schema(schema)
-    field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
-    ice_types = {f["name"]: f["type"] for f in ice_schema["fields"]}
-    now_ms = int(time.time() * 1000)
-    snapshot_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
     import pyarrow.parquet as pq
 
-    entries = []
+    files = []
     for src in sorted(data_files):
         pvals = (
             lakecore.parse_hive_dirs(os.path.relpath(src, loc))
@@ -4177,96 +3913,105 @@ def convert_to_iceberg(
                 f"{sorted(set(partition_by) - set(pvals))}"
             )
         md = pq.ParquetFile(src).metadata
-        lower, upper = _footer_bounds(md, field_ids, ice_types)
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "file_path": src,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        c: _partition_to_avro(pvals.get(c), ptypes[c])
-                        for c in partition_by
-                    },
-                    "record_count": md.num_rows,
-                    "file_size_in_bytes": os.path.getsize(src),
-                    "block_size_in_bytes": 64 * 1024 * 1024,
-                    "lower_bounds": lower,
-                    "upper_bounds": upper,
-                },
-            }
-        )
-    os.makedirs(_meta_dir(loc), exist_ok=True)
-    spec_entries = [
-        {"source": c, "transform": "identity", "name": c, "param": None,
-         "result_dt": ptypes[c]}
-        for c in partition_by
-    ]
-    pfields = _partition_avro_fields(schema, spec_entries)
+        lower, upper, _nulls = lakecore.footer_ranges(md, schema.fieldNames())
+        files.append({
+            "path": src, "partition": pvals, "record_count": md.num_rows,
+            "size": os.path.getsize(src), "lower": lower, "upper": upper,
+        })
+    return register_files(
+        loc, schema, partition_by, files,
+        properties={"migrated-from": "parquet"},
+    )
+
+
+def register_files(
+    loc: str,
+    schema: T.StructType,
+    partition_by: list[str],
+    files: list[dict],
+    removed: set[str] | None = None,
+    summary: dict | None = None,
+    properties: dict | None = None,
+) -> int:
+    """Commit parquet files that already sit under ``loc`` as one new
+    snapshot, moving no bytes: the metadata half of
+    :func:`convert_to_iceberg` and of Delta's UniForm mirror. ``schema``
+    is the table schema, ``partition_by`` its identity partition
+    columns. Each of ``files`` is a dict with ``path`` (absolute),
+    ``partition`` (column → raw string value, None for null),
+    ``record_count``, ``size`` and ``lower``/``upper`` (column → min/max
+    Python value; values that do not encode are skipped).
+
+    ``removed=None`` commits the full state: the snapshot holds exactly
+    ``files``. A set of paths commits incrementally: the current
+    snapshot minus ``removed`` plus ``files`` — untouched manifests carry
+    over verbatim, only those naming a removed file are rewritten.
+    A new table is created at format-version 1 with ``properties``; an
+    existing one takes ``schema`` and the identity spec. ``summary``
+    entries join the snapshot summary. Returns the snapshot id."""
+    ice_schema = spark_to_iceberg_schema(schema)
+    field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
+    ice_types = {f["name"]: f["type"] for f in ice_schema["fields"]}
     partition_spec = [
         {"name": c, "transform": "identity", "source-id": field_ids[c],
          "field-id": 1000 + i}
         for i, c in enumerate(partition_by)
     ]
-    manifest_path = os.path.join(_meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro")
-    write_ocf(
-        manifest_path,
-        _manifest_entry_schema(pfields),
-        entries,
-        metadata={
-            "schema": json.dumps(ice_schema),
-            "partition-spec": json.dumps(partition_spec),
-            "partition-spec-id": "0",
-            "format-version": "1",
-            "content": "data",
-        },
+    snapshot_id = _new_snapshot_id()
+    v = current_version(loc)
+    if v == 0:
+        meta = _new_table_meta(
+            loc, ice_schema, partition_spec, dict(properties or {})
+        )
+    else:
+        meta = dict(load_metadata(loc, v), schema=ice_schema,
+                    schemas=[ice_schema])
+        meta["last-column-id"] = len(schema.fields)
+        meta["partition-spec"] = partition_spec
+    parent = meta.get("current-snapshot-id", -1)
+    entries = [
+        _data_entry(
+            snapshot_id,
+            f["path"],
+            {
+                c: _partition_to_avro(f["partition"].get(c), schema[c].dataType)
+                for c in partition_by
+            },
+            int(f["record_count"]),
+            int(f["size"]),
+            _bound_records(f["lower"], field_ids, ice_types),
+            _bound_records(f["upper"], field_ids, ice_types),
+        )
+        for f in files
+    ]
+    manifests: list[dict] = []
+    dropped: list[dict] = []
+    if removed is not None:
+        manifests = _manifests_of(meta, parent)
+    if removed:
+        def keep(e):
+            if e["data_file"]["file_path"] in removed:
+                dropped.append(e)
+                return False
+            return True
+
+        manifests = _keep_entries(loc, meta, manifests, keep)
+    if entries or removed is None:
+        manifests.append(_write_manifest(loc, meta, entries, snapshot_id))
+    if parent in (None, -1) or (removed is not None and not dropped):
+        op = "append"
+    elif removed is not None and not entries:
+        op = "delete"
+    else:
+        op = "overwrite"
+    full = {"operation": op, **(summary or {})}
+    full.update(_summary_metrics(entries, manifests))
+    if dropped:
+        full["deleted-data-files"] = str(len(dropped))
+        full["deleted-records"] = str(_rows(dropped))
+    return _commit_snapshot(
+        loc, v + 1, meta, snapshot_id, manifests, full, parent
     )
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    write_ocf(
-        list_path,
-        _MANIFEST_FILE_SCHEMA,
-        [{
-            "manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": 0,
-            "added_snapshot_id": snapshot_id,
-            "added_data_files_count": len(entries),
-            "existing_data_files_count": 0,
-            "deleted_data_files_count": 0,
-            "added_rows_count": sum(
-                e["data_file"]["record_count"] for e in entries
-            ),
-        }],
-        metadata={"format-version": "1"},
-    )
-    meta = {
-        "format-version": 1,
-        "table-uuid": str(uuid.uuid4()),
-        "location": loc,
-        "last-updated-ms": now_ms,
-        "last-column-id": len(schema.fields),
-        "schema": ice_schema,
-        "schemas": [ice_schema],
-        "current-schema-id": 0,
-        "partition-spec": partition_spec,
-        "default-spec-id": 0,
-        "properties": {"migrated-from": "parquet"},
-        "current-snapshot-id": snapshot_id,
-        "snapshots": [{
-            "snapshot-id": snapshot_id,
-            "timestamp-ms": now_ms,
-            "summary": {"operation": "append"},
-            "manifest-list": list_path,
-            "schema-id": 0,
-        }],
-        "snapshot-log": [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
-        "metadata-log": [],
-    }
-    _publish_metadata(loc, 1, meta)
-    return snapshot_id
 
 
 def create_ref(
@@ -4460,7 +4205,8 @@ def cherrypick_snapshot(
     Metadata + one manifest-list write at any table size — the data
     files never move. Addressable by ``snapshot_id`` or by ``wap_id``.
     Returns the PUBLISHED (new) snapshot id."""
-    meta = load_metadata(loc)
+    v = current_version(loc)
+    meta = load_metadata(loc, v)
     snaps = list(meta.get("snapshots", []))
     if snapshot_id is None:
         if wap_id is None:
@@ -4507,24 +4253,7 @@ def cherrypick_snapshot(
                 f"published as {s['snapshot-id']}"
             )
 
-    _s, _m, staged_list = read_ocf(staged["manifest-list"])
-    picked = [
-        mf for mf in staged_list
-        if (mf.get("added_snapshot_id") or 0) == staged_id
-    ]
-    if not picked:
-        raise ValueError(
-            f"cherrypick_snapshot: snapshot {staged_id} added no "
-            "manifests — nothing to publish"
-        )
-    prev: list[dict] = []
-    if cur_id is not None and cur_id != -1:
-        cur = next(s for s in snaps if s["snapshot-id"] == cur_id)
-        _s2, _m2, prev = read_ocf(cur["manifest-list"])
-
-    now_ms = int(time.time() * 1000)
-    new_id = now_ms * 1000 + (uuid.uuid4().int % 1000)
-
+    new_id = _new_snapshot_id()
     # Re-attribute the picked manifests to the PUBLISHED snapshot — the
     # jar rewrites them with the new snapshot id, and every downstream
     # consumer keyed on attribution depends on it: an incremental append
@@ -4532,83 +4261,40 @@ def cherrypick_snapshot(
     # added_snapshot_id == snapshot-id, and entry-level snapshot_id
     # filters do the same. Staged ids are never published, so leaving
     # them verbatim makes the cherry-picked rows INVISIBLE to CDC
-    # consumers without any error (round-11 advisor, high). O(picked
-    # manifests) driver metadata — the data files never move.
-    republished: list[dict] = []
-    for mf in picked:
-        e_schema, e_meta, m_entries = read_ocf(mf["manifest_path"])
-        for e in m_entries:
-            if e["status"] == 1:  # ADDED rows belong to the publish
-                e["snapshot_id"] = new_id
-        new_mpath = os.path.join(
-            _meta_dir(loc), f"{uuid.uuid4().hex}-m0.avro"
+    # consumers without any error (round-11 advisor, high). The
+    # republished manifests take the commit's sequence number: the
+    # staged one was never published and could collide with main's
+    # history. O(picked manifests) driver metadata — the data files
+    # never move.
+    picked = [
+        _write_manifest(
+            loc, meta,
+            [
+                dict(e, snapshot_id=new_id) if e["status"] == 1 else e
+                for e in read_ocf(mf["manifest_path"])[2]
+            ],
+            new_id,
         )
-        write_ocf(
-            new_mpath, e_schema, m_entries,
-            metadata={
-                k: v for k, v in e_meta.items()
-                if not k.startswith("avro.")
-            },
+        for mf in _manifests_of(meta, staged_id)
+        if (mf.get("added_snapshot_id") or 0) == staged_id
+    ]
+    if not picked:
+        raise ValueError(
+            f"cherrypick_snapshot: snapshot {staged_id} added no "
+            "manifests — nothing to publish"
         )
-        mf2 = dict(mf)
-        mf2["manifest_path"] = new_mpath
-        mf2["manifest_length"] = os.path.getsize(new_mpath)
-        mf2["added_snapshot_id"] = new_id
-        republished.append(mf2)
-    picked = republished
-    fmt = meta.get("format-version", 1)
-    list_path = os.path.join(
-        _meta_dir(loc), f"snap-{new_id}-1-{uuid.uuid4().hex}.avro"
-    )
-    new_seq = None
-    if fmt >= 2:
-        # the published commit gets the NEXT sequence number; the picked
-        # manifests re-sequence to it (their staged sequence was never
-        # published, so inheriting it could collide with main's history)
-        new_seq = meta.get("last-sequence-number", 0) + 1
-        entries = [_as_v2_list_entry(mf) for mf in prev]
-        for mf in picked:
-            e = _as_v2_list_entry(mf)
-            e["sequence_number"] = e["min_sequence_number"] = new_seq
-            entries.append(e)
-        write_ocf(list_path, _MANIFEST_FILE_SCHEMA_V2, entries,
-                  metadata={"format-version": "2"})
-    else:
-        write_ocf(list_path, _MANIFEST_FILE_SCHEMA, prev + picked,
-                  metadata={"format-version": "1"})
-
     pub_summary = {
         "operation": "append",
         "source-snapshot-id": str(staged_id),
     }
     if "wap.id" in summary:
         pub_summary["published-wap-id"] = summary["wap.id"]
-    published = {
-        "snapshot-id": new_id,
-        "timestamp-ms": now_ms,
-        "summary": pub_summary,
-        "manifest-list": list_path,
-        "schema-id": meta.get("current-schema-id", 0),
-    }
-    if cur_id is not None and cur_id != -1:
-        published["parent-snapshot-id"] = cur_id
-    if fmt >= 2:
-        published["sequence-number"] = new_seq
-    if fmt >= 3:
-        # the picked entries carry their staged-commit row ids explicitly;
-        # the published snapshot records the counter position (v3 field)
-        published["first-row-id"] = int(meta.get("next-row-id", 0))
-    meta = dict(meta)
-    meta["snapshots"] = snaps + [published]
-    meta["current-snapshot-id"] = new_id
-    meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
-        {"timestamp-ms": now_ms, "snapshot-id": new_id}
-    ]
-    if fmt >= 2:
-        meta["last-sequence-number"] = new_seq
-    meta["last-updated-ms"] = now_ms
-    _publish_metadata(loc, current_version(loc) + 1, meta)
-    return new_id
+    # the picked entries carry their staged-commit row ids explicitly; on
+    # v3 the published snapshot records the counter position
+    return _commit_snapshot(
+        loc, v + 1, meta, new_id, _manifests_of(meta, cur_id) + picked,
+        pub_summary, cur_id,
+    )
 
 
 def drop_ref(loc: str, name: str) -> int:

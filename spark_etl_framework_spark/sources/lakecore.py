@@ -29,7 +29,8 @@ from contextlib import contextmanager
 from typing import Callable, NamedTuple
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,6 +58,10 @@ def run_concurrently(*thunks, cleanup: Callable | None = None) -> list:
     several threads, FIFO scheduling lets the second job's tasks
     back-fill executors freed by the first job's stragglers.
 
+    Pool threads run with the caller's local properties (job group,
+    description, scheduler pool) and job tags, so staging jobs count
+    and cancel with the action that started them.
+
     Every thunk finishes before anything is raised, so no job outlives
     the caller's persist lifecycle. If any thunk raised, ``cleanup`` is
     called with the result of each thunk that SUCCEEDED — its staged
@@ -65,6 +70,12 @@ def run_concurrently(*thunks, cleanup: Callable | None = None) -> list:
     story."""
     if len(thunks) == 1:
         return [thunks[0]()]
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        inherit = inheritable_thread_target(session)
+        # outside pinned-thread mode it returns the session, not a wrapper
+        if inherit is not session:
+            thunks = tuple(inherit(t) for t in thunks)
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
     errors = [f.exception() for f in futures if f.exception() is not None]

@@ -374,6 +374,36 @@ def test_row_tracking_backfill_keeps_default_vintage(spark, loc, checkpoint):
     assert {r._row_commit_version for r in rows} == {v_en}
 
 
+def test_shallow_clone_keeps_default_vintage(spark, loc, tmp_path):
+    """A shallow clone reads what its source reads. The clone's adds
+    keep the source's defaultRowCommitVersion (so _row_commit_version
+    carries over), but those count SOURCE versions, which cannot date
+    the bytes against the clone's own defaults arrival: rows written
+    before ADD COLUMN DEFAULT still read EXISTS_DEFAULT."""
+    _write(spark, loc, [(0, "a")], mode="overwrite")            # v0
+    dl.add_column(loc, "grade", "int", default=5)               # v1
+    dl.write_delta(
+        spark.createDataFrame(
+            [(1, "b", None), (2, "c", 7)], "id int, s string, grade int"
+        ).coalesce(1), loc,
+    )                                                           # v2
+    dl.enable_row_tracking(spark, loc)                          # v3
+    dst = str(tmp_path / "clone")
+    dl.shallow_clone(spark, loc, dst)
+
+    def rows(path):
+        return sorted(
+            (r.id, r.grade, r._row_commit_version)
+            for r in dl.read_delta_with_row_ids(spark, path).collect()
+        )
+
+    assert [r[:2] for r in rows(loc)] == [(0, 5), (1, None), (2, 7)]
+    assert rows(dst) == rows(loc)
+    assert sorted(
+        (r.id, r.grade) for r in dl.read_delta(spark, dst).collect()
+    ) == [(0, 5), (1, None), (2, 7)]
+
+
 def test_dv_restatement_carries_vintage(spark, loc, monkeypatch):
     """A DV delete re-adds the SAME path (same bytes) — the file's data
     vintage carries through the restatement, so a stats-suppressed

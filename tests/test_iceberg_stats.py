@@ -137,6 +137,13 @@ def test_rewrite_position_deletes_merges_files(spark, loc):
     meta = ice.load_metadata(loc)
     _d2, dels2 = ice._scan_snapshot(meta, ice._pick_snapshot(meta))
     assert len(dels2) == 1
+    # the merged file carries the spec's reserved field ids, like the
+    # position deletes DELETE writes
+    import pyarrow.parquet as pq
+
+    fields = pq.read_schema(dels2[0]["file_path"])
+    assert fields.field("file_path").metadata[b"PARQUET:field_id"] == b"2147483546"
+    assert fields.field("pos").metadata[b"PARQUET:field_id"] == b"2147483545"
     assert sorted(r.id for r in ice.read_iceberg(spark, loc).collect()) == before
     # idempotent: one clean file -> nothing to do
     assert ice.rewrite_position_delete_files(spark, loc) is None

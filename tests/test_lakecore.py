@@ -229,6 +229,13 @@ def test_formats_carry_no_private_copy_of_the_core(module):
         "from ..parallel",
     ):
         assert needle not in src, f"{module} has its own {needle!r}"
+    if module == "deltalog.py":
+        # UniForm reaches Iceberg through its public functions only
+        assert "ice._" not in src
+    else:
+        # one snapshot-commit tail writes every manifest list
+        assert src.count('"manifest-list":') == 1
+        assert src.count("snap-{") == 1
 
 
 # ---------------------------------------------------------------------------
@@ -435,6 +442,118 @@ def test_iceberg_write_lost_race_leaves_no_orphans(spark, tmp_path):
             loc,
         )
     assert _tree(loc) == tree
+
+
+def _ice_two_files(spark, loc):
+    ice.write_iceberg(spark.range(10).selectExpr("id", "id * 10 as v"), loc)
+    ice.write_iceberg(spark.range(10, 20).selectExpr("id", "id * 10 as v"), loc)
+
+
+def _ice_two_deletes(spark, loc):
+    _ice_two_files(spark, loc)
+    ice.delete_where(spark, loc, "id < 2")
+    ice.delete_where(spark, loc, "id > 17")
+
+
+def _ice_wap_staged(spark, loc):
+    _ice_two_files(spark, loc)
+    ice.write_iceberg(
+        spark.range(30, 33).selectExpr("id", "id * 10 as v"), loc, wap_id="w1"
+    )
+
+
+# (set-up, the operation that loses the metadata publish)
+ICEBERG_MAINTENANCE = {
+    "rewrite_data_files": (
+        _ice_two_deletes, lambda spark, loc: ice.rewrite_data_files(spark, loc)
+    ),
+    "rewrite_position_delete_files": (
+        _ice_two_deletes,
+        lambda spark, loc: ice.rewrite_position_delete_files(spark, loc),
+    ),
+    "rewrite_manifests": (
+        _ice_two_files, lambda spark, loc: ice.rewrite_manifests(loc)
+    ),
+    "cherrypick_snapshot": (
+        _ice_wap_staged,
+        lambda spark, loc: ice.cherrypick_snapshot(loc, wap_id="w1"),
+    ),
+}
+
+
+def _rival_metadata(loc) -> str:
+    """Another writer publishes the next metadata version first; returns
+    its path relative to ``loc``."""
+    import shutil
+
+    cur = ice.current_version(loc)
+    rival = os.path.join(loc, "metadata", f"v{cur + 1}.metadata.json")
+    shutil.copy(os.path.join(loc, "metadata", f"v{cur}.metadata.json"), rival)
+    return os.path.relpath(rival, loc)
+
+
+@pytest.mark.parametrize("op", ICEBERG_MAINTENANCE)
+def test_iceberg_maintenance_lost_race_leaves_no_orphans(spark, tmp_path, op):
+    """A maintenance commit or a WAP publish that loses the metadata
+    race unlinks every file it wrote — restaged data or delete files,
+    manifests, the manifest list — and the table reads as before."""
+    loc = str(tmp_path / "t")
+    setup, run = ICEBERG_MAINTENANCE[op]
+    setup(spark, loc)
+    rows = sorted(ice.read_iceberg(spark, loc).collect())
+    tree = _tree(loc)
+    rival = _rival_metadata(loc)
+    with pytest.raises(Exception) as err:
+        run(spark, loc)
+    assert isinstance(err.value, ice.IcebergConcurrentModification)
+    assert _tree(loc) - {rival} == tree
+    assert sorted(ice.read_iceberg(spark, loc).collect()) == rows
+
+
+def test_uniform_mirror_lost_race_leaves_no_orphans(spark, tmp_path):
+    """A Delta commit on a UniForm table lands; its Iceberg mirror loses
+    the metadata race, unlinks the manifests and list it wrote, and the
+    mirror still reads its prior version."""
+    loc = str(tmp_path / "t")
+    dl.write_delta(spark.range(10).selectExpr("id", "id * 10 as v"), loc)
+    dl.enable_uniform(loc)
+    rows = sorted(ice.read_iceberg(spark, loc).collect())
+    meta_tree = _tree(os.path.join(loc, "metadata"))
+    rival = os.path.basename(_rival_metadata(loc))
+    with pytest.raises(RuntimeError, match="UniForm iceberg sync failed") as err:
+        dl.write_delta(spark.range(10, 12).selectExpr("id", "id * 10 as v"), loc)
+    assert isinstance(err.value.__cause__, ice.IcebergConcurrentModification)
+    assert _tree(os.path.join(loc, "metadata")) - {rival} == meta_tree
+    assert sorted(ice.read_iceberg(spark, loc).collect()) == rows
+
+
+def test_concurrent_staging_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Every job a Delta MERGE starts, its pooled staging jobs included,
+    runs in the caller's job group: the group counts the whole call."""
+    loc = str(tmp_path / "t")
+    _delta_table(spark, loc)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker() -> list[int]:
+        group = f"marker-{os.urandom(4).hex()}"
+        sc.setJobGroup(group, "marker")
+        try:
+            spark.range(1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return tracker.getJobIdsForGroup(group)
+
+    before = max(marker())
+    group = f"merge-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "merge")
+    try:
+        DELTA_DML["merge"](spark, loc)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    after = min(marker())
+    started = set(range(before + 1, after))
+    assert started and set(tracker.getJobIdsForGroup(group)) == started
 
 
 def test_iceberg_write_with_undecodable_decimal_stats(spark, tmp_path):

@@ -6,15 +6,23 @@ triggered it (from the Java status API). Job count is the deterministic
 proxy for the per-action latency floor (guide §1.2: remove
 actions/passes before tuning them).
 
-Usage: python tools/job_trace.py <query> [<query> ...] [--sf DIR]
+``--profile K`` also runs the warm run under cProfile and prints its
+top-K functions by cumulative time, which separates driver-side Python
+work from py4j socket waits (JVM execution time shows up as
+socket.recv).
+
+Usage: python tools/job_trace.py <query> [<query> ...] [--sf DIR] [--profile K]
 """
 
 from __future__ import annotations
 
 import argparse
+import cProfile
+import pstats
 import sys
 import time
 import uuid
+from contextlib import nullcontext
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -27,6 +35,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--profile", type=int, metavar="K",
+                    help="print the warm run's cProfile top-K functions")
     args = ap.parse_args()
 
     spark = get_session("job_trace")
@@ -44,9 +54,11 @@ def main() -> None:
         # else in the session cannot enter the trace
         group = f"job_trace-{q}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, f"job_trace {q}")
+        prof = cProfile.Profile() if args.profile else nullcontext()
         try:
             t0 = time.time()
-            fn(spark, args.sf).count()
+            with prof:
+                fn(spark, args.sf).count()
             wall = time.time() - t0
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
@@ -66,6 +78,10 @@ def main() -> None:
                     desc = si.get().name()
                     break
             print(f"  job {j}: stages={len(sids)} {desc}")
+        if args.profile:
+            pstats.Stats(prof, stream=sys.stdout).sort_stats(
+                "cumulative"
+            ).print_stats(args.profile)
 
 
 if __name__ == "__main__":
