@@ -49,6 +49,7 @@ import time
 import uuid
 from contextlib import nullcontext
 from dataclasses import dataclass, field
+from typing import NamedTuple
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -395,27 +396,34 @@ def _read_last_checkpoint(path: str) -> int | None:
         return None
 
 
-def _commit_timestamp(path: str, version: int) -> int:
+def _commit_actions(path: str, version: int) -> list[dict]:
+    """The actions of commit ``version``, in file order."""
+    with open(_commit_path(path, version), encoding="utf-8") as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _commit_timestamp(path: str, version: int, actions=None) -> int:
     """Commit time in epoch-ms: ``commitInfo.inCommitTimestamp`` when the
     commit carries one (the ``inCommitTimestamp`` writer feature —
     PROTOCOL.md § In-Commit Timestamps: once enabled, THIS field is the
     authoritative, monotonic commit time and readers must ignore the
     file's modification time and the legacy ``timestamp`` field, both of
     which storage can rewrite), else ``commitInfo.timestamp``, else file
-    mtime."""
+    mtime. ``actions``: the commit's already-read actions (the file is
+    otherwise read only up to its ``commitInfo``)."""
     p = _commit_path(path, version)
     try:
-        with open(p, encoding="utf-8") as fh:
-            for line in fh:
-                act = json.loads(line)
-                if "commitInfo" in act:
-                    ci = act["commitInfo"]
-                    ict = ci.get("inCommitTimestamp")
-                    if ict is not None:
-                        return int(ict)
-                    ts = ci.get("timestamp")
-                    if ts is not None:
-                        return int(ts)
+        if actions is None:
+            with open(p, encoding="utf-8") as fh:
+                return _commit_timestamp(
+                    path, version, (json.loads(x) for x in fh if x.strip())
+                )
+        for act in actions:
+            ci = act.get("commitInfo")
+            if ci is not None:
+                ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
+                if ts is not None:
+                    return int(ts)
     except OSError:
         pass
     return int(os.path.getmtime(p) * 1000)
@@ -2259,6 +2267,111 @@ def _stage_cdc(
     ]
 
 
+class _Change(NamedTuple):
+    """Rows of one file one commit changed (the Delta change planner's
+    unit). ``change`` is insert/delete, or None for a ``cdc`` file whose
+    rows carry their own ``_change_type``. Positions: those of the
+    ``keep`` deletion vector (every row when None) minus those of
+    ``drop``."""
+
+    change: str | None
+    action: dict  # the add / remove / cdc action
+    keep: dict | None
+    drop: dict | None
+
+
+def _commit_changes(path: str, lo: int, hi: int, use_cdc: bool = True):
+    """THE Delta change rule, per commit ``lo..hi``: yields ``(version,
+    timestamp, actions, changes)``. Spark-free — the batch feed and both
+    stream sources plan with it.
+
+    A commit carrying ``cdc`` actions is described BY those change files
+    alone (with ``use_cdc``); otherwise its dataChange actions derive,
+    against the files live at the parent and their deletion vectors:
+
+    - an add of a path not live at the parent inserts its rows live
+      under its own DV;
+    - an add of a path live at the parent (a DV re-add: RESTORE, a DV
+      DELETE without change files) inserts (parent DV − new DV) and
+      deletes (new DV − parent DV);
+    - a remove whose path the commit does not re-add deletes the rows
+      live at the parent."""
+    live = (
+        {f.path: f.deletion_vector for f in snapshot(path, lo - 1).files}
+        if 0 < lo <= hi else {}
+    )
+    for v in range(max(lo, 0), hi + 1):
+        if not os.path.exists(_commit_path(path, v)):
+            raise ValueError(
+                f"change data feed: commit {v} was cleaned from the log "
+                "(raise the starting version past the last checkpoint)"
+            )
+        acts = _commit_actions(path, v)
+        changes: list[_Change] = []
+        cdc = [a["cdc"] for a in acts if "cdc" in a]
+        if cdc and use_cdc:
+            changes = [_Change(None, c, None, None) for c in cdc]
+        else:
+            readded = set()
+            for a in acts:
+                a = a.get("add")
+                if not a or not a.get("dataChange", True):
+                    continue
+                p, new = unquote(a["path"]), a.get("deletionVector")
+                readded.add(p)
+                if p not in live:
+                    changes.append(_Change("insert", a, None, new))
+                    continue
+                old = live[p]
+                if old != new and old:
+                    changes.append(_Change("insert", a, old, new))
+                if old != new and new:
+                    changes.append(_Change("delete", a, new, old))
+            for a in acts:
+                r = a.get("remove")
+                if r and r.get("dataChange", True):
+                    p = unquote(r["path"])
+                    if p not in readded:
+                        changes.append(_Change(
+                            "delete", r, None,
+                            live.get(p, r.get("deletionVector")),
+                        ))
+        # ``live`` becomes this commit's state, the next one's parent
+        for a in acts:
+            if "remove" in a:
+                live.pop(unquote(a["remove"]["path"]), None)
+            elif "add" in a:
+                live[unquote(a["add"]["path"])] = a["add"].get("deletionVector")
+        yield v, _commit_timestamp(path, v, acts), acts, changes
+
+
+def _dv_minus(payload, table_path: str) -> set[int]:
+    """Positions of deletion vector ``payload[0]`` minus those of
+    ``payload[1]`` (None: nothing to subtract)."""
+    keep, drop = payload
+    out = dv_positions(keep, table_path)
+    return out - dv_positions(drop, table_path) if drop else out
+
+
+def _change_rows(spark, path: str, c: _Change, scan: DataFrame) -> DataFrame:
+    """Narrow a one-file ``scan`` to the rows ``c`` changed: a semi-join
+    on the ``keep`` positions, an anti-join on the ``drop`` positions."""
+    if c.keep is None and c.drop is None:
+        return scan
+    scan = lakecore.with_lineage(scan, pos=True)
+    name = os.path.basename(unquote(c.action["path"]))
+    decode = functools.partial(_dv_minus, table_path=path)
+    if c.keep is None:
+        dead = lakecore.dead_positions(spark, [(name, (c.drop, None), 0)], decode)
+        out = lakecore.subtract_positions(
+            scan, dead, int(c.drop.get("cardinality", 0))
+        )
+    else:
+        rows = lakecore.dead_positions(spark, [(name, (c.keep, c.drop), 0)], decode)
+        out = scan.join(F.broadcast(rows), ["__file_name", "__pos"], "left_semi")
+    return out.drop("__file_name", "__pos")
+
+
 def table_changes(
     spark: SparkSession,
     path: str,
@@ -2281,11 +2394,8 @@ def table_changes(
     a later change restores the original bytes). One window pass over
     O(change) rows keyed on the row content; no second log replay.
 
-    Per the spec's reader rule: a commit carrying ``cdc`` actions is
-    described BY those change files alone (our DELETE/UPDATE/MERGE
-    commits write them); commits without cdc derive — dataChange adds
-    are inserts, dataChange removes are deletes whose file contents are
-    re-read (pre-vacuum, exactly like the jar)."""
+    The changes are :func:`_commit_changes`'s; removed files are
+    re-read pre-vacuum, exactly like the jar."""
     latest = latest_version(path)
     hi = latest if ending_version is None else min(ending_version, latest)
     # the whole range projects onto the END version's schema; renames and
@@ -2301,26 +2411,16 @@ def table_changes(
     }
     end_types = {f.name: f.dataType for f in end_snap.schema.fields}
     out: DataFrame | None = None
-    for v in range(max(starting_version, 0), hi + 1):
-        cp = _commit_path(path, v)
-        if not os.path.exists(cp):
-            raise ValueError(
-                f"change data feed: commit {v} was cleaned from the log "
-                "(raise starting_version past the last checkpoint)"
-            )
-        acts = [json.loads(x) for x in open(cp, encoding="utf-8") if x.strip()]
-        ts = next(
-            (a["commitInfo"].get("inCommitTimestamp",
-                                 a["commitInfo"].get("timestamp"))
-             for a in acts if "commitInfo" in a), None,
-        )
+    for v, ts, _acts, changes in _commit_changes(path, starting_version, hi):
+        if not changes:
+            continue
         snap_v = snapshot(path, v)
         ptypes = {f.name: f.dataType for f in snap_v.schema.fields}
         names = [f.name for f in snap_v.schema.fields]
         phys_of = snap_v.physical_of
 
-        cdc = [a["cdc"] for a in acts if "cdc" in a]
         pieces: list[DataFrame] = []
+        cdc = [c.action for c in changes if c.change is None]
         if cdc:
             paths = [os.path.join(path, unquote(c["path"])) for c in cdc]
             cdf = spark.read.parquet(*paths)
@@ -2332,47 +2432,33 @@ def table_changes(
                     "_change_type",
                 )
             )
-        else:
-            adds = [a["add"] for a in acts
-                    if "add" in a and a["add"].get("dataChange", True)]
-            removes = [a["remove"] for a in acts
-                       if "remove" in a
-                       and a["remove"].get("dataChange", True)]
-
-            def _with_parts(files, change):
-                dfs = []
-                for f in files:
-                    df = spark.read.schema(snap_v.physical_data_schema).parquet(
-                        os.path.join(path, unquote(f["path"]))
-                    )
-                    df = df.select(
-                        *[
-                            F.col(phys_of[fd.name]).alias(fd.name)
-                            for fd in snap_v.schema.fields
-                            if fd.name not in snap_v.partition_columns
-                        ]
-                    )
-                    for c in snap_v.partition_columns:
-                        df = df.withColumn(
-                            c,
-                            F.lit(
-                                _cast_partition_literal(
-                                    snap_v.pv_get(
-                                        f.get("partitionValues") or {}, c
-                                    ),
-                                    ptypes[c],
-                                )
-                            ).cast(ptypes[c]),
+        for c in changes:
+            if c.change is None:
+                continue
+            f = c.action
+            df = spark.read.schema(snap_v.physical_data_schema).parquet(
+                os.path.join(path, unquote(f["path"]))
+            )
+            df = _change_rows(spark, path, c, df).select(
+                *[
+                    F.col(phys_of[fd.name]).alias(fd.name)
+                    for fd in snap_v.schema.fields
+                    if fd.name not in snap_v.partition_columns
+                ]
+            )
+            for col in snap_v.partition_columns:
+                df = df.withColumn(
+                    col,
+                    F.lit(
+                        _cast_partition_literal(
+                            snap_v.pv_get(f.get("partitionValues") or {}, col),
+                            ptypes[col],
                         )
-                    dfs.append(
-                        df.select(*names).withColumn(
-                            "_change_type", F.lit(change)
-                        )
-                    )
-                return dfs
-
-            pieces.extend(_with_parts(adds, "insert"))
-            pieces.extend(_with_parts(removes, "delete"))
+                    ).cast(ptypes[col]),
+                )
+            pieces.append(
+                df.select(*names).withColumn("_change_type", F.lit(c.change))
+            )
         # project this commit's piece (snap_v logical names) onto the END
         # schema: physicalName is the join key across renames
         v_end_name = {
@@ -2410,8 +2496,6 @@ def table_changes(
         )
         out = spark.createDataFrame([], empty)
     if net_changes:
-        from .iceberg import _changelog_net_changes
-
         meta_cols = {"_change_type", "_commit_version", "_commit_timestamp"}
         data_cols = [c for c in out.columns if c not in meta_cols]
         out = out.withColumn(
@@ -2420,9 +2504,8 @@ def table_changes(
             .when(F.col("_change_type") == "update_postimage", "insert")
             .otherwise(F.col("_change_type")),
         )
-        out = _changelog_net_changes(
-            out, data_cols,
-            ordinal_col="_commit_version", tie_col="_commit_timestamp",
+        out = lakecore.net_changes(
+            out, data_cols, "_commit_version", "_commit_timestamp"
         )
     return out
 
@@ -4505,27 +4588,21 @@ def _delta_change_range(
     added: set = set()
     removed: set = set()
     for v in range(from_v + 1, to_v + 1):
-        p = _commit_path(path, v)
-        if not os.path.exists(p):
+        if not os.path.exists(_commit_path(path, v)):
             return None
-        with open(p, encoding="utf-8") as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line)
-                if "metaData" in act:
-                    return None
-                if "add" in act:
-                    fp = unquote(act["add"]["path"])
-                    added.add(fp)
-                    # deliberately NOT removed.discard(fp): a re-added
-                    # path stays in `removed` so the prior mirror's
-                    # entry (if any) is dropped before the new one lands
-                elif "remove" in act:
-                    fp = unquote(act["remove"]["path"])
-                    removed.add(fp)
-                    added.discard(fp)
+        for act in _commit_actions(path, v):
+            if "metaData" in act:
+                return None
+            if "add" in act:
+                fp = unquote(act["add"]["path"])
+                added.add(fp)
+                # deliberately NOT removed.discard(fp): a re-added
+                # path stays in `removed` so the prior mirror's
+                # entry (if any) is dropped before the new one lands
+            elif "remove" in act:
+                fp = unquote(act["remove"]["path"])
+                removed.add(fp)
+                added.discard(fp)
     return added, removed
 
 
@@ -4639,21 +4716,13 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
         p = _commit_path(path, v)
         if not os.path.exists(p):
             continue
-        op, params, ts = None, None, None
-        n_add = n_remove = 0
-        with open(p, encoding="utf-8") as fh:
-            for line in fh:
-                act = json.loads(line)
-                if "commitInfo" in act:
-                    ci = act["commitInfo"]
-                    op = ci.get("operation")
-                    params = json.dumps(ci.get("operationParameters") or {})
-                    # ICT is the authoritative commit time once enabled
-                    ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
-                elif "add" in act:
-                    n_add += 1
-                elif "remove" in act:
-                    n_remove += 1
+        acts = _commit_actions(path, v)
+        ci = next((a["commitInfo"] for a in acts if "commitInfo" in a), {})
+        op = ci.get("operation")
+        params = json.dumps(ci.get("operationParameters") or {}) if ci else None
+        ts = _commit_timestamp(path, v, acts)
+        n_add = sum("add" in a for a in acts)
+        n_remove = sum("remove" in a for a in acts)
         rows.append((v, ts, op, params, n_add, n_remove))
     return local_relation(spark, 
         rows,
@@ -5185,309 +5254,119 @@ def clean_log(
 # streaming source
 # ---------------------------------------------------------------------------
 
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource  # noqa: E402
 
 
-class _DeltaFilePartition(InputPartition):
-    def __init__(self, abs_path: str, partition_values: dict):
-        self.abs_path = abs_path
-        self.partition_values = partition_values
-
-
-def _paced_latest(reader, head: int) -> dict:
-    """Rate-limited latestOffset shared by the log stream sources: with
-    ``maxVersionsPerTrigger=N`` each micro-batch advances at most N
-    versions past the last offset THIS reader handed out (re-synced to
-    the durably committed offset in ``commit()``, so a failed batch
-    never skips versions). Without the option the head returns directly.
-    The point at scale: a stream started with startingVersion=0 on a
-    100k-commit table otherwise plans its ENTIRE history as one giant
-    first micro-batch — pacing bounds every batch's task count and
-    checkpoint size.
-
-    CAVEAT (Python DataSourceStreamReader API): there is no admission
-    control (reportLatestOffset), so availableNow /
-    processAllAvailable may return between paced batches — a
-    continuously-running stream drains fully; for one-shot drains use
-    :func:`spark_etl_framework_spark.streaming.drain_until_current`,
-    which polls the running query against the table's metadata head
-    (round 13 — the caveat shipped as a tested utility)."""
-    m = reader._max_per_trigger
-    if not m:
-        return {"version": head}
-    base = reader._paced_pos
-    if base is None:
-        base = int(reader.initialOffset()["version"])
-    nxt = min(head, base + m)
-    reader._paced_pos = nxt
-    return {"version": nxt}
-
-
-class DeltaLogStreamReader(DataSourceStreamReader):
+class DeltaLogStreamReader(lakecore.ChangeStreamReader):
     """Micro-batch source whose offsets are log versions — delta-spark's
     own streaming model (reference: etl/source/DeltaStreamReader.scala:
-    14,41-57). A batch is every ``dataChange`` add-file in the version
-    slice ``(start, end]``, one task per file; ``startingVersion``
-    (default 0) replays history, ``startingVersion=latest`` tails."""
+    14,41-57). A batch is the inserts :func:`_commit_changes` plans for
+    the version slice ``(start, end]`` from dataChange adds (rows live
+    under the add's own deletion vector), one task per file;
+    ``startingVersion`` (default 0) replays history,
+    ``startingVersion=latest`` tails, ``maxVersionsPerTrigger`` paces."""
 
-    def __init__(self, options):
+    cdf = False
+
+    def __init__(self, options, schema: T.StructType):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("delta stream source requires a path option")
-        sv = options.get("startingversion", options.get("startingVersion", "0"))
-        self._starting = sv
+        self._starting = lakecore.stream_option(options, "startingVersion", "0")
         # delta-spark's contract: a streaming source requires append-only
         # commits; a version with data-changing removes (UPDATE / DELETE /
         # MERGE / overwrite) fails the stream unless skipChangeCommits
         # skips those versions wholesale
         self._skip_change_commits = str(
-            options.get("skipchangecommits",
-                        options.get("skipChangeCommits", "false"))
+            lakecore.stream_option(options, "skipChangeCommits", "false")
         ).lower() == "true"
         snap = snapshot(self._path)
-        self._names = [f.name for f in snap.schema.fields]
-        self._ptypes = {f.name: f.dataType for f in snap.schema.fields}
         #: logical -> physical parquet column (identity unless mapped)
         self._phys = snap.physical_of
-        # column defaults (round 14, parity with the batch scan): a file
-        # that physically lacks a late-added column emits EXISTS_DEFAULT
-        # (or null when the column has no default) — the footer is the
-        # presence authority here because each task opens its own file
-        self._defaults = _exists_defaults(snap.schema)
-        if self._defaults:
-            _require_defaults_feature(snap, self._path, "stream")
-        self._max_per_trigger = int(
-            options.get("maxversionspertrigger",
-                        options.get("maxVersionsPerTrigger", 0)) or 0
-        )
-        self._paced_pos = None
-
-    def initialOffset(self):
-        if str(self._starting).lower() == "latest":
-            return {"version": latest_version(self._path)}
-        return {"version": int(self._starting) - 1}
-
-    def latestOffset(self):
-        return _paced_latest(self, latest_version(self._path))
-
-    def partitions(self, start, end):
-        lo, hi = int(start["version"]), int(end["version"])
-        parts = []
-        for v in range(max(lo + 1, 0), hi + 1):
-            acts = []
-            with open(_commit_path(self._path, v), encoding="utf-8") as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        acts.append(json.loads(line))
-            # dataChange=false removes (OPTIMIZE rewrites) are fine; a
-            # data-changing remove means rows were updated or deleted
-            changed = any(
-                a.get("remove", {}).get("dataChange", True)
-                for a in acts
-                if "remove" in a
-            )
-            if changed:
-                if self._skip_change_commits:
-                    continue  # the version skips wholesale, like the jar
-                raise ValueError(
-                    f"delta stream source: version {v} contains "
-                    "data-changing removes (UPDATE/DELETE/MERGE/overwrite)"
-                    " — streaming requires append-only commits; set "
-                    "skipChangeCommits=true to skip such versions"
-                )
-            for act in acts:
-                a = act.get("add")
-                if a and a.get("dataChange", True):
-                    parts.append(
-                        _DeltaFilePartition(
-                            os.path.join(self._path, unquote(a["path"])),
-                            a.get("partitionValues") or {},
-                        )
-                    )
-        return parts
-
-    def read(self, partition):
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(partition.abs_path)
-        cols = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
-        # schema columns the file physically lacks: EXISTS_DEFAULT (or
-        # null for plain late-added columns) — parity with read_delta
-        for c in self._names:
-            phys = self._phys.get(c, c)
-            if phys not in cols:
-                lit = self._defaults.get(c)
-                cols[phys] = [
-                    _default_python_value(lit) if lit is not None else None
-                ] * tbl.num_rows
-        # add-action partitionValues key by PHYSICAL name on mapped tables
-        pvals = {}
-        for c in self._names:
-            phys = self._phys.get(c, c)
-            if phys in partition.partition_values:
-                pvals[c] = _cast_partition_literal(
-                    partition.partition_values[phys], self._ptypes[c]
-                )
-            elif c in partition.partition_values:
-                pvals[c] = _cast_partition_literal(
-                    partition.partition_values[c], self._ptypes[c]
-                )
-        for i in range(tbl.num_rows):
-            yield tuple(
-                pvals[c] if c in pvals else cols[self._phys.get(c, c)][i]
-                for c in self._names
-            )
-
-    def commit(self, end) -> None:
-        # re-sync pacing to the durably committed offset: a failed or
-        # replayed batch can never skip versions
-        self._paced_pos = int(end["version"])
-        return None
-
-
-class _DeltaCdfPartition(InputPartition):
-    def __init__(self, kind: str, abs_path: str, partition_values: dict,
-                 version: int, ts: int):
-        self.kind = kind
-        self.abs_path = abs_path
-        self.partition_values = partition_values
-        self.version = version
-        self.ts = ts
-
-
-class DeltaCdfStreamReader(DataSourceStreamReader):
-    """STREAMING Change Data Feed — delta-spark's
-    ``readChangeFeed=true`` streaming source: offsets are log versions,
-    each batch emits the version slice's row-level changes typed as
-    ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``, one
-    task per change/data file. The same reader rule as the batch
-    ``table_changes``: a commit carrying ``cdc`` actions is described by
-    those change files ALONE; commits without cdc derive — dataChange
-    adds are inserts, dataChange removes are deletes whose (pre-vacuum)
-    file contents re-read. The CDC-pipeline shape at 100 TB: downstream
-    incremental consumers read only each commit's change bytes, never
-    the table."""
-
-    def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("delta CDF stream source requires a path option")
-        sv = options.get("startingversion", options.get("startingVersion", "0"))
-        self._starting = sv
-        snap = snapshot(self._path)
-        self._names = [f.name for f in snap.schema.fields]
         self._ptypes = {f.name: f.dataType for f in snap.schema.fields}
-        self._phys = snap.physical_of
-        self._partition_columns = list(snap.partition_columns)
-        self._max_per_trigger = int(
-            options.get("maxversionspertrigger",
-                        options.get("maxVersionsPerTrigger", 0)) or 0
+        # a file that physically lacks a late-added column reads its
+        # EXISTS_DEFAULT (parity with read_delta); the change feed reads
+        # null instead — the CDF projection rule table_changes applies
+        defaults = {}
+        if not self.cdf:
+            defaults = {
+                c: _default_python_value(lit)
+                for c, lit in _exists_defaults(snap.schema).items()
+            }
+            if defaults:
+                _require_defaults_feature(snap, self._path, "stream")
+        super().__init__(
+            schema, defaults,
+            int(lakecore.stream_option(options, "maxVersionsPerTrigger", 0) or 0),
         )
-        self._paced_pos = None
 
     def initialOffset(self):
         if str(self._starting).lower() == "latest":
             return {"version": latest_version(self._path)}
         return {"version": int(self._starting) - 1}
 
-    def latestOffset(self):
-        return _paced_latest(self, latest_version(self._path))
+    def head(self) -> int:
+        return latest_version(self._path)
+
+    def _unit(self, c: _Change, v: int, ts: int) -> lakecore.ChangeUnit:
+        pv = c.action.get("partitionValues") or {}
+        constants = {
+            n: _cast_partition_literal(
+                pv.get(self._phys.get(n, n), pv.get(n)), t
+            )
+            for n, t in self._ptypes.items()
+            if self._phys.get(n, n) in pv or n in pv
+        }
+        tags = {}
+        if self.cdf:
+            tags = {"_commit_version": v, "_commit_timestamp": ts}
+            if c.change is not None:
+                tags = {"_change_type": c.change, **tags}
+
+        def dv(desc):
+            return [(dv_positions, (desc, self._path))] if desc else []
+
+        return lakecore.ChangeUnit(
+            os.path.join(self._path, unquote(c.action["path"])),
+            tags=tags, constants=constants, renames=self._phys,
+            keep=None if c.keep is None else dv(c.keep), drop=dv(c.drop),
+        )
 
     def partitions(self, start, end):
-        lo, hi = int(start["version"]), int(end["version"])
-        parts: list[_DeltaCdfPartition] = []
-        for v in range(max(lo + 1, 0), hi + 1):
-            cp = _commit_path(self._path, v)
-            if not os.path.exists(cp):
-                raise ValueError(
-                    f"delta CDF stream: commit {v} was cleaned from the "
-                    "log (raise startingVersion past the last checkpoint)"
-                )
-            acts = [json.loads(x) for x in open(cp, encoding="utf-8")
-                    if x.strip()]
-            ts = _commit_timestamp(self._path, v)
-            cdc = [a["cdc"] for a in acts if "cdc" in a]
-            if cdc:
-                parts.extend(
-                    _DeltaCdfPartition(
-                        "cdc",
-                        os.path.join(self._path, unquote(c["path"])),
-                        {}, v, ts,
+        parts = []
+        for v, ts, acts, changes in _commit_changes(
+            self._path, int(start["version"]) + 1, int(end["version"]),
+            use_cdc=self.cdf,
+        ):
+            if not self.cdf:
+                # dataChange=false removes (OPTIMIZE rewrites) are fine;
+                # a data-changing remove means rows were updated or deleted
+                if any(a["remove"].get("dataChange", True)
+                       for a in acts if "remove" in a):
+                    if self._skip_change_commits:
+                        continue  # the version skips wholesale, like the jar
+                    raise ValueError(
+                        f"delta stream source: version {v} contains "
+                        "data-changing removes (UPDATE/DELETE/MERGE/"
+                        "overwrite) — streaming requires append-only "
+                        "commits; set skipChangeCommits=true to skip such "
+                        "versions"
                     )
-                    for c in cdc
-                )
-                continue
-            for a in acts:
-                if "add" in a and a["add"].get("dataChange", True):
-                    parts.append(
-                        _DeltaCdfPartition(
-                            "insert",
-                            os.path.join(
-                                self._path, unquote(a["add"]["path"])
-                            ),
-                            a["add"].get("partitionValues") or {}, v, ts,
-                        )
-                    )
-                elif "remove" in a and a["remove"].get("dataChange", True):
-                    parts.append(
-                        _DeltaCdfPartition(
-                            "delete",
-                            os.path.join(
-                                self._path, unquote(a["remove"]["path"])
-                            ),
-                            a["remove"].get("partitionValues") or {}, v, ts,
-                        )
-                    )
+                changes = [c for c in changes if c.change == "insert"]
+            parts += [self._unit(c, v, ts) for c in changes]
         return parts
 
-    def read(self, partition):
-        import pyarrow.parquet as pq
 
-        tbl = pq.read_table(partition.abs_path)
-        cols = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
-        # columns added AFTER this commit read NULL for its changes —
-        # the batch table_changes rule (round 14: previously a KeyError
-        # on any late-added column, defaulted or not)
-        for c in self._names:
-            phys = self._phys.get(c, c)
-            if phys not in cols:
-                cols[phys] = [None] * tbl.num_rows
-        if partition.kind == "cdc":
-            # change files carry EVERY column inline (physical names on
-            # mapped tables; _change_type is CDF metadata, never mapped)
-            ct = cols["_change_type"]
-            for i in range(tbl.num_rows):
-                yield tuple(
-                    cols[self._phys.get(c, c)][i] for c in self._names
-                ) + (ct[i], partition.version, partition.ts)
-            return
-        pvals = {}
-        for c in self._names:
-            phys = self._phys.get(c, c)
-            if phys in partition.partition_values:
-                pvals[c] = _cast_partition_literal(
-                    partition.partition_values[phys], self._ptypes[c]
-                )
-            elif c in partition.partition_values:
-                pvals[c] = _cast_partition_literal(
-                    partition.partition_values[c], self._ptypes[c]
-                )
-        for i in range(tbl.num_rows):
-            yield tuple(
-                pvals[c] if c in pvals else cols[self._phys.get(c, c)][i]
-                for c in self._names
-            ) + (partition.kind, partition.version, partition.ts)
+class DeltaCdfStreamReader(DeltaLogStreamReader):
+    """STREAMING Change Data Feed — delta-spark's ``readChangeFeed=true``
+    streaming source: offsets are log versions, each batch emits the
+    version slice's row-level changes (:func:`_commit_changes`, the
+    batch ``table_changes`` rule) typed as ``_change_type`` /
+    ``_commit_version`` / ``_commit_timestamp``, one task per change or
+    data file. The CDC-pipeline shape at 100 TB: downstream incremental
+    consumers read only each commit's change bytes, never the table."""
 
-    def commit(self, end) -> None:
-        # re-sync pacing to the durably committed offset: a failed or
-        # replayed batch can never skip versions
-        self._paced_pos = int(end["version"])
-        return None
+    cdf = True
 
 
 class DeltaLogDataSource(DataSource):
@@ -5520,5 +5399,5 @@ class DeltaLogDataSource(DataSource):
 
     def streamReader(self, schema):
         if self._cdf():
-            return DeltaCdfStreamReader(self.options)
-        return DeltaLogStreamReader(self.options)
+            return DeltaCdfStreamReader(self.options, schema)
+        return DeltaLogStreamReader(self.options, schema)

@@ -46,6 +46,7 @@ import re
 import time
 import uuid
 from contextlib import nullcontext
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +56,7 @@ from ..caching import persisted
 from ..functions.avro_ocf import read_ocf, write_ocf
 from ..localrel import local_relation
 from . import lakecore
+from .roaring import read_blob
 
 
 class IcebergConcurrentModification(RuntimeError):
@@ -1089,12 +1091,15 @@ def _stage_data_entries(
     schema: T.StructType,
     spec: list[dict],
     snapshot_id: int,
-    ice_fields: list[dict] | None = None,
+    ice_fields: list[dict],
 ) -> list[dict]:
     """Stage ``df`` with Spark's distributed writer, move the parquet
     files under ``data/`` with fresh uuid names, return their ADDED
     manifest entries (typed partition tuples from the hive staging
-    dirs).
+    dirs). Bounds and the stamped parquet field ids key by the TABLE's
+    field ids (``ice_fields``, the table schema's fields): ids are never
+    reused, so after a drop they are not positional, and identity
+    partition columns hold ids of their own.
 
     HIDDEN PARTITIONING (round 9): identity entries partition by the
     source column (excluded from the data files, reattached on read —
@@ -1120,26 +1125,14 @@ def _stage_data_entries(
     }
     for c in identity_cols:
         result_dts[c] = schema[c].dataType
-    if ice_fields is not None:
-        # the TABLE's real field ids (post-drop they are NOT positional:
-        # ids are never reused, so the positional fallback below would
-        # mis-key every bound after the gap) — round 14
-        field_ids = {
-            f["name"]: f["id"] for f in ice_fields
-            if f["name"] not in identity_cols
-        }
-        ice_types = {
-            f["name"]: f["type"] for f in ice_fields
-            if f["name"] not in identity_cols
-        }
-    else:
-        ice = spark_to_iceberg_schema(
-            T.StructType(
-                [f for f in schema.fields if f.name not in identity_cols]
-            )
-        )
-        field_ids = {f["name"]: f["id"] for f in ice["fields"]}
-        ice_types = {f["name"]: f["type"] for f in ice["fields"]}
+    field_ids = {
+        f["name"]: f["id"] for f in ice_fields
+        if f["name"] not in identity_cols
+    }
+    ice_types = {
+        f["name"]: f["type"] for f in ice_fields
+        if f["name"] not in identity_cols
+    }
     # stamp the spec's parquet field ids into the data files (round 14):
     # spark.sql.parquet.fieldId.write.enabled honors the column metadata,
     # making every new file exactly id-resolvable after a future RENAME
@@ -1379,13 +1372,14 @@ def write_iceberg(
         # bounds drive planning-time skipping from the first commit
         df = df.sortWithinPartitions(*sort_by)
 
+    # a new table's schema numbers every column, identity partition
+    # sources included — the ids its first commit's bounds key by
+    ice_schema = spark_to_iceberg_schema(schema) if meta is None else meta["schema"]
     entries = _stage_data_entries(
-        df, loc, schema, spec_entries, snapshot_id,
-        ice_fields=meta["schema"]["fields"] if meta else None,
+        df, loc, schema, spec_entries, snapshot_id, ice_schema["fields"]
     )
 
     if meta is None:
-        ice_schema = spark_to_iceberg_schema(schema)
         field_ids = {f["name"]: f["id"] for f in ice_schema["fields"]}
         meta = _new_table_meta(loc, ice_schema, [
             # source-id is the SOURCE COLUMN's schema field id (spec), not
@@ -1830,8 +1824,6 @@ def _dv_positions(refs) -> set[int]:
     """Positions of the DV blob ``refs[0]``, minus those of its
     predecessor ``refs[1]`` when one is given (v3 replacement rule: a
     new DV is a superset of the one it replaces). Runs executor-side."""
-    from .roaring import read_blob
-
     cur, prior = refs
     positions = read_blob(*cur)
     return positions - read_blob(*prior) if prior else positions
@@ -3348,6 +3340,164 @@ def read_iceberg_incremental(
     return df.select(*[F.col(f.name) for f in schema.fields])
 
 
+class _Change(NamedTuple):
+    """Rows of one data file one snapshot changed (the Iceberg change
+    planner's unit): the rows named by the ``keep`` delete entries
+    (every row when None) minus those the ``drop`` entries name."""
+
+    change: str  # insert | delete
+    ordinal: int
+    sid: int
+    file: dict  # the data file's manifest entry
+    keep: list | None
+    drop: list
+
+
+def _del_key(d: dict) -> tuple:
+    """Identity of a delete entry: a v3 commit packs many deletion
+    vectors into ONE puffin file path, so the blob offset is part of it."""
+    return (d["file_path"], d.get("content_offset"))
+
+
+def _shape(c: _Change) -> tuple:
+    """How a unit selects its rows — ``(None, None)`` by file,
+    ``("dv", None)`` / ``("pos", None)`` by a deletion vector /
+    position-delete files, ``("eq", path)`` by one equality-delete file."""
+    if c.keep is None:
+        return None, None
+    d = c.keep[0]
+    if int(d.get("content", 0)) == 2:
+        return "eq", d["file_path"]
+    return ("dv" if d.get("referenced_data_file") else "pos"), None
+
+
+def _path_bounds(d: dict):
+    """The ``file_path`` lower/upper bounds of a position-delete entry
+    (the reserved field 2147483546), or None when it carries none."""
+    lo = next((e["value"] for e in (d.get("lower_bounds") or [])
+               if e["key"] == _POS_DELETE_PATH_FID), None)
+    hi = next((e["value"] for e in (d.get("upper_bounds") or [])
+               if e["key"] == _POS_DELETE_PATH_FID), None)
+    if lo is None or hi is None:
+        return None
+    return bytes(lo).decode("utf-8"), bytes(hi).decode("utf-8")
+
+
+def _named_in_files(boundless: list[dict]) -> set[str]:
+    """Data-file basenames the given position-delete files name, read
+    with pyarrow (the stream plans in a worker with no session)."""
+    import pyarrow.parquet as pq
+
+    return {
+        os.path.basename(p)
+        for d in boundless
+        for p in pq.read_table(d["file_path"], columns=["file_path"])
+        .column("file_path").unique().to_pylist()
+    }
+
+
+def _plan_changes(meta: dict, window: list, named_by=_named_in_files) -> list[_Change]:
+    """THE Iceberg change rule over ``window`` — ``(ordinal, snapshot)``
+    pairs. Spark-free: the batch changelog and the stream source plan
+    with it. ``replace`` snapshots (compaction, manifest and delete-file
+    rewrites) change layout, not rows, and are skipped. Against the
+    parent snapshot (none for the first):
+
+    - an added data file inserts every row;
+    - a removed data file deletes its rows live at the parent (the
+      parent's position deletes, its deletion vector and its strictly
+      newer equality deletes drop the dead ones);
+    - a new deletion vector deletes (new DV − prior DV) of its file;
+    - new position-delete files delete the positions they name in the
+      parent's files — victims found from the entries' ``file_path``
+      bounds (a range: a victim may be named by none, which the
+      position semi-join settles), and by ``named_by`` for delete files
+      without bounds;
+    - a new equality-delete file deletes the rows of strictly-older
+      files whose key it holds (minus their dead positions).
+
+    New delete entries are those whose (path, blob offset) the parent
+    lacks. Equality entries gain ``__keys``, their current column
+    names."""
+    snaps_by_id = {s["snapshot-id"]: s for s in meta.get("snapshots", [])}
+    name_of = {f["id"]: f["name"] for f in _current_ice_schema(meta)["fields"]}
+    out: list[_Change] = []
+    for ordinal, s in window:
+        if (s.get("summary") or {}).get("operation", "append") == "replace":
+            continue
+        sid = s["snapshot-id"]
+        cur_data, cur_dels = _scan_snapshot(meta, s)
+        parent = snaps_by_id.get(s.get("parent-snapshot-id"))
+        par_data, par_dels = (
+            _scan_snapshot(meta, parent) if parent is not None else ([], [])
+        )
+        for d in cur_dels + par_dels:
+            if int(d.get("content", 0)) == 2:
+                d["__keys"] = [name_of[i] for i in d.get("equality_ids") or []]
+        par_pos = [d for d in par_dels if int(d.get("content", 0)) == 1]
+        par_dv = {
+            d["referenced_data_file"]: d
+            for d in par_pos if d.get("referenced_data_file")
+        }
+        par_files = [d for d in par_pos if not d.get("referenced_data_file")]
+
+        def dead(f, eq=True):
+            """The parent's delete entries that can name rows of ``f``."""
+            out = par_files + (
+                [par_dv[f["file_path"]]] if f["file_path"] in par_dv else []
+            )
+            if eq:
+                out += [
+                    d for d in par_dels
+                    if int(d.get("content", 0)) == 2 and d["__keys"]
+                    and int(d.get("__seq", 0)) > int(f.get("__seq", 0))
+                ]
+            return out
+
+        cur_paths = {f["file_path"] for f in cur_data}
+        par_paths = {f["file_path"] for f in par_data}
+        out += [
+            _Change("insert", ordinal, sid, f, None, [])
+            for f in cur_data if f["file_path"] not in par_paths
+        ]
+        out += [
+            _Change("delete", ordinal, sid, f, None, dead(f))
+            for f in par_data if f["file_path"] not in cur_paths
+        ]
+        par_keys = {_del_key(d) for d in par_dels}
+        new_dels = [d for d in cur_dels if _del_key(d) not in par_keys]
+        by_path = {f["file_path"]: f for f in par_data}
+        for d in new_dels:
+            ref = d.get("referenced_data_file")
+            if int(d.get("content", 0)) == 1 and ref in by_path:
+                prior = [par_dv[ref]] if ref in par_dv else []
+                out.append(_Change("delete", ordinal, sid, by_path[ref], [d], prior))
+        pos_new = [
+            d for d in new_dels
+            if int(d.get("content", 0)) == 1 and not d.get("referenced_data_file")
+        ]
+        bounded = [(d, _path_bounds(d)) for d in pos_new]
+        boundless = [d for d, b in bounded if b is None]
+        named = named_by(boundless) if boundless else set()
+        for f in par_data:
+            keep = [
+                d for d, b in bounded
+                if (b is not None and b[0] <= f["file_path"] <= b[1])
+                or (b is None and os.path.basename(f["file_path"]) in named)
+            ]
+            if keep:
+                out.append(_Change("delete", ordinal, sid, f, keep, []))
+        for d in new_dels:
+            if int(d.get("content", 0)) != 2 or not d["__keys"]:
+                continue
+            out += [
+                _Change("delete", ordinal, sid, f, [d], dead(f, eq=False))
+                for f in par_data
+                if int(f.get("__seq", 0)) < int(d.get("__seq", 0))
+            ]
+    return out
+
+
 def read_iceberg_changelog(
     spark: SparkSession,
     loc: str,
@@ -3385,7 +3535,8 @@ def read_iceberg_changelog(
     scans.
 
     Per ancestor snapshot, the LOGICAL diff is computed from driver-side
-    metadata: ``replace`` snapshots (compaction, manifest rewrites,
+    metadata by :func:`_plan_changes` (the stream source's planner too):
+    ``replace`` snapshots (compaction, manifest rewrites,
     delete-file compaction) are SKIPPED — they change layout, not rows;
     appends contribute their added files as inserts; row-delta commits
     contribute their added delete files as deletes — position deletes
@@ -3465,6 +3616,18 @@ def read_iceberg_changelog(
             F.lit(sid).cast("long").alias("_commit_snapshot_id"),
         )
 
+    def _named_by(boundless: list[dict]) -> set[str]:
+        # ONE collect job over the delete files that carry no file_path
+        # bounds (O(affected files) driver rows)
+        return {
+            r[0]
+            for r in spark.read.schema("file_path string, pos long")
+            .parquet(*[d["file_path"] for d in boundless])
+            .select(F.element_at(F.split("file_path", "/"), -1))
+            .distinct()
+            .collect()
+        }
+
     out_schema = T.StructType(
         list(schema.fields)
         + [
@@ -3473,162 +3636,52 @@ def read_iceberg_changelog(
             T.StructField("_commit_snapshot_id", T.LongType(), False),
         ]
     )
+    # the units of one snapshot and one shape build ONE relation: every
+    # insert file, every removed file, the victims of the new deletion
+    # vectors, the victims of the new position-delete files, and the
+    # strictly-older files of each equality-delete file
+    groups: dict[tuple, list[_Change]] = {}
+    for c in _plan_changes(meta, list(enumerate(reversed(chain))), _named_by):
+        groups.setdefault((c.ordinal, c.sid, c.change, *_shape(c)), []).append(c)
     parts: list[DataFrame] = []
-    for ordinal, s in enumerate(reversed(chain)):  # oldest → newest
-        sid = s["snapshot-id"]
-        op = (s.get("summary") or {}).get("operation", "append")
-        if op == "replace":
-            continue  # layout maintenance: no logical row change
-        parent_id = s.get("parent-snapshot-id")
-        parent = snaps_by_id.get(parent_id) if parent_id is not None else None
-        cur_data, cur_dels = _scan_snapshot(meta, s)
-        if parent is not None:
-            par_data, par_dels = _scan_snapshot(meta, parent)
-        else:
-            par_data, par_dels = [], []
-        cur_paths = {f["file_path"] for f in cur_data}
-        par_paths = {f["file_path"] for f in par_data}
-
-        added_files = [f for f in cur_data if f["file_path"] not in par_paths]
-        removed_files = [f for f in par_data if f["file_path"] not in cur_paths]
-        if added_files:
-            parts.append(_emit(_scan_files(added_files, False), "insert",
-                               ordinal, sid))
-        if removed_files:
-            # full rows LIVE at the parent: apply the parent's deletes so
-            # already-dead rows never re-emit
-            df = _scan_files(removed_files, True)
-            if par_dels:
-                df = _apply_deletes(spark, df, par_dels)
-            parts.append(_emit(df, "delete", ordinal, sid))
-
-        # delete files ADDED at this snapshot: row-level deletes.
-        # identity key includes the blob offset — a v3 commit packs many
-        # deletion vectors into ONE puffin file path
-        def _del_key(d: dict):
-            return (d["file_path"], d.get("content_offset"))
-
-        par_del_keys = {_del_key(d) for d in par_dels}
-        new_dels = [d for d in cur_dels if _del_key(d) not in par_del_keys]
-        pos_all = [d for d in new_dels if int(d.get("content", 0)) == 1]
-        pos_new = [d for d in pos_all if not d.get("referenced_data_file")]
-        dv_new = [d for d in pos_all if d.get("referenced_data_file")]
-        eq_new = [d for d in new_dels if int(d.get("content", 0)) == 2]
-        if dv_new:
-            # v3 deletion vectors REPLACE the parent's DV for the same
-            # data file with a superset — the logical delta of this
-            # commit is (new DV) MINUS (parent DV), decoded executor-side
-            prior = {
-                d["referenced_data_file"]: _dv_ref(d)
-                for d in par_dels
-                if int(d.get("content", 0)) == 1
-                and d.get("referenced_data_file")
-            }
-            coords = lakecore.dead_positions(
+    for (ordinal, sid, change, shape, eq_path), cs in groups.items():
+        df = _scan_files([c.file for c in cs], lineage=change == "delete")
+        if shape == "dv":
+            # each vector's rows minus its predecessor's, decoded
+            # executor-side
+            rows = lakecore.dead_positions(
                 spark,
                 [
-                    (os.path.basename(d["referenced_data_file"]),
-                     [_dv_ref(d), prior.get(d["referenced_data_file"])], 0)
-                    for d in dv_new
+                    (os.path.basename(c.file["file_path"]),
+                     [_dv_ref(c.keep[0]), _dv_ref(c.drop[0]) if c.drop else None],
+                     0)
+                    for c in cs
                 ],
                 _dv_positions,
             )
-            named = {
-                os.path.basename(d["referenced_data_file"]) for d in dv_new
-            }
-            victims = [
-                f for f in par_data
-                if os.path.basename(f["file_path"]) in named
-            ]
-            if victims:
-                df = _scan_files(victims, True).join(
-                    F.broadcast(coords), ["__file_name", "__pos"],
-                    "left_semi",
-                )
-                parts.append(_emit(df, "delete", ordinal, sid))
-        if pos_new:
-            coords = spark.read.schema("file_path string, pos long").parquet(
-                *[d["file_path"] for d in pos_new]
+            df = df.join(F.broadcast(rows), ["__file_name", "__pos"], "left_semi")
+            parts.append(_emit(df, change, ordinal, sid))
+            continue
+        drop = list({_del_key(d): d for c in cs for d in c.drop}.values())
+        if drop:
+            # rows already dead at the parent never re-emit
+            df = _apply_deletes(spark, df, drop)
+        if shape == "pos":
+            keep = {d["file_path"] for c in cs for d in c.keep}
+            rows = spark.read.schema("file_path string, pos long").parquet(
+                *sorted(keep)
             ).select(
                 F.element_at(F.split("file_path", "/"), -1).alias("__file_name"),
                 F.col("pos").alias("__pos"),
             )
-            # victim discovery — which parent data files these delete
-            # files touch. Preferred: ZERO-job metadata resolution from
-            # the delete manifests' file_path bounds (spec fields
-            # 125/128 on the reserved 2147483546 field — what the Java
-            # reader's referencedDataFile() derives from). Bounds are a
-            # range, so this can over-approximate; harmless, because the
-            # left_semi against the exact coordinates prunes every
-            # non-matching row. Only when a delete file (e.g. a foreign
-            # writer's) carries no bounds does the old shape run: ONE
-            # collect job over the already-built coords relation
-            # (O(affected files) driver rows).
-            # Bounded and boundless delete files resolve INDEPENDENTLY: a
-            # single foreign-written delete file without file_path bounds
-            # must not discard every other file's bounds and force the
-            # full collect fallback — only the boundless subset pays the
-            # (one) collect, restricted to its own coordinates.
-            ranges, boundless = [], []
-            for d in pos_new:
-                lo = next((e["value"] for e in (d.get("lower_bounds") or [])
-                           if e["key"] == _POS_DELETE_PATH_FID), None)
-                hi = next((e["value"] for e in (d.get("upper_bounds") or [])
-                           if e["key"] == _POS_DELETE_PATH_FID), None)
-                if lo is None or hi is None:
-                    boundless.append(d)
-                else:
-                    ranges.append((bytes(lo).decode("utf-8"),
-                                   bytes(hi).decode("utf-8")))
-            victims = [
-                f for f in par_data
-                if any(lo <= f["file_path"] <= hi for lo, hi in ranges)
-            ]
-            if boundless:
-                named = {
-                    r[0]
-                    for r in spark.read.schema("file_path string, pos long")
-                    .parquet(*[d["file_path"] for d in boundless])
-                    .select(
-                        F.element_at(F.split("file_path", "/"), -1)
-                        .alias("__file_name")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                have = {f["file_path"] for f in victims}
-                victims += [
-                    f for f in par_data
-                    if os.path.basename(f["file_path"]) in named
-                    and f["file_path"] not in have
-                ]
-            if victims:  # every coordinate may dangle (foreign state)
-                df = _scan_files(victims, True).join(
-                    F.broadcast(coords), ["__file_name", "__pos"], "left_semi"
-                )
-                parts.append(_emit(df, "delete", ordinal, sid))
-        for d in eq_new:
-            eq_ids = d.get("equality_ids") or []
-            name_of = {
-                f["id"]: f["name"]
-                for f in _current_ice_schema(meta)["fields"]
-            }
-            keys = [name_of[i] for i in eq_ids]
-            if not keys:
-                continue
-            keyrows = spark.read.parquet(d["file_path"]).select(*keys)
-            older = [
-                f for f in par_data
-                if int(f.get("__seq", 0)) < int(d.get("__seq", 0))
-            ]
-            if not older:
-                continue
-            df = _scan_files(older, True)
-            par_pos = [x for x in par_dels if int(x.get("content", 0)) == 1]
-            if par_pos:
-                df = _apply_deletes(spark, df, par_pos)
-            df = df.join(F.broadcast(keyrows), keys, "left_semi")
-            parts.append(_emit(df, "delete", ordinal, sid))
+            df = df.join(F.broadcast(rows), ["__file_name", "__pos"], "left_semi")
+        elif shape == "eq":
+            keys = cs[0].keep[0]["__keys"]
+            df = df.join(
+                F.broadcast(spark.read.parquet(eq_path).select(*keys)),
+                keys, "left_semi",
+            )
+        parts.append(_emit(df, change, ordinal, sid))
 
     if not parts:
         out = spark.createDataFrame([], out_schema)
@@ -3704,7 +3757,9 @@ def changelog_net_changes(df: DataFrame) -> DataFrame:
     """The ``net_changes`` post-pass over an already-built raw changelog
     (see :func:`changelog_compute_updates` for why it is split out)."""
     data_cols = [c for c in df.columns if c not in _CHANGELOG_META_COLS]
-    return _changelog_net_changes(df, data_cols)
+    return lakecore.net_changes(
+        df, data_cols, "_change_ordinal", "_commit_snapshot_id"
+    )
 
 
 def _changelog_fold_updates(
@@ -3765,40 +3820,6 @@ def _changelog_fold_updates(
     return (
         df.withColumn("_change_type", folded)
         .drop("__k_del", "__k_ins")
-    )
-
-
-def _changelog_net_changes(
-    df: DataFrame,
-    data_cols: list[str],
-    ordinal_col: str = "_change_ordinal",
-    tie_col: str = "_commit_snapshot_id",
-) -> DataFrame:
-    """``net_changes`` post-pass (the jar's removeNetCarryovers): across
-    the WHOLE snapshot range, bit-identical delete+insert pairs cancel —
-    a row inserted then deleted inside the range vanishes; a row deleted
-    then re-inserted identically vanishes — and each surviving change
-    keeps its LATEST commit ordinal. One window pass hashing on the full
-    row content over O(change) rows. Shared with delta's CDF (round 13 —
-    there the ordinal is ``_commit_version``), which normalizes its
-    update pre/post images to delete/insert first."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*data_cols)
-    wt = W.partitionBy(*data_cols, "_change_type").orderBy(
-        F.col(ordinal_col).desc(), F.col(tie_col).desc()
-    )
-    is_del = F.when(F.col("_change_type") == "delete", 1).otherwise(0)
-    is_ins = F.when(F.col("_change_type") == "insert", 1).otherwise(0)
-    n_mine = F.when(
-        F.col("_change_type") == "delete", F.col("__n_del")
-    ).otherwise(F.col("__n_ins"))
-    return (
-        df.withColumn("__n_del", F.sum(is_del).over(w))
-        .withColumn("__n_ins", F.sum(is_ins).over(w))
-        .withColumn("__rn", F.row_number().over(wt))
-        .where(F.col("__rn") <= n_mine - F.least("__n_del", "__n_ins"))
-        .drop("__n_del", "__n_ins", "__rn")
     )
 
 
@@ -5014,482 +5035,128 @@ def read_meta(spark: SparkSession, loc: str, kind: str) -> DataFrame:
 # streaming source
 # ---------------------------------------------------------------------------
 
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource  # noqa: E402
 
 
-class _IceFilePartition(InputPartition):
-    def __init__(self, path: str, partition_values: dict):
-        self.path = path
-        self.partition_values = partition_values
-
-
-class _IceChangePartition(InputPartition):
-    """One changelog work unit (streaming readChangeFeed):
-
-    - kind="insert": ``path`` is an added data file — rows stream as
-      inserts.
-    - kind="pos-delete": ``path`` is a position-delete file;
-      ``file_map`` maps named data-file basenames → (path,
-      partition_values) so the executor recovers full pre-images.
-    - kind="file-delete": ``path`` is a data file removed by an
-      overwrite; ``coord_paths`` carry the PARENT's position-delete
-      files so already-dead rows never re-emit.
-    - kind="eq-delete": ``path`` is an equality-delete file; ``keys``
-      name its columns and ``file_map`` the strictly-older live files
-      to probe.
-    """
-
-    def __init__(self, kind, path, pvals, sid, ordinal,
-                 file_map=None, coord_paths=None, keys=None, eq_dels=None,
-                 dv_blob=None, dv_prior=None, dv_ref=None, dv_coords=None):
-        self.kind = kind
-        self.path = path
-        self.partition_values = pvals or {}
-        self.sid = sid
-        self.ordinal = ordinal
-        self.file_map = file_map or {}
-        self.coord_paths = coord_paths or []
-        self.keys = keys or []
-        #: (delete_file_path, key_columns) pairs of the PARENT's equality
-        #: deletes that apply to this (strictly older) data file
-        self.eq_dels = eq_dels or []
-        #: kind="dv-delete" (v3): (offset, length) of the new DV blob in
-        #: ``path`` (a puffin file), the predecessor DV's (path, offset,
-        #: length) or None, and the referenced data file's basename
-        self.dv_blob = dv_blob
-        self.dv_prior = dv_prior
-        self.dv_ref = dv_ref
-        #: PARENT deletion vectors as (puffin, offset, length, basename) —
-        #: rows they kill are already dead for file-delete/eq-delete scans
-        self.dv_coords = dv_coords or []
-
-
-class IcebergLogStreamReader(DataSourceStreamReader):
+class IcebergLogStreamReader(lakecore.ChangeStreamReader):
     """Micro-batch source over the snapshot log: offsets are positions
     in the snapshots list, each batch reads the data files ADDED by the
-    new snapshots (manifest entries with status=1 whose manifest was
-    added by that snapshot), one task per file — the same incremental
-    model as the java source's stream reads."""
+    new snapshots (the inserts :func:`_plan_changes` plans), one task
+    per file — the same incremental model as the java source's stream
+    reads. ``readChangeFeed=true`` streams every change the batch
+    changelog reports, typed as ``_change_type`` / ``_change_ordinal`` /
+    ``_commit_snapshot_id``, one task per changed file."""
 
-    def __init__(self, options):
+    offset_key = "pos"
+
+    def __init__(self, options, schema: T.StructType):
         self._loc = options.get("path") or options.get("table")
         if not self._loc:
             raise ValueError("iceberg stream source requires a path option")
+
+        def _flag(name: str) -> bool:
+            return str(lakecore.stream_option(options, name, "false")).lower() == "true"
+
         # the jar's contract: streaming reads are append-only; delete /
         # overwrite snapshots fail the stream unless the matching
         # streaming-skip-* option skips them; replace (compaction)
         # snapshots are logically no-ops and always skip
-        def _flag(name: str) -> bool:
-            return str(
-                options.get(name.lower(), options.get(name, "false"))
-            ).lower() == "true"
-
         self._skip_delete = _flag("streaming-skip-delete-snapshots")
         self._skip_overwrite = _flag("streaming-skip-overwrite-snapshots")
-        #: readChangeFeed=true streams TYPED row-level changes instead
-        #: of refusing row-delta snapshots (round 12 — the streaming
-        #: half of read_iceberg_changelog, mirroring delta's streaming
-        #: CDF source): each micro-batch ships the new snapshots'
-        #: inserts and full delete pre-images with
-        #: _change_type/_change_ordinal/_commit_snapshot_id attached.
         self._cdf = _flag("readChangeFeed")
-        self._max_per_trigger = int(
-            options.get("maxsnapshotspertrigger",
-                        options.get("maxSnapshotsPerTrigger", 0)) or 0
-        )
-        self._paced_pos = None
         meta = load_metadata(self._loc)
-        # v3 initial-defaults (round 14): the micro-batch reader opens
-        # each parquet file directly, so the footer IS the presence
-        # authority — a file that physically lacks a defaulted column
-        # emits the initial-default for its rows, matching the batch
-        # reader's substitution (load_metadata's _check_v3_scope already
-        # refused unsupported default types)
-        self._defaults = dict(_initial_defaults(_current_ice_schema(meta)))
-        self._schema = iceberg_to_spark_schema(meta["schema"])
-        # renamed/re-added column vintages (round 14): files written
-        # under an earlier schema resolve per file in _load_cols; the
-        # history flags make the common (never-renamed) path free
-        self._meta = meta
-        self._data_fields = [
-            (int(f["id"]), f["name"])
-            for f in meta["schema"].get("fields", [])
-        ]
-        nh, ih = _names_by_id_history(meta), _ids_by_name_history(meta)
-        self._vintage_check = any(
-            len(nh.get(i, {n})) > 1 or len(ih.get(n, {i})) > 1
-            for i, n in self._data_fields
+        # a file that physically lacks a column reads its v3
+        # initial-default (or null) — the batch reader's substitution
+        super().__init__(
+            schema,
+            dict(_initial_defaults(_current_ice_schema(meta))),
+            int(lakecore.stream_option(options, "maxSnapshotsPerTrigger", 0) or 0),
         )
-        # only IDENTITY partition values are schema columns; transformed
-        # fields (hidden partitioning) never surface as output columns
-        self._pcols = _identity_names(_spec_entries(meta))
 
     def initialOffset(self):
         return {"pos": 0}
 
-    def latestOffset(self):
-        head = len(load_metadata(self._loc).get("snapshots", []))
-        if not self._max_per_trigger:
-            return {"pos": head}
-        # paced: each micro-batch advances at most N snapshots past the
-        # last offset handed out (re-synced in commit() so failed
-        # batches never skip) — bounds first-batch size when tailing a
-        # long-history table from position 0
-        base = self._paced_pos if self._paced_pos is not None else 0
-        nxt = min(head, base + self._max_per_trigger)
-        self._paced_pos = nxt
-        return {"pos": nxt}
+    def head(self) -> int:
+        return len(load_metadata(self._loc).get("snapshots", []))
+
+    def _appends(self, window: list) -> list:
+        """The window's append snapshots; any other row-changing
+        snapshot refuses unless its streaming-skip option is set."""
+        out = []
+        for idx, s in window:
+            op = s.get("summary", {}).get("operation", "append")
+            # compaction (replace) plans no rows; the table-creating
+            # snapshot IS the content
+            if op in ("append", "replace") or idx == 0:
+                out.append((idx, s))
+                continue
+            if self._skip_delete if op == "delete" else self._skip_overwrite:
+                continue
+            raise ValueError(
+                f"iceberg stream source: snapshot "
+                f"{s['snapshot-id']} is a {op!r} (row-level change) — "
+                "streaming requires append-only snapshots; set "
+                f"streaming-skip-{'delete' if op == 'delete' else 'overwrite'}"
+                "-snapshots=true to skip them"
+            )
+        return out
 
     def partitions(self, start, end):
         meta = load_metadata(self._loc)
-        if self._cdf:
-            return self._change_partitions(meta, start, end)
-        snaps = meta.get("snapshots", [])[int(start["pos"]) : int(end["pos"])]
-        parts = []
-        for idx, s in enumerate(snaps, start=int(start["pos"])):
-            op = s.get("summary", {}).get("operation", "append")
-            if op == "replace":
-                continue  # compaction: logically no new rows
-            if idx == 0:
-                op = "append"  # the table-creating snapshot IS the content
-            if op != "append":
-                skip = (self._skip_delete if op == "delete"
-                        else self._skip_overwrite)
-                if skip:
-                    continue
-                raise ValueError(
-                    f"iceberg stream source: snapshot "
-                    f"{s['snapshot-id']} is a {op!r} (row-level change) — "
-                    "streaming requires append-only snapshots; set "
-                    f"streaming-skip-{'delete' if op == 'delete' else 'overwrite'}"
-                    "-snapshots=true to skip them"
-                )
-            _s, _m, manifests = read_ocf(s["manifest-list"])
-            for mf in manifests:
-                if mf.get("added_snapshot_id") != s["snapshot-id"]:
-                    continue  # carried over from a previous snapshot
-                if mf.get("content", 0) != 0:
-                    continue  # delete manifests never stream as rows
-                _check_manifest_spec(meta, mf, meta.get("default-spec-id", 0))
-                _es, _em, entries = read_ocf(mf["manifest_path"])
-                parts.extend(
-                    _IceFilePartition(
-                        e["data_file"]["file_path"],
-                        e["data_file"]["partition"],
-                    )
-                    for e in entries
-                    if e["status"] == 1
-                    and e["data_file"].get("content", 0) == 0
-                )
-        return parts
+        lo = int(start["pos"])
+        window = list(enumerate(meta.get("snapshots", [])[lo : int(end["pos"])], lo))
+        if not self._cdf:
+            window = self._appends(window)
+        changes = [
+            c for c in _plan_changes(meta, window)
+            if self._cdf or c.change == "insert"
+        ]
+        if not changes:
+            return []
+        schema = meta["schema"]
+        ptypes = {f.name: f.dataType for f in iceberg_to_spark_schema(schema).fields}
+        pcols = _identity_names(_spec_entries(meta))
+        # renamed/re-added column vintages resolve per file by field id
+        renames = _file_write_names(
+            meta, list({c.file["file_path"]: c.file for c in changes}.values()),
+            [(int(f["id"]), f["name"]) for f in schema.get("fields", [])],
+        ) or {}
 
-    def _change_partitions(self, meta: dict, start, end):
-        """Changelog work units for the snapshots in [start, end) —
-        driver-side metadata only; every unit is O(one file)."""
-        snaps = meta.get("snapshots", [])
-        by_id = {s["snapshot-id"]: s for s in snaps}
-        window = snaps[int(start["pos"]) : int(end["pos"])]
-        parts: list[_IceChangePartition] = []
-        name_of = {
-            f["id"]: f["name"] for f in _current_ice_schema(meta)["fields"]
-        }
-        for idx, s in enumerate(window, start=int(start["pos"])):
-            sid = s["snapshot-id"]
-            op = s.get("summary", {}).get("operation", "append")
-            if op == "replace":
-                continue  # layout maintenance: no logical change
-            parent = by_id.get(s.get("parent-snapshot-id"))
-            cur_data, cur_dels = _scan_snapshot(meta, s)
-            if parent is not None:
-                par_data, par_dels = _scan_snapshot(meta, parent)
-            else:
-                par_data, par_dels = [], []
-            cur_paths = {f["file_path"] for f in cur_data}
-            par_paths = {f["file_path"] for f in par_data}
-            par_pos_paths = [
-                d["file_path"] for d in par_dels
-                if int(d.get("content", 0)) == 1
-                and not d.get("referenced_data_file")
-            ]
-            par_dvs = [
-                (
-                    d["file_path"],
-                    int(d.get("content_offset") or 0),
-                    int(d.get("content_size_in_bytes") or 0),
-                    os.path.basename(d["referenced_data_file"]),
-                )
-                for d in par_dels
-                if int(d.get("content", 0)) == 1
-                and d.get("referenced_data_file")
-            ]
-            par_eq = [
-                (
-                    d["file_path"],
-                    [name_of[i] for i in (d.get("equality_ids") or [])],
-                    int(d.get("__seq", 0)),
-                )
-                for d in par_dels
-                if int(d.get("content", 0)) == 2
+        def positions(entries, f):
+            base = os.path.basename(f["file_path"])
+            return [
+                (read_blob, _dv_ref(d)) if d.get("referenced_data_file")
+                else (lakecore.file_positions, (d["file_path"], base))
+                for d in entries if int(d.get("content", 0)) == 1
             ]
 
-            def _pv(f):
-                return {
-                    c: f.get("partition", {}).get(c) for c in self._pcols
-                }
-
-            for f in cur_data:
-                if f["file_path"] not in par_paths:
-                    parts.append(_IceChangePartition(
-                        "insert", f["file_path"], _pv(f), sid, idx))
-            for f in par_data:
-                if f["file_path"] not in cur_paths:
-                    parts.append(_IceChangePartition(
-                        "file-delete", f["file_path"], _pv(f), sid, idx,
-                        coord_paths=par_pos_paths, dv_coords=par_dvs,
-                        eq_dels=[
-                            (p, ks) for p, ks, dseq in par_eq
-                            if ks and dseq > int(f.get("__seq", 0))
-                        ]))
-            # identity key includes the blob offset — a v3 commit packs
-            # many deletion vectors into ONE puffin file path
-            par_del_keys = {
-                (d["file_path"], d.get("content_offset")) for d in par_dels
-            }
-            fmap = {
-                os.path.basename(f["file_path"]): (f["file_path"], _pv(f))
-                for f in par_data
-            }
-            for d in cur_dels:
-                if (d["file_path"], d.get("content_offset")) in par_del_keys:
-                    continue
-                if int(d.get("content", 0)) == 1 and d.get(
-                    "referenced_data_file"
-                ):
-                    # v3 DV: the new vector REPLACES its predecessor with
-                    # a superset — the executor emits (new − prior) rows
-                    base = os.path.basename(d["referenced_data_file"])
-                    prior = next(
-                        ((p, o, ln) for p, o, ln, b in par_dvs if b == base),
-                        None,
-                    )
-                    parts.append(_IceChangePartition(
-                        "dv-delete", d["file_path"], {}, sid, idx,
-                        file_map=fmap,
-                        dv_blob=(
-                            int(d.get("content_offset") or 0),
-                            int(d.get("content_size_in_bytes") or 0),
-                        ),
-                        dv_prior=prior, dv_ref=base))
-                elif int(d.get("content", 0)) == 1:
-                    parts.append(_IceChangePartition(
-                        "pos-delete", d["file_path"], {}, sid, idx,
-                        file_map=fmap, coord_paths=par_pos_paths))
-                else:
-                    keys = [name_of[i] for i in (d.get("equality_ids") or [])]
-                    older = {
-                        os.path.basename(f["file_path"]):
-                            (f["file_path"], _pv(f))
-                        for f in par_data
-                        if int(f.get("__seq", 0)) < int(d.get("__seq", 0))
-                    }
-                    if keys and older:
-                        parts.append(_IceChangePartition(
-                            "eq-delete", d["file_path"], {}, sid, idx,
-                            file_map=older, coord_paths=par_pos_paths,
-                            dv_coords=par_dvs, keys=keys))
-        return parts
-
-    def _load_cols(self, path: str):
-        """(columns dict, row count) of one parquet file under CURRENT
-        column names — renamed/re-added vintages resolved per file
-        (field ids / unambiguous-name rule, _file_write_names) —
-        timestamps localized for the Python-source serializer."""
-        import pyarrow.parquet as pq
-
-        ptypes = {f.name: f.dataType for f in self._schema.fields}
-        tbl = pq.read_table(path)
-        cols = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
-        if self._vintage_check:
-            ren = _file_write_names(
-                self._meta, [{"file_path": path}], self._data_fields
-            ) or {}
-            for cur, wn in (ren.get(path) or {}).items():
-                vals = cols.pop(wn, None)  # None: masked (dropped id)
-                cols.pop(cur, None)  # never read another id's bytes
-                if vals is not None:
-                    cols[cur] = vals
-        for c, dt_ in ptypes.items():
-            if isinstance(dt_, T.TimestampType) and c in cols:
-                cols[c] = [
-                    v.replace(tzinfo=_dt.timezone.utc)
-                    if v is not None and v.tzinfo is None
-                    else v
-                    for v in cols[c]
-                ]
-        return self._fill_absent(cols, tbl.num_rows), tbl.num_rows
-
-    def _fill_absent(self, cols: dict, n: int) -> dict:
-        """Schema columns the parquet file physically lacks read their
-        v3 initial-default (or null for plain late-added columns) —
-        identity partition columns excluded, they come from metadata."""
-        for f in self._schema.fields:
-            c = f.name
-            if c not in cols and c not in self._pcols:
-                cols[c] = [self._defaults.get(c)] * n
-        return cols
-
-    def _dead_positions(
-        self, coord_paths: list[str], basename: str, dv_coords=None
-    ) -> set:
-        """Positions named for ``basename`` by the given position-delete
-        files and deletion vectors (executor-side, tiny by
-        construction)."""
-        import pyarrow.parquet as pq
-
-        from .roaring import read_blob
-
-        dead: set[int] = set()
-        for puffin, off, ln, b in dv_coords or []:
-            if b == basename:
-                dead |= read_blob(puffin, off, ln)
-        for p in coord_paths:
-            t = pq.read_table(p)
-            for fp, pos in zip(
-                t.column("file_path").to_pylist(),
-                t.column("pos").to_pylist(),
-            ):
-                if os.path.basename(fp) == basename:
-                    dead.add(int(pos))
-        return dead
-
-    def _emit_change(self, partition, path, pvals, rows_iter):
-        names = [f.name for f in self._schema.fields]
-        ptypes = {f.name: f.dataType for f in self._schema.fields}
-        typed_pv = {
-            c: _avro_to_partition(v, ptypes[c])
-            for c, v in (pvals or {}).items()
-            if c in self._pcols
-        }
-        change = (
-            "insert" if partition.kind == "insert" else "delete"
-        )
-        for cols, i in rows_iter:
-            yield tuple(
-                typed_pv[c] if c in typed_pv else cols[c][i] for c in names
-            ) + (change, partition.ordinal, partition.sid)
-
-    def read(self, partition):
-        import pyarrow.parquet as pq
-
-        if isinstance(partition, _IceChangePartition):
-            if partition.kind in ("insert", "file-delete"):
-                cols, n = self._load_cols(partition.path)
-                dead = (
-                    self._dead_positions(
-                        partition.coord_paths,
-                        os.path.basename(partition.path),
-                        partition.dv_coords,
-                    )
-                    if partition.kind == "file-delete"
-                    else set()
-                )
-                # parent's EQUALITY deletes also exclude rows of this
-                # strictly-older removed file (same rule the batch
-                # changelog applies via _apply_deletes)
-                eq_kill: list[tuple[list[str], set]] = []
-                for p, ks in partition.eq_dels:
-                    t = pq.read_table(p)
-                    eq_kill.append(
-                        (ks, set(zip(*[t.column(k).to_pylist() for k in ks])))
-                    )
-                yield from self._emit_change(
-                    partition, partition.path, partition.partition_values,
-                    (
-                        (cols, i) for i in range(n)
-                        if i not in dead
-                        and not any(
-                            tuple(cols[k][i] for k in ks) in kill
-                            for ks, kill in eq_kill
-                        )
-                    ),
-                )
-                return
-            if partition.kind == "dv-delete":
-                positions = _dv_positions(
-                    [(partition.path, *partition.dv_blob), partition.dv_prior]
-                )
-                base = partition.dv_ref
-                if base in partition.file_map:
-                    path, pvals = partition.file_map[base]
-                    cols, n = self._load_cols(path)
-                    yield from self._emit_change(
-                        partition, path, pvals,
-                        ((cols, i) for i in sorted(positions) if i < n),
-                    )
-                return
-            if partition.kind == "pos-delete":
-                t = pq.read_table(partition.path)
-                by_file: dict[str, list[int]] = {}
-                for fp, pos in zip(
-                    t.column("file_path").to_pylist(),
-                    t.column("pos").to_pylist(),
-                ):
-                    by_file.setdefault(os.path.basename(fp), []).append(
-                        int(pos)
-                    )
-                for base, positions in sorted(by_file.items()):
-                    if base not in partition.file_map:
-                        continue  # dangling coordinate: file already gone
-                    path, pvals = partition.file_map[base]
-                    cols, n = self._load_cols(path)
-                    yield from self._emit_change(
-                        partition, path, pvals,
-                        ((cols, i) for i in sorted(positions) if i < n),
-                    )
-                return
-            # eq-delete: probe strictly-older files for key matches
-            t = pq.read_table(partition.path)
-            keyset = set(
-                zip(*[t.column(k).to_pylist() for k in partition.keys])
-            )
-            for base, (path, pvals) in sorted(partition.file_map.items()):
-                cols, n = self._load_cols(path)
-                dead = self._dead_positions(
-                    partition.coord_paths, base, partition.dv_coords
-                )
-                yield from self._emit_change(
-                    partition, path, pvals,
-                    (
-                        (cols, i)
-                        for i in range(n)
-                        if i not in dead
-                        and tuple(cols[k][i] for k in partition.keys)
-                        in keyset
-                    ),
-                )
-            return
-
-        names = [f.name for f in self._schema.fields]
-        ptypes = {f.name: f.dataType for f in self._schema.fields}
-        # shared loader: vintage resolution + tz localization + absent
-        # fill (pyarrow yields tz-NAIVE datetimes the Python-source
-        # serializer would die on)
-        cols, n_rows = self._load_cols(partition.path)
-        pvals = {
-            c: _avro_to_partition(v, ptypes[c])
-            for c, v in partition.partition_values.items()
-            if c in self._pcols  # identity only — transforms are derived
-        }
-        for i in range(n_rows):
-            yield tuple(pvals[c] if c in pvals else cols[c][i] for c in names)
-
-    def commit(self, end) -> None:
-        self._paced_pos = int(end["pos"])
-        return None
+        units = []
+        for c in changes:
+            f = c.file
+            by_key = _shape(c)[0] == "eq"
+            units.append(lakecore.ChangeUnit(
+                f["file_path"],
+                tags={
+                    "_change_type": c.change,
+                    "_change_ordinal": c.ordinal,
+                    "_commit_snapshot_id": c.sid,
+                } if self._cdf else {},
+                constants={
+                    n: _avro_to_partition(f["partition"].get(n), ptypes[n])
+                    for n in pcols
+                },
+                renames=renames.get(f["file_path"]),
+                keep=None if c.keep is None or by_key else positions(c.keep, f),
+                drop=positions(c.drop, f),
+                keep_keys=(
+                    (c.keep[0]["file_path"], c.keep[0]["__keys"]) if by_key else None
+                ),
+                drop_keys=[
+                    (d["file_path"], d["__keys"])
+                    for d in c.drop if int(d.get("content", 0)) == 2
+                ],
+            ))
+        return units
 
 
 class IcebergLogDataSource(DataSource):
@@ -5520,4 +5187,4 @@ class IcebergLogDataSource(DataSource):
         return base
 
     def streamReader(self, schema) -> IcebergLogStreamReader:
-        return IcebergLogStreamReader(self.options)
+        return IcebergLogStreamReader(self.options, schema)

@@ -408,3 +408,27 @@ def test_partition_stats_with_deletes_and_expire(spark, tmp_path):
     meta = ice.load_metadata(loc)
     assert len(meta["partition-statistics"]) == 1
     assert not os.path.exists(p_old)
+
+
+def test_first_commit_bounds_key_by_the_table_field_ids(spark, loc):
+    """A partitioned table's FIRST commit keys its bounds by the table
+    schema's ids (identity partition columns hold ids of their own), so
+    a filter on a data column skips first-commit files."""
+    df = spark.createDataFrame(
+        [(g, g * 100 + i) for g in range(2) for i in range(5)],
+        "grp int, id long",
+    )
+    ice.write_iceberg(df.coalesce(1), loc, partition_by=["grp"])
+    meta = ice.load_metadata(loc)
+    ids = {f["name"]: f["id"] for f in meta["schema"]["fields"]}
+    assert ids == {"grp": 1, "id": 2}
+    files, _dels = ice._scan_snapshot(meta, ice._pick_snapshot(meta))
+    assert len(files) == 2
+    for f in files:
+        assert {e["key"] for e in f["lower_bounds"]} == {ids["id"]}
+        assert {e["key"] for e in f["upper_bounds"]} == {ids["id"]}
+    kept = ice._prune_files_by_bounds(files, meta, "id >= 100")
+    assert [f["partition"]["grp"] for f in kept] == [1]
+    assert ice.read_iceberg(spark, loc, where="id >= 100").count() == 5
+    # the partition column's id no longer holds the data column's bounds
+    assert ice.read_iceberg(spark, loc, where="grp = 1").count() == 5

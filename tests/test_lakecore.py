@@ -227,6 +227,10 @@ def test_formats_carry_no_private_copy_of_the_core(module):
         "DV_BROADCAST_MAX_POSITIONS =",
         ".persist(",
         "from ..parallel",
+        "from .iceberg import _",
+        # change feeds plan lakecore.ChangeUnit partitions and read them
+        # through lakecore.read_change_unit
+        "InputPartition",
     ):
         assert needle not in src, f"{module} has its own {needle!r}"
     if module == "deltalog.py":
@@ -420,6 +424,74 @@ def test_iceberg_dml_failure_leaves_no_orphans(
         assert err.value is INJECTED
     assert _tree(loc) == tree
     assert sorted(ice.read_iceberg(spark, loc).collect()) == rows
+
+
+def _tree_bytes(root) -> dict[str, bytes]:
+    out = {}
+    for rel in _tree(root):
+        with open(os.path.join(root, rel), "rb") as fh:
+            out[rel] = fh.read()
+    return out
+
+
+def _fail_before_link(monkeypatch):
+    """Let the commit file be written in full, then fail before the
+    link that publishes it: the last point between staging and publish."""
+    real = lakecore.publish_exclusive
+
+    def failing(final_path, write_fn, conflict_exc, staged=()):
+        def write_then_fail(fh):
+            write_fn(fh)
+            raise INJECTED
+
+        return real(final_path, write_then_fail, conflict_exc, staged)
+
+    monkeypatch.setattr(lakecore, "publish_exclusive", failing)
+
+
+def _iceberg_table(spark, loc):
+    ice.write_iceberg(
+        spark.range(20).selectExpr("id", "id * 10 as v").coalesce(2), loc
+    )
+
+
+@pytest.mark.parametrize(
+    "fmt,op,region",
+    [("delta", op, False) for op in DELTA_DML]
+    + [("iceberg", op, False) for op in ICEBERG_DML]
+    + [("delta", "merge", True), ("iceberg", "merge", True)],
+)
+def test_failure_before_publish_keeps_prior_bytes(
+    spark, tmp_path, monkeypatch, fmt, op, region
+):
+    """A commit that fails after staging, right before its publish,
+    surfaces its own error and leaves the table byte-identical: every
+    prior file has the same bytes, none is added. Inside a
+    ``scoped_region`` the region's exit also releases every relation the
+    failed commit persisted, without masking the error."""
+    from spark_etl_framework_spark.caching import scoped_region
+
+    loc = str(tmp_path / "t")
+    if fmt == "delta":
+        _delta_table(spark, loc)
+        run = DELTA_DML[op]
+    else:
+        _iceberg_table(spark, loc)
+        run = ICEBERG_DML[op]
+    before = _tree_bytes(loc)
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keySet().toArray())
+    _fail_before_link(monkeypatch)
+    with pytest.raises(Exception) as err:
+        if region:
+            with scoped_region():
+                run(spark, loc)
+        else:
+            run(spark, loc)
+    monkeypatch.undo()
+    assert err.value is INJECTED
+    assert _tree_bytes(loc) == before
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= cached
 
 
 def test_iceberg_write_lost_race_leaves_no_orphans(spark, tmp_path):
