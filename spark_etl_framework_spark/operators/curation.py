@@ -66,7 +66,7 @@ class ContainmentDedupTransformer(Actor):
                 f"ContainmentDedupTransformer: threshold must be in (0, 1], "
                 f"got {self.threshold}"
             )
-        ctx.reference(self.view)
+        ctx.reference(self.view, reads=2)  # both shingle branches and the anti-join read it
         df = spark.table(self.view)
         drops = containment_drop_ids(
             df,

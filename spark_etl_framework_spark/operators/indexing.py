@@ -61,7 +61,7 @@ class LshIndexBuilder(Actor):
             raise ValueError("LshIndexBuilder: input view required")
         if not self.path:
             raise ValueError("LshIndexBuilder: path required (index location)")
-        ctx.reference(self.view)
+        ctx.reference(self.view, reads=2)  # each of the three index tables reads it
         corpus = spark.table(self.view)
         buckets, shingles, sizes = D.build_corpus_lsh_index(
             corpus,
@@ -170,7 +170,7 @@ class AnnIndexBuilder(Actor):
             raise ValueError("AnnIndexBuilder: input view required")
         if not self.path:
             raise ValueError("AnnIndexBuilder: path required (index location)")
-        ctx.reference(self.view)
+        ctx.reference(self.view, reads=2)  # training, labels and centroids read it
         emb = spark.table(self.view)
         # pq_codes(with_model=True) scope-persists its training state;
         # actors run outside the query registry, so release it here — the

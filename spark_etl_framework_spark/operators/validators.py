@@ -73,7 +73,10 @@ class SqlDataValidator(Actor):
     def run(self, ctx: JobContext, spark: SparkSession) -> DataFrame | None:
         if not self.view:
             raise ValueError("SqlDataValidator: input view required")
-        ctx.reference(self.view)
+        # error/staging materialize the invalid rows here and the caller
+        # reads the lazy valid rows later: two reads of one view
+        split = self.action == "error" or (self.action == "staging" and self.staging_uri)
+        ctx.reference(self.view, reads=2 if split else 1)
         df = spark.table(self.view)
         if self.validWhere:
             valid = df.filter(self.validWhere)

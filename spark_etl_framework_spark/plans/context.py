@@ -3,8 +3,10 @@
 The reference smuggles SQL-set variables and cache ref-counts across
 sub-sessions through session conf keys (reference: etl/common/Actor.scala:
 83-109, JobContext.scala:21-35); here the runner owns all sessions, so both
-live as plain Python state with identical observable behavior (variables set
-by SQL are visible to later actors; a view persists on its 2nd reference).
+live as plain Python state. Variables set by SQL are visible to later actors;
+a view is persisted when two or more actions consume it. Counting actions, not
+reference calls as the reference does, keeps a single-consumer view uncached so
+its scans keep column pruning and filter pushdown.
 """
 
 from __future__ import annotations
@@ -34,12 +36,14 @@ class PipelineContext:
 
 
 class JobContext:
-    """Job-scope state: view reference counts + auto-caching
+    """Job-scope state: view consumers + auto-caching
     (reference: etl/common/JobContext.scala:18,44-51,74-85).
 
-    Every time an action consumes a view, ``reference()`` bumps its count;
-    from the 2nd reference on, the underlying DataFrame is persisted
-    MEMORY_AND_DISK (the reference's auto-cache policy, README.md:374).
+    A view is persisted MEMORY_AND_DISK when two or more actions consume it.
+    The runner passes each registration's declared consumers (``input-views``)
+    so the first consumer fills the cache; ``reference()`` adds the current
+    ``action`` at run time, catching undeclared SQL relations and source
+    views. Outside a runner action every call is a consumer of its own.
     Streaming DataFrames are never persisted.
     """
 
@@ -47,33 +51,42 @@ class JobContext:
         self.pipeline = pipeline_ctx
         self.spark = spark
         self.objects: dict[str, Any] = {}
-        self._ref_counts: dict[str, int] = {}
+        self.action: int | None = None  # the runner action now running
+        self._consumers: dict[str, set] = {}
         self._view_dfs: dict[str, DataFrame] = {}
-        self._persisted: set[str] = set()
+        #: by id(df), so a re-registered name's old cache is still released
+        self._persisted: dict[int, DataFrame] = {}
         self._global_views: set[str] = set()
 
     @property
     def variables(self) -> dict[str, str]:
         return self.pipeline.variables
 
-    def register_view(self, name: str, df: DataFrame, global_: bool = False) -> None:
+    def register_view(self, name: str, df: DataFrame, global_: bool = False, consumers=()) -> None:
         """Promote an actor output to a temp view
-        (reference: etl/pipeline/PipelineRunner.scala:137-148)."""
+        (reference: etl/pipeline/PipelineRunner.scala:137-148); ``consumers``
+        are the indexes of the actions declared to read this registration."""
         if global_:
             df.createOrReplaceGlobalTempView(name)
             self._global_views.add(name)
         else:
             df.createOrReplaceTempView(name)
         self._view_dfs[name] = df
+        self._consumers[name] = {(a, 0) for a in consumers}
+        self._persist_if_shared(name)
 
-    def reference(self, view: str) -> None:
-        """Count a view reference; persist on the 2nd+ (batch only)."""
-        n = self._ref_counts.get(view, 0) + 1
-        self._ref_counts[view] = n
+    def reference(self, view: str, reads: int = 1) -> None:
+        """Count the current action as a consumer of ``view``; an action
+        that materializes the view ``reads`` times counts that often."""
+        action = object() if self.action is None else self.action
+        self._consumers.setdefault(view, set()).update((action, k) for k in range(reads))
+        self._persist_if_shared(view)
+
+    def _persist_if_shared(self, view: str) -> None:
         df = self._view_dfs.get(view)
-        if n >= 2 and df is not None and view not in self._persisted and not df.isStreaming:
-            df.persist(StorageLevel.MEMORY_AND_DISK)
-            self._persisted.add(view)
+        shared = df is not None and len(self._consumers[view]) >= 2 and not df.isStreaming
+        if shared and id(df) not in self._persisted:
+            self._persisted[id(df)] = df.persist(StorageLevel.MEMORY_AND_DISK)
 
     def view_exists(self, view: str) -> bool:
         """Input-view existence check (reference: PipelineRunner.scala:119-134)."""
@@ -91,14 +104,12 @@ class JobContext:
         stale data. Global temp views survive — they are the cross-job
         sharing mechanism in both session modes (the reference likewise only
         uncaches them, PipelineRunner.scala:243-258)."""
-        for name in self._persisted:
-            df = self._view_dfs.get(name)
-            if df is not None:
-                df.unpersist()
+        for df in self._persisted.values():
+            df.unpersist()
         for name in self._view_dfs:
             if name not in self._global_views:
                 self.spark.catalog.dropTempView(name)
         self._persisted.clear()
         self._view_dfs.clear()
-        self._ref_counts.clear()
+        self._consumers.clear()
         self._global_views.clear()

@@ -5,10 +5,12 @@ Reference semantics preserved (reference: etl/pipeline/PipelineRunner.scala):
   ``singleSparkSession`` (:49, :101-103)
 - UDFs registered per job session (:54); global views optionally localized
   (:56-58, ``globalViewAsLocal``)
-- per action: input-view existence check (:67,119-134) → reference-count bump
-  (:69-72) → ``before_run`` late variable binding (:76) → ``actor.run`` (:78)
-  → validation-run ``limit(n)`` (:78) → output-view promotion (:79,137-148) →
-  metrics + debug staging (:80-81,151-240)
+- per action: input-view existence check (:67,119-134) → ``before_run`` late
+  variable binding (:76) → ``actor.run`` (:78) → validation-run ``limit(n)``
+  (:78) → output-view promotion (:79,137-148) → metrics + debug staging
+  (:80-81,151-240)
+- auto-cache (:69-72): a view is persisted when two or more actions consume
+  it, counted per action from ``input-views`` before its first consumer runs
 - job selection "file#job1;job2" (:43); cache/catalog cleanup per job (:96-103)
 """
 
@@ -43,6 +45,18 @@ def _parse_validation_run(vr) -> int | None:
     return n if n >= 0 else None
 
 
+def _declared_consumers(actions, i: int) -> set[int]:
+    """Indexes of the actions after ``i`` that list its output view in
+    ``input-views``, up to one that registers the same name again."""
+    name, readers = actions[i].output_view.name, set()
+    for j in range(i + 1, len(actions)):
+        if name in actions[j].input_views:
+            readers.add(j)
+        if getattr(actions[j].output_view, "name", None) == name:
+            break
+    return readers
+
+
 class PipelineRunner:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -70,21 +84,22 @@ class PipelineRunner:
             jctx = JobContext(ctx, session)
             metrics_persisted: list = []
             try:
-                for action in job.actions:
+                for i, action in enumerate(job.actions):
                     t0 = time.time()
+                    jctx.action = i
                     for v in action.input_views:
                         if not jctx.view_exists(v):
                             raise ValueError(
                                 f"action {action.name!r}: missing input view {v!r}"
                             )
-                        jctx.reference(v)
                     action.actor.before_run(ctx.variables)
                     df = action.actor.run(jctx, session)
                     if df is not None and ctx.validation_limit is not None and not df.isStreaming:
                         df = df.limit(ctx.validation_limit)
                     if df is not None and action.output_view is not None:
                         jctx.register_view(
-                            action.output_view.name, df, action.output_view.global_
+                            action.output_view.name, df, action.output_view.global_,
+                            _declared_consumers(job.actions, i),
                         )
                     self._metrics_and_staging(
                         pipeline, action, df, metrics, t0, metrics_persisted

@@ -1016,12 +1016,17 @@ def _encode_bound(v, ice_type: str) -> bytes | None:
     return None  # unsupported bound type: absent bounds never prune
 
 
+#: the byte widths a bound may have; 4-byte long/double bounds predate an
+#: int→long / float→double promotion (spec §Schema Evolution) and promote on read
+_BOUND_WIDTHS = {"int": (4,), "long": (4, 8), "float": (4,), "double": (4, 8), "date": (4,)}
+
+
 def _decode_bound(raw: bytes, ice_type: str):
-    if raw is None:
+    """None when the width does not fit the type: legacy first commits key
+    data-column bounds by partition-column ids. A same-width mis-keyed
+    bound still decodes; ``rewrite_data_files`` restages it correctly."""
+    if raw is None or len(raw) not in _BOUND_WIDTHS.get(ice_type, (len(raw),)):
         return None
-    # spec §Schema Evolution (type promotion): bounds written BEFORE an
-    # int→long / float→double promotion keep their original 4-byte
-    # width — decode by raw width and promote the value on read
     if ice_type == "int":
         return _struct.unpack("<i", raw)[0]
     if ice_type == "long":
@@ -3112,11 +3117,11 @@ def _prune_files_by_bounds(
         for col, op, val in conjuncts:
             fid = name_to_id.get(col)
             lo = hi = None
-            if fid is not None and fid in lower and fid in upper:
+            if col in pvals and pvals[col] is not None:
+                lo = hi = pvals[col]  # identity partition: wins over bounds
+            elif fid is not None and fid in lower and fid in upper:
                 lo = _decode_bound(lower[fid], ids_to_type[fid])
                 hi = _decode_bound(upper[fid], ids_to_type[fid])
-            elif col in pvals and pvals[col] is not None:
-                lo = hi = pvals[col]  # identity partition: exact value
             bval = val
             if isinstance(lo, (_dt.date, _dt.datetime)) and isinstance(val, str):
                 # date/timestamp bounds vs a string literal: parse the

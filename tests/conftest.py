@@ -25,3 +25,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def group_job_count(spark):
+    """``count(fn)``: the jobs ``fn()`` launches, counted inside a job group
+    of its own so unrelated activity in the shared session cannot change
+    the count."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+    return count

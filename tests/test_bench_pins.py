@@ -194,23 +194,7 @@ DELTA_ZORDER_JOBS = 19
 ICEBERG_ZORDER_JOBS = 7
 
 
-def _group_job_count(spark, fn) -> int:
-    """Jobs ``fn`` launches, counted inside a job group of its own so
-    unrelated activity in the shared session cannot change the count."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count pin")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
-
-
-def test_optimize_zorder_job_count_pinned(spark, sf_dir):
+def test_optimize_zorder_job_count_pinned(spark, sf_dir, group_job_count):
     """Round-16 pin (the r15 verdict's order item 5): the flat
     delta_optimize_zorder bench number has a mechanical explanation —
     after the r15 quantile fusion (k per-column approxQuantile jobs →
@@ -226,7 +210,7 @@ def test_optimize_zorder_job_count_pinned(spark, sf_dir):
 
     fn = QUERIES["delta_optimize_zorder"]
     fn(spark, sf_dir).count()  # warm (codegen + FS metadata)
-    n = _group_job_count(spark, lambda: fn(spark, sf_dir).count())
+    n = group_job_count(lambda: fn(spark, sf_dir).count())
     print(f"\ndelta_optimize_zorder: {n} jobs")
     assert n <= DELTA_ZORDER_JOBS + 2, (
         f"delta_optimize_zorder launched {n} jobs (pinned <= "
@@ -236,7 +220,7 @@ def test_optimize_zorder_job_count_pinned(spark, sf_dir):
     )
 
 
-def test_iceberg_zorder_rewrite_job_count_pinned(spark, sf_dir, tmp_path):
+def test_iceberg_zorder_rewrite_job_count_pinned(spark, sf_dir, tmp_path, group_job_count):
     """The Iceberg twin of the pin above: ``rewrite_data_files`` with
     ``strategy="zorder"`` over four full-range appends of orders pays
     one fused quantile job, the range-bounds sample and the staging
@@ -268,7 +252,7 @@ def test_iceberg_zorder_rewrite_job_count_pinned(spark, sf_dir, tmp_path):
 
     rewrite(fresh("warm"))  # warm (codegen + FS metadata)
     loc = fresh("pinned")
-    n = _group_job_count(spark, lambda: rewrite(loc))
+    n = group_job_count(lambda: rewrite(loc))
     print(f"\niceberg zorder rewrite: {n} jobs")
     assert n <= ICEBERG_ZORDER_JOBS + 2, (
         f"iceberg rewrite_data_files(zorder) launched {n} jobs (pinned <= "

@@ -432,3 +432,43 @@ def test_first_commit_bounds_key_by_the_table_field_ids(spark, loc):
     assert ice.read_iceberg(spark, loc, where="id >= 100").count() == 5
     # the partition column's id no longer holds the data column's bounds
     assert ice.read_iceberg(spark, loc, where="grp = 1").count() == 5
+
+
+def test_legacy_miskeyed_bounds_keep_files_instead_of_raising(spark, loc):
+    """First commits from the writer before it keyed bounds by the table
+    schema's ids hold the data column's bounds under the partition
+    column's id. A bound whose width does not fit that column's type
+    keeps the file, and an identity partition's value wins over it."""
+    import struct
+
+    from spark_etl_framework_spark.functions.avro_ocf import read_ocf, write_ocf
+
+    df = spark.createDataFrame(
+        [(g, g * 100 + i) for g in range(2) for i in range(5)],
+        "grp int, id long",
+    )
+    ice.write_iceberg(df.coalesce(1), loc, partition_by=["grp"])
+    meta = ice.load_metadata(loc)
+    ids = {f["name"]: f["id"] for f in meta["schema"]["fields"]}
+    _s, _m, mlist = read_ocf(ice._pick_snapshot(meta)["manifest-list"])
+    for mf in mlist:
+        schema, fmeta, entries = read_ocf(mf["manifest_path"])
+        for e in entries:
+            f = e["data_file"]
+            # the legacy shape: id's 8-byte bounds keyed as grp's field id
+            g = f["partition"]["grp"]
+            f["lower_bounds"] = [{"key": ids["grp"], "value": struct.pack("<q", g * 100)}]
+            f["upper_bounds"] = [{"key": ids["grp"], "value": struct.pack("<q", g * 100 + 4)}]
+        keep = {k: v for k, v in fmeta.items() if not k.startswith("avro.")}
+        write_ocf(mf["manifest_path"], schema, entries, metadata=keep)
+
+    assert ice._decode_bound(struct.pack("<q", 100), "int") is None
+    files, _dels = ice._scan_snapshot(meta, ice._pick_snapshot(meta))
+    assert all(len(f["lower_bounds"][0]["value"]) == 8 for f in files)
+    kept = ice._prune_files_by_bounds(files, meta, "grp = 1")
+    assert [f["partition"]["grp"] for f in kept] == [1]
+    got = sorted(r.id for r in ice.read_iceberg(spark, loc, where="grp = 1").collect())
+    assert got == [100, 101, 102, 103, 104]
+    # a mis-keyed bound no partition value covers keeps every file
+    assert len(ice._prune_files_by_bounds(
+        [{**f, "partition": {}} for f in files], meta, "grp = 1")) == 2

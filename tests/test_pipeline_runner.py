@@ -993,3 +993,184 @@ jobs:
     df = read_iceberg(spark, str(tbl))
     assert "nation_name" in df.columns and "n_regionkey" not in df.columns
     assert df.count() == 25
+
+
+# -- auto-cache: a view is persisted when two or more actions consume it --
+
+
+def _act(name, type_, props, inputs=None, out=None):
+    a = {"name": name, "actor": {"type": type_, "properties": props}}
+    if inputs:
+        a["input-views"] = inputs
+    if out:
+        a["output-view"] = {"name": out}
+    return a
+
+
+def _run(spark, actions, single_session=False):
+    from spark_etl_framework_spark.plans.builder import build_pipeline
+
+    # no global-view localization: its catalog listing runs one job per
+    # global temp view other tests left behind
+    settings = {"globalViewAsLocal": "false", "singleSparkSession": str(single_session).lower()}
+    defn = {"version": "1.0.0", "name": "autocache", "settings": settings,
+            "jobs": [{"name": "main", "actions": actions}]}
+    PipelineRunner(spark).run(build_pipeline(defn, spark=spark))
+
+
+@pytest.fixture()
+def persists(spark, monkeypatch):
+    """Every DataFrame.persist call, in order, as (event, DataFrame)."""
+    events: list = []
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    real = cls.persist
+
+    def spy(df, *a, **kw):
+        events.append(("persist", df))
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    return events
+
+
+#: group-scoped jobs of one warm run of the etl_star-shaped pipeline below
+#: (14 while every single-consumer view was persisted)
+ETL_STAR_JOBS = 9
+
+
+def test_single_consumer_views_stay_unpersisted(
+    spark, sf_dir, tmp_path, persists, group_job_count
+):
+    """Readers → sql-transformer with a setrun → validator (ignore) →
+    file-writer: no view has two consuming actions, so the run persists
+    nothing and every scan keeps its column pruning and filter pushdown."""
+    sql = """
+    setrun n_days = select datediff(max(o_orderdate), min(o_orderdate)) from s_orders
+        where o_orderdate >= date '1994-01-01';
+    select c_custkey, c_mktsegment, ${n_days} as n_days,
+           sum(l_extendedprice * (1 - l_discount)) as revenue
+    from s_customer join s_orders on c_custkey = o_custkey
+         join s_lineitem on l_orderkey = o_orderkey
+    where o_orderdate >= date '1994-01-01'
+    group by c_custkey, c_mktsegment
+    """
+    out = tmp_path / "out"
+    actions = [
+        _act(f"load-{t}", "file-reader", {"format": "parquet", "fileUri": f"{sf_dir}/{t}.parquet"},
+             out=f"s_{t}")
+        for t in ("customer", "orders", "lineitem")
+    ] + [
+        _act("transform", "sql-transformer", {"sqlString": sql},
+             ["s_customer", "s_orders", "s_lineitem"], "s_rev"),
+        _act("validate", "sql-data-validator", {"validWhere": "revenue > 0", "action": "ignore"},
+             ["s_rev"], "s_valid"),
+        _act("write", "file-writer", {"format": "parquet", "mode": "overwrite", "fileUri": str(out)},
+             ["s_valid"]),
+    ]
+    _run(spark, actions)  # warm
+    persists.clear()
+    n = group_job_count(lambda: _run(spark, actions))
+    print(f"\netl_star-shaped pipeline: {n} jobs")
+    assert persists == []
+    assert n <= ETL_STAR_JOBS
+    assert spark.read.parquet(str(out)).count() > 0
+
+
+def test_view_with_two_declared_consumers_is_persisted_up_front(
+    spark, sf_dir, tmp_path, persists, monkeypatch
+):
+    """A view two actions list in input-views is persisted when it is
+    registered, before its first consumer runs, and unpersisted at job end."""
+    from spark_etl_framework_spark.operators.sql import SqlTransformer
+
+    real_run = SqlTransformer.run
+
+    def run(self, ctx, session):
+        persists.append(("run", session.table("d_nation").storageLevel.useMemory))
+        return real_run(self, ctx, session)
+
+    monkeypatch.setattr(SqlTransformer, "run", run)
+    actions = [
+        _act("load", "file-reader", {"format": "parquet", "fileUri": f"{sf_dir}/nation.parquet"},
+             out="d_nation"),
+        _act("by-region", "sql-transformer",
+             {"sqlString": "select n_regionkey, count(*) as n from d_nation group by n_regionkey"},
+             ["d_nation"], "d_a"),
+        _act("names", "sql-transformer", {"sqlString": "select n_name from d_nation"},
+             ["d_nation"], "d_b"),
+        _act("write-a", "file-writer", {"format": "parquet", "fileUri": str(tmp_path / "a")}, ["d_a"]),
+        _act("write-b", "file-writer", {"format": "parquet", "fileUri": str(tmp_path / "b")}, ["d_b"]),
+    ]
+    _run(spark, actions)
+    assert [e for e, _ in persists] == ["persist", "run", "run"]
+    assert persists[1][1] is True  # cached before its first consumer ran
+    nation = persists[0][1]
+    assert "n_regionkey" in nation.columns
+    assert nation.storageLevel.useMemory is False  # released at job end
+    assert spark.read.parquet(str(tmp_path / "b")).count() == 25
+
+
+def test_undeclared_second_consumer_persists_the_view(spark, sf_dir, tmp_path, persists):
+    """A view whose second consuming action reads it only through its SQL,
+    without listing it in input-views, is persisted at that reference."""
+    actions = [
+        _act("load", "file-reader", {"format": "parquet", "fileUri": f"{sf_dir}/nation.parquet"},
+             out="u_nation"),
+        _act("first", "sql-transformer",
+             {"sqlString": "select n_nationkey, n_regionkey from u_nation"}, ["u_nation"], "u_a"),
+        _act("second", "sql-transformer",
+             {"sqlString": "select a.n_regionkey, n.n_name from u_a a "
+                           "join u_nation n on a.n_nationkey = n.n_nationkey"},
+             ["u_a"], "u_b"),
+        _act("write", "file-writer", {"format": "parquet", "fileUri": str(tmp_path / "o")}, ["u_b"]),
+    ]
+    _run(spark, actions)
+    assert len(persists) == 1
+    assert "n_name" in persists[0][1].columns  # u_nation, not u_a
+    assert spark.read.parquet(str(tmp_path / "o")).count() == 25
+
+
+def test_erroring_validator_scans_its_input_once(spark, sf_dir, tmp_path):
+    """``sql-data-validator action=error`` counts the invalid rows and
+    returns the lazy valid rows over the same view, so it keeps that view
+    cached: the view's rows are computed once for both reads."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(k):
+        calls.add(1)
+        return k
+
+    spark.udf.register("autocache_tick", tick, "bigint")
+    actions = [
+        _act("load", "file-reader", {"format": "parquet", "fileUri": f"{sf_dir}/nation.parquet"},
+             out="v_src"),
+        _act("tick", "sql-transformer",
+             {"sqlString": "select autocache_tick(n_nationkey) as k, n_name from v_src"},
+             ["v_src"], "v_nation"),
+        _act("validate", "sql-data-validator", {"validWhere": "k >= 0", "action": "error"},
+             ["v_nation"], "v_valid"),
+        _act("write", "file-writer", {"format": "parquet", "fileUri": str(tmp_path / "o")},
+             ["v_valid"]),
+    ]
+    _run(spark, actions, single_session=True)
+    assert spark.read.parquet(str(tmp_path / "o")).count() == 25
+    assert calls.value == 25
+
+
+def test_multi_branch_actor_keeps_its_single_consumer_input_cached(
+    spark, sf_dir, tmp_path, persists
+):
+    """``containment-dedup-transformer`` reads its input view in both
+    shingle branches and in the final anti-join, so it counts as two
+    consumers and the view it alone consumes stays cached."""
+    actions = [
+        _act("load", "file-reader", {"format": "parquet", "fileUri": f"{sf_dir}/documents.parquet"},
+             out="m_docs"),
+        _act("dedup", "containment-dedup-transformer", {"threshold": "0.8"}, ["m_docs"], "m_kept"),
+        _act("write", "file-writer", {"format": "parquet", "fileUri": str(tmp_path / "o")},
+             ["m_kept"]),
+    ]
+    _run(spark, actions)
+    docs = [df for _, df in persists if df.columns == ["doc_id", "text", "lang", "source", "n_chars"]]
+    assert len(docs) == 1
+    assert 0 < spark.read.parquet(str(tmp_path / "o")).count() <= 500
