@@ -9,9 +9,12 @@ row-oriented by nature, so the UDF cost is acceptable and confined.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.udf import UserDefinedFunction
 
 
 def _binary_split(data: bytes | None, delim: bytes | None) -> list[bytes] | None:
@@ -62,22 +65,34 @@ def _com3_to_int(data: bytes | None) -> int | None:
     return sign * v
 
 
+_judfs: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _register(spark: SparkSession, name: str, fn, return_type) -> None:
+    """``spark.udf.register`` that pickles ``fn`` once per SparkContext (kept
+    in ``_judfs`` by name), not once per pipeline job."""
+    judfs = _judfs.setdefault(spark.sparkContext, {})
+    if name not in judfs:
+        judfs[name] = UserDefinedFunction(fn, return_type, name)._judf
+    spark._jsparkSession.udf().registerPython(name, judfs[name])
+
+
 def register_binary_functions(spark: SparkSession, prefix: str = "") -> None:
     """Register the reference's system UDFs under an optional name prefix
     (reference: etl/common/UdfRegister.scala:24-37)."""
-    spark.udf.register(f"{prefix}binary_split", _binary_split, T.ArrayType(T.BinaryType()))
-    spark.udf.register(f"{prefix}com3_to_double", _com3_to_double, T.DoubleType())
-    spark.udf.register(f"{prefix}com3_to_int", _com3_to_int, T.LongType())
+    _register(spark, f"{prefix}binary_split", _binary_split, T.ArrayType(T.BinaryType()))
+    _register(spark, f"{prefix}com3_to_double", _com3_to_double, T.DoubleType())
+    _register(spark, f"{prefix}com3_to_int", _com3_to_int, T.LongType())
     # built-in-backed: register as SQL-callable names for parity
-    spark.udf.register(
-        f"{prefix}bytes_to_string",
+    _register(
+        spark, f"{prefix}bytes_to_string",
         lambda b, charset: bytes(b).decode(charset or "utf-8", errors="replace")
         if b is not None
         else None,
         T.StringType(),
     )
-    spark.udf.register(
-        f"{prefix}bytes_to_hex",
+    _register(
+        spark, f"{prefix}bytes_to_hex",
         lambda b, _charset=None: bytes(b).hex() if b is not None else None,
         T.StringType(),
     )

@@ -90,9 +90,7 @@ class JobContext:
 
     def view_exists(self, view: str) -> bool:
         """Input-view existence check (reference: PipelineRunner.scala:119-134)."""
-        if view.startswith("global_temp."):
-            return self.spark.catalog.tableExists(view)
-        return self.spark.catalog.tableExists(view) or view in self._view_dfs
+        return view in self._view_dfs or self.spark.catalog.tableExists(view)
 
     def cleanup(self) -> None:
         """Unpersist + drop temp views at job end

@@ -127,13 +127,13 @@ class PipelineRunner:
     def _localize_global_views(self, session: SparkSession) -> None:
         """Re-register every global_temp.X as local X in the job's sub-session
         (reference: PipelineRunner.scala:56-58,113-116)."""
-        try:
-            tables = session.catalog.listTables("global_temp")
-        except Exception:  # no global temp db yet
+        try:  # SHOW VIEWS runs no Spark job; catalog.listTables runs one or more
+            views = session.sql("SHOW VIEWS IN global_temp").collect()
+        except Exception:  # no global temp db in the current catalog
             return
-        for t in tables:
-            if t.isTemporary and t.database == "global_temp":
-                session.table(f"global_temp.{t.name}").createOrReplaceTempView(t.name)
+        for v in views:
+            if v.namespace == "global_temp":  # not the session's local views
+                session.table(f"global_temp.{v.viewName}").createOrReplaceTempView(v.viewName)
 
     def _metrics_and_staging(
         self,

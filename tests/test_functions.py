@@ -32,3 +32,21 @@ def test_sql_registration(spark):
         "u_bytes_to_string(X'68656C6C6F', 'utf-8') as s"
     ).collect()[0]
     assert row["i"] == 12345 and row["h"] == "0a0b" and row["s"] == "hello"
+
+
+def test_registration_reuses_jvm_functions_across_sessions(spark):
+    """A pipeline job registers the system UDFs in a fresh session; the JVM
+    functions are built once and shared, and work in every session."""
+    from spark_etl_framework_spark.functions import binary
+
+    register_binary_functions(spark)
+    built = dict(binary._judfs[spark.sparkContext])
+    other = spark.newSession()
+    register_binary_functions(other)
+    now = binary._judfs[spark.sparkContext]
+    assert now.keys() == built.keys() and all(now[k] is built[k] for k in built)
+    row = other.sql(
+        "select com3_to_int(X'12345D') as i, bytes_to_hex(X'0A0B') as h, "
+        "binary_split(X'610062', X'00') as parts"
+    ).collect()[0]
+    assert row["i"] == -12345 and row["h"] == "0a0b" and row["parts"] == [b"a", b"b"]

@@ -198,6 +198,24 @@ jobs:
     assert spark.table("global_temp.region_count").collect()[0]["n"] == 5
 
 
+def test_global_view_localization_runs_no_job(spark, group_job_count):
+    """Localizing the global temp views at the start of a job lists them
+    without a Spark job, however many there are."""
+    names = [f"gloc_{i}" for i in range(3)]
+    for i, name in enumerate(names):
+        spark.range(i + 1).createOrReplaceGlobalTempView(name)
+    session = spark.newSession()
+    try:
+        n = group_job_count(lambda: PipelineRunner(spark)._localize_global_views(session))
+        assert n == 0
+        local = {t.name for t in session.catalog.listTables() if t.isTemporary}
+        assert set(names) <= local
+        assert [session.table(name).count() for name in names] == [1, 2, 3]
+    finally:
+        for name in names:
+            spark.catalog.dropGlobalTempView(name)
+
+
 def test_json_pipeline_build(spark, sf_dir, tmp_path):
     jpath = tmp_path / "p.json"
     jpath.write_text(
@@ -1010,9 +1028,7 @@ def _act(name, type_, props, inputs=None, out=None):
 def _run(spark, actions, single_session=False):
     from spark_etl_framework_spark.plans.builder import build_pipeline
 
-    # no global-view localization: its catalog listing runs one job per
-    # global temp view other tests left behind
-    settings = {"globalViewAsLocal": "false", "singleSparkSession": str(single_session).lower()}
+    settings = {"singleSparkSession": str(single_session).lower()}
     defn = {"version": "1.0.0", "name": "autocache", "settings": settings,
             "jobs": [{"name": "main", "actions": actions}]}
     PipelineRunner(spark).run(build_pipeline(defn, spark=spark))
