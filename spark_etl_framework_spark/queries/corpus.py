@@ -490,7 +490,7 @@ def corpus_trigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH toks AS (
         SELECT doc_id,
-               list_filter(list_transform(regexp_split_to_array(trim(text), '\s+'),
+               list_filter(list_transform(regexp_split_to_array(trim(text), '\\s+'),
                                           x -> lower(x)), x -> x <> '') AS t
         FROM documents
     ),

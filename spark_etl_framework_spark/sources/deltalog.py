@@ -472,18 +472,11 @@ def _apply_action(
             tags=tags or None,
         )
         af = adds[unquote(a["path"])]
-        vintage = (tags or {}).get(_VINTAGE_TAG)
-        if vintage is not None:
-            # a row-tracking backfill restated these bytes: the tag, not
-            # its drcv, dates them ("" = undated; the path memory below
-            # may still know)
-            af.data_vintage = (
-                int(vintage) if vintage else snap.path_vintages.get(af.path)
-            )
-        elif af.default_row_commit_version is not None:
-            af.data_vintage = af.default_row_commit_version
-        elif (
-            exact
+        af.data_vintage = _stated_vintage(tags, af.default_row_commit_version)
+        if (
+            af.data_vintage is None
+            and _VINTAGE_TAG not in (tags or {})
+            and exact
             and version is not None
             and a.get("dataChange")
             and af.path not in snap.seen_paths
@@ -499,8 +492,9 @@ def _apply_action(
             af.data_vintage = version
         elif af.data_vintage is None:
             # restatement of a seen path (DV update, protocol-upgrade
-            # re-add, RESTORE): same path = same bytes — the ORIGINAL
-            # vintage, when the replay established one, is still true
+            # re-add, RESTORE) or an undated backfill tag: same path =
+            # same bytes — the ORIGINAL vintage, when the replay
+            # established one, is still true
             af.data_vintage = snap.path_vintages.get(af.path)
         if af.data_vintage is not None:
             snap.path_vintages.setdefault(af.path, af.data_vintage)
@@ -912,7 +906,7 @@ def _file_map_columns(
     ``names``) needs: typed partition literals, and — when the schema
     carries EXISTS_DEFAULTs (PROTOCOL.md §Column Default Values) — the
     list of defaulted columns each file physically lacks, decided
-    driver-side by :func:`_absent_default_files`. Returns ``(columns,
+    driver-side by :func:`_default_columns`. Returns ``(columns,
     defaults, absent)`` for :func:`lakecore.join_file_map` and
     :func:`lakecore.fill_absent_defaults`; ``what`` names the refused
     operation when the defaults feature is missing."""
@@ -933,10 +927,11 @@ def _file_map_columns(
     absent: dict[str, list[str]] = {}
     if exists_defaults:
         _require_defaults_feature(snap, path, what)
-        absent = _absent_default_files(
-            path, files,
-            {n: snap.physical_of.get(n, n) for n in exists_defaults},
-            snap=snap,
+        absent = lakecore.absent_by_file(
+            _default_columns(
+                path, snap, [(f.path, f.stats, f.data_vintage) for f in files]
+            ),
+            exists_defaults,
         )
     if absent:
         columns.append(lakecore.absent_column(names, absent))
@@ -3257,10 +3252,12 @@ def add_column(
     ``add_column(default=)`` DDL (the jar's ``ADD COLUMN x INT DEFAULT
     7``; reference: etl/source/DeltaReader.scala:10-27 — the jar reads
     what it writes). Mirrors the v3 iceberg semantics: read
-    substitution is per-file PHYSICAL absence (add-action stats as
-    positive evidence, parquet-footer fallback — see
-    :func:`_absent_default_files`), so compacted files that materialized
-    the column keep their stored values. Returns the new version."""
+    substitution is per-file PHYSICAL absence, decided by the one
+    :func:`lakecore.resolve_file_columns` both formats share (add-action
+    stats as positive evidence, the log vintage, then one pooled footer
+    read matched by physical name — Iceberg's by field id — see
+    :func:`_default_columns`), so compacted files that materialized the
+    column keep their stored values. Returns the new version."""
     if isinstance(col_type, str):
         col_type = T._parse_datatype_string(col_type)
     snap = snapshot(path)
@@ -3342,82 +3339,81 @@ def add_column(
     return version
 
 
-def _absent_default_files(
-    path: str,
-    files: list,
-    defaults_phys: dict[str, str],
-    snap: "Snapshot | None" = None,
-) -> dict[str, list[str]]:
-    """Per data file (by basename): which defaulted columns are
-    PHYSICALLY ABSENT (written before the column existed — those rows
-    read EXISTS_DEFAULT; files that materialized the column read stored
-    values, including genuine nulls). Evidence ladder (round-15 order 2
-    — the jar decides this from the log, not the data, cf.
-    ``etl/source/DeltaReader.scala:10-27``):
+def _vintage_verdict(vintage: int | None, exact: int | None, ub: int | None):
+    """The log's verdict on whether bytes of data vintage ``vintage``
+    hold a column whose EXISTS_DEFAULT arrived at version ``exact``
+    (exactly dated), or at or before ``ub`` (upper bound only). The
+    ``allowColumnDefaults`` writer gate means every post-DDL writer
+    materialized the column."""
+    if vintage is None or vintage == exact:
+        # v == arrival: a CLONE/CREATE commit can restate pre-DDL bytes
+        # beside the defaulted schema, so the footer decides
+        return lakecore.UNDATED
+    if exact is not None:
+        # v < arrival is airtight even for restated bytes: an observed
+        # add version can only POSTdate them
+        return lakecore.ABSENT if vintage < exact else lakecore.PRESENT
+    return lakecore.PRESENT if ub is not None and vintage > ub else lakecore.UNDATED
 
-    1. add-action stats maps (minValues/maxValues/nullCount, keyed by
-       PHYSICAL name) are POSITIVE evidence of presence only — engines
-       cap stats at dataSkippingNumIndexedCols (round-14 ADVICE);
-    2. log vintage: a file whose ``data_vintage`` (drcv, or the version
-       of its dataChange=true add) is >= the column's dated
-       EXISTS_DEFAULT arrival must contain the column — the
-       ``allowColumnDefaults`` writer gate means every post-DDL writer
-       materialized CURRENT_DEFAULT — and one written strictly before an
-       EXACTLY-dated arrival cannot;
-    3. only files the log cannot date (CONVERT/clone imports,
-       checkpoint-restated adds without row tracking) fall back to one
-       parquet footer read each, batched through a bounded thread pool.
 
-    O(undatable ∩ stats-suppressed files) footer I/O, zero executor
-    I/O."""
-    out: dict[str, list[str]] = {}
-    since = snap.default_since if snap is not None else {}
-    since_ub = snap.default_since_ub if snap is not None else {}
-    residual: list[tuple] = []  # (f, [(logical, physical), ...])
-    for f in files:
-        present: set[str] = set()
-        if f.stats:
-            try:
-                d = json.loads(f.stats)
-                for key in ("minValues", "maxValues", "nullCount"):
-                    present.update((d.get(key) or {}).keys())
-            except ValueError:
-                pass
-        unknown = [
-            (n, p) for n, p in defaults_phys.items() if p not in present
-        ]
-        absent: list[str] = []
-        undated: list[tuple[str, str]] = []
-        for n, p in unknown:
-            v = f.data_vintage
-            exact, ub = since.get(n), since_ub.get(n)
-            if v is not None and exact is not None and v < exact:
-                # airtight in this direction even for restated bytes: an
-                # observed add version can only POSTdate the bytes, so
-                # bytes-at-or-before v < arrival ⇒ written pre-default
-                absent.append(n)
-                continue
-            if v is not None and exact is not None and v > exact:
-                continue  # strictly post-DDL write → materialized
-            if v is not None and exact is None and ub is not None and v > ub:
-                continue  # post-DDL by the upper bound too
-            # v == arrival is undecidable from the log (a CLONE/CREATE
-            # commit can restate pre-DDL bytes alongside the defaulted
-            # schema) — footer decides
-            undated.append((n, p))
-        if undated:
-            residual.append((f, absent, undated))
-        elif absent:
-            out[os.path.basename(f.path)] = absent
-    cols = lakecore.footer_columns(
-        [os.path.join(path, f.path) for f, _absent, _undated in residual]
+def _stats_columns(stats: str | None) -> frozenset:
+    """Physical columns an add action's stats maps name: POSITIVE
+    evidence of presence only (engines cap stats at
+    dataSkippingNumIndexedCols)."""
+    try:
+        d = json.loads(stats) if stats else {}
+    except ValueError:
+        return frozenset()
+    return frozenset(
+        k for key in ("minValues", "maxValues", "nullCount")
+        for k in (d.get(key) or {})
     )
-    for f, absent, undated in residual:
-        have = cols[os.path.join(path, f.path)]
-        absent = absent + [n for n, p in undated if p not in have]
-        if absent:
-            out[os.path.basename(f.path)] = absent
-    return out
+
+
+def _stated_vintage(tags: dict | None, drcv) -> int | None:
+    """The data vintage an add action states by itself: a row-tracking
+    backfill's tag dates the restated bytes, not its drcv (``""`` =
+    undated); else its defaultRowCommitVersion. None: undated."""
+    tag = (tags or {}).get(_VINTAGE_TAG)
+    if tag is not None:
+        return int(tag) if tag else None
+    return None if drcv is None else int(drcv)
+
+
+def _default_columns(
+    path: str, snap: Snapshot, files: list[tuple]
+) -> dict[str, dict[str, str | None]]:
+    """Which EXISTS_DEFAULT columns each ``(relative path, stats JSON,
+    data vintage)`` file holds, by :func:`lakecore.resolve_file_columns`
+    (keyed by absolute path; None = absent, those rows read
+    EXISTS_DEFAULT). Delta's evidence, decided from the log like the jar
+    (``etl/source/DeltaReader.scala:10-27``): add-action stats prove
+    presence, and the file's data vintage (drcv, the backfill tag, or
+    the version of its dataChange=true add) dates it against the
+    column's arrival (:func:`_vintage_verdict`). Only files the log
+    cannot date — CONVERT/clone imports, checkpoint-restated adds
+    without row tracking — cost a pooled footer read."""
+    wanted = [
+        lakecore.WantedColumn(n, (snap.physical_of.get(n, n),))
+        for n in _exists_defaults(snap.schema)
+    ]
+    since, since_ub = snap.default_since, snap.default_since_ub
+    return lakecore.resolve_file_columns(
+        [
+            lakecore.FileEvidence(
+                os.path.join(path, rel),
+                _stats_columns(stats),
+                {
+                    c.name: _vintage_verdict(
+                        vintage, since.get(c.name), since_ub.get(c.name)
+                    )
+                    for c in wanted
+                },
+            )
+            for rel, stats, vintage in files
+        ],
+        wanted,
+    )
 
 
 def _add_action_of(f: AddFile, data_change: bool = False) -> dict:
@@ -5280,7 +5276,7 @@ class DeltaLogStreamReader(lakecore.ChangeStreamReader):
         self._skip_change_commits = str(
             lakecore.stream_option(options, "skipChangeCommits", "false")
         ).lower() == "true"
-        snap = snapshot(self._path)
+        snap = self._snap = snapshot(self._path)
         #: logical -> physical parquet column (identity unless mapped)
         self._phys = snap.physical_of
         self._ptypes = {f.name: f.dataType for f in snap.schema.fields}
@@ -5308,7 +5304,9 @@ class DeltaLogStreamReader(lakecore.ChangeStreamReader):
     def head(self) -> int:
         return latest_version(self._path)
 
-    def _unit(self, c: _Change, v: int, ts: int) -> lakecore.ChangeUnit:
+    def _unit(
+        self, c: _Change, v: int, ts: int, held: dict
+    ) -> lakecore.ChangeUnit:
         pv = c.action.get("partitionValues") or {}
         constants = {
             n: _cast_partition_literal(
@@ -5326,9 +5324,10 @@ class DeltaLogStreamReader(lakecore.ChangeStreamReader):
         def dv(desc):
             return [(dv_positions, (desc, self._path))] if desc else []
 
+        path = os.path.join(self._path, unquote(c.action["path"]))
         return lakecore.ChangeUnit(
-            os.path.join(self._path, unquote(c.action["path"])),
-            tags=tags, constants=constants, renames=self._phys,
+            path, tags=tags, constants=constants,
+            renames={**self._phys, **held.get(path, {})},
             keep=None if c.keep is None else dv(c.keep), drop=dv(c.drop),
         )
 
@@ -5353,8 +5352,18 @@ class DeltaLogStreamReader(lakecore.ChangeStreamReader):
                         "versions"
                     )
                 changes = [c for c in changes if c.change == "insert"]
-            parts += [self._unit(c, v, ts) for c in changes]
-        return parts
+            parts += [(c, v, ts) for c in changes]
+        held = {}
+        if self._defaults:
+            # the batch read's per-file decision, on what each add action
+            # states itself (the stream keeps no replay's path memory)
+            held = _default_columns(self._path, self._snap, [
+                (unquote(a["path"]), a.get("stats"), _stated_vintage(
+                    a.get("tags"), a.get("defaultRowCommitVersion")
+                ))
+                for a in (c.action for c, _v, _ts in parts)
+            ])
+        return [self._unit(c, v, ts, held) for c, v, ts in parts]
 
 
 class DeltaCdfStreamReader(DeltaLogStreamReader):

@@ -209,247 +209,75 @@ def _initial_defaults(ice_schema: dict) -> list[tuple[str, object]]:
     ]
 
 
-def _absent_default_cols(
-    files: list[dict],
-    ice_schema: dict,
-    names: list[str],
-    meta: dict | None = None,
-) -> dict[str, list[str]]:
-    """Per data file (by basename): which of the defaulted columns are
-    PHYSICALLY ABSENT from the file (written before the field existed —
-    those rows read the initial-default; files that contain the column
-    read stored values, including genuine nulls).
-
-    The manifest count maps (``value_counts``/``null_value_counts``/
-    ``column_sizes``, keyed by field id) are POSITIVE evidence only: an
-    id present in any map proves the column is stored. An id missing
-    from the maps proves nothing — real engines legitimately suppress
-    per-column metrics (``write.metadata.metrics.mode=none``, or the
-    default cap on how many columns get stats), so concluding "absent"
-    from a missing id would silently substitute the initial-default for
-    stored values.
-
-    Second tier (round 15 — the iceberg twin of the delta log-vintage
-    fix), ABSENT direction only: the WRITING snapshot's schema dates
-    the file against the field. Each entry's ``snapshot_id`` (preserved
-    verbatim on EXISTING restatements by compaction/overwrite
-    carry-over) maps to that snapshot's stamped ``schema-id``; a schema
-    that PREDATES the field cannot have produced a file containing its
-    id (ids are never reused) — ABSENT, zero I/O. The schema
-    CONTAINING the field proves nothing physical: the jar's read rule
-    is per-file id absence (a post-field file legitimately omitting an
-    optional column reads initial-default too), and foreign in-place
-    schema edits would forge "present" — so presence stays
-    stats-positive-or-footer.
-
-    The residual footer path (one read per file, through the core's
-    bounded pool) is O((post-field ∪ undatable) ∩
-    metrics-suppressed files) — at 100 TB the first post-DDL read of a
-    metrics-capped million-file table costs zero footer fetches for
-    the entire pre-evolution set, the part that scales with the
-    table."""
-    ids = {
-        f["name"]: f["id"] for f in ice_schema.get("fields", [])
-        if f["name"] in names
-    }
-    schema_of_snap: dict = {}
-    fields_of_schema: dict = {}
-    if meta is not None:
-        schema_of_snap = {
-            s["snapshot-id"]: s.get("schema-id")
-            for s in meta.get("snapshots", [])
-            if s.get("schema-id") is not None
-        }
-        fields_of_schema = {
-            sch["schema-id"]: {f["id"] for f in sch.get("fields", [])}
-            for sch in meta.get("schemas", [])
-            if sch.get("schema-id") is not None
-        }
-    out: dict[str, list[str]] = {}
-    residual: list[tuple] = []  # (file path, decided absent, unknown)
-    for f in files:
-        present_ids: set[int] = set()
-        for key in ("value_counts", "null_value_counts", "column_sizes"):
-            counts = f.get(key)
-            if counts:
-                present_ids.update(int(e["key"]) for e in counts)
-        write_fields = fields_of_schema.get(
-            schema_of_snap.get(f.get("__snap"))
-        )
-        decided_absent: list[str] = []
-        unknown = []
-        for n, i in ids.items():
-            if i in present_ids:
-                continue  # stats-positive: physically stored
-            if write_fields is not None and i not in write_fields:
-                # the writing schema predates the field — the file
-                # cannot contain an id that did not exist yet
-                decided_absent.append(n)
-                continue
-            unknown.append(n)
-        if unknown:
-            residual.append((f["file_path"], decided_absent, unknown))
-        elif decided_absent:
-            out[os.path.basename(f["file_path"])] = decided_absent
-    cols = lakecore.footer_columns([p for p, _absent, _unknown in residual])
-    for p, decided_absent, unknown in residual:
-        absent = decided_absent + [n for n in unknown if n not in cols[p]]
-        if absent:
-            out[os.path.basename(p)] = absent
-    return out
-
-
 def _file_write_names(
     meta: dict, files: list[dict], data_fields: list[tuple[int, str]]
-) -> dict[str, dict[str, str]] | None:
-    """Per data file (by path): {current name -> name to SCAN under} for
-    the given (field id, current name) pairs, only where they differ —
-    or None when schema history shows no rename / same-name re-add
-    touching these fields (the fast path: every table that never
-    renamed pays nothing).
+) -> dict[str, dict[str, str | None]] | None:
+    """Per data file (by path): {current name -> the name the file
+    stores it under, or None when the file lacks it} for the given
+    (field id, current name) pairs, only where the two differ — or None
+    when none has a v3 initial-default or a rename / same-name re-add
+    in its history (the fast path: no footer read, one plain scan).
 
-    The spec resolves columns by FIELD ID. Per file: the parquet
-    footer's stamped field ids when present (exact); otherwise by name,
-    which is safe only for names that map to ONE field id across the
-    whole schema history — an ambiguous name (drop + re-add) without
-    footer ids REFUSES rather than silently resurrecting another
-    column's bytes. A stamped file where the wanted id is absent but
-    the current NAME physically exists (it belongs to a dropped id)
-    scans under a masked placeholder so Spark null-fills it. Cost: one
-    driver-side footer read per live file, paid ONLY on tables whose
-    history contains a rename/re-add; compaction rewrites retire it."""
-    names_hist = _names_by_id_history(meta)
-    ids_hist = _ids_by_name_history(meta)
-    wanted = {
-        fid: cur for fid, cur in data_fields
-        if len(names_hist.get(fid, {cur})) > 1
+    :func:`lakecore.resolve_file_columns` decides on Iceberg's evidence.
+    The WRITING snapshot's schema (each entry's ``snapshot_id``, kept on
+    EXISTING restatements, maps to a stamped ``schema-id``) dates a file:
+    a schema that predates the field cannot have produced its id — ids
+    are never reused. Count maps prove presence, and bounds do where the
+    writing schema holds the field (first commits of older writers keyed
+    bounds to shifted ids). Footers match by FIELD ID, the spec's rule."""
+    names_hist, ids_hist = _field_history(meta)
+    defaulted = {n for n, _ in _initial_defaults(_current_ice_schema(meta))}
+    wanted = [
+        lakecore.WantedColumn(
+            cur, tuple(sorted(names_hist.get(fid, {cur}))), fid,
+            frozenset(
+                n for n in names_hist.get(fid, {cur})
+                if len(ids_hist.get(n, {fid})) > 1
+            ),
+        )
+        for fid, cur in data_fields
+        if cur in defaulted
+        or len(names_hist.get(fid, {cur})) > 1
         or len(ids_hist.get(cur, {fid})) > 1
-    }
+    ]
     if not wanted:
         return None
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict[str, str]] = {}
-    for f in files:
-        path = f["file_path"]
-        try:
-            arrow = pq.ParquetFile(path).schema_arrow
-        except OSError as e:
-            # VARIANT footers are unreadable to this pyarrow — a file we
-            # cannot inspect cannot be vintage-resolved; refuse rather
-            # than guess which bytes a renamed column maps to
-            raise ValueError(
-                f"iceberg: cannot read the parquet footer of "
-                f"{os.path.basename(path)} to resolve renamed columns "
-                f"({e}); rewrite the file (rewrite_data_files) to "
-                "disambiguate"
-            ) from e
-        by_id: dict[int, str] = {}
-        for af in arrow:
-            md = af.metadata or {}
-            rid = md.get(b"PARQUET:field_id")
-            if rid is not None:
-                by_id[int(rid)] = af.name
-        cols = set(arrow.names)
-        ren: dict[str, str] = {}
-        for fid, cur in wanted.items():
-            if fid in by_id:
-                if by_id[fid] != cur:
-                    ren[cur] = by_id[fid]
-                continue
-            if by_id:
-                # id-stamped file lacking this id: the field is absent;
-                # if its CURRENT name exists physically it belongs to a
-                # different (dropped) id — mask so Spark null-fills
-                if cur in cols:
-                    ren[cur] = f"__masked_{fid}"
-                continue
-            cands = sorted(
-                n for n in names_hist.get(fid, {cur}) if n in cols
-            )
-            if not cands:
-                continue  # column physically absent: null/default fill
-            ambiguous = [
-                n for n in cands if len(ids_hist.get(n, {fid})) > 1
-            ]
-            if len(cands) > 1 or ambiguous:
-                raise ValueError(
-                    f"iceberg: cannot resolve column {cur!r} (field id "
-                    f"{fid}) in {os.path.basename(path)} — the file has "
-                    "no parquet field ids and the candidate names "
-                    f"{cands} are ambiguous across the table's schema "
-                    "history (rename/drop-re-add); rewrite the file "
-                    "(rewrite_data_files) to disambiguate"
-                )
-            if cands[0] != cur:
-                ren[cur] = cands[0]
-        if ren:
-            out[path] = ren
-    return out
-
-
-def _scan_data_files(
-    spark: SparkSession,
-    files: list[dict],
-    data_schema: T.StructType,
-    meta: dict,
-    need_file_name: bool = False,
-    need_pos: bool = False,
-) -> DataFrame:
-    """Scan data files under ``data_schema``'s CURRENT column names,
-    resolving renamed / re-added column VINTAGES per file: files group
-    by their write-name signature, each group scans with the write-time
-    names and aliases back, groups union by name. ``_metadata``-derived
-    columns (__file_name/__pos) attach INSIDE each group — the pseudo
-    column does not survive a union. Tables with no rename history take
-    a single plain scan (zero overhead — the common case)."""
-    schema_ids = {
-        f["name"]: int(f["id"]) for f in meta["schema"].get("fields", [])
+    schema_of_snap = {
+        s["snapshot-id"]: s.get("schema-id") for s in meta.get("snapshots", [])
     }
-    data_fields = [
-        (schema_ids[f.name], f.name)
-        for f in data_schema.fields
-        if f.name in schema_ids
-    ]
-    renames = _file_write_names(meta, files, data_fields)
-
-    def _with_meta(df: DataFrame) -> DataFrame:
-        if need_file_name:
-            return lakecore.with_lineage(df, pos=need_pos)
-        return df
-
-    if not renames:
-        paths = [f["file_path"] for f in files]
-        return _with_meta(spark.read.schema(data_schema).parquet(*paths))
-    groups: dict[tuple, list[str]] = {}
+    fields_of_schema = {
+        sch["schema-id"]: {f["id"] for f in sch.get("fields", [])}
+        for sch in meta.get("schemas", [])
+        if sch.get("schema-id") is not None
+    }
+    evidence = []
     for f in files:
-        sig = tuple(sorted((renames.get(f["file_path"]) or {}).items()))
-        groups.setdefault(sig, []).append(f["file_path"])
-    extras = (["__file_name"] if need_file_name else []) + (
-        ["__pos"] if need_pos else []
-    )
-    parts = []
-    for sig, paths in sorted(groups.items()):
-        wmap = dict(sig)
-        scan_schema = T.StructType([
-            T.StructField(
-                wmap.get(fld.name, fld.name), fld.dataType, True,
-                fld.metadata,
-            )
-            for fld in data_schema.fields
-        ])
-        g = _with_meta(spark.read.schema(scan_schema).parquet(*paths))
-        g = g.select(
-            *[
-                F.col(wmap.get(fld.name, fld.name)).alias(fld.name)
-                for fld in data_schema.fields
-            ],
-            *extras,
-        )
-        parts.append(g)
-    out = parts[0]
-    for g in parts[1:]:
-        out = out.unionByName(g)
+        written = fields_of_schema.get(schema_of_snap.get(f.get("__snap")))
+        counted = {
+            int(e["key"])
+            for key in ("value_counts", "null_value_counts", "column_sizes")
+            for e in f.get(key) or ()
+        }
+        bounded = {
+            int(e["key"])
+            for key in ("lower_bounds", "upper_bounds")
+            for e in f.get(key) or ()
+        }
+        if written is not None:
+            bounded &= written
+        evidence.append(lakecore.FileEvidence(
+            f["file_path"],
+            frozenset(counted | bounded),
+            {
+                c.name: lakecore.ABSENT
+                for c in wanted if written is not None and c.field_id not in written
+            },
+        ))
+    out = {}
+    for path, cols in lakecore.resolve_file_columns(evidence, wanted).items():
+        differ = {n: phys for n, phys in cols.items() if phys != n}
+        if differ:
+            out[path] = differ
     return out
 
 
@@ -464,14 +292,22 @@ def _scan_table_files(
     path: bool = False,
     first_row_id: bool = False,
 ) -> DataFrame:
-    """Scan data files (:func:`_scan_data_files`) and join ONE broadcast
-    file map onto their ``__file_name``: the typed identity partition
-    values, on request (``lineage``) each row's ``__pos`` and its file's
-    data sequence number ``__seq`` — the coordinates deletes key on —,
-    the full path (``__path``) and v3 ``__first_row_id``, and the v3
-    initial-default absence lists — rows of files written BEFORE a
-    defaulted column existed read the declared default, not null. A
-    scan that needs none of them is a bare scan."""
+    """Scan data files under ``data_schema``'s CURRENT column names and
+    join ONE broadcast file map onto their ``__file_name``: the typed
+    identity partition values, on request (``lineage``) each row's
+    ``__pos`` and its file's data sequence number ``__seq`` — the
+    coordinates deletes key on —, the full path (``__path``) and v3
+    ``__first_row_id``, and the v3 initial-default absence lists — rows
+    of files written BEFORE a defaulted column existed read the declared
+    default, not null. A scan that needs none of them is a bare scan.
+
+    Renamed / re-added column vintages resolve per file
+    (:func:`_file_write_names`): files group by their write-name
+    signature, each group scans under the write-time names and aliases
+    back, groups union by name. A column a file lacks whose current name
+    another field once carried scans under a masked placeholder, so
+    Spark null-fills it. ``_metadata``-derived columns attach INSIDE each
+    group — the pseudo column does not survive a union."""
     names = [os.path.basename(f["file_path"]) for f in files]
     ptypes = {f.name: f.dataType for f in schema.fields}
     columns = [
@@ -493,17 +329,42 @@ def _scan_table_files(
                         [f.get("first_row_id") for f in files]))
     ice_schema = _current_ice_schema(meta)
     defaults = _initial_defaults(ice_schema)
-    absent: dict[str, list[str]] = {}
-    if defaults:
-        absent = _absent_default_cols(
-            files, ice_schema, [n for n, _ in defaults], meta=meta
-        )
+    schema_ids = {f["name"]: int(f["id"]) for f in ice_schema.get("fields", [])}
+    write_names = _file_write_names(meta, files, [
+        (schema_ids[f.name], f.name)
+        for f in data_schema.fields if f.name in schema_ids
+    ]) or {}
+    absent = lakecore.absent_by_file(write_names, dict(defaults))
     if absent:
         columns.append(lakecore.absent_column(names, absent))
-    df = _scan_data_files(
-        spark, files, data_schema, meta,
-        need_file_name=bool(columns), need_pos=lineage,
-    )
+    shared = {n for n, ids in _field_history(meta)[1].items() if len(ids) > 1}
+    groups: dict[tuple, list[str]] = {}
+    for f in files:
+        sig = tuple(sorted(
+            (n, phys or f"__masked_{n}")
+            for n, phys in write_names.get(f["file_path"], {}).items()
+            if phys is not None or n in shared
+        ))
+        groups.setdefault(sig, []).append(f["file_path"])
+    parts = []
+    for sig, paths in sorted(groups.items()):
+        wmap = dict(sig)
+        g = spark.read.schema(T.StructType([
+            T.StructField(wmap.get(fld.name, fld.name), fld.dataType, True,
+                          fld.metadata)
+            for fld in data_schema.fields
+        ])).parquet(*paths)
+        if columns:
+            g = lakecore.with_lineage(g, pos=lineage)
+        if wmap:
+            g = g.select(
+                *[F.col(wmap.get(c, c)).alias(c) for c in data_schema.names],
+                *g.columns[len(data_schema.fields):],
+            )
+        parts.append(g)
+    df = parts[0]
+    for g in parts[1:]:
+        df = df.unionByName(g)
     df = lakecore.join_file_map(df, names, columns)
     return lakecore.fill_absent_defaults(
         df,
@@ -2104,9 +1965,13 @@ def add_column(
     only — the spec's Default values): ``initial-default`` makes every
     pre-existing row read the default instead of null, and
     ``write-default`` makes subsequent writes that OMIT the column fill
-    it — the jar's ``ADD COLUMN x INT DEFAULT 7``. Returns the new
-    metadata version. Reference: iceberg-spec §Schema Evolution +
-    §Default values."""
+    it — the jar's ``ADD COLUMN x INT DEFAULT 7``. Which files lack the
+    field is decided per file, by field id, by the one
+    :func:`lakecore.resolve_file_columns` Delta's defaults share (see
+    :func:`_file_write_names`), so the default follows the field through
+    a rename and stored values win wherever a file holds it. Returns
+    the new metadata version. Reference: iceberg-spec §Schema Evolution
+    + §Default values."""
     meta = load_metadata(loc)
     known = ice_type in _FROM_ICEBERG or (
         isinstance(ice_type, str) and ice_type.startswith("decimal")
@@ -2155,41 +2020,18 @@ def add_column(
     return version
 
 
-def _schema_history(meta: dict) -> list[dict]:
-    """Every schema this table ever had (current + ``schemas`` history),
-    deduplicated by identity — the substrate for field-id → historical
-    names resolution."""
-    out = []
-    seen: set[int] = set()
-    for sch in [meta.get("schema")] + list(meta.get("schemas", [])):
-        if sch and id(sch) not in seen:
-            seen.add(id(sch))
-            out.append(sch)
-    return out
-
-
-def _names_by_id_history(meta: dict) -> dict[int, set[str]]:
-    """field id -> every name it carried across schema history. An id
-    with >1 name means a RENAME happened; resolution must then go
-    per-file (spec: columns resolve by field id, and data files written
-    before the rename store the old name)."""
-    out: dict[int, set[str]] = {}
-    for sch in _schema_history(meta):
+def _field_history(meta: dict) -> tuple[dict, dict]:
+    """``(names_by_id, ids_by_name)`` across every schema the table ever
+    had. An id with >1 name was RENAMED: files written before store the
+    old name. A name >1 ids carried (drop + re-add, rename swaps) is
+    AMBIGUOUS for files without parquet field ids."""
+    names_by_id: dict[int, set[str]] = {}
+    ids_by_name: dict[str, set[int]] = {}
+    for sch in [meta.get("schema") or {}, *meta.get("schemas", [])]:
         for f in sch.get("fields", []):
-            out.setdefault(int(f["id"]), set()).add(f["name"])
-    return out
-
-
-def _ids_by_name_history(meta: dict) -> dict[str, set[int]]:
-    """name -> every field id that carried it across schema history. A
-    name claimed by >1 id (drop + re-add, or rename swaps) is AMBIGUOUS
-    for files that lack parquet field ids — name-based resolution would
-    silently read another column's data, so those files refuse."""
-    out: dict[str, set[int]] = {}
-    for sch in _schema_history(meta):
-        for f in sch.get("fields", []):
-            out.setdefault(f["name"], set()).add(int(f["id"]))
-    return out
+            names_by_id.setdefault(int(f["id"]), set()).add(f["name"])
+            ids_by_name.setdefault(f["name"], set()).add(int(f["id"]))
+    return names_by_id, ids_by_name
 
 
 def _spec_source_ids(meta: dict) -> set[int]:
@@ -5121,7 +4963,8 @@ class IcebergLogStreamReader(lakecore.ChangeStreamReader):
         schema = meta["schema"]
         ptypes = {f.name: f.dataType for f in iceberg_to_spark_schema(schema).fields}
         pcols = _identity_names(_spec_entries(meta))
-        # renamed/re-added column vintages resolve per file by field id
+        # the batch scan's per-file resolution: renamed vintages by field
+        # id, absent columns (None) read their initial-default
         renames = _file_write_names(
             meta, list({c.file["file_path"]: c.file for c in changes}.values()),
             [(int(f["id"]), f["name"]) for f in schema.get("fields", [])],

@@ -9,8 +9,10 @@ unlinks a successful thunk's files when its sibling fails, footer
 min/max/null harvesting for data skipping, and the persisted
 range/Z-order layout rewrite behind OPTIMIZE / ``rewrite_data_files``.
 The read half is shared too: one broadcast per-file map joined on the
-scan's ``__file_name``, the column-default substitution it carries,
-pooled footer probes, and the subtraction of deleted row positions.
+scan's ``__file_name``, the one per-file column resolution (which
+files hold which column, under which name, by field id; pooled footer
+probes where the log cannot tell), the column-default substitution,
+and the subtraction of deleted row positions.
 The change feeds share one unit of work (:class:`ChangeUnit`, the rows
 of one file a commit changed), one stream-reader base that paces and
 commits offsets, one executor-side Arrow reader of a unit, and the
@@ -531,10 +533,21 @@ def fill_absent_defaults(
     return df.drop(_ABSENT_COLS)
 
 
-def footer_columns(paths: list[str]) -> dict[str, set[str]]:
-    """Top-level column names of each parquet file, one footer read per
-    path, through a bounded thread pool. A footer the local pyarrow
-    cannot parse (VARIANT) is answered by the JVM footer reader."""
+class FooterColumns(frozenset):
+    """The top-level column names of one parquet footer; ``ids`` maps
+    each stamped parquet field id to its column's name."""
+
+    def __new__(cls, names, ids: dict[int, str]):
+        self = super().__new__(cls, names)
+        self.ids = ids
+        return self
+
+
+def footer_columns(paths: list[str]) -> dict[str, FooterColumns]:
+    """Top-level column names and field ids of each parquet file, one
+    footer read per path, through a bounded thread pool. A footer the
+    local pyarrow cannot parse (VARIANT) is answered by the JVM footer
+    reader."""
     import concurrent.futures as cf
 
     from pyspark.sql import SparkSession
@@ -548,11 +561,124 @@ def footer_columns(paths: list[str]) -> dict[str, set[str]]:
     def probe(path):
         md = read_footer(path)
         if md is not None:
-            return set(md.schema.to_arrow_schema().names)
-        return set(spark.read.parquet(path).schema.names)
+            fields = [
+                (f.name, (f.metadata or {}).get(b"PARQUET:field_id"))
+                for f in md.schema.to_arrow_schema()
+            ]
+        else:
+            fields = [
+                (f.name, f.metadata.get("parquet.field.id"))
+                for f in spark.read.parquet(path).schema.fields
+            ]
+        return FooterColumns(
+            [n for n, _ in fields],
+            {int(i): n for n, i in fields if i is not None},
+        )
 
     with cf.ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
         return dict(zip(paths, pool.map(probe, paths)))
+
+
+#: a format log's verdict on whether one file holds one column
+ABSENT, PRESENT, UNDATED = "absent", "present", "undated"
+
+
+class WantedColumn(NamedTuple):
+    """A column whose per-file presence a scan needs decided: files
+    lacking it read its default, or a masked/renamed physical column.
+
+    ``stored_as``: every physical name it may be stored under (one,
+    unless it was renamed). ``field_id``: set where footers carry field
+    ids the column is matched by (Iceberg); the format's stats are then
+    keyed by it, else by the one physical name. ``shared``: those of
+    ``stored_as`` another field also carried (drop + re-add, rename)."""
+
+    name: str
+    stored_as: tuple[str, ...]
+    field_id: int | None = None
+    shared: frozenset = frozenset()
+
+    @property
+    def stat_key(self):
+        return self.stored_as[0] if self.field_id is None else self.field_id
+
+
+class FileEvidence(NamedTuple):
+    """What a format's log says about one data file: ``proven`` holds
+    the stat keys of the columns its per-column stats (count, null-count
+    and size maps, min/max bounds) prove stored; ``verdicts`` maps a
+    column name to ABSENT/PRESENT/UNDATED from the log's dating (a
+    missing name is UNDATED)."""
+
+    path: str
+    proven: frozenset
+    verdicts: dict
+
+
+def resolve_file_columns(
+    files: list[FileEvidence], columns: list[WantedColumn]
+) -> dict[str, dict[str, str | None]]:
+    """THE per-file column decision of both table formats: per file
+    path, per wanted column, the physical name the file stores it under,
+    or None when the file lacks it.
+
+    Stats prove presence first (positive evidence only: engines cap or
+    suppress per-column stats), then the log's verdict; a present column
+    with one possible name needs nothing else. Every other case — an
+    undated file, a renamed column — is settled by the file's footer,
+    each read at most once, all through :func:`footer_columns`'s pool:
+    by field id when the footer carries ids, else by the one candidate
+    name it holds. A name the table's history gave to more than one
+    field cannot be told apart without ids and refuses."""
+    out: dict[str, dict[str, str | None]] = {}
+    pending: list[str] = []
+    for ev in files:
+        got: dict[str, str | None] = {}
+        for c in columns:
+            verdict = ev.verdicts.get(c.name, UNDATED)
+            if c.stat_key in ev.proven or verdict == PRESENT:
+                if len(c.stored_as) == 1:
+                    got[c.name] = c.stored_as[0]
+            elif verdict == ABSENT:
+                got[c.name] = None
+        out[ev.path] = got
+        if len(got) < len(columns):
+            pending.append(ev.path)
+    for path, footer in footer_columns(pending).items():
+        got = out[path]
+        for c in columns:
+            if c.name not in got:
+                got[c.name] = _footer_name(path, c, footer)
+    return out
+
+
+def _footer_name(path: str, c: WantedColumn, footer: FooterColumns):
+    """The name ``footer`` stores column ``c`` under, or None."""
+    if c.field_id is not None and footer.ids:
+        return footer.ids.get(c.field_id)
+    held = [n for n in c.stored_as if n in footer]
+    if len(held) > 1 or c.shared.intersection(held):
+        raise ValueError(
+            f"cannot resolve column {c.name!r} (field id {c.field_id}) in "
+            f"{os.path.basename(path)}: the file has no parquet field ids "
+            f"and the candidate names {held} are ambiguous across the "
+            "table's schema history (rename, or drop and re-add); rewrite "
+            "the file (rewrite_data_files) to disambiguate"
+        )
+    return held[0] if held else None
+
+
+def absent_by_file(
+    resolved: dict[str, dict[str, str | None]], names
+) -> dict[str, list[str]]:
+    """Per file basename, which of ``names`` a :func:`resolve_file_columns`
+    answer finds the file lacking (files lacking none are left out)."""
+    out = {}
+    for path, cols in resolved.items():
+        absent = [n for n, phys in cols.items() if phys is None and n in names]
+        if absent:
+            out[os.path.basename(path)] = absent
+    return out
 
 
 def dead_positions(
@@ -677,7 +803,8 @@ class ChangeUnit(InputPartition):
 
     ``tags`` are constant output columns (change type, commit version
     or snapshot, timestamp), ``constants`` the typed identity partition
-    values, ``renames`` the per-file {logical name: physical name}."""
+    values, ``renames`` the per-file {logical name: physical name, or
+    None where :func:`resolve_file_columns` found the file lacks it}."""
 
     def __init__(
         self,
@@ -743,8 +870,8 @@ def read_change_unit(unit: ChangeUnit, schema: T.StructType, defaults: dict):
     """Executor side: yield the rows of ``unit`` as ``pyarrow.RecordBatch``es
     in ``schema``'s column order and Arrow types. Each output column is
     a tag, an identity partition constant, the file's column (under its
-    physical name), the column's default when the file lacks it
-    (``defaults``: logical name → value), or null."""
+    physical name), the column's default where ``unit.renames`` marks
+    it absent (``defaults``: logical name → value), or null."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -779,10 +906,11 @@ def read_change_unit(unit: ChangeUnit, schema: T.StructType, defaults: dict):
             cols.append(pa.repeat(pa.scalar(value, f.type), n))
             continue
         phys = unit.renames.get(name, name)
-        if phys in tbl.column_names:
+        if phys is not None and phys in tbl.column_names:
             cols.append(tbl.column(phys).cast(f.type))
         else:
-            cols.append(pa.repeat(pa.scalar(defaults.get(name), f.type), n))
+            value = defaults.get(name) if phys is None else None
+            cols.append(pa.repeat(pa.scalar(value, f.type), n))
     yield from pa.Table.from_arrays(cols, schema=arrow).to_batches()
 
 

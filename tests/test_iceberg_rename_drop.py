@@ -254,6 +254,33 @@ def test_compaction_retires_vintage_groups(spark, loc):
     assert got == {(0, "a"), (1, "b")}
 
 
+def test_rename_keeps_stored_values_of_a_defaulted_column(spark, loc):
+    """A row that STORES a defaulted column keeps its value after the
+    column is renamed: the file holds the field under its old name, and
+    presence is decided by field id, never by the current name. Rows
+    written before the column existed still read the default — in the
+    batch read, the incremental read and the merge-on-read DML scan."""
+    _write(spark, loc, [(0, "a")], mode="overwrite")
+    first = ice.load_metadata(loc)["current-snapshot-id"]
+    _write(spark, loc, [(1, "b")])
+    ice.upgrade_format_version(loc, 3)
+    ice.add_column(loc, "grade", "int", default=7)
+    ice.write_iceberg(
+        spark.createDataFrame([(2, "c", 3)], "id int, s string, grade int")
+        .coalesce(1), loc, mode="append",
+    )
+    ice.rename_column(loc, "grade", "score")
+    got = {r.id: r.score for r in ice.read_iceberg(spark, loc).collect()}
+    assert got == {0: 7, 1: 7, 2: 3}
+    inc = ice.read_iceberg_incremental(spark, loc, first)
+    assert {r.id: r.score for r in inc.collect()} == {1: 7, 2: 3}
+    # the DML predicate sees the stored 3 and the pre-DDL 7s
+    ice.update_where(spark, loc, "score = 3", {"s": "'hit'"})
+    ice.delete_where(spark, loc, "score = 7 and id = 0")
+    got = {(r.id, r.s, r.score) for r in ice.read_iceberg(spark, loc).collect()}
+    assert got == {(1, "b", 7), (2, "hit", 3)}
+
+
 # ---------------------------------------------------------------------------
 # ALTER COLUMN TYPE (spec type promotion)
 # ---------------------------------------------------------------------------

@@ -935,9 +935,10 @@ def test_schema_vintage_decides_absence_without_footer_reads(
     """Round-15 twin of the delta log-vintage pin: files whose WRITING
     snapshot's schema predates a defaulted field are absent by metadata
     alone — the entire pre-evolution set costs ZERO parquet footer
-    reads. Post-DDL files without metrics still pay one footer each
-    (presence must stay physical: the jar's read rule is per-file id
-    absence, and native writes carry no value_counts)."""
+    reads. Post-DDL files prove presence by their bounds; one without
+    any per-column stat for the field still pays one footer (presence
+    must stay physical: the jar's read rule is per-file id absence, and
+    native writes carry no value_counts)."""
     import pyarrow.parquet as pq
 
     _v3(spark, loc, n=3)                       # snapshot A, schema-id 0
@@ -954,13 +955,21 @@ def test_schema_vintage_decides_absence_without_footer_reads(
     assert got == {i: 7 for i in range(3)}
     assert calls["n"] == 0  # pre-evolution file dated by schema vintage
 
-    # a post-DDL append (snapshot stamped with the NEW schema-id) is
-    # physically unknown without metrics — exactly one footer read
+    # a post-DDL append (snapshot stamped with the NEW schema-id) whose
+    # manifest bounds cover flag is present by stats — no footer read
     df = spark.createDataFrame([(10, "x", 1)], "id int, s string, flag int")
     ice.write_iceberg(df.coalesce(1), loc, mode="append")
     calls["n"] = 0
     got = {r.id: r.flag for r in ice.read_iceberg(spark, loc).collect()}
     assert got == {0: 7, 1: 7, 2: 7, 10: 1}
+    assert calls["n"] == 0
+    # an all-null flag has no bounds: physically unknown without
+    # metrics — exactly one footer read, and the stored null stays
+    df = spark.createDataFrame([(11, "y", None)], "id int, s string, flag int")
+    ice.write_iceberg(df.coalesce(1), loc, mode="append")
+    calls["n"] = 0
+    got = {r.id: r.flag for r in ice.read_iceberg(spark, loc).collect()}
+    assert got == {0: 7, 1: 7, 2: 7, 10: 1, 11: None}
     assert calls["n"] == 1
 
 

@@ -211,6 +211,232 @@ def test_footer_columns_answers_variant_footers_from_the_pool(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# per-file column resolution
+# ---------------------------------------------------------------------------
+
+
+def _count_read_footer(monkeypatch) -> list[str]:
+    """Record every path ``lakecore.read_footer`` is asked for."""
+    seen: list[str] = []
+    real = lakecore.read_footer
+
+    def counting(path):
+        seen.append(path)
+        return real(path)
+
+    monkeypatch.setattr(lakecore, "read_footer", counting)
+    return seen
+
+
+def _footer_file(tmp_path, cols: dict) -> str:
+    """A one-row parquet file; ``cols`` maps each column name to the
+    parquet field id to stamp, or None."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / f"f{len(os.listdir(tmp_path))}.parquet")
+    schema = pa.schema([
+        pa.field(n, pa.int32(), metadata=None if i is None else {
+            b"PARQUET:field_id": str(i).encode()
+        })
+        for n, i in cols.items()
+    ])
+    pq.write_table(pa.table([[1]] * len(cols), schema=schema), path)
+    return path
+
+
+_GRADE = lakecore.WantedColumn("grade", ("grade",))  # Delta: by name
+_SCORE = lakecore.WantedColumn("score", ("score", "grade"), 3)  # renamed
+_FLAG = lakecore.WantedColumn("flag", ("flag",), 4)
+_S = lakecore.WantedColumn("s", ("s",), 5, frozenset({"s"}))  # re-added
+
+# (case, column, footer columns -> field id, stat keys proving presence,
+#  log verdict, expected answer, footer reads)
+_RESOLUTION_CASES = [
+    ("delta-vintage-before-arrival", _GRADE, {"grade": None}, (),
+     dl._vintage_verdict(4, 5, 5), None, 0),
+    ("delta-vintage-at-arrival", _GRADE, {"grade": None}, (),
+     dl._vintage_verdict(5, 5, 5), "grade", 1),
+    ("delta-vintage-at-arrival-absent", _GRADE, {"id": None}, (),
+     dl._vintage_verdict(5, 5, 5), None, 1),
+    ("delta-vintage-after-arrival", _GRADE, {"id": None}, (),
+     dl._vintage_verdict(6, 5, 5), "grade", 0),
+    ("delta-vintage-after-upper-bound", _GRADE, {"id": None}, (),
+     dl._vintage_verdict(6, None, 5), "grade", 0),
+    ("delta-vintage-at-upper-bound", _GRADE, {"id": None}, (),
+     dl._vintage_verdict(5, None, 5), None, 1),
+    ("delta-undated", _GRADE, {"grade": None}, (),
+     dl._vintage_verdict(None, 5, 5), "grade", 1),
+    ("delta-stats", _GRADE, {"id": None}, ("grade",),
+     lakecore.UNDATED, "grade", 0),
+    ("iceberg-writing-schema-predates", _FLAG, {"flag": 4}, (),
+     lakecore.ABSENT, None, 0),
+    ("iceberg-count-map", _FLAG, {"id": 1}, (4,),
+     lakecore.ABSENT, "flag", 0),
+    ("iceberg-bounds", _FLAG, {"id": 1}, (4,),
+     lakecore.UNDATED, "flag", 0),
+    ("iceberg-undated-no-stats", _FLAG, {"id": 1}, (),
+     lakecore.UNDATED, None, 1),
+    ("iceberg-renamed-by-field-id", _SCORE, {"grade": 3, "score": 9}, (3,),
+     lakecore.UNDATED, "grade", 1),
+    ("iceberg-stamped-lacks-id", _SCORE, {"score": 9}, (),
+     lakecore.UNDATED, None, 1),
+    ("iceberg-unstamped-by-name", _SCORE, {"grade": None}, (),
+     lakecore.UNDATED, "grade", 1),
+    ("iceberg-re-added-stamped", _S, {"s": 2}, (),
+     lakecore.UNDATED, None, 1),
+]
+
+
+@pytest.mark.parametrize(
+    "column,footer,proven,verdict,expect,reads",
+    [c[1:] for c in _RESOLUTION_CASES],
+    ids=[c[0] for c in _RESOLUTION_CASES],
+)
+def test_resolve_file_columns(
+    tmp_path, monkeypatch, column, footer, proven, verdict, expect, reads
+):
+    """One decision for both formats: stats prove presence, then the
+    log's verdict (Delta: data vintage against the default's arrival;
+    Iceberg: the writing schema), then the footer by field id, else by
+    the one name the file holds."""
+    path = _footer_file(tmp_path, footer)
+    seen = _count_read_footer(monkeypatch)
+    got = lakecore.resolve_file_columns(
+        [lakecore.FileEvidence(path, frozenset(proven), {column.name: verdict})],
+        [column],
+    )
+    assert got == {path: {column.name: expect}}
+    assert len(seen) == reads
+
+
+def test_resolve_file_columns_refuses_an_ambiguous_name(tmp_path):
+    """A file without field ids holding a name two fields carried cannot
+    say which field it stores: refuse rather than resurrect bytes."""
+    path = _footer_file(tmp_path, {"s": None})
+    with pytest.raises(ValueError, match="ambiguous"):
+        lakecore.resolve_file_columns(
+            [lakecore.FileEvidence(path, frozenset(), {})], [_S]
+        )
+
+
+def test_resolve_file_columns_reads_variant_footers_through_the_jvm(
+    spark, tmp_path
+):
+    """A footer pyarrow cannot parse is answered by the JVM reader,
+    field ids included."""
+    var = str(tmp_path / "var")
+    spark.sql("select 1 as id, parse_json('{\"a\": 1}') as v").withMetadata(
+        "id", {"parquet.field.id": 1}
+    ).coalesce(1).write.parquet(var)
+    [path] = [
+        os.path.join(var, n) for n in os.listdir(var) if n.endswith(".parquet")
+    ]
+    assert lakecore.read_footer(path) is None
+    got = lakecore.resolve_file_columns(
+        [lakecore.FileEvidence(path, frozenset(), {})],
+        [lakecore.WantedColumn("key", ("id", "key"), 1),
+         lakecore.WantedColumn("v", ("v",))],
+    )
+    assert got == {path: {"key": "id", "v": "v"}}
+
+
+def test_iceberg_bounds_count_only_under_the_writing_schema():
+    """Iceberg's evidence: bounds prove a field present only where the
+    file's writing schema holds it — first commits of older writers
+    keyed bounds to shifted ids, and the writing schema overrules
+    them — and count maps prove presence outright."""
+    meta = {
+        "schema": {"schema-id": 1, "fields": [
+            {"id": 1, "name": "id", "type": "int"},
+            {"id": 2, "name": "flag", "type": "int", "initial-default": 7},
+        ]},
+        "schemas": [
+            {"schema-id": 0, "fields": [{"id": 1, "name": "id", "type": "int"}]},
+        ],
+        "snapshots": [
+            {"snapshot-id": 10, "schema-id": 0},
+            {"snapshot-id": 11, "schema-id": 1},
+        ],
+    }
+    meta["schemas"].append(meta["schema"])
+    bound = [{"key": 2, "value": b"\x01\x00\x00\x00"}]
+    files = [
+        {"file_path": "old-bounds", "__snap": 10, "lower_bounds": bound},
+        {"file_path": "old-counts", "__snap": 10,
+         "value_counts": [{"key": 2, "value": 1}]},
+        {"file_path": "new-bounds", "__snap": 11, "upper_bounds": bound},
+    ]
+    got = ice._file_write_names(meta, files, [(1, "id"), (2, "flag")])
+    assert got == {"old-bounds": {"flag": None}}
+
+
+def test_tables_without_defaults_or_renames_read_no_footer(
+    spark, tmp_path, monkeypatch
+):
+    """The fast path: no default and no rename history, no footer read
+    by either format's batch read or DML scan."""
+    df = spark.createDataFrame([(0, "a"), (1, "b")], "id int, s string")
+    dpath, ipath = str(tmp_path / "d"), str(tmp_path / "i")
+    dl.write_delta(df.coalesce(1), dpath)
+    ice.write_iceberg(df.coalesce(1), ipath, mode="overwrite")
+    seen = _count_read_footer(monkeypatch)
+    assert dl.read_delta(spark, dpath).count() == 2
+    assert ice.read_iceberg(spark, ipath).count() == 2
+    ice.delete_where(spark, ipath, "id = 0")
+    seen.clear()  # the delete's staging reads its own new files
+    assert ice.read_iceberg(spark, ipath).count() == 1
+    assert seen == []
+
+
+def test_defaults_and_renames_read_each_footer_at_most_once(
+    spark, tmp_path, monkeypatch
+):
+    """An Iceberg table with both a default and a rename history: one
+    read resolves both from one pass, each live footer read at most
+    once (pre-DDL files are dated by their writing schema)."""
+    loc = str(tmp_path / "t")
+    for i in range(2):
+        ice.write_iceberg(
+            spark.createDataFrame([(i, f"s{i}")], "id int, s string")
+            .coalesce(1), loc, mode="append" if i else "overwrite",
+        )
+    ice.upgrade_format_version(loc, 3)
+    ice.add_column(loc, "grade", "int", default=7)
+    ice.write_iceberg(
+        spark.createDataFrame([(2, "c", 3)], "id int, s string, grade int")
+        .coalesce(1), loc, mode="append",
+    )
+    ice.rename_column(loc, "s", "label")
+    ice.rename_column(loc, "grade", "score")
+    seen = _count_read_footer(monkeypatch)
+    got = {(r.id, r.label, r.score) for r in ice.read_iceberg(spark, loc).collect()}
+    assert got == {(0, "s0", 7), (1, "s1", 7), (2, "c", 3)}
+    assert len(seen) == len(set(seen)) <= 3
+
+
+def test_post_ddl_files_with_bounds_read_no_footer(spark, tmp_path, monkeypatch):
+    """Engine-written manifests carry bounds, not count maps: a post-DDL
+    file whose bounds cover the defaulted column is present by stats."""
+    loc = str(tmp_path / "t")
+    ice.write_iceberg(
+        spark.createDataFrame([(0, "a")], "id int, s string").coalesce(1),
+        loc, mode="overwrite",
+    )
+    ice.upgrade_format_version(loc, 3)
+    ice.add_column(loc, "flag", "int", default=7)
+    for i in (1, 2):
+        ice.write_iceberg(
+            spark.createDataFrame([(i, "x", i)], "id int, s string, flag int")
+            .coalesce(1), loc, mode="append",
+        )
+    seen = _count_read_footer(monkeypatch)
+    got = {r.id: r.flag for r in ice.read_iceberg(spark, loc).collect()}
+    assert got == {0: 7, 1: 1, 2: 2}
+    assert seen == []
+
+
+# ---------------------------------------------------------------------------
 # structure
 # ---------------------------------------------------------------------------
 
@@ -231,12 +457,16 @@ def test_formats_carry_no_private_copy_of_the_core(module):
         # change feeds plan lakecore.ChangeUnit partitions and read them
         # through lakecore.read_change_unit
         "InputPartition",
+        # only lakecore.resolve_file_columns probes footers for which
+        # columns a file holds
+        "footer_columns(",
     ):
         assert needle not in src, f"{module} has its own {needle!r}"
     if module == "deltalog.py":
         # UniForm reaches Iceberg through its public functions only
         assert "ice._" not in src
     else:
+        assert "schema_arrow" not in src
         # one snapshot-commit tail writes every manifest list
         assert src.count('"manifest-list":') == 1
         assert src.count("snap-{") == 1
